@@ -117,7 +117,13 @@ def cmd_jobs(name: str) -> None:
     spark.stop()
 
     jobs: dict[int, dict] = {}
-    cand = glob.glob(os.path.join(EVLOG_DIR, "*" + app_id + "*"))[0]
+    matches = glob.glob(os.path.join(EVLOG_DIR, "*" + app_id + "*"))
+    if not matches:
+        raise SystemExit(
+            f"no event log for application {app_id} under {EVLOG_DIR} "
+            "(was the session built with event logging on?)"
+        )
+    cand = matches[0]
     files = (
         sorted(glob.glob(os.path.join(cand, "events_*")))
         if os.path.isdir(cand)
@@ -125,19 +131,18 @@ def cmd_jobs(name: str) -> None:
     )
     lines = (line for f in files for line in open(f))
     for line in lines:
-        if True:
-            ev = json.loads(line)
-            if ev["Event"] == "SparkListenerJobStart":
-                props = ev.get("Properties") or {}
-                jobs[ev["Job ID"]] = {
-                    "t0": ev["Submission Time"],
-                    "desc": props.get("spark.job.description", "")[:110],
-                    "callsite": props.get("callSite.short", "")[:60],
-                }
-            elif ev["Event"] == "SparkListenerJobEnd":
-                j = jobs.get(ev["Job ID"])
-                if j:
-                    j["ms"] = ev["Completion Time"] - j["t0"]
+        ev = json.loads(line)
+        if ev["Event"] == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {
+                "t0": ev["Submission Time"],
+                "desc": props.get("spark.job.description", "")[:110],
+                "callsite": props.get("callSite.short", "")[:60],
+            }
+        elif ev["Event"] == "SparkListenerJobEnd":
+            j = jobs.get(ev["Job ID"])
+            if j:
+                j["ms"] = ev["Completion Time"] - j["t0"]
     # jobs submitted inside the timed window, whatever thread ran them
     timed = [
         (jid, j) for jid, j in sorted(jobs.items()) if t0 <= j["t0"] <= t1

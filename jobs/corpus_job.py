@@ -140,7 +140,7 @@ def main(argv: list[str] | None = None) -> None:
     substring_n = (
         None if args.substring_clean in (None, -1) else args.substring_clean
     )
-    corpus, funnel = build_training_corpus(
+    corpus, funnel, fingerprints = build_training_corpus(
         documents,
         base_url=args.base_url,
         persist=True,
@@ -155,7 +155,10 @@ def main(argv: list[str] | None = None) -> None:
         else None,
     )
     if args.dedup_index is not None:
-        from paperoni_spark.pipeline.compose import dedup_wave_against_index
+        from paperoni_spark.pipeline.compose import (
+            dedup_wave_against_index,
+            stage_count,
+        )
 
         wave = args.wave_id or uuid.uuid4().hex
         # existence probes through the Hadoop FS (any mounted scheme),
@@ -217,21 +220,25 @@ def main(argv: list[str] | None = None) -> None:
                 "dedup probe needs a simhash index.  Point it at an index "
                 "this job (or write_simhash_index) created, or a fresh path."
             )
-        # create the marker when absent (corpus_job writes its segments
-        # directly, not via write_wave_segment) — without it an index
-        # built HERE would be adoptable by any other family's wave=0
-        # build, the exact silent destruction the marker prevents
-        from paperoni_spark.fsio import assert_index_kind, refuse_consumed_wave
+        # create the marker when absent — without it an index built HERE
+        # would be adoptable by any other family's wave=0 build, the
+        # exact silent destruction the marker prevents
+        from paperoni_spark.fsio import (
+            assert_append_wave,
+            assert_index_kind,
+            refuse_consumed_wave,
+        )
 
         assert_index_kind(spark, args.dedup_index, "simhash")
-        # the job writes its index segments DIRECTLY (not via
-        # write_wave_segment), so it must run the compaction guards
-        # itself, and BEFORE the own-segment delete below: a wave id
-        # that compact_index folded into the merged segment no-ops that
+        # the index append (write_wave_segment) repeats the wave-id and
+        # compaction guards, but only after the sinks are written — run
+        # them HERE, before the own-segment delete below: a wave id that
+        # compact_index folded into the merged segment no-ops that
         # delete, the probe then pairs the wave against its own
         # fingerprints inside the merged history, and the wave empties
         # with the corpus/funnel sinks already written
         try:
+            assert_append_wave(wave)
             refuse_consumed_wave(spark, args.dedup_index, wave)
         except ValueError as e:
             raise SystemExit(str(e)) from None
@@ -315,24 +322,35 @@ def main(argv: list[str] | None = None) -> None:
                     corpus.select("doc_id", "text"), n=n_sub
                 )
             cleaned = materialize(clean_res.where(F.col("n_removed") > 0))
-            corpus, funnel = apply_substring_rewrite(corpus, cleaned, funnel)
-        if index_waves:
-            corpus, rejected, resubmitted = dedup_wave_against_index(
-                spark, corpus, args.dedup_index, max_hamming=args.max_hamming
+            corpus, funnel, fingerprints = apply_substring_rewrite(
+                corpus, cleaned, funnel, fingerprints
             )
-            # persist the (tiny) reject-id set: the funnel count and the
-            # corpus anti-join both consume it — without the cache each
-            # one re-runs the index probe
+        from paperoni_spark.operators.dedup import (
+            SIMHASH_PAIR_BITS,
+            append_to_simhash_index,
+            simhash,
+        )
+
+        if fingerprints is None:
+            # no near-dup stage hashed the wave: hash the final text here,
+            # once — the probe cuts it and hands its survivors to the
+            # index append
+            fingerprints = simhash(corpus, SIMHASH_PAIR_BITS)
+        if index_waves:
+            corpus, fingerprints, rejected, resubmitted = dedup_wave_against_index(
+                spark,
+                corpus,
+                fingerprints,
+                args.dedup_index,
+                max_hamming=args.max_hamming,
+            )
+            # persist the (tiny) reject-id set: the corpus anti-join, the
+            # funnel count and the index append all consume it — without
+            # the cache each one re-runs the index probe
             rejected = rejected.persist()
             funnel = funnel.unionByName(
-                spark.createDataFrame(
-                    [
-                        ("rejected:near_duplicate_vs_corpus", rejected.count()),
-                        ("rejected:already_ingested", resubmitted.count()),
-                    ],
-                    "stage: string, n_docs: long",
-                )
-            )
+                stage_count("rejected:near_duplicate_vs_corpus", rejected)
+            ).unionByName(stage_count("rejected:already_ingested", resubmitted))
         corpus.write.mode("overwrite").parquet(
             os.path.join(args.output, f"wave={wave}")
         )
@@ -340,18 +358,14 @@ def main(argv: list[str] | None = None) -> None:
             funnel.write.mode("overwrite").parquet(
                 os.path.join(args.funnel, f"wave={wave}")
             )
-        # the wave's index segment, written LAST (a failed wave never
-        # poisons the index; corpus descends from the persisted judged
-        # frame, so this re-runs no extraction).  Bootstraps a missing
-        # index on the first run.  Since round 5 the operator-built
-        # simhash indexes share this wave=<id> layout (write = wave 0),
-        # so the two are layout-compatible; anything WITHOUT wave=
-        # segments is refused above as foreign.
-        from paperoni_spark.operators.dedup import SIMHASH_PAIR_BITS, simhash
-
-        simhash(corpus.select("doc_id", "text"), SIMHASH_PAIR_BITS).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(args.dedup_index, f"wave={wave}"))
+        # the written rows' fingerprints as the wave's index segment,
+        # written LAST (a failed wave never poisons the index; after a
+        # probe they descend from its materialized cut, so this re-runs
+        # neither extraction nor hashing).  Bootstraps a missing
+        # index on the first run.  The operator-built simhash indexes
+        # share this wave=<id> layout (write = wave 0); anything WITHOUT
+        # wave= segments is refused above as foreign.
+        append_to_simhash_index(fingerprints, args.dedup_index, wave)
         if args.substring_index is not None:
             # the WRITTEN text's histogram: the index reflects what is in
             # the corpus (a removed span is gone — future waves dup

@@ -230,7 +230,7 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic collisions) for the accounting contract."""
     from .pipeline.compose import build_training_corpus
 
-    _, funnel = build_training_corpus(
+    _, funnel, _ = build_training_corpus(
         planted_near_dup_documents(spark), near_dup=True, persist=True, max_hamming=1
     )
     return funnel

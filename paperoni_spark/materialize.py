@@ -64,9 +64,11 @@ def materialize_mode(mode: str):
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Cut the lineage of ``df`` under the active policy and return the
-    materialized frame.  ``eager`` forces immediate computation (the
-    connected-components loop needs it — each round's labels must be
-    realized before the convergence count); checkpoint/table modes are
+    materialized frame.  By default the localCheckpoint cut is LAZY: the
+    blocks are written by the first action that computes the frame (the
+    connected-components loop relies on this — each round's labels are
+    realized by that round's convergence count, one job per round).
+    ``eager`` forces immediate computation; checkpoint/table modes are
     inherently eager, which only strengthens the contract."""
     if _mode == "localCheckpoint":
         return df.localCheckpoint(eager=eager)

@@ -489,51 +489,56 @@ def dedup_delta_pairs_against_index(
     )
 
 
+def _simhash_bit_sql(j: int) -> str:
+    """SQL for bit ``j`` (0/1) of a token's md5 prefix, read from the two
+    32-bit halves ``h_hi``/``h_lo`` decoded once per token: an integer
+    shift+mask instead of per-bit substring+instr over the hex string.
+    VALUE-IDENTICAL to the positional hex decode the DuckDB oracles keep
+    using: hex char c (1-based) is the (8−c)th nibble of its half, and
+    bit_in_char indexes within the nibble exactly as the per-char decode
+    did — gated by every simhash oracle row."""
+    char_idx = j // 4 + 1  # 1-based into the md5 hex string
+    bit_in_char = j % 4
+    if char_idx <= 8:
+        half, shift = "h_hi", (8 - char_idx) * 4 + bit_in_char
+    else:
+        half, shift = "h_lo", (16 - char_idx) * 4 + bit_in_char
+    return f"(shiftright({half}, {shift}) & 1)"
+
+
+def _simhash_sql(bits: int) -> str:
+    """The whole fingerprint as ONE aggregate expression: bit j is set iff
+    the sum of (±1) votes from bit j of each token's hash is positive.
+    Two's-complement packing: bit 63 is the sign bit, so it contributes
+    -2^63 — the full 64-bit fingerprint fits a signed long exactly (bits
+    0..62 sum to at most 2^63-1 before the sign term is added, so no
+    intermediate overflow even under ANSI mode).  Built as a string so a
+    plan costs a constant number of gateway calls at any width, not a
+    Column object per bit."""
+    terms = []
+    for j in range(bits):
+        vote = f"sum(CASE WHEN {_simhash_bit_sql(j)} = 1 THEN 1 ELSE -1 END)"
+        mag = "(-9223372036854775807L - 1L)" if j == 63 else str(1 << j)
+        terms.append(f"CASE WHEN {vote} > 0 THEN {mag} ELSE 0 END")
+    return f"CAST({' + '.join(terms)} AS BIGINT) AS simhash"
+
+
 def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """SimHash over whitespace tokens: bit j is the sign of the sum of
     (±1) votes from bit j of each token's hash.  Token hash bits come from
-    the first ``bits/4`` hex chars of md5 (positional decode — portable)."""
-    toks = (
-        documents.select("doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-        .withColumn("h", F.md5("tok"))
-    )
-    # decode the md5 prefix ONCE per token into two 32-bit halves; each
-    # bit is then an integer shift+mask instead of per-bit substring+instr
-    # over the hex string (4 string ops × bits per token row → 2 convs per
-    # token).  VALUE-IDENTICAL to the positional hex decode the DuckDB
-    # oracles keep using: hex char c (1-based) is the (8−c)th nibble of
-    # its half, and bit_in_char indexes within the nibble exactly as the
-    # per-char decode did — gated by every simhash oracle row.
-    toks = toks.withColumn(
-        "h_hi", F.conv(F.substring("h", 1, 8), 16, 10).cast("long")
-    )
+    the first ``bits/4`` hex chars of md5 (positional decode — portable).
+    Null text yields no row; empty text is one empty token."""
+    halves = ["doc_id", "CAST(conv(substring(h, 1, 8), 16, 10) AS BIGINT) AS h_hi"]
     if bits > 32:
-        toks = toks.withColumn(
-            "h_lo", F.conv(F.substring("h", 9, 8), 16, 10).cast("long")
+        halves.append("CAST(conv(substring(h, 9, 8), 16, 10) AS BIGINT) AS h_lo")
+    toks = (
+        documents.select(
+            "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
         )
-    aggs = []
-    for j in range(bits):
-        char_idx = j // 4 + 1  # 1-based into the md5 hex string
-        bit_in_char = j % 4
-        if char_idx <= 8:
-            src, shift = F.col("h_hi"), (8 - char_idx) * 4 + bit_in_char
-        else:
-            src, shift = F.col("h_lo"), (16 - char_idx) * 4 + bit_in_char
-        bit = F.shiftright(src, shift).bitwiseAND(F.lit(1))
-        aggs.append(
-            F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"s{j}")
-        )
-    sums = toks.groupBy("doc_id").agg(*aggs)
-    weight = None
-    for j in range(bits):
-        # two's-complement packing: bit 63 is the sign bit, so it
-        # contributes -2^63 — the full 64-bit fingerprint fits a signed
-        # long exactly (bits 0..62 sum to at most 2^63-1 before the sign
-        # term is added, so no intermediate overflow even under ANSI mode)
-        mag = F.lit(-(1 << 63)) if j == 63 else F.lit(1 << j)
-        term = F.when(F.col(f"s{j}") > 0, mag).otherwise(F.lit(0))
-        weight = term if weight is None else weight + term
-    return sums.select("doc_id", weight.cast("long").alias("simhash"))
+        .selectExpr("doc_id", "md5(tok) AS h")
+        .selectExpr(*halves)
+    )
+    return toks.groupBy("doc_id").agg(F.expr(_simhash_sql(bits)))
 
 
 # Production-width 64-bit fingerprints, 16-bit band keys (65k buckets per
@@ -566,27 +571,19 @@ def _simhash_pair_guard(bits: int, bands: int, max_hamming: int) -> None:
 
 def _simhash_band_rows_from(sh: DataFrame, bits: int, bands: int) -> DataFrame:
     """(doc_id, simhash, band, bkey) from a fingerprint frame — a pure
-    map-side explode of (band, masked-shift) structs.  Arithmetic shift +
-    mask extracts every band correctly even for negative (bit-63-set)
-    hashes because shift + band width never exceeds 64 bits."""
+    map-side explode of (band, masked-shift) structs, built as one SQL
+    string (constant gateway calls per plan).  Arithmetic shift + mask
+    extracts every band correctly even for negative (bit-63-set) hashes
+    because shift + band width never exceeds 64 bits."""
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
-    band_struct = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("simhash"), b * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bkey"),
-                )
-                for b in range(bands)
-            ]
-        )
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bkey', shiftright(simhash, {b * band_bits}) & {mask})"
+        for b in range(bands)
     )
-    return sh.select("doc_id", "simhash", band_struct.alias("bb")).select(
-        "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey")
-    )
+    return sh.selectExpr(
+        "doc_id", "simhash", f"explode(array({structs})) AS bb"
+    ).selectExpr("doc_id", "simhash", "bb.band AS band", "bb.bkey AS bkey")
 
 
 def simhash_near_dup_pairs(
@@ -608,8 +605,28 @@ def simhash_near_dup_pairs(
     caveat as exact_dedup already covering identical text; the DuckDB
     oracle mirrors banding + cap.  The verify step is one xor+bit_count
     per candidate; only (doc_id, band-key) pairs shuffle."""
+    return simhash_near_dup_pairs_from_sh(
+        simhash(documents, bits),
+        bits=bits,
+        max_hamming=max_hamming,
+        bands=bands,
+        cap=cap,
+    )
+
+
+def simhash_near_dup_pairs_from_sh(
+    sh: DataFrame,
+    bits: int = SIMHASH_PAIR_BITS,
+    max_hamming: int = SIMHASH_HAMMING_MAX,
+    bands: int = SIMHASH_BANDS,
+    cap: int = SIMHASH_BAND_CAP,
+) -> DataFrame:
+    """The pair sweep with a PRECOMPUTED ``bits``-wide (doc_id, simhash)
+    frame — for callers that also probe an index with, or append, the same
+    fingerprints (the corpus funnel's near-dup stage hashes each wave once
+    and feeds the frame to all three)."""
     _simhash_pair_guard(bits, bands, max_hamming)
-    rows = _simhash_band_rows_from(simhash(documents, bits), bits, bands)
+    rows = _simhash_band_rows_from(sh, bits, bands)
     rows = materialize(rows)  # 4 consumers, tiny rows
     # the hot-band guard is similarity.capped_bands — ONE implementation of
     # the load-bearing unhinted anti-join (extra columns pass through)
@@ -653,18 +670,18 @@ def write_simhash_index(
     write_wave_segment(simhash(documents, bits), path, 0, kind="simhash")
 
 
-def append_to_simhash_index(
-    documents: DataFrame, path: str, wave: int, bits: int = SIMHASH_PAIR_BITS
-) -> None:
-    """Add a probed delta's fingerprints as its own ``wave=<id>`` segment
-    (retry replays, never double-appends).  Caller contract: delta
-    doc_ids are disjoint from the index (anti-join resume) and ``wave``
-    ≥ 1, stable across retries of the same wave."""
-    from ..fsio import write_wave_segment
+def append_to_simhash_index(sh: DataFrame, path: str, wave) -> None:
+    """Add a probed delta's PRECOMPUTED 64-bit (doc_id, simhash) frame as
+    its own ``wave=<id>`` segment (retry replays, never double-appends) —
+    the frame that probed the index is the one appended, so a wave is
+    hashed once.  Caller contract: delta doc_ids are disjoint from the
+    index (anti-join resume) and ``wave`` is stable across retries of
+    the same wave — an int ≥ 1, or a job-managed string id (corpus_job's
+    wave ids) that must not collide with the build's ``wave=0``."""
+    from ..fsio import assert_append_wave, write_wave_segment
 
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
-    write_wave_segment(simhash(documents, bits), path, wave, kind="simhash")
+    assert_append_wave(wave)
+    write_wave_segment(sh.select("doc_id", "simhash"), path, wave, kind="simhash")
 
 
 def simhash_delta_pairs_against_index(
@@ -717,8 +734,9 @@ def simhash_delta_pairs_from_sh(
     whole-corpus sweep anyway.
 
     ``delta_materialized=True`` tells the probe the caller's ``delta_sh``
-    is already checkpointed (the streaming loop materializes it to share
-    with the index-segment write): the band rows then derive map-side per
+    is already checkpointed (the streaming loop and the corpus funnel's
+    dedup_wave_against_index materialize it to share with the
+    index-segment write): the band rows then derive map-side per
     consumer from those blocks instead of paying a second checkpoint —
     one less materialization per wave.  Leave False when ``delta_sh`` is
     a live pipeline (the tokenize+hash aggregation must run once)."""

@@ -65,15 +65,20 @@ def build_training_corpus(
     substring_n: int | None = None,
     model_filter: bool = False,
     model_threshold: float | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """The full training-data funnel as one lazy program:
 
     extract → flatten → language guess → quality verdict → exact dedup
     (fingerprint survivors, min-doc_id canonical) → [optional SimHash
     near-dup cluster dedup] → corpus rows.
 
-    Returns ``(corpus, funnel)``: the surviving corpus rows and a per-stage
-    reject accounting (what a corpus-build dashboard tracks per snapshot).
+    Returns ``(corpus, funnel, fingerprints)``: the surviving corpus rows,
+    a per-stage reject accounting (what a corpus-build dashboard tracks
+    per snapshot), and — when ``near_dup`` hashed the wave — the corpus
+    rows' 64-bit (doc_id, simhash) frame, derived from the near-dup
+    stage's materialized fingerprints, that a caller can probe an index
+    with and append without hashing the text again (None without
+    ``near_dup``).
     The quality verdict is attached as a column expression on the flattened
     frame — NOT a self-join back through the extraction UDF — so each
     action runs the kernel exactly once; all stages after the UDF are
@@ -105,7 +110,11 @@ def build_training_corpus(
     exactly: kept − rejected:duplicate − rejected:near_duplicate ==
     written corpus rows.  The exact-dedup survivor frame is materialized
     first (the cut feeds the edge derivation, the survivor semi-join, and
-    the funnel) so the extraction kernel still runs once per action.
+    the funnel) so the extraction kernel still runs once per action,
+    and the fingerprint frame is materialized once for its three
+    consumers: the within-wave pairs, an index probe and an index append.
+    A text rewrite after it (``substring_clean``) re-hashes the rewritten
+    documents (:func:`apply_substring_rewrite`).
     """
     from ..operators.textstats import quality_reject_reason, quality_score_cols
 
@@ -199,29 +208,30 @@ def build_training_corpus(
         .agg(F.count("*").alias("n_docs"))
     )
 
+    fingerprints = None
     if near_dup:
         from ..materialize import materialize
         from ..operators.dedup import (
             SIMHASH_HAMMING_MAX,
+            SIMHASH_PAIR_BITS,
             connected_components,
-            simhash_near_dup_pairs,
+            simhash,
+            simhash_near_dup_pairs_from_sh,
         )
 
         hamming = SIMHASH_HAMMING_MAX if max_hamming is None else max_hamming
         corpus = materialize(corpus)
-        pairs = simhash_near_dup_pairs(corpus, max_hamming=hamming).select(
+        sh = materialize(simhash(corpus, SIMHASH_PAIR_BITS))
+        pairs = simhash_near_dup_pairs_from_sh(sh, max_hamming=hamming).select(
             "doc_a", "doc_b"
         )
         clusters = connected_components(corpus.select("doc_id"), pairs)
-        corpus = corpus.join(
-            clusters.where(F.col("is_survivor")).select("doc_id"), "doc_id", "semi"
-        )
-        near_losers = clusters.where(~F.col("is_survivor")).agg(
-            F.count("*").alias("n_docs")
-        )
+        survivors = clusters.where(F.col("is_survivor")).select("doc_id")
+        corpus = corpus.join(survivors, "doc_id", "semi")
+        fingerprints = sh.join(survivors, "doc_id", "semi")
         funnel = funnel.unionByName(
-            near_losers.select(
-                F.lit("rejected:near_duplicate").alias("stage"), "n_docs"
+            stage_count(
+                "rejected:near_duplicate", clusters.where(~F.col("is_survivor"))
             )
         )
 
@@ -249,13 +259,26 @@ def build_training_corpus(
                 F.col("n_removed") > 0
             )
         )
-        corpus, funnel = apply_substring_rewrite(corpus, cleaned, funnel)
-    return corpus, funnel
+        corpus, funnel, fingerprints = apply_substring_rewrite(
+            corpus, cleaned, funnel, fingerprints
+        )
+    return corpus, funnel, fingerprints
+
+
+def stage_count(stage: str, rows: DataFrame) -> DataFrame:
+    """One funnel row, ``(stage, n_docs)``, counting ``rows`` lazily — the
+    count runs inside the funnel write, not as an action of its own."""
+    return rows.agg(F.count("*").alias("n_docs")).select(
+        F.lit(stage).alias("stage"), "n_docs"
+    )
 
 
 def apply_substring_rewrite(
-    corpus: DataFrame, cleaned: DataFrame, funnel: DataFrame
-) -> tuple[DataFrame, DataFrame]:
+    corpus: DataFrame,
+    cleaned: DataFrame,
+    funnel: DataFrame,
+    fingerprints: DataFrame | None,
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """Fold a substring-clean result back into the corpus and account it:
     only ACTUALLY-cleaned docs are rewritten — text_clean is a
     single-space token rejoin, so applying it to n_removed=0 docs would
@@ -264,7 +287,11 @@ def apply_substring_rewrite(
     is test-pinned).  ``cleaned`` is the MATERIALIZED n_removed>0 frame
     (both consumers — rewrite join and funnel count — read it).  Shared
     by the wave-local compose stage and corpus_job's cross-wave
-    indexed stage."""
+    indexed stage.
+
+    A fingerprint frame computed before the rewrite goes stale for the
+    rewritten documents: they are re-hashed from ``text_clean`` (every
+    other row keeps its fingerprint).  None passes through."""
     corpus = (
         corpus.join(
             cleaned.select(
@@ -290,30 +317,41 @@ def apply_substring_rewrite(
         )
         .drop("_text_clean", "_n_removed")
     )
-    affected = cleaned.agg(F.count("*").alias("n_docs"))
-    funnel = funnel.unionByName(
-        affected.select(
-            F.lit("cleaned:substring_dup").alias("stage"), "n_docs"
+    funnel = funnel.unionByName(stage_count("cleaned:substring_dup", cleaned))
+    if fingerprints is not None:
+        from ..operators.dedup import SIMHASH_PAIR_BITS, simhash
+
+        rehashed = simhash(
+            cleaned.select("doc_id", F.col("text_clean").alias("text")),
+            SIMHASH_PAIR_BITS,
         )
-    )
-    return corpus, funnel
+        fingerprints = fingerprints.join(
+            cleaned.select("doc_id"), "doc_id", "left_anti"
+        ).unionByName(rehashed)
+    return corpus, funnel, fingerprints
 
 
 def dedup_wave_against_index(
-    spark, corpus: DataFrame, index_path: str, max_hamming: int | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+    spark,
+    corpus: DataFrame,
+    fingerprints: DataFrame,
+    index_path: str,
+    max_hamming: int | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Incremental corpus build: drop wave documents that near-duplicate
     the EXISTING corpus via the persisted SimHash fingerprint index —
-    only the wave is hashed; the corpus side is 16 B/doc
-    (operators.dedup.simhash_delta_pairs_against_index).
+    the corpus side is 16 B/doc, and the wave side is ``fingerprints``,
+    the 64-bit (doc_id, simhash) frame of ``corpus``'s rows computed once
+    by the caller, so the probe never re-hashes the text
+    (operators.dedup.simhash_delta_pairs_from_sh).
 
     Rejects ONLY vs-corpus pairs (counterpart not a wave doc): within-
     wave duplicates are the funnel's own exact/near-dup stages' job, so
     the two stages compose without double-counting a document.  Returns
-    ``(survivors, rejected_ids, resubmitted_ids)``; the caller appends
-    the survivors' fingerprints (operators.dedup.append_to_simhash_index)
-    AFTER its sink write succeeds, so a failed wave never poisons the
-    index.
+    ``(survivors, survivor_fingerprints, rejected_ids, resubmitted_ids)``;
+    the caller appends ``survivor_fingerprints``
+    (operators.dedup.append_to_simhash_index) AFTER its sink write
+    succeeds, so a failed wave never poisons the index.
 
     Wave docs whose doc_id is ALREADY in the index are split off up
     front (an ids-only anti-join) and returned as ``resubmitted_ids``:
@@ -322,22 +360,36 @@ def dedup_wave_against_index(
     duplicate ids — the same idempotence rule as extract_job's resume
     anti-join, but visible to the funnel so kept − rejected −
     resubmitted == written still reconciles exactly."""
-    from ..operators.dedup import simhash_delta_pairs_against_index
+    from ..materialize import materialize
+    from ..operators.dedup import simhash_delta_pairs_from_sh
 
     index_ids = spark.read.parquet(index_path).select("doc_id")
     resubmitted_ids = corpus.select("doc_id").join(index_ids, "doc_id", "semi")
     corpus = corpus.join(index_ids, "doc_id", "left_anti")
+    # the probe's delta: the id filter of the caller's fingerprints, cut
+    # once so the probe, the reject anti-join and the caller's index append
+    # all read it instead of re-deriving the filter joins
+    fingerprints = materialize(
+        fingerprints.join(index_ids, "doc_id", "left_anti")
+    )
     kwargs = {} if max_hamming is None else {"max_hamming": max_hamming}
-    pairs = simhash_delta_pairs_against_index(
-        spark, corpus.select("doc_id", "text"), index_path, **kwargs
+    pairs = simhash_delta_pairs_from_sh(
+        spark, fingerprints, index_path, delta_materialized=True, **kwargs
     )
+    # both orientations of each pair from ONE pass over the probe (a
+    # union of two selects plans — and runs — the whole probe twice)
     sym = pairs.select(
-        F.col("doc_a").alias("wave_id"), F.col("doc_b").alias("other_id")
-    ).unionByName(
-        pairs.select(
-            F.col("doc_b").alias("wave_id"), F.col("doc_a").alias("other_id")
-        )
-    )
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("doc_a").alias("wave_id"), F.col("doc_b").alias("other_id")
+                ),
+                F.struct(
+                    F.col("doc_b").alias("wave_id"), F.col("doc_a").alias("other_id")
+                ),
+            )
+        ).alias("o")
+    ).select("o.wave_id", "o.other_id")
     rejected_ids = (
         sym.join(
             corpus.select(F.col("doc_id").alias("other_id")),
@@ -349,6 +401,7 @@ def dedup_wave_against_index(
     )
     return (
         corpus.join(rejected_ids, "doc_id", "left_anti"),
+        fingerprints.join(rejected_ids, "doc_id", "left_anti"),
         rejected_ids,
         resubmitted_ids,
     )

@@ -10,7 +10,9 @@ These are the settings we would ship to a 1000-executor cluster via
   paths into tiny batches;
 * shuffle partition count sized to the parallelism level rather than the
   200-partition default (at cluster scale this would instead be ~2-3× total
-  cores, or left to AQE coalescing).
+  cores, or left to AQE coalescing);
+* a generated-code cache large enough for a whole job's plans (see
+  ``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -40,25 +42,47 @@ RUNTIME_ENGINE_CONFS = {
     "spark.sql.execution.arrow.maxBytesPerBatch": str(4 * 1024 * 1024),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Partition-discovery strategy for the bucket-partitioned index roots
-    # (LSH rows = bands × 2^R directories): Spark's default threshold of
-    # 32 paths launches a LISTING JOB for any probe, and each such job
-    # costs ~0.4 s of scheduling for a listing the driver does in ms on a
-    # local/low-latency filesystem (measured: ann_lsh_topk_indexed
-    # 3.5 s → 1.9 s).  On a high-latency object store with >>4k
-    # directories per table, parallel listing earns its keep — size via
-    # PAPERONI_PARALLEL_DISCOVERY_THRESHOLD (manifest-based table formats
-    # avoid the listing entirely; guide §6).
-    "spark.sql.sources.parallelPartitionDiscovery.threshold": os.environ.get(
-        "PAPERONI_PARALLEL_DISCOVERY_THRESHOLD", "4096"
-    ),
 }
+
+
+# Compiled whole-stage/expression classes the driver JVM keeps (a static
+# conf: set when the session's JVM starts, so a submitter passes it with
+# --conf).  Spark's default of 100 is smaller than ONE corpus_job wave's
+# distinct generated classes (~180 with --near-dup --dedup-index): on a
+# long-lived session the LRU cache then misses every class of every
+# wave, and each wave re-runs ~150 Janino compilations plus the JIT
+# warm-up of the fresh classes — 15-23 s of JIT compile time per ~9 s
+# wave on 4 cores, which slowed the wave and made its time depend on how
+# the compiler threads were scheduled.  Sized for every job of the engine
+# sharing one session (a crawl-wave run's peak RSS moved <1%).
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def runtime_engine_confs() -> dict[str, str]:
+    """RUNTIME_ENGINE_CONFS plus the environment overrides, read per call
+    (when a session is built or configured), not at import."""
+    return {
+        **RUNTIME_ENGINE_CONFS,
+        # Partition-discovery strategy for the bucket-partitioned index
+        # roots (LSH rows = bands × 2^R directories): Spark's default
+        # threshold of 32 paths launches a LISTING JOB for any probe, and
+        # each such job costs ~0.4 s of scheduling for a listing the
+        # driver does in ms on a local/low-latency filesystem (measured:
+        # ann_lsh_topk_indexed 3.5 s → 1.9 s).  On a high-latency object
+        # store with >>4k directories per table, parallel listing earns
+        # its keep — size via PAPERONI_PARALLEL_DISCOVERY_THRESHOLD
+        # (manifest-based table formats avoid the listing entirely;
+        # guide §6).
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": os.environ.get(
+            "PAPERONI_PARALLEL_DISCOVERY_THRESHOLD", "4096"
+        ),
+    }
 
 
 def apply_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable confs to an existing session
     (the spark-submit path, where the session is built by the submitter)."""
-    for k, v in RUNTIME_ENGINE_CONFS.items():
+    for k, v in runtime_engine_confs().items():
         spark.conf.set(k, v)
     return spark
 
@@ -83,8 +107,9 @@ def build_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    for k, v in RUNTIME_ENGINE_CONFS.items():
+    for k, v in runtime_engine_confs().items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -144,10 +144,11 @@ def _make_update_fn(gap_minutes: int):
 
 SESSION_FINAL_SCHEMA = StructType(SESSION_OUTPUT_SCHEMA.fields[:-1])  # no n_updates
 
-# shared zero-row emission for groups with nothing closed this batch (most
-# groups, most batches): building a fresh empty DataFrame per group is a
-# measurable slice of the per-batch Python time at 10^3 groups, and the
-# serializer only reads the yielded frame, so one shared instance is safe
+# zero-row template for groups with nothing closed this batch (most
+# groups, most batches): building a fresh empty DataFrame from the schema
+# per group is a measurable slice of the per-batch Python time at 10^3
+# groups.  Each group yields its own (cheap) copy, so nothing downstream
+# of the yield can mutate or retype the template for later groups
 _EMPTY_FINAL = pd.DataFrame(
     {f.name: [] for f in SESSION_FINAL_SCHEMA.fields}
 )
@@ -241,7 +242,7 @@ def _make_evicting_update_fn(gap_minutes: int):
                 max((max(ts_us) + gap_us) // 1000 + 1, wm_ms + 1)
             )
         yield (
-            pd.DataFrame(rows) if n_closed else _EMPTY_FINAL
+            pd.DataFrame(rows) if n_closed else _EMPTY_FINAL.copy()
         )
 
     return update

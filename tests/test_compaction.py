@@ -39,6 +39,11 @@ def _split(df, id_col, lo, hi):
     return df.where((F.col(id_col) % 10 >= lo) & (F.col(id_col) % 10 < hi))
 
 
+def _sh(documents):
+    """The 64-bit fingerprint frame an index append takes."""
+    return dedup.simhash(documents, dedup.SIMHASH_PAIR_BITS)
+
+
 def test_simhash_compaction_parity(spark, docs, tmp_path):
     """Build + two appends, compact, and the delta probe returns the
     byte-identical pair set over ONE merged segment; the consumed wave
@@ -46,8 +51,8 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
     with the merged segment) are refused afterwards."""
     path = str(tmp_path / "sh_idx")
     dedup.write_simhash_index(_split(docs, "doc_id", 0, 6), path)
-    dedup.append_to_simhash_index(_split(docs, "doc_id", 6, 8), path, 1)
-    dedup.append_to_simhash_index(_split(docs, "doc_id", 8, 9), path, 2)
+    dedup.append_to_simhash_index(_sh(_split(docs, "doc_id", 6, 8)), path, 1)
+    dedup.append_to_simhash_index(_sh(_split(docs, "doc_id", 8, 9)), path, 2)
     delta = _split(docs, "doc_id", 9, 10)
     before = _rows(dedup.simhash_delta_pairs_against_index(spark, delta, path))
 
@@ -64,7 +69,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
         with pytest.raises(ValueError, match="owned by a compaction"):
             fsio.write_wave_segment(docs.limit(1), path, wid, kind="simhash")
     # fresh ids append fine, and a second compaction folds them again
-    dedup.append_to_simhash_index(delta, path, 4)
+    dedup.append_to_simhash_index(_sh(delta), path, 4)
     assert fsio.compact_index_kind(spark, path, "simhash") == 2
     assert fsio._wave_names(spark, path) == ["wave=5"]
 
@@ -189,7 +194,7 @@ def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
     the same result."""
     path = str(tmp_path / "sh_crash")
     dedup.write_simhash_index(_split(docs, "doc_id", 0, 6), path)
-    dedup.append_to_simhash_index(_split(docs, "doc_id", 6, 9), path, 1)
+    dedup.append_to_simhash_index(_sh(_split(docs, "doc_id", 6, 9)), path, 1)
     expected = _rows(spark.read.parquet(path).drop("wave"))
 
     real_delete = fsio.delete_path
@@ -209,7 +214,7 @@ def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
 
     assert fsio.path_exists(spark, f"{path}/{fsio._COMPACT_MANIFEST}")
     with pytest.raises(ValueError, match="mid-commit"):
-        dedup.append_to_simhash_index(docs.limit(1), path, 7)
+        dedup.append_to_simhash_index(_sh(docs.limit(1)), path, 7)
     # PROBES refuse too: in this window the folded rows may exist only
     # in the invisible _compact_tmp — a normal read would silently
     # return a truncated pair set

@@ -1,9 +1,9 @@
 """Pytest port of the reference kernel unit tests.
 
-Each test mirrors a ``#[test]`` in /root/reference/src/moz_readability/mod.rs
+Each test mirrors a ``#[test]`` in paperoni's src/moz_readability/mod.rs
 (test module at mod.rs:2174-4015), pinning operator semantics for the
-span-equality contract.  Fixture HTML is carried over from the reference test
-corpus; assertions are 1:1.
+span-equality contract.  Fixture HTML is paperoni's test_html/simple.html,
+carried verbatim as ``spans.fixtures.FX_SIMPLE``; assertions are 1:1.
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ from paperoni_spark.kernel.readability import (
     READABILITY_SCORE,
     Readability,
 )
+from paperoni_spark.spans.fixtures import FX_SIMPLE
 
-TEST_HTML = open("/root/reference/test_html/simple.html").read()
+TEST_HTML = FX_SIMPLE
 
 f32 = np.float32
 

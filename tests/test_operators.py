@@ -77,6 +77,34 @@ def test_simhash_matches_oracle(spark, docs, ddb):
     assert_matches_oracle(dedup.simhash(docs), ddb, contract.oracle_simhash())
 
 
+# building one simhash plan took ~2.3k gateway commands at 16 bits and
+# ~9k at 64 while each bit was its own Column; the SQL-string plan takes
+# well under 200 at any width
+SIMHASH_PLAN_GATEWAY_CEILING = 250
+
+
+def test_simhash_plan_size(spark, docs):
+    """Plan-size guard: BUILDING (not running) a simhash plan costs a
+    constant, small number of py4j gateway commands at any width, so a
+    per-bit Column loop cannot silently bring the gateway traffic back."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    for bits in (16, dedup.SIMHASH_PAIR_BITS):
+        sent[0] = 0
+        client.send_command = counting
+        try:
+            dedup.simhash(docs, bits)
+        finally:
+            del client.send_command
+        assert 0 < sent[0] < SIMHASH_PLAN_GATEWAY_CEILING, (bits, sent[0])
+
+
 def test_minhash_matches_oracle(spark, docs, ddb):
     assert_matches_oracle(
         dedup.minhash_signatures(docs), ddb, contract.oracle_minhash_signatures()
@@ -260,9 +288,10 @@ def test_simhash_delta_never_rehashes(spark, docs, ddb, tmp_path):
 
     # append the wave, then an exact copy of a delta doc (hamming 0)
     # surfaces against the WAVE-1 fingerprint via the index
-    dedup.append_to_simhash_index(delta, index_path, wave=1)
+    delta_sh = dedup.simhash(delta, dedup.SIMHASH_PAIR_BITS)
+    dedup.append_to_simhash_index(delta_sh, index_path, wave=1)
     n_before = spark.read.parquet(index_path).count()
-    dedup.append_to_simhash_index(delta, index_path, wave=1)  # retry replays
+    dedup.append_to_simhash_index(delta_sh, index_path, wave=1)  # retry replays
     assert spark.read.parquet(index_path).count() == n_before
     seed = delta.orderBy("doc_id").limit(1).collect()[0]
     wave2 = spark.createDataFrame(
@@ -1035,7 +1064,9 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     bypasses write_wave_segment."""
     from paperoni_spark.fsio import write_wave_segment
     from paperoni_spark.operators.dedup import (
+        SIMHASH_PAIR_BITS,
         append_to_simhash_index,
+        simhash,
         write_simhash_index,
     )
     from paperoni_spark.operators.similarity import (
@@ -1061,7 +1092,9 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
         if p.name.startswith("_index_kind_"):
             p.unlink()
     append_to_simhash_index(
-        docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), str(legacy), 1
+        simhash(docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), SIMHASH_PAIR_BITS),
+        str(legacy),
+        1,
     )
     assert (legacy / "_index_kind_simhash").exists()
     with pytest.raises(ValueError, match="simhash"):

@@ -343,7 +343,7 @@ def test_build_training_corpus_funnel(spark):
     }
     docs = make_documents_df(spark, base + [dup, short])
 
-    corpus, funnel = build_training_corpus(docs)
+    corpus, funnel, _ = build_training_corpus(docs)
     rows = corpus.collect()
     ids = {r["doc_id"] for r in rows}
     assert "doc-zzzzduplicate" not in ids  # collapsed into base[0]
@@ -391,7 +391,7 @@ def test_build_training_corpus_substring_clean(spark):
     docs = make_documents_df(
         spark, [doc("aaa", True), doc("bbb", True), doc("ccc", False)]
     )
-    corpus, funnel = build_training_corpus(
+    corpus, funnel, _ = build_training_corpus(
         docs, substring_clean=True, substring_n=8, persist=True
     )
     rows = {r["doc_id"]: r for r in corpus.collect()}
@@ -407,7 +407,7 @@ def test_build_training_corpus_substring_clean(spark):
     assert stages["kept"] == 3  # cleaning rejects nothing
     # untouched docs are BYTE-identical to the flag-off build: the
     # single-space rejoin must never rewrite a doc with no removed spans
-    plain, _ = build_training_corpus(docs)
+    plain, _, _ = build_training_corpus(docs)
     plain_rows = {r["doc_id"]: r for r in plain.collect()}
     assert rows["doc-ccc"]["text"] == plain_rows["doc-ccc"]["text"]
     assert rows["doc-ccc"]["n_tokens"] == plain_rows["doc-ccc"]["n_tokens"]
@@ -422,7 +422,7 @@ def test_build_training_corpus_near_dup_stage(spark):
     from paperoni_spark.pipeline.compose import build_training_corpus
 
     docs = contract.planted_near_dup_documents(spark, n_docs=30)
-    corpus, funnel = build_training_corpus(
+    corpus, funnel, _ = build_training_corpus(
         docs, near_dup=True, persist=True, max_hamming=1
     )
     rows = corpus.collect()
@@ -523,7 +523,11 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     (same text, new doc_ids) plus genuinely new docs — the re-crawls are
     rejected vs the INDEX (never vs the wave itself), the new docs
     survive, and the index grows by exactly the survivors."""
-    from paperoni_spark.operators.dedup import append_to_simhash_index
+    from paperoni_spark.operators.dedup import (
+        SIMHASH_PAIR_BITS,
+        append_to_simhash_index,
+        simhash,
+    )
     from paperoni_spark.pipeline.compose import (
         build_training_corpus,
         dedup_wave_against_index,
@@ -533,11 +537,11 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     index = str(tmp / "sh_index")
 
     wave1_docs = make_documents_df(spark, synth_corpus(6))
-    corpus1, _ = build_training_corpus(wave1_docs, persist=True)
+    corpus1, _, _ = build_training_corpus(wave1_docs, persist=True)
     corpus1 = corpus1.persist()
     n1 = corpus1.count()
     assert n1 > 0
-    append_to_simhash_index(corpus1.select("doc_id", "text"), index, wave=1)
+    append_to_simhash_index(simhash(corpus1, SIMHASH_PAIR_BITS), index, wave=1)
 
     # wave 2: 4 new docs + 3 re-crawls of wave-1 content under new ids
     recrawl = []
@@ -546,13 +550,14 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
         d["doc_id"] = "w2-" + d["doc_id"]
         recrawl.append(d)
     wave2_docs = make_documents_df(spark, synth_corpus(4, start=6) + recrawl)
-    corpus2, _ = build_training_corpus(wave2_docs, persist=True)
+    corpus2, _, _ = build_training_corpus(wave2_docs, persist=True)
     corpus2 = corpus2.persist()
+    sh2 = simhash(corpus2, SIMHASH_PAIR_BITS)
     # hamming 0: exact re-crawl detection (the synthetic corpus is
     # near-dup-dense at the default Hamming 3 — a genuinely new doc can
     # legitimately land within 3 bits of the corpus)
-    survivors, rejected, resubmitted = dedup_wave_against_index(
-        spark, corpus2, index, max_hamming=0
+    survivors, surv_sh, rejected, resubmitted = dedup_wave_against_index(
+        spark, corpus2, sh2, index, max_hamming=0
     )
     assert resubmitted.count() == 0  # all wave-2 ids are new
     rej_ids = {r["doc_id"] for r in rejected.collect()}
@@ -564,13 +569,16 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     assert surv_ids and surv_ids.isdisjoint(wave1_ids)
     assert all(not i.startswith("w2-") for i in surv_ids)
     # index grows by exactly the survivors
-    append_to_simhash_index(survivors.select("doc_id", "text"), index, wave=2)
+    assert {r["doc_id"] for r in surv_sh.collect()} == surv_ids
+    append_to_simhash_index(surv_sh, index, wave=2)
     n_index = spark.read.parquet(index).count()
     assert n_index == n1 + len(surv_ids)
     # retry idempotence: re-submitting the SAME wave yields zero
     # survivors — already-ingested ids split off, the rest rejected as
     # near-dups of their own earlier copies — and the index never grows
-    s3, r3, re3 = dedup_wave_against_index(spark, corpus2, index, max_hamming=0)
+    s3, _, r3, re3 = dedup_wave_against_index(
+        spark, corpus2, sh2, index, max_hamming=0
+    )
     assert s3.count() == 0
     assert {r["doc_id"] for r in re3.collect()} == surv_ids
     assert {r["doc_id"] for r in r3.collect()} == rej_ids
@@ -662,6 +670,145 @@ print("CJ_SUBSTR_OK")
     assert "CJ_SUBSTR_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-4000:]
 
 
+_NEAR_DUP_WAVES_SCRIPT = r"""
+import os, random, sys
+
+root, tmp, extra = sys.argv[1], sys.argv[2], sys.argv[3:]
+sys.path.insert(0, root)
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from jobs.corpus_job import main as corpus_main
+from paperoni_spark.contract import DOCUMENTS_SPANS_SCHEMA
+from paperoni_spark.operators.dedup import SIMHASH_PAIR_BITS, simhash
+from paperoni_spark.operators.extract import run_extract
+from paperoni_spark.pipeline.compose import extracted_text
+from paperoni_spark.spans.codec import html_to_spans
+
+PASSAGE = "zephyr quartz baffle kumquat vortex jigsaw plinth garnet mosaic tundra"
+VOCAB = ["".join(random.Random(i).choices("bcdfghklmnprstvw", k=6)) for i in range(400)]
+
+
+def body(seed, tweak=False):
+    rng = random.Random(seed)
+    sents = [" ".join(["the"] + rng.choices(VOCAB, k=9)) + "." for _ in range(10)]
+    if tweak:
+        sents[-1] = sents[-1].replace(".", " ") + "moreover."
+    return sents
+
+
+def doc(doc_id, sents):
+    html = ("<html><head><title>T</title></head><body>"
+            '<article id="main-content">'
+            + "".join(f"<p>{s}</p>" for s in sents)
+            + "</article></body></html>")
+    return {"doc_id": doc_id, "spans": html_to_spans(html)}
+
+
+passage = [PASSAGE + "."]
+waves = {
+    # a3 is an exact twin of a1, a4 a near-variant of a2
+    "w1": [doc("a1", passage + body(1)), doc("a2", passage + body(2)),
+           doc("a3", passage + body(1)), doc("a4", passage + body(2, True))],
+    # b2 re-crawls a1 under a new id, b3 is a near-variant of b1
+    "w2": [doc("b1", body(3)), doc("b2", passage + body(1)),
+           doc("b3", body(3, True))],
+}
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+for w, rows in waves.items():
+    spark.createDataFrame(rows, schema=DOCUMENTS_SPANS_SCHEMA).write.parquet(
+        os.path.join(tmp, w + "_in"))
+spark.stop()
+
+out, fun, idx = (os.path.join(tmp, d) for d in ("corpus", "funnel", "index"))
+base = ["--output", out, "--funnel", fun, "--dedup-index", idx,
+        "--near-dup", "--append"] + extra
+
+
+def run(w):
+    corpus_main(["--input", os.path.join(tmp, w + "_in"), "--wave-id", w] + base)
+
+
+def rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def state(spark):
+    return [rows(spark.read.parquet(p)) for p in (out, fun, idx)]
+
+
+REJECTS = ("rejected:duplicate", "rejected:near_duplicate",
+           "rejected:near_duplicate_vs_corpus", "rejected:already_ingested")
+run("w1")
+run("w2")
+spark = SparkSession.builder.getOrCreate()
+funnels = {}
+for w, docs in waves.items():
+    written = spark.read.parquet(os.path.join(out, "wave=" + w)).select("doc_id", "text")
+    seg = spark.read.parquet(os.path.join(idx, "wave=" + w))
+    # the appended segment is exactly a fresh fingerprint of the rows written
+    assert rows(seg) == rows(simhash(written, SIMHASH_PAIR_BITS)), w
+    f = {r["stage"]: r["n_docs"] for r in
+         spark.read.parquet(os.path.join(fun, "wave=" + w)).collect()}
+    assert f["kept"] - sum(f.get(s, 0) for s in REJECTS) == written.count(), (w, f)
+    funnels[w] = f
+if extra:
+    # wave-local substring cleaning rewrote a1 after the near-dup stage
+    # hashed it: the index must hold the fingerprint of the rewritten
+    # text, not of the extracted one
+    assert funnels["w1"].get("cleaned:substring_dup", 0) >= 1, funnels
+    text = {r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()}
+    assert "zephyr" not in text["a1"], text["a1"]
+    docs = spark.read.parquet(os.path.join(tmp, "w1_in"))
+    extracted = extracted_text(run_extract(docs)).where(F.col("doc_id") == "a1")
+    seg = spark.read.parquet(os.path.join(idx, "wave=w1")).where(F.col("doc_id") == "a1")
+    assert rows(seg) != rows(simhash(extracted.select("doc_id", "text"), SIMHASH_PAIR_BITS))
+else:
+    assert funnels["w1"].get("rejected:duplicate", 0) >= 1, funnels
+    assert funnels["w1"].get("rejected:near_duplicate", 0) >= 1, funnels
+    assert funnels["w2"].get("rejected:near_duplicate", 0) >= 1, funnels
+    assert funnels["w2"].get("rejected:near_duplicate_vs_corpus", 0) >= 1, funnels
+before = state(spark)
+spark.stop()
+
+# retrying wave 2 under its id replays every sink byte-for-byte
+run("w2")
+spark = SparkSession.builder.getOrCreate()
+assert state(spark) == before
+spark.stop()
+print("CJ_NEAR_DUP_OK")
+"""
+
+
+@pytest.mark.parametrize(
+    "extra", [[], ["--substring-clean", "8"]], ids=["near_dup", "substring_clean"]
+)
+def test_corpus_job_near_dup_waves(tmp_path_factory, extra):
+    """The production wave shape (--near-dup --dedup-index --append
+    --funnel): the fingerprint frame the near-dup stage computes is the
+    one that probes the index and is appended to it, so every index
+    segment must equal a fresh SimHash of the rows that wave wrote — also
+    after wave-local substring cleaning rewrote text behind the near-dup
+    stage.  Each wave's funnel reconciles with its written rows, and a
+    same-id retry of wave 2 leaves corpus, funnel and index identical.
+    Subprocess: corpus_job.main owns (and stops) its session."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = str(tmp_path_factory.mktemp("cj_near_dup"))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NEAR_DUP_WAVES_SCRIPT, root, tmp, *extra],
+        capture_output=True,
+        text=True,
+        timeout=560,
+    )
+    assert "CJ_NEAR_DUP_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-4000:]
+
+
 def test_build_training_corpus_model_filter(spark):
     """The opt-in model quality gate: the map-side fold logit equals the
     standalone operator's bit-for-bit, model rejects are attributed as
@@ -676,7 +823,7 @@ def test_build_training_corpus_model_filter(spark):
     # stand-in weights, so pick a threshold INSIDE the fixture's logit
     # range — the gate must discriminate, not wipe the corpus
     thr = -0.08
-    corpus, funnel = build_training_corpus(
+    corpus, funnel, _ = build_training_corpus(
         docs, model_filter=True, model_threshold=thr
     )
     rows = corpus.collect()
@@ -685,7 +832,7 @@ def test_build_training_corpus_model_filter(spark):
     assert stages.get("kept", 0) - stages.get("rejected:duplicate", 0) == len(rows)
 
     # row-identity: the fold expression == the explode+agg operator
-    plain, _ = build_training_corpus(docs)
+    plain, _, _ = build_training_corpus(docs)
     flat = plain.select("doc_id", "text")
     via_expr = flat.select(
         "doc_id", textstats.quality_logit_col(F.col("text")).alias("logit")
