@@ -169,8 +169,8 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full training-data pipeline composition (extract → flatten →
     normalize-fingerprint → quality signals) over the frozen synthetic
     corpus, one row per surviving document.  Oracle: frozen golden VALUES
-    (tests/golden/synthetic_agg.json) — the corpus generator is frozen for
-    cross-round comparability, so per-doc outputs are a stable contract."""
+    (tests/golden/synthetic_agg.json) — the corpus generator is frozen,
+    so per-doc outputs are a stable contract."""
     from .pipeline.compose import corpus_build
 
     return corpus_build(synth_documents_df(spark, 150))
@@ -299,11 +299,10 @@ def golden_status_values_sql() -> str:
 
 def synthetic_golden_values_sql(name: str) -> str:
     """VALUES oracle from the frozen per-doc golden rows of the synthetic
-    corpus (tests/golden/synthetic_agg.json).  The synthetic generator is
-    frozen for cross-round bench comparability (spans/synthetic.py), so
-    these rows are a stable regression contract — regenerating the file is
-    only legitimate when a query's *shape* changes, never to paper over a
-    kernel behavior change."""
+    corpus (tests/golden/synthetic_agg.json).  The synthetic generator
+    (spans/synthetic.py) is frozen, so these rows are a stable regression
+    contract — regenerating the file is only legitimate when a query's
+    *shape* changes, never to paper over a kernel behavior change."""
     with open(SYNTH_AGG_PATH) as f:
         golden = json.load(f)[name]
     cols = ", ".join(golden["columns"])
@@ -1456,9 +1455,9 @@ def _stream_tmp(name: str) -> str:
 
     CALLER CONTRACT: collect (or discard) a streamed query's frame
     before invoking the SAME query again — the re-entry reap deletes
-    the files the previous frame reads lazily.  The gate and bench both
-    collect each invocation before the next; a harness that builds all
-    frames up front and collects later would break here."""
+    the files the previous frame reads lazily.  The gate and perfbench's
+    query_mix both collect each invocation before the next; a harness
+    that builds all frames up front and collects later would break here."""
     import atexit
     import shutil
     import tempfile
@@ -1898,11 +1897,12 @@ _INDEX_MEMO: dict[tuple, str] = {}
 def _memo_index(kind: str, sf_dir: str, builder) -> str:
     """Build-once persisted-index paths for the indexed/incremental
     queries.  The driver gate calls each query once, so the memo is a
-    no-op there; bench.py warms these queries untimed first, so their
-    timed numbers measure the amortized recurring-wave PROBE — a crawl
-    pays the index build once per corpus, not once per wave, and a number
-    dominated by the one-time build would misread as the indexed path
-    being slower than its in-query twin."""
+    no-op there; a caller that runs a query repeatedly (perfbench's
+    ``query_mix`` set-up pass builds ``simhash_delta_pairs``' index) pays
+    the build once, so later runs measure the amortized recurring-wave
+    PROBE — a crawl pays the index build once per corpus, not once per
+    wave, and a number dominated by the one-time build would misread as
+    the indexed path being slower than its in-query twin."""
     import atexit
     import shutil
     import tempfile
@@ -3247,8 +3247,8 @@ FROM tok LEFT JOIN cov_agg USING (doc_id) LEFT JOIN kept USING (doc_id)
 def q_substring_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-wave ExactSubstr: the planted corpus split into a BASE wave
     (even ids — builds the persisted shingle histogram once per sf_dir,
-    bench-amortized like every indexed query) and a DELTA wave (odd ids
-    — probed against it).  The odd/even split puts planted passage
+    amortized over repeated calls like every indexed query) and a DELTA
+    wave (odd ids — probed against it).  The odd/even split puts planted passage
     carriers in BOTH waves, so the probe must catch delta-vs-index
     duplicated spans AND within-delta ones; the oracle is the
     whole-corpus replay restricted to the delta ids (occurrence totals
@@ -3634,7 +3634,7 @@ SELECT doc_id, source, rk FROM (
 
 
 def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _gate_ordered({
+    return {
         # extraction kernel (SURVEY §2.2) through the Spark path
         "extract_fixture_spans": q_extract_fixture_spans,
         "extract_fixture_status": q_extract_fixture_status,
@@ -3880,156 +3880,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_simhash_pairs": q_streaming_simhash_pairs,
         # the vector twin: per-wave sign-LSH probe + segment append
         "streaming_embedding_pairs": q_streaming_embedding_pairs,
-    })
-
-
-# Gate execution order.  The driver's correctness gate walks queries() in
-# dict order and records AT MOST 50 entries per round (r4 and r5 both cut
-# at exactly 50 while the surface grew 59 → 71 — a count cap, not a wall
-# budget; reordering within one round cannot widen it).  Coverage is
-# therefore CYCLED across rounds: the 5 kernel flagships always lead (the
-# span-equality contract must record every round), then _GATE_PRIORITY —
-# the queries with no green row in any prior round's CORRECTNESS artifact,
-# plus any whose newest row is ≥2 rounds old — then the long-green
-# remainder in measured-cost order (cheap sweep → moderate → >5 s heavies
-# dead last, so the 50-cap drops only queries that already hold a recent
-# green row).  Per-round rule (documented in CLAUDE.md): recompute
-# _GATE_PRIORITY from the union of committed CORRECTNESS_r*.json files,
-# put brand-new queries straight into it, and keep cheap-before-heavy
-# within the group.  tools/check_oracles.py prints per-query gate seconds
-# and writes GATE_r{N}.json; re-measure before re-binning.
-_GATE_FLAGSHIPS = [
-    # kernel flagships (span-equality contract — must always record)
-    "extract_fixture_spans",
-    "extract_fixture_status",
-    "extract_img_urls",
-    "extract_synthetic_stats",
-    "corpus_build",
-]
-
-# Round-7 rotation: the 5 names with NO green row in any committed
-# CORRECTNESS_r*.json lead (cheap-first, gate seconds from GATE_r06),
-# then the 45 whose newest green row is CORRECTNESS_r05 (≥2 rounds old),
-# cheap-first.  The 50-cap drops only the 5 most expensive stale names
-# (ann_lsh_topk…ngram_jaccard tail), all of which hold r5 green rows.
-_GATE_PRIORITY = [
-    # never recorded in any round (r6 session-3 additions, judge-verified)
-    "label_centroid_similarity",
-    "asof_delta_enrich",
-    "pmi_collocations",
-    "time_rollup_delta",
-    "streaming_asof_enrich",
-    # newest green row is r5 (dropped by r6's rotation under the cap)
-    "hash_sample",
-    "quality_scores",
-    "quality_filter",
-    "length_stats_approx",
-    "length_stats",
-    "fingerprints",
-    "bpe_token_stats",
-    "stratified_sample",
-    "lang_id",
-    "token_stats",
-    "normalized_dedup",
-    "exact_dedup",
-    "pii_redact",
-    "windowed_events",
-    "media_resize_sample",
-    "pdf_page_stats",
-    "media_feature_stats",
-    "docs_joined_labels",
-    "interleave_stats",
-    "shard_assignments",
-    "repetition_stats",
-    "simhash",
-    "winnow_fingerprints",
-    "lsh_sign_buckets",
-    "sequence_pack",
-    "cosine_topk",
-    "minhash_signatures",
-    "lang_id_profile",
-    "token_budget_sample",
-    "lsh_candidate_pairs",
-    "source_cap_sample",
-    "session_stats",
-    "line_dedup",
-    "unigram_logprob",
-    "benchmark_contamination",
-    "dup_ngram_stats",
-    "lsh_candidate_doc_pairs",
-    "streaming_windowed_events",
-    "streaming_session_stats",
-    "stateful_user_totals",
-    "ann_lsh_topk",
-    "winnow_overlap_pairs",
-    "edit_verified_pairs",
-    "embedding_near_dup",
-    "ngram_jaccard",
-]
-
-# Long-green remainder, measured-cost order (all hold a CORRECTNESS_r06
-# green row; the tail of this list is what the 50-cap drops this round).
-_GATE_STEADY = [
-    "quality_classifier_scores",
-    "source_kl_divergence",
-    "source_temperature_mix",
-    "cms_heavy_hitters",
-    "tfidf_top_terms",
-    "asof_join_enrich",
-    "zipf_law_fit",
-    "funnel_conversion",
-    "bigram_logprob",
-    "bloom_delta_new_docs",
-    "streaming_extract_spans",
-    "shingle_novelty",
-    "perplexity_buckets",
-    "hll_distinct_tokens",
-    "substring_delta",
-    "embedding_delta_near_dup",
-    "semantic_dedup",
-    "dedup_delta_pairs",
-    "time_rollup",
-    "source_overlap_matrix",
-    "cluster_balanced_sample",
-    "session_concurrency",
-    "cms_delta_heavy_hitters",
-    "substring_dedup",
-    "dedup_clusters",
-    "streaming_normalized_dedup",
-    "simhash_near_dup_pairs",
-    "embedding_dedup_clusters",
-    "ann_ivf_topk",
-    "streaming_exact_dedup",
-    "streaming_embedding_pairs",
-    "simhash_delta_pairs",
-    "doc_pagerank",
-    "ann_pq_topk",
-    "ann_ivfpq_residual_topk",
-    "simhash_dedup_clusters",
-    "corpus_funnel",
-    "ann_ivfpq_topk",
-    "streaming_session_stats_evicting",
-    "ann_pq_topk_indexed",
-    "streaming_simhash_pairs",
-    "ngram_containment",
-    "ann_lsh_topk_indexed",
-    "ann_ivfpq_topk_indexed",
-    "ann_recall_at_k",
-]
-
-_GATE_ORDER = _GATE_FLAGSHIPS + _GATE_PRIORITY + _GATE_STEADY
-
-
-def _gate_ordered(base: dict) -> dict:
-    # a real raise, not assert: under python -O an unordered query would
-    # silently fall out of the gate — the exact coverage loss this
-    # ordering exists to prevent
-    if set(_GATE_ORDER) != set(base):
-        raise ValueError(
-            f"_GATE_ORDER out of sync with build_queries(): "
-            f"{sorted(set(_GATE_ORDER) ^ set(base))}"
-        )
-    return {k: base[k] for k in _GATE_ORDER}
+    }
 
 
 def build_oracles() -> dict[str, str]:

@@ -42,6 +42,16 @@ RUNTIME_ENGINE_CONFS = {
     "spark.sql.execution.arrow.maxBytesPerBatch": str(4 * 1024 * 1024),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Partition-discovery strategy for the bucket-partitioned index roots
+    # (LSH rows = bands × 2^R directories): Spark's default threshold of
+    # 32 paths launches a LISTING JOB for any probe, and each such job
+    # costs ~0.4 s of scheduling for a listing the driver does in ms on a
+    # local/low-latency filesystem (measured: ann_lsh_topk_indexed 3.5 s →
+    # 1.9 s).  On a high-latency object store with >>4k directories per
+    # table, parallel listing earns its keep — lower this value there
+    # (apply_engine_confs overwrites a submitter's --conf; manifest-based
+    # table formats avoid the listing entirely; guide §6).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
 }
 
 
@@ -58,31 +68,10 @@ RUNTIME_ENGINE_CONFS = {
 CODEGEN_CACHE_ENTRIES = 1000
 
 
-def runtime_engine_confs() -> dict[str, str]:
-    """RUNTIME_ENGINE_CONFS plus the environment overrides, read per call
-    (when a session is built or configured), not at import."""
-    return {
-        **RUNTIME_ENGINE_CONFS,
-        # Partition-discovery strategy for the bucket-partitioned index
-        # roots (LSH rows = bands × 2^R directories): Spark's default
-        # threshold of 32 paths launches a LISTING JOB for any probe, and
-        # each such job costs ~0.4 s of scheduling for a listing the
-        # driver does in ms on a local/low-latency filesystem (measured:
-        # ann_lsh_topk_indexed 3.5 s → 1.9 s).  On a high-latency object
-        # store with >>4k directories per table, parallel listing earns
-        # its keep — size via PAPERONI_PARALLEL_DISCOVERY_THRESHOLD
-        # (manifest-based table formats avoid the listing entirely;
-        # guide §6).
-        "spark.sql.sources.parallelPartitionDiscovery.threshold": os.environ.get(
-            "PAPERONI_PARALLEL_DISCOVERY_THRESHOLD", "4096"
-        ),
-    }
-
-
 def apply_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable confs to an existing session
     (the spark-submit path, where the session is built by the submitter)."""
-    for k, v in runtime_engine_confs().items():
+    for k, v in RUNTIME_ENGINE_CONFS.items():
         spark.conf.set(k, v)
     return spark
 
@@ -90,26 +79,27 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
 def build_spark(
     master: str | None = None,
     app_name: str = "paperoni-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    if shuffle_partitions is None:
-        if master.startswith("local["):
-            inner = master[len("local[") : -1]
-            shuffle_partitions = os.cpu_count() if inner == "*" else int(inner)
-        else:
-            shuffle_partitions = 200
+    """A session on ``master`` (default: ``local[<usable CPUs>]``) with
+    the engine's confs; ``extra_conf`` overrides any of them, e.g. the
+    8g ``spark.driver.memory``."""
+    master = master or f"local[{len(os.sched_getaffinity(0))}]"
+    if master.startswith("local["):
+        inner = master[len("local[") : -1]
+        shuffle_partitions = os.cpu_count() if inner == "*" else int(inner)
+    else:
+        shuffle_partitions = 200
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    for k, v in runtime_engine_confs().items():
+    for k, v in RUNTIME_ENGINE_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

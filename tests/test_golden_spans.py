@@ -32,10 +32,11 @@ def test_golden_span_sequences():
 
 
 def test_golden_synthetic_corpus():
-    """Synthetic-corpus extraction is frozen (digest per doc): the bench
-    corpus semantics must stay identical across rounds so BENCH_r{N}
-    numbers are comparable; a kernel change that alters these is caught
-    here deliberately."""
+    """Synthetic-corpus extraction is frozen (digest per doc): the
+    synthetic documents feed the extract_synthetic_stats / corpus_build
+    goldens and perfbench's cached inputs, so their extraction must stay
+    identical; a kernel change that alters these is caught here
+    deliberately."""
     import hashlib
 
     from paperoni_spark.spans import synth_document

@@ -38,7 +38,7 @@ def test_materialize_modes_row_identical(spark, small_docs, tmp_path):
     """checkpoint and table modes survive their round-trips with rows
     identical to the localCheckpoint default, through a real operator whose
     pipeline crosses the materialization cut (LSH band rows) AND through
-    the eager per-round cut in connected components."""
+    the lazy per-round cut in connected components."""
     baseline_pairs = _pairs(dedup.lsh_candidate_doc_pairs(small_docs))
     baseline_clusters = sorted(
         map(tuple, dedup.dedup_clusters(small_docs).collect())
@@ -62,8 +62,9 @@ def test_materialize_modes_row_identical(spark, small_docs, tmp_path):
                 _pairs(dedup.lsh_candidate_doc_pairs(small_docs))
                 == baseline_pairs
             )
-            # through the eager per-round CC cut too: every iteration's
-            # labels round-trip parquet (schema/nullability/eager flag)
+            # through the per-round CC cut too: table mode writes every
+            # iteration's labels to parquet even though the default
+            # localCheckpoint cut is lazy (schema/nullability round-trip)
             assert (
                 sorted(map(tuple, dedup.dedup_clusters(small_docs).collect()))
                 == baseline_clusters

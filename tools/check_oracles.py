@@ -4,21 +4,14 @@ schema (column names), and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
-A FULL run (no query filter) additionally writes ``GATE_r{N}.json`` at the
-repo root — per-query ok/fail + gate seconds + row count — so the judged
-artifact chain can distinguish "driver truncated the record" from "never
-ran": the driver's CORRECTNESS file caps at 50 entries/round, this one
-always carries all of them.  N = 1 + the highest committed
-CORRECTNESS_r*.json round (override path with PAPERONI_GATE_OUT).
+Prints one ok/FAIL line per query with its wall seconds; exits 1 if any
+query fails.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import math
 import os
-import re
 import sys
 import time
 
@@ -61,24 +54,10 @@ def rowset(cols, rows):
     return [tuple(r) for r in df.itertuples(index=False, name=None)], ordered
 
 
-def gate_artifact_path(repo_root: str) -> str:
-    env = os.environ.get("PAPERONI_GATE_OUT")
-    if env:
-        return env
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r0*(\d+)\.json$", p))
-    ]
-    n = (max(rounds) + 1) if rounds else 1
-    return os.path.join(repo_root, f"GATE_r{n:02d}.json")
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    record: dict[str, dict] = {}
-    spark = build_spark(master="local[8]", app_name="oracle-check")
+    spark = build_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -94,9 +73,8 @@ def main() -> int:
             continue
         t_q = time.monotonic()
 
-        def done(ok: bool, detail: str, rows: int | None = None) -> None:
-            secs = round(time.monotonic() - t_q, 2)
-            record[name] = {"ok": ok, "detail": detail, "rows": rows, "sec": secs}
+        def done(ok: bool, detail: str) -> None:
+            secs = time.monotonic() - t_q
             tag = "ok  " if ok else "FAIL"
             print(f"{tag} {name}: {detail} [{secs:.1f}s]")
 
@@ -109,7 +87,7 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            done(True, f"rows-only ({len(srows)} rows)", len(srows))
+            done(True, f"rows-only ({len(srows)} rows)")
             continue
         try:
             res = con.execute(oracles[name])
@@ -134,58 +112,8 @@ def main() -> int:
             done(False, f"value mismatch, first diffs: {diff}")
             failures += 1
         else:
-            done(True, f"{len(s_set)} rows match", len(s_set))
-    total = round(time.monotonic() - t_total, 1)
-    print(f"total gate wall: {total}s")
-    if not only:
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        out = gate_artifact_path(repo_root)
-        # provenance stamp (round-6 verdict item: a working-tree re-run
-        # must be distinguishable from the committed run without git
-        # archaeology): HEAD sha + dirty flag + wall clock
-        import subprocess
-
-        def _git(*args):
-            try:
-                return (
-                    subprocess.run(
-                        ["git", *args], cwd=repo_root, capture_output=True
-                    )
-                    .stdout.decode()
-                    .strip()
-                )
-            except Exception:  # noqa: BLE001 — provenance is best-effort
-                return ""
-
-        with open(out, "w") as f:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "total_sec": total,
-                    "n_queries": len(record),
-                    "n_failures": failures,
-                    "git_sha": _git("rev-parse", "HEAD"),
-                    # the gate artifact itself is excluded: the previous
-                    # run's (about-to-be-overwritten) file would mark
-                    # every run dirty
-                    "git_dirty": bool(
-                        _git(
-                            "status",
-                            "--porcelain",
-                            "--",
-                            ".",
-                            ":!GATE_r*.json",
-                        )
-                    ),
-                    "run_utc": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "queries": record,
-                },
-                f,
-                indent=1,
-            )
-        print(f"wrote {out}")
+            done(True, f"{len(s_set)} rows match")
+    print(f"total gate wall: {time.monotonic() - t_total:.1f}s")
     spark.stop()
     return 1 if failures else 0
 
