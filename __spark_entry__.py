@@ -27,10 +27,10 @@ from paperoni_spark.pipeline.job import extract_pipeline  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: the full tiered extraction pipeline over the fixture
-    corpus + a deterministic synthetic heavy-tail corpus (the spans-shaped
-    documents table from BASELINE.json input_hint, synthesized per task
-    instructions)."""
+    """Flagship query: the extraction pipeline (default scan mode) over the
+    fixture corpus + a deterministic synthetic heavy-tail corpus (the
+    spans-shaped documents table from BASELINE.json input_hint,
+    synthesized per task instructions)."""
     docs = fixture_documents_df(spark).union(synth_documents_df(spark, 100))
     return extract_pipeline(docs)
 

@@ -33,6 +33,72 @@ import sys
 import uuid
 
 
+def _prepare_index_roots(spark, args, wave: str) -> dict[str, list[str]]:
+    """Refuse or prepare the wave's index roots (--dedup-index and, if
+    given, --substring-index); returns each root's committed
+    ``wave=<id>`` names other than this wave's own.
+
+    Every sink of a wave — corpus segment, funnel segment, INDEX
+    segments — is wave=<id>-keyed and written with overwrite, so a
+    retried wave with the same --wave-id replays identically from any
+    crash point instead of appending duplicates.  Every refusal, for BOTH roots, runs before anything is created or
+    deleted: a refusal must leave the indexes as it found them (deleting
+    the own segment first would destroy a COMMITTED wave's fingerprints
+    on a re-run that is then refused, desyncing corpus and index).  The
+    kind check only reads — the appends adopt a marker-less root after
+    the sinks are written (unmarked, any other family's wave=0 build
+    could adopt it).  Then a failed attempt's leftover own
+    segments are deleted BEFORE the probes: its fingerprints would pair
+    the wave with itself and misclassify every doc as already-ingested,
+    and its histogram would count the wave's shingles against the wave
+    itself — either way the wave empties.
+
+    The guards: a root holding bare files (e.g. a flat operator-built
+    simhash index) would silently skip the probe and mix layouts; a root
+    of another index family passes the layout check but would die (or
+    mis-probe) on missing columns; a wave id that compact_index folded
+    into the merged segment no-ops the own-segment delete, and the probe
+    then meets the wave's own fingerprints (shingles) in the merged
+    history.  The index append repeats these guards, but only after the
+    sinks are written."""
+    from paperoni_spark import fsio
+
+    roots = [(args.dedup_index, "simhash")]
+    if args.substring_index is not None:
+        roots.append((args.substring_index, "substring_hist"))
+    try:
+        fsio.assert_append_wave(wave)
+        for root, kind in roots:
+            fsio.refuse_foreign_layout(spark, root)
+            fsio.refuse_other_kind(spark, root, kind)
+            fsio.refuse_consumed_wave(spark, root, wave)
+    except ValueError as e:
+        raise SystemExit(str(e)) from None
+    # "an index exists" means committed segments OTHER than this wave's:
+    # a first wave that crashed mid-write leaves none, and its retry must
+    # take the bootstrap path — not the --append refusal, and not a probe
+    # that dies schema-inferring an empty directory
+    own = f"wave={wave}"
+    committed = {
+        root: [w for w in fsio.wave_names(spark, root) if w != own]
+        for root, _ in roots
+    }
+    if committed[args.dedup_index] and not args.append:
+        # loud refusal (same convention as write_output's flat-layout
+        # guard): overwriting the corpus while the index keeps other
+        # waves' fingerprints would reject future docs against content
+        # no longer in the corpus
+        raise SystemExit(
+            "--dedup-index points at an existing index but --append "
+            "was not given: a plain overwrite would desynchronize "
+            "corpus and index.  Pass --append for a wave, or remove "
+            "the index to rebuild from scratch."
+        )
+    for root, _ in roots:
+        fsio.delete_path(spark, os.path.join(root, own))
+    return committed
+
+
 def main(argv: list[str] | None = None) -> None:
     parser = argparse.ArgumentParser()
     parser.add_argument("--input", required=True)
@@ -125,6 +191,9 @@ def main(argv: list[str] | None = None) -> None:
     spark = apply_engine_confs(
         SparkSession.builder.appName("paperoni-corpus-build").getOrCreate()
     )
+    if args.dedup_index is not None:
+        wave = args.wave_id or uuid.uuid4().hex
+        committed = _prepare_index_roots(spark, args, wave)
 
     if args.input.startswith("synthetic:"):
         from paperoni_spark.pipeline.synth_input import synthetic_documents
@@ -160,115 +229,12 @@ def main(argv: list[str] | None = None) -> None:
             stage_count,
         )
 
-        wave = args.wave_id or uuid.uuid4().hex
-        # existence probes through the Hadoop FS (any mounted scheme),
-        # same rationale as extract_job's resume probe
-        jvm = spark._jvm
-
-        def hpath(p):
-            return jvm.org.apache.hadoop.fs.Path(p)
-
-        fs = hpath(args.dedup_index).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        # every sink of this wave — corpus segment, funnel segment, INDEX
-        # segment — is wave=<id>-keyed and written with overwrite, so a
-        # retried wave with the same --wave-id replays identically from
-        # any crash point instead of appending duplicates.  The index's
-        # own segment is deleted BEFORE the probe (a failed attempt's
-        # fingerprints would otherwise pair the wave with itself and
-        # misclassify every doc as already-ingested, emptying the output).
-        own_name = f"wave={wave}"
-        own_seg = hpath(os.path.join(args.dedup_index, own_name))
-        # Classify the index directory BEFORE touching anything — the
-        # refusal paths below must not mutate state (deleting the own
-        # segment first would destroy a COMMITTED wave's fingerprints on
-        # a re-run that forgot --append, desyncing corpus and index
-        # while claiming to have refused).  "An index exists" means
-        # committed wave segments OTHER than this wave's: a first wave
-        # that crashed mid-write leaves no other segments, and its retry
-        # must take the bootstrap path — not the --append refusal, and
-        # not a probe that dies schema-inferring an empty directory.
-        names = (
-            [st.getPath().getName() for st in fs.listStatus(hpath(args.dedup_index))]
-            if fs.exists(hpath(args.dedup_index))
-            else []
-        )
-        foreign = [
-            n
-            for n in names
-            if not n.startswith("wave=") and not n.startswith((".", "_"))
-        ]
-        if foreign:
-            # e.g. a flat operator-built simhash index (bare part files):
-            # silently bootstrapping would skip the dedup probe AND mix
-            # partitioned/flat layouts in one directory
-            raise SystemExit(
-                "--dedup-index points at a directory that is not a "
-                f"corpus_job wave-segmented index (found {foreign[:3]}): "
-                "corpus_job owns wave=<id> segments only.  Point it at an "
-                "index this job created, or at a fresh path."
-            )
-        # the operator-built indexes carry an _index_kind_<kind> marker
-        # (fsio.assert_index_kind); only a simhash root is probe-compatible
-        # — any other family's wave=<id> layout passes the foreign check
-        # but would die (or worse, mis-probe) on missing columns later
-        kinds = [n[len("_index_kind_"):] for n in names if n.startswith("_index_kind_")]
-        if kinds and kinds != ["simhash"]:
-            raise SystemExit(
-                f"--dedup-index points at a {kinds[0]!r} index: corpus_job's "
-                "dedup probe needs a simhash index.  Point it at an index "
-                "this job (or write_simhash_index) created, or a fresh path."
-            )
-        # create the marker when absent — without it an index built HERE
-        # would be adoptable by any other family's wave=0 build, the
-        # exact silent destruction the marker prevents
-        from paperoni_spark.fsio import (
-            assert_append_wave,
-            assert_index_kind,
-            refuse_consumed_wave,
-        )
-
-        assert_index_kind(spark, args.dedup_index, "simhash")
-        # the index append (write_wave_segment) repeats the wave-id and
-        # compaction guards, but only after the sinks are written — run
-        # them HERE, before the own-segment delete below: a wave id that
-        # compact_index folded into the merged segment no-ops that
-        # delete, the probe then pairs the wave against its own
-        # fingerprints inside the merged history, and the wave empties
-        # with the corpus/funnel sinks already written
-        try:
-            assert_append_wave(wave)
-            refuse_consumed_wave(spark, args.dedup_index, wave)
-        except ValueError as e:
-            raise SystemExit(str(e)) from None
-        index_waves = [n for n in names if n.startswith("wave=") and n != own_name]
-        if index_waves and not args.append:
-            # loud refusal (same convention as write_output's
-            # legacy-dir guard): overwriting the corpus while the
-            # index keeps other waves' fingerprints would reject
-            # future docs against content no longer in the corpus
-            raise SystemExit(
-                "--dedup-index points at an existing index but --append "
-                "was not given: a plain overwrite would desynchronize "
-                "corpus and index.  Pass --append for a wave, or remove "
-                "the index to rebuild from scratch."
-            )
-        # all refusals are behind us — NOW it is safe to clear a failed
-        # attempt's leftover own segment before the probe
-        if fs.exists(own_seg):
-            fs.delete(own_seg, True)
         if args.substring_index is not None:
             # cleaning runs BEFORE the simhash dedup probe: the index's
             # fingerprints cover CLEANED written text, so the wave must
             # be probed in the same form — probing raw text would shift
             # near-dups by the removed boilerplate mass and silently
             # admit docs the wave-local configuration rejected
-            from paperoni_spark.fsio import (
-                assert_index_kind,
-                delete_path,
-                refuse_foreign_layout,
-            )
             from paperoni_spark.materialize import materialize
             from paperoni_spark.operators.dedup import (
                 SUBSTR_DEDUP_N,
@@ -279,36 +245,9 @@ def main(argv: list[str] | None = None) -> None:
             from pyspark.sql import functions as F
 
             n_sub = SUBSTR_DEDUP_N if substring_n is None else substring_n
-            refuse_foreign_layout(spark, args.substring_index)
-            assert_index_kind(spark, args.substring_index, "substring_hist")
-            # same guard as the dedup index, and for the same reason:
-            # the pre-probe own-histogram delete just below no-ops on a
-            # compacted wave id and the probe counts the wave against
-            # its own folded shingles (the whole wave's text strips)
-            try:
-                refuse_consumed_wave(spark, args.substring_index, wave)
-            except ValueError as e:
-                raise SystemExit(str(e)) from None
-            # a failed attempt's leftover own histogram would count this
-            # wave's shingles AGAINST THE WAVE ITSELF — every shingle hits
-            # total ≥ 2 and the whole wave empties — so clear it BEFORE
-            # the probe (same rule as the simhash own-segment delete)
-            delete_path(
-                spark, os.path.join(args.substring_index, f"wave={wave}")
-            )
-            # the substring index may live on a different scheme than the
-            # dedup index — derive ITS OWN FileSystem (never reuse fs)
-            sub_root = hpath(args.substring_index)
-            sfs = sub_root.getFileSystem(spark._jsc.hadoopConfiguration())
-            sub_names = (
-                [st.getPath().getName() for st in sfs.listStatus(sub_root)]
-                if sfs.exists(sub_root)
-                else []
-            )
-            sub_waves = [m for m in sub_names if m.startswith("wave=")]
             # the probe joins re-run per consumer — cut the corpus once
             corpus = materialize(corpus)
-            if sub_waves:
+            if committed[args.substring_index]:
                 clean_res = substring_delta_clean(
                     spark,
                     corpus.select("doc_id", "text"),
@@ -336,7 +275,7 @@ def main(argv: list[str] | None = None) -> None:
             # once — the probe cuts it and hands its survivors to the
             # index append
             fingerprints = simhash(corpus, SIMHASH_PAIR_BITS)
-        if index_waves:
+        if committed[args.dedup_index]:
             corpus, fingerprints, rejected, resubmitted = dedup_wave_against_index(
                 spark,
                 corpus,

@@ -115,18 +115,12 @@ def main(argv: list[str] | None = None) -> None:
 
     wave = args.wave_id or uuid.uuid4().hex
 
-    def hpath(p):
-        return spark._jvm.org.apache.hadoop.fs.Path(p)
-
-    ust_fs = hpath(args.user_state_index).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
     # the user_state wave=0 segment is the BOOTSTRAP COMMIT POINT: it is
     # written last, so a crashed bootstrap (rollup written, state not)
     # re-runs the whole bootstrap and every wave-keyed/idempotent write
     # replays.  A bare-root probe would see a crashed attempt's markers
     # and refuse the retry.
-    have_state = ust_fs.exists(hpath(f"{args.user_state_index}/wave=0"))
+    have_state = fsio.path_exists(spark, f"{args.user_state_index}/wave=0")
     if args.append and not have_state:
         raise SystemExit(
             f"--append but {args.user_state_index} has no committed "
@@ -137,10 +131,7 @@ def main(argv: list[str] | None = None) -> None:
             f"{args.user_state_index} already exists — pass --append for "
             "follow-up waves (a re-bootstrap would orphan the history)"
         )
-    rollup_fs = hpath(args.rollup_index).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    if args.append and not rollup_fs.exists(hpath(f"{args.rollup_index}/wave=0")):
+    if args.append and not fsio.path_exists(spark, f"{args.rollup_index}/wave=0"):
         # without this, an append onto a missing/mistyped rollup root
         # silently bootstraps a history-less index whose every future
         # probe under-counts by all prior waves (the counters are

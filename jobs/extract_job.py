@@ -69,14 +69,11 @@ def main(argv: list[str] | None = None) -> None:
         # error on an EXISTING path (corrupt/partial checkpoint) propagates
         # loudly: silently ignoring it would re-extract everything and, in
         # append mode, write duplicate rows for completed doc_ids.
-        jvm = spark._jvm
-        ck_path = jvm.org.apache.hadoop.fs.Path(args.resume_from)
-        fs = ck_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        # globStatus (not exists): --resume-from may be a glob pattern,
-        # which spark.read.parquet resolves but exists() would treat as a
-        # missing literal path — silently re-extracting everything
-        matches = fs.globStatus(ck_path)
-        if matches is not None and len(matches) > 0:
+        # --resume-from may be a glob pattern, hence a glob match (an
+        # exists() probe would re-extract everything for a glob)
+        from paperoni_spark.fsio import glob_matches
+
+        if glob_matches(spark, args.resume_from):
             done = spark.read.parquet(args.resume_from)
 
     extracted = extract_pipeline(

@@ -237,9 +237,9 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_synthetic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full tiered pipeline over the synthetic heavy-tail corpus, one row
-    per document (status + span/node counters).  Oracle: frozen golden
-    VALUES — see q_corpus_build."""
+    """The extraction pipeline (default scan mode) over the synthetic
+    heavy-tail corpus, one row per document (status + span/node
+    counters).  Oracle: frozen golden VALUES — see q_corpus_build."""
     extracted = extract_pipeline(synth_documents_df(spark))
     return extracted.select(
         "doc_id",

@@ -24,7 +24,6 @@ exercise:
 from __future__ import annotations
 
 import html as html_mod
-import os
 from html.parser import HTMLParser
 from typing import Optional
 
@@ -315,18 +314,13 @@ class _TreeBuilder(HTMLParser):
         self._ensure_body()
 
 
-_USE_FAST = os.environ.get("PAPERONI_SLOW_PARSER", "") == ""
-
-
-def parse_html(html_str: str, fast: bool | None = None) -> Node:
+def parse_html(html_str: str, fast: bool = True) -> Node:
     """Parse a full document; returns the Document node (root).
 
     ``fast`` selects the single-shot tokenizer (fastparse.py, default) or
     the stdlib ``HTMLParser`` driver; both produce identical trees
     (tests/test_fastparse_diff.py)."""
     builder = _TreeBuilder()
-    if fast is None:
-        fast = _USE_FAST
     if fast:
         from .fastparse import fast_feed
 
@@ -428,10 +422,8 @@ class _FragmentBuilder(HTMLParser):
         self._current().append(Node.new_comment(data))
 
 
-def parse_fragment(html_str: str, fast: bool | None = None) -> Node:
+def parse_fragment(html_str: str, fast: bool = True) -> Node:
     builder = _FragmentBuilder()
-    if fast is None:
-        fast = _USE_FAST
     if fast:
         from .fastparse import fast_feed
 

@@ -1,4 +1,6 @@
-"""Tiny Hadoop-FS helpers shared by the persisted-index writers.
+"""Hadoop-FS helpers: the ONE module that touches the Hadoop FileSystem
+(tests/test_contract.py::test_hadoop_fs_only_in_fsio) — jobs and operators
+probe, list and delete paths only through these functions.
 
 Every persisted index in this repo (MinHash band, SimHash fingerprint,
 embedding sign-LSH, IVF, the LSH bucket index, and the streamed wave
@@ -19,18 +21,63 @@ def hadoop_path(spark: SparkSession, path: str):
     return spark._jvm.org.apache.hadoop.fs.Path(path)
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
+def _fs_for(spark: SparkSession, path: str):
     p = hadoop_path(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _entry_names(spark: SparkSession, path: str) -> list[str]:
+    """The names of the entries directly under ``path`` (empty if absent)."""
+    fs, root = _fs_for(spark, path)
+    if not fs.exists(root):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(root)]
+
+
+def _touch(spark: SparkSession, path: str) -> None:
+    fs, p = _fs_for(spark, path)
+    fs.create(p, True).close()
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_for(spark, path)
     return bool(fs.exists(p))
+
+
+def glob_matches(spark: SparkSession, pattern: str) -> bool:
+    """True if ``pattern`` (a path or a Hadoop glob) matches anything.
+    globStatus, not exists: ``spark.read.parquet`` resolves globs, and
+    exists() would treat a glob as a missing literal path."""
+    fs, p = _fs_for(spark, pattern)
+    matches = fs.globStatus(p)
+    return matches is not None and len(matches) > 0
 
 
 def delete_path(spark: SparkSession, path: str) -> None:
     """Recursively delete ``path`` if it exists (no-op otherwise)."""
-    p = hadoop_path(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _fs_for(spark, path)
     if fs.exists(p):
         fs.delete(p, True)
+
+
+def wave_names(spark: SparkSession, path: str) -> list[str]:
+    """The ``wave=<id>`` entry names under ``path`` (empty if absent)."""
+    return [nm for nm in _entry_names(spark, path) if nm.startswith("wave=")]
+
+
+def refuse_flat_layout(spark: SparkSession, path: str) -> None:
+    """Raise if ``path`` holds root-level ``part-`` files (the flat layout
+    of a pre-run_id-partitioned output): appending partition directories
+    next to them passes the write but fails every later read with Spark's
+    conflicting-directory-structures error — fail FIRST with a migration
+    message."""
+    if any(nm.startswith("part-") for nm in _entry_names(spark, path)):
+        raise ValueError(
+            f"{path} holds a flat (pre-run_id-partitioned) "
+            "layout; appending partitioned output would corrupt it. "
+            "Migrate: read the old dir and rewrite it with "
+            "partitionBy('run_id'), or point --output elsewhere."
+        )
 
 
 def refuse_foreign_layout(spark: SparkSession, path: str) -> None:
@@ -40,21 +87,39 @@ def refuse_foreign_layout(spark: SparkSession, path: str) -> None:
     data directory) creates the mixed layout Spark's partition discovery
     rejects at the NEXT probe — fail at the write, not after the index
     is polluted."""
-    root = hadoop_path(spark, path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(root):
-        foreign = [
-            st.getPath().getName()
-            for st in fs.listStatus(root)
-            if not st.getPath().getName().startswith(("wave=", "_", "."))
-        ]
-        if foreign:
-            raise ValueError(
-                f"{path} is not a wave-segmented index (found {foreign[:3]}): "
-                "writing wave=<id> next to flat files would break partition "
-                "discovery at the next read.  Rebuild the index with its "
-                "write_* function, or point at a fresh path."
-            )
+    foreign = [
+        nm
+        for nm in _entry_names(spark, path)
+        if not nm.startswith(("wave=", "_", "."))
+    ]
+    if foreign:
+        raise ValueError(
+            f"{path} is not a wave-segmented index (found {foreign[:3]}): "
+            "writing wave=<id> next to flat files would break partition "
+            "discovery at the next read.  Rebuild the index with its "
+            "write_* function, or point at a fresh path."
+        )
+
+
+def refuse_other_kind(spark: SparkSession, path: str, kind: str) -> bool:
+    """Raise if ``path`` is claimed by a DIFFERENT index kind; return
+    whether it already carries ``kind``'s marker.  Writes nothing — the
+    check a caller runs before it may touch any root (corpus_job checks
+    both its roots before either is created or deleted)."""
+    prefix = "_index_kind_"
+    found = [
+        nm[len(prefix):]
+        for nm in _entry_names(spark, path)
+        if nm.startswith(prefix)
+    ]
+    if found and kind not in found:
+        raise ValueError(
+            f"{path} is a {found[0]!r} index — refusing to write "
+            f"{kind!r} segments into it (the wave=0 overwrite would "
+            "destroy the other index's committed build).  Point at a "
+            "fresh path or the matching index root."
+        )
+    return bool(found)
 
 
 def assert_index_kind(spark: SparkSession, path: str, kind: str) -> None:
@@ -71,25 +136,8 @@ def assert_index_kind(spark: SparkSession, path: str, kind: str) -> None:
     writers verify it BEFORE
     deleting anything.  A root without a marker (pre-round-6 index, or a
     fresh path) is adopted: the marker is created here."""
-    root = hadoop_path(spark, path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    marker = hadoop_path(spark, f"{path}/_index_kind_{kind}")
-    if fs.exists(root):
-        found = [
-            name[len("_index_kind_"):]
-            for st in fs.listStatus(root)
-            if (name := st.getPath().getName()).startswith("_index_kind_")
-        ]
-        if found and kind not in found:
-            raise ValueError(
-                f"{path} is a {found[0]!r} index — refusing to write "
-                f"{kind!r} segments into it (the wave=0 overwrite would "
-                "destroy the other index's committed build).  Point at a "
-                "fresh path or the matching index root."
-            )
-        if found:
-            return
-    fs.create(marker, True).close()
+    if not refuse_other_kind(spark, path, kind):
+        _touch(spark, f"{path}/_index_kind_{kind}")
 
 
 def assert_index_param(
@@ -104,28 +152,20 @@ def assert_index_param(
     (``create=True``); read-only probes pass ``create=False`` and only
     refuse a mismatch."""
     prefix = f"_param_{name}_"
-    root = hadoop_path(spark, path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(root):
-        found = [
-            nm[len(prefix):]
-            for st in fs.listStatus(root)
-            if (nm := st.getPath().getName()).startswith(prefix)
-        ]
-        if found and str(value) not in found:
-            raise ValueError(
-                f"{path} was built with {name}={found[0]} — refusing to "
-                f"use it with {name}={value} (digests/geometry would "
-                "silently mismatch).  Rebuild the index or pass the "
-                "matching value."
-            )
-        if found:
-            return
-    elif not create:
-        return
-    if create:
-        marker = hadoop_path(spark, f"{path}/{prefix}{value}")
-        fs.create(marker, True).close()
+    found = [
+        nm[len(prefix):]
+        for nm in _entry_names(spark, path)
+        if nm.startswith(prefix)
+    ]
+    if found and str(value) not in found:
+        raise ValueError(
+            f"{path} was built with {name}={found[0]} — refusing to "
+            f"use it with {name}={value} (digests/geometry would "
+            "silently mismatch).  Rebuild the index or pass the "
+            "matching value."
+        )
+    if not found and create:
+        _touch(spark, f"{path}/{prefix}{value}")
 
 
 def refuse_stale_appends(spark: SparkSession, path: str) -> None:
@@ -135,39 +175,14 @@ def refuse_stale_appends(spark: SparkSession, path: str) -> None:
     against the OLD quantizers — probes would decode them with the new
     ADC tables and return wrong rankings with no error.  A rebuild must
     start from a clean path (or the caller deletes the appends first)."""
-    root = hadoop_path(spark, path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(root):
-        stale = [
-            nm
-            for st in fs.listStatus(root)
-            if (nm := st.getPath().getName()).startswith("wave=")
-            and nm != "wave=0"
-        ]
-        if stale:
-            raise ValueError(
-                f"{path} carries appended segments ({stale[:3]}) encoded "
-                "against the CURRENT quantizers — rebuilding would retrain "
-                "them and silently mis-score every appended vector.  Delete "
-                "the index to rebuild from scratch."
-            )
-
-
-def _fs_for(spark: SparkSession, path: str):
-    p = hadoop_path(spark, path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _wave_names(spark: SparkSession, path: str) -> list[str]:
-    """The ``wave=<id>`` entry names under ``path`` (empty if absent)."""
-    fs, root = _fs_for(spark, path)
-    if not fs.exists(root):
-        return []
-    return [
-        nm
-        for st in fs.listStatus(root)
-        if (nm := st.getPath().getName()).startswith("wave=")
-    ]
+    stale = [nm for nm in wave_names(spark, path) if nm != "wave=0"]
+    if stale:
+        raise ValueError(
+            f"{path} carries appended segments ({stale[:3]}) encoded "
+            "against the CURRENT quantizers — rebuilding would retrain "
+            "them and silently mis-score every appended vector.  Delete "
+            "the index to rebuild from scratch."
+        )
 
 
 _COMPACT_MANIFEST = "_compact_manifest"
@@ -177,13 +192,10 @@ _CONSUMED_PREFIX = "_compacted_wave_"
 def _consumed_ids(spark: SparkSession, path: str) -> set:
     """Wave ids owned by prior compactions of ``path`` (folded segments
     plus merged-segment own ids), as strings."""
-    fs, root = _fs_for(spark, path)
-    if not fs.exists(root):
-        return set()
     return {
         nm[len(_CONSUMED_PREFIX):]
-        for st in fs.listStatus(root)
-        if (nm := st.getPath().getName()).startswith(_CONSUMED_PREFIX)
+        for nm in _entry_names(spark, path)
+        if nm.startswith(_CONSUMED_PREFIX)
     }
 
 
@@ -199,8 +211,7 @@ def refuse_mid_compaction(
     Writers get the same refusal via :func:`refuse_consumed_wave`
     (``op="appending"`` — the diagnostic names the caller's actual
     operation)."""
-    fs, _ = _fs_for(spark, path)
-    if fs.exists(hadoop_path(spark, f"{path}/{_COMPACT_MANIFEST}")):
+    if path_exists(spark, f"{path}/{_COMPACT_MANIFEST}"):
         detail = (
             "the folded rows may live only in the staged _compact_tmp, "
             "so reading now would silently return a truncated index"
@@ -227,8 +238,7 @@ def refuse_consumed_wave(spark: SparkSession, path: str, wave) -> None:
     markers (one per folded wave — bounded by waves ever compacted), so
     the refusal works for integer and string wave ids alike."""
     refuse_mid_compaction(spark, path, op="appending")
-    fs, _ = _fs_for(spark, path)
-    if fs.exists(hadoop_path(spark, f"{path}/{_CONSUMED_PREFIX}{wave}")):
+    if path_exists(spark, f"{path}/{_CONSUMED_PREFIX}{wave}"):
         raise ValueError(
             f"wave={wave} of {path} is owned by a compaction (either "
             "folded into the merged segment, or the merged segment "
@@ -321,7 +331,7 @@ def compact_index(
         refuse_foreign_layout(spark, path)
         if kind is not None:
             assert_index_kind(spark, path, kind)
-        waves = _wave_names(spark, path)
+        waves = wave_names(spark, path)
         if len(waves) <= 1:
             return 0
         int_ids = [
@@ -367,9 +377,7 @@ def compact_index(
     owned = [seg.split("=", 1)[1] for seg in manifest["consumed"]]
     owned.append(str(manifest["new_id"]))
     for wid in owned:
-        fs.create(
-            hadoop_path(spark, f"{path}/{_CONSUMED_PREFIX}{wid}"), True
-        ).close()
+        _touch(spark, f"{path}/{_CONSUMED_PREFIX}{wid}")
     delete_path(spark, f"{path}/{_COMPACT_MANIFEST}")
     return len(manifest["consumed"])
 
@@ -472,8 +480,8 @@ def write_wave_segment(
     flat pre-round-5 index, or an arbitrary data directory): writing a
     wave segment next to bare part files creates the mixed layout
     Spark's partition discovery rejects at the NEXT probe — fail at the
-    write, not after the index is polluted (the operator-side twin of
-    corpus_job's foreign-layout refusal).  ``kind`` additionally pins the
+    write, not after the index is polluted (corpus_job runs the same
+    refusal before its probe).  ``kind`` additionally pins the
     index FAMILY via :func:`assert_index_kind` — two different index
     kinds share this layout, so the layout check alone would let one
     family's build destroy another's."""

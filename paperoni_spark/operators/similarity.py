@@ -895,21 +895,19 @@ def _write_lsh_wave(embeddings: DataFrame, path: str, wave: int) -> None:
     after the index is polluted."""
     from ..fsio import (
         assert_index_kind,
+        delete_path,
         refuse_consumed_wave,
         refuse_foreign_layout,
     )
 
     spark = embeddings.sparkSession
     assert_index_kind(spark, path, "lsh_buckets")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for sub in ("rows", "counts"):
-        refuse_foreign_layout(spark, f"{path}/{sub}")
-        refuse_consumed_wave(spark, f"{path}/{sub}", wave)
-        seg = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}/wave={wave}")
-        fs = seg.getFileSystem(conf)
-        if fs.exists(seg):
-            fs.delete(seg, True)
+    subs = (f"{path}/rows", f"{path}/counts")
+    for sub in subs:  # both sub-roots' refusals before either delete
+        refuse_foreign_layout(spark, sub)
+        refuse_consumed_wave(spark, sub, wave)
+    for sub in subs:
+        delete_path(spark, f"{sub}/wave={wave}")
     base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
     # two consumers (rows write + counts agg): materialize the compact
     # band rows so the wave's coding UDF runs once, per the repo's
@@ -1520,10 +1518,10 @@ def compact_lsh_bucket_index(spark, path: str) -> int:
     from ..fsio import (
         _COMPACT_MANIFEST,
         _consumed_ids,
-        _wave_names,
         assert_index_kind,
         compact_index,
         path_exists,
+        wave_names,
     )
 
     assert_index_kind(spark, path, "lsh_buckets")
@@ -1544,7 +1542,7 @@ def compact_lsh_bucket_index(spark, path: str) -> int:
         path_exists(spark, f"{r}/{_COMPACT_MANIFEST}") for r in roots.values()
     ):
         waves = {
-            sub: {w.split("=", 1)[1] for w in _wave_names(spark, r)}
+            sub: {w.split("=", 1)[1] for w in wave_names(spark, r)}
             for sub, r in roots.items()
         }
         consumed = {sub: _consumed_ids(spark, r) for sub, r in roots.items()}

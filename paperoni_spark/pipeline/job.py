@@ -31,9 +31,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..fsio import refuse_flat_layout
 from ..operators.extract import run_extract
-
-_JOB_START = time.time()
 
 # spans beyond this count put a document in the heavy tier
 HEAVY_SPAN_THRESHOLD = 64
@@ -105,9 +104,17 @@ def extract_pipeline(
     return run_extract(docs, base_url)
 
 
-def lineage_metrics(extracted: DataFrame, run_id: str | None = None) -> DataFrame:
-    """Per-partition lineage + metrics rows (FIXTURES.md §1.3)."""
+def lineage_metrics(
+    extracted: DataFrame,
+    run_id: str | None = None,
+    started_at: float | None = None,
+) -> DataFrame:
+    """Per-partition lineage + metrics rows (FIXTURES.md §1.3).
+    ``started_at`` defaults to now; ``write_output`` passes the time its
+    call began."""
     run_id = run_id or uuid.uuid4().hex
+    finished_at = time.time()
+    started_at = finished_at if started_at is None else started_at
     return (
         extracted.groupBy("partition_id")
         .agg(
@@ -119,8 +126,8 @@ def lineage_metrics(extracted: DataFrame, run_id: str | None = None) -> DataFram
             F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("err_count"),
         )
         .withColumn("run_id", F.lit(run_id))
-        .withColumn("started_at", F.lit(_JOB_START))
-        .withColumn("finished_at", F.lit(time.time()))
+        .withColumn("started_at", F.lit(started_at))
+        .withColumn("finished_at", F.lit(finished_at))
     )
 
 
@@ -148,29 +155,13 @@ def write_output(
     not O(all appends ever) — and the run_id filter never opens historical
     files (previously a mergeSchema read of the full history; on Iceberg
     the equivalent is the snapshot read, which prunes the same way)."""
+    started_at = time.time()
     run_id = run_id or uuid.uuid4().hex
-    spark = extracted.sparkSession
-    # layout guard: appending run_id= partitions into a directory holding
-    # root-level part files (the pre-partitioned flat layout) would pass the
-    # write but fail every subsequent read with Spark's conflicting-
-    # directory-structures error — fail FIRST with a migration message
-    jvm = spark._jvm
-    out = jvm.org.apache.hadoop.fs.Path(output_path)
-    fs = out.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(out):
-        for st in fs.listStatus(out):
-            name = st.getPath().getName()
-            if st.isFile() and name.startswith("part-"):
-                raise ValueError(
-                    f"{output_path} holds a flat (pre-run_id-partitioned) "
-                    "layout; appending partitioned output would corrupt it. "
-                    "Migrate: read the old dir and rewrite it with "
-                    "partitionBy('run_id'), or point --output elsewhere."
-                )
+    refuse_flat_layout(extracted.sparkSession, output_path)
     stamped = extracted.withColumn("run_id", F.lit(run_id))
     stamped.write.mode(mode).partitionBy("run_id").parquet(output_path)
     if metrics_path is not None:
         written = extracted.sparkSession.read.parquet(output_path).where(
             F.col("run_id") == run_id
         )
-        lineage_metrics(written, run_id).write.mode(mode).parquet(metrics_path)
+        lineage_metrics(written, run_id, started_at).write.mode(mode).parquet(metrics_path)

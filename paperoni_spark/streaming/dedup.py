@@ -264,22 +264,15 @@ def _run_indexed_wave_stream(
     ``state_partitions`` still pins the shuffle width of the per-batch
     probe jobs — a gate-scale wave doesn't need the session's full
     width."""
+    from ..fsio import delete_path, path_exists
     from .util import state_shuffle_partitions
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def hpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = hpath(index_dir).getFileSystem(conf)
-    if not fs.exists(hpath(index_dir)):
+    if not path_exists(spark, index_dir):
         bootstrap_writer(f"{index_dir}/batch=-1")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        own_seg = hpath(f"{index_dir}/batch={batch_id}")
-        if fs.exists(own_seg):  # failed prior attempt of THIS batch
-            fs.delete(own_seg, True)
+        # a failed prior attempt of THIS batch leaves its own segment
+        delete_path(spark, f"{index_dir}/batch={batch_id}")
         pairs, segment = process_wave(batch_df, batch_id)
         pairs.write.mode("overwrite").parquet(f"{results_dir}/batch={batch_id}")
         segment.write.mode("overwrite").parquet(f"{index_dir}/batch={batch_id}")

@@ -57,7 +57,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
     before = _rows(dedup.simhash_delta_pairs_against_index(spark, delta, path))
 
     assert fsio.compact_index_kind(spark, path, "simhash") == 3
-    assert fsio._wave_names(spark, path) == ["wave=3"]
+    assert fsio.wave_names(spark, path) == ["wave=3"]
     assert not fsio.path_exists(spark, f"{path}/_compact_tmp")
     assert not fsio.path_exists(spark, f"{path}/{fsio._COMPACT_MANIFEST}")
     after = _rows(dedup.simhash_delta_pairs_against_index(spark, delta, path))
@@ -71,7 +71,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
     # fresh ids append fine, and a second compaction folds them again
     dedup.append_to_simhash_index(_sh(delta), path, 4)
     assert fsio.compact_index_kind(spark, path, "simhash") == 2
-    assert fsio._wave_names(spark, path) == ["wave=5"]
+    assert fsio.wave_names(spark, path) == ["wave=5"]
 
     # compacting with the wrong family's geometry is refused up front
     with pytest.raises(ValueError, match="is a 'simhash' index"):
@@ -85,7 +85,7 @@ def test_compaction_noop_and_foreign(spark, docs, tmp_path):
     path = str(tmp_path / "sh_single")
     dedup.write_simhash_index(docs, path)
     assert fsio.compact_index_kind(spark, path, "simhash") == 0
-    assert fsio._wave_names(spark, path) == ["wave=0"]
+    assert fsio.wave_names(spark, path) == ["wave=0"]
 
     flat = str(tmp_path / "flat")
     docs.limit(5).write.parquet(flat)
@@ -155,8 +155,8 @@ def test_lsh_bucket_compaction_parity(spark, embeds, tmp_path):
     similarity.append_to_lsh_bucket_index(wave1, path, 1)
     before = _rows(similarity.ann_lsh_topk_indexed(spark, embeds, path))
     assert similarity.compact_lsh_bucket_index(spark, path) == 2
-    assert fsio._wave_names(spark, f"{path}/rows") == ["wave=2"]
-    assert fsio._wave_names(spark, f"{path}/counts") == ["wave=2"]
+    assert fsio.wave_names(spark, f"{path}/rows") == ["wave=2"]
+    assert fsio.wave_names(spark, f"{path}/counts") == ["wave=2"]
     after = _rows(similarity.ann_lsh_topk_indexed(spark, embeds, path))
     assert after == before
     # counts re-aggregated: one row per bucket
@@ -222,7 +222,7 @@ def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
         dedup.simhash_delta_pairs_against_index(spark, docs.limit(1), path)
     # resume: folds the same two segments recorded in the manifest
     assert fsio.compact_index_kind(spark, path, "simhash") == 2
-    assert fsio._wave_names(spark, path) == ["wave=2"]
+    assert fsio.wave_names(spark, path) == ["wave=2"]
     assert _rows(spark.read.parquet(path).drop("wave")) == expected
 
 

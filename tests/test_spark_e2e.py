@@ -101,6 +101,24 @@ def test_lineage_metrics(spark, fixture_df):
     assert sum(m["err_count"] for m in metrics) == 3
 
 
+def test_lineage_started_at_is_per_call(spark, fixture_df, tmp_path):
+    """Each write_output call stamps its own lineage ``started_at``: in a
+    long-lived session a later call must not inherit an earlier start
+    (e.g. the time the module was imported)."""
+    import time
+
+    from paperoni_spark.pipeline import write_output
+
+    docs = fixture_df.limit(2)
+    out, met = str(tmp_path / "out"), str(tmp_path / "met")
+    write_output(extract_pipeline(docs), out, metrics_path=met, run_id="r1")
+    before = time.time()
+    write_output(extract_pipeline(docs), out, metrics_path=met, run_id="r2")
+    rows = spark.read.parquet(met).where(F.col("run_id") == "r2").collect()
+    assert rows
+    assert all(before <= r["started_at"] <= r["finished_at"] for r in rows)
+
+
 def test_resume_anti_join(spark, fixture_df):
     extracted = extract_pipeline(fixture_df, mode="tiered", light_partitions=2, heavy_partitions=1)
     done = extracted.select("doc_id", "status")
@@ -807,6 +825,112 @@ def test_corpus_job_near_dup_waves(tmp_path_factory, extra):
         timeout=560,
     )
     assert "CJ_NEAR_DUP_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-4000:]
+
+
+_REFUSALS_SCRIPT = r"""
+import os, shutil, sys
+
+root, tmp = sys.argv[1], sys.argv[2]
+sys.path.insert(0, root)
+from pyspark.sql import SparkSession
+
+from jobs.corpus_job import main as corpus_main
+from paperoni_spark.contract import DOCUMENTS_SPANS_SCHEMA
+from paperoni_spark.spans.codec import html_to_spans
+
+
+def doc(doc_id, word):
+    html = ("<html><head><title>T</title></head><body>"
+            '<article id="main-content">'
+            + "".join(f"<p>The {word} report {i} covers the {word} harvest "
+                      f"and the {word} journey of year {i} in detail.</p>"
+                      for i in range(6))
+            + "</article></body></html>")
+    return {"doc_id": doc_id, "spans": html_to_spans(html)}
+
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+src = os.path.join(tmp, "in")
+spark.createDataFrame([doc("a1", "amber"), doc("a2", "cobalt")],
+                      schema=DOCUMENTS_SPANS_SCHEMA).write.parquet(src)
+spark.stop()
+
+out, fun = os.path.join(tmp, "corpus"), os.path.join(tmp, "funnel")
+idx = os.path.join(tmp, "index")
+base = ["--input", src, "--output", out, "--funnel", fun]
+corpus_main(base + ["--dedup-index", idx, "--wave-id", "w1"])  # committed wave
+
+foreign = os.path.join(tmp, "foreign")
+os.makedirs(foreign)
+open(os.path.join(foreign, "part-00000.parquet"), "w").close()
+other_kind = os.path.join(tmp, "other_kind")
+os.makedirs(os.path.join(other_kind, "wave=0"))
+open(os.path.join(other_kind, "_index_kind_minhash_bands"), "w").close()
+open(os.path.join(other_kind, "wave=0", "part-00000.parquet"), "w").close()
+compacted = os.path.join(tmp, "compacted")
+shutil.copytree(idx, compacted)
+open(os.path.join(compacted, "_compacted_wave_w0"), "w").close()
+
+
+def listing(path):
+    # every file and directory under path, recursively (None if absent)
+    if not os.path.exists(path):
+        return None
+    return sorted(os.path.relpath(os.path.join(d, n), path)
+                  for d, dirs, files in os.walk(path) for n in dirs + files)
+
+
+def refused(expect, dedup, wave, append=True, substring=None):
+    argv = base + ["--dedup-index", dedup, "--wave-id", wave]
+    argv += ["--append"] if append else []
+    argv += ["--substring-index", substring] if substring else []
+    roots = [dedup, substring or os.path.join(tmp, "no_substring"), out, fun]
+    before = [listing(r) for r in roots]
+    try:
+        corpus_main(argv)
+    except SystemExit as e:
+        assert expect in str(e), (argv, str(e))
+    else:
+        raise AssertionError(f"not refused: {argv}")
+    assert [listing(r) for r in roots] == before, argv
+
+
+refused("not a wave-segmented index", foreign, "w2")
+refused("'minhash_bands' index", other_kind, "w2")
+refused("--append was not given", idx, "w2", append=False)
+refused("owned by a compaction", compacted, "w0")
+refused("must not be the build's 0", os.path.join(tmp, "fresh"), "0")
+# a retry of the committed wave whose SUBSTRING root is refused must not
+# first delete the dedup index's committed wave=w1 segment
+refused("not a wave-segmented index", idx, "w1", substring=foreign)
+refused("'minhash_bands' index", idx, "w1", substring=other_kind)
+print("CJ_REFUSALS_OK")
+"""
+
+
+def test_corpus_job_refusals_leave_indexes_untouched(tmp_path_factory):
+    """Every corpus_job refusal for either index root (--dedup-index,
+    --substring-index) exits before anything is created or deleted: a
+    foreign root, another index family's root, an existing index without
+    --append, a compacted wave id, wave id 0 on a fresh path, and a
+    refused substring root on a retry of a committed wave all leave both
+    roots' (and the sinks') recursive listings unchanged.
+    Subprocess: corpus_job.main owns (and stops) its session."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = str(tmp_path_factory.mktemp("cj_refusals"))
+    proc = subprocess.run(
+        [sys.executable, "-c", _REFUSALS_SCRIPT, root, tmp],
+        capture_output=True,
+        text=True,
+        timeout=560,
+    )
+    assert "CJ_REFUSALS_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-4000:]
 
 
 def test_build_training_corpus_model_filter(spark):
