@@ -45,7 +45,7 @@ def _prepare_index_roots(spark, args, wave: str) -> dict[str, list[str]]:
     deleted: a refusal must leave the indexes as it found them (deleting
     the own segment first would destroy a COMMITTED wave's fingerprints
     on a re-run that is then refused, desyncing corpus and index).  The
-    kind check only reads — the appends adopt a marker-less root after
+    checks only read — the index writes adopt a marker-less root after
     the sinks are written (unmarked, any other family's wave=0 build
     could adopt it).  Then a failed attempt's leftover own
     segments are deleted BEFORE the probes: its fingerprints would pair
@@ -59,7 +59,7 @@ def _prepare_index_roots(spark, args, wave: str) -> dict[str, list[str]]:
     mis-probe) on missing columns; a wave id that compact_index folded
     into the merged segment no-ops the own-segment delete, and the probe
     then meets the wave's own fingerprints (shingles) in the merged
-    history.  The index append repeats these guards, but only after the
+    history.  The index writes repeat these guards, but only after the
     sinks are written."""
     from paperoni_spark import fsio
 
@@ -69,9 +69,7 @@ def _prepare_index_roots(spark, args, wave: str) -> dict[str, list[str]]:
     try:
         fsio.assert_append_wave(wave)
         for root, kind in roots:
-            fsio.refuse_foreign_layout(spark, root)
-            fsio.refuse_other_kind(spark, root, kind)
-            fsio.refuse_consumed_wave(spark, root, wave)
+            fsio.check_wave_segment(spark, root, wave, kind)
     except ValueError as e:
         raise SystemExit(str(e)) from None
     # "an index exists" means committed segments OTHER than this wave's:
@@ -266,8 +264,8 @@ def main(argv: list[str] | None = None) -> None:
             )
         from paperoni_spark.operators.dedup import (
             SIMHASH_PAIR_BITS,
-            append_to_simhash_index,
             simhash,
+            write_simhash_index,
         )
 
         if fingerprints is None:
@@ -304,17 +302,17 @@ def main(argv: list[str] | None = None) -> None:
         # index on the first run.  The operator-built simhash indexes
         # share this wave=<id> layout (write = wave 0); anything WITHOUT
         # wave= segments is refused above as foreign.
-        append_to_simhash_index(fingerprints, args.dedup_index, wave)
+        write_simhash_index(fingerprints, args.dedup_index, wave)
         if args.substring_index is not None:
             # the WRITTEN text's histogram: the index reflects what is in
             # the corpus (a removed span is gone — future waves dup
             # against surviving content, not against deleted bytes).
-            # append_to_substring_index replays delete-before-overwrite
+            # write_substring_index replays delete-before-overwrite
             # AND pins kind + shingle_n markers; string wave ids format
             # into the same wave=<id> layout
-            from paperoni_spark.operators.dedup import append_to_substring_index
+            from paperoni_spark.operators.dedup import write_substring_index
 
-            append_to_substring_index(
+            write_substring_index(
                 corpus.select("doc_id", "text"),
                 args.substring_index,
                 wave,

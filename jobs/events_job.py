@@ -99,6 +99,17 @@ def main(argv: list[str] | None = None) -> None:
     from paperoni_spark.operators import temporal
     from paperoni_spark.pipeline.session import apply_engine_confs
 
+    wave = args.wave_id or uuid.uuid4().hex
+    if args.append:
+        # refuse a bad follow-up wave id (the build's 0, or negative)
+        # before anything is read or written: at wave 0 the enriched
+        # rows and metrics would land first and the index writes would
+        # then replace the bootstrap
+        try:
+            fsio.assert_append_wave(wave)
+        except ValueError as e:
+            raise SystemExit(str(e)) from None
+
     spark = apply_engine_confs(
         SparkSession.builder.appName("paperoni-events-ingest").getOrCreate()
     )
@@ -112,8 +123,6 @@ def main(argv: list[str] | None = None) -> None:
     # the wave is consumed by the order check, the enrichment, and two
     # index appends — cache once
     events = events.persist()
-
-    wave = args.wave_id or uuid.uuid4().hex
 
     # the user_state wave=0 segment is the BOOTSTRAP COMMIT POINT: it is
     # written last, so a crashed bootstrap (rollup written, state not)
@@ -226,18 +235,15 @@ def main(argv: list[str] | None = None) -> None:
         metrics.write.mode("overwrite").parquet(m_seg)
 
     # index segments LAST (a failed wave never poisons the indexes; both
-    # appends replay under the same wave id), and within them the
-    # user_state write LAST of all — its wave=0 segment is the bootstrap
-    # commit point the next run's have_state probe reads, so everything
-    # written before it must be (and is) replayable: the rollup wave
-    # segment replays delete-before-overwrite, the user_state append is
-    # idempotent by construction (struct-max).
-    if have_state:
-        temporal.append_to_rollup_index(events, args.rollup_index, wave)
-        temporal.append_to_user_state_index(events, args.user_state_index, wave)
-    else:
-        temporal.write_rollup_index(events, args.rollup_index)
-        temporal.write_user_state_index(events, args.user_state_index)
+    # writes replay under the same wave id, the bootstrap's at wave 0),
+    # and within them the user_state write LAST of all — its wave=0
+    # segment is the bootstrap commit point the next run's have_state
+    # probe reads, so everything written before it must be (and is)
+    # replayable: the rollup wave segment replays delete-before-overwrite,
+    # the user_state write is idempotent by construction (struct-max).
+    index_wave = wave if have_state else 0
+    temporal.write_rollup_index(events, args.rollup_index, index_wave)
+    temporal.write_user_state_index(events, args.user_state_index, index_wave)
 
     enriched.unpersist()
     events.unpersist()

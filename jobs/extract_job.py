@@ -29,7 +29,6 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--metrics", default=None)
     parser.add_argument("--resume-from", default=None)
     parser.add_argument("--base-url", default="http://example.com/")
-    parser.add_argument("--mode", choices=["scan", "tiered"], default="scan")
     parser.add_argument("--run-id", default=None)
     args = parser.parse_args(argv)
 
@@ -76,9 +75,7 @@ def main(argv: list[str] | None = None) -> None:
         if glob_matches(spark, args.resume_from):
             done = spark.read.parquet(args.resume_from)
 
-    extracted = extract_pipeline(
-        documents, base_url=args.base_url, mode=args.mode, done=done
-    )
+    extracted = extract_pipeline(documents, base_url=args.base_url, done=done)
     run_id = args.run_id or uuid.uuid4().hex
     write_output(extracted, args.output, metrics_path=args.metrics, run_id=run_id)
     spark.stop()

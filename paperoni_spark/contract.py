@@ -1970,7 +1970,11 @@ def q_simhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.where(~_delta_flag_col())
     delta = docs.where(_delta_flag_col())
     index_path = _memo_index(
-        "simhash_index", sf_dir, lambda p: dedup.write_simhash_index(corpus, p)
+        "simhash_index",
+        sf_dir,
+        lambda p: dedup.write_simhash_index(
+            dedup.simhash(corpus, dedup.SIMHASH_PAIR_BITS), p
+        ),
     )
     return dedup.simhash_delta_pairs_against_index(spark, delta, index_path)
 
@@ -3380,9 +3384,7 @@ def q_time_rollup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build(p: str) -> None:
         temporal.write_rollup_index(events.where(F.col("ts") < cut), p)
-        temporal.append_to_rollup_index(
-            events.where(F.col("ts") >= cut), p, wave=1
-        )
+        temporal.write_rollup_index(events.where(F.col("ts") >= cut), p, wave=1)
 
     index_path = _memo_index("time_rollup", sf_dir, _build)
     return temporal.time_rollup_from_index(spark, index_path)

@@ -2,14 +2,14 @@
 (tests/test_contract.py::test_hadoop_fs_only_in_fsio) — jobs and operators
 probe, list and delete paths only through these functions.
 
-Every persisted index in this repo (MinHash band, SimHash fingerprint,
-embedding sign-LSH, IVF, the LSH bucket index, and the streamed wave
-loops) follows ONE durability rule: a writer owns exactly one
-``wave=<id>`` (or ``batch=<id>``) segment and replays it with
-delete-before-overwrite, so an at-least-once retry is idempotent and
-committed segments are never touched.  These helpers are the shared
-mechanics; they go through the Hadoop FileSystem API so any scheme the
-cluster mounts (file://, hdfs://, s3a://) behaves identically.
+Every persisted index in this repo (the twelve index families and the
+streamed wave loops) follows ONE durability rule: a writer owns exactly
+one ``wave=<id>`` segment and replays it with delete-before-overwrite,
+so an at-least-once retry is idempotent and committed segments are
+never touched.  :func:`write_wave_segment` is the only code that writes
+a segment.  These helpers go through the Hadoop FileSystem API so any
+scheme the cluster mounts (file://, hdfs://, s3a://) behaves
+identically.
 """
 
 from __future__ import annotations
@@ -133,24 +133,22 @@ def assert_index_kind(spark: SparkSession, path: str, kind: str) -> None:
     carries an empty ``_index_kind_<kind>`` marker file (underscore
     prefix, NO "=": Spark's file index keeps underscore names containing
     "=" as partition-style paths and would read the marker as data);
-    writers verify it BEFORE
-    deleting anything.  A root without a marker (pre-round-6 index, or a
-    fresh path) is adopted: the marker is created here."""
+    :func:`write_wave_segment` and compaction verify it BEFORE deleting
+    anything.  A root without a marker (pre-round-6 index, or a fresh
+    path) is adopted: the marker is created here."""
     if not refuse_other_kind(spark, path, kind):
         _touch(spark, f"{path}/_index_kind_{kind}")
 
 
-def assert_index_param(
-    spark: SparkSession, path: str, name: str, value, create: bool = True
-) -> None:
-    """Pin an index GEOMETRY parameter to its root via an empty
-    ``_param_<name>_<value>`` marker (same convention as the kind
-    marker): an index probed or appended with a different value would
-    silently desynchronize — e.g. a substring histogram built with
-    8-token shingles probed at n=50 matches nothing and every
-    cross-wave duplicate survives.  Writers adopt a marker-less root
-    (``create=True``); read-only probes pass ``create=False`` and only
-    refuse a mismatch."""
+def assert_index_param(spark: SparkSession, path: str, name: str, value) -> None:
+    """Refuse a GEOMETRY parameter that differs from the one pinned to
+    the root by an empty ``_param_<name>_<value>`` marker (same
+    convention as the kind marker): an index probed or appended with a
+    different value would silently desynchronize — e.g. a substring
+    histogram built with 8-token shingles probed at n=50 matches nothing
+    and every cross-wave duplicate survives.  Reads only: probes call
+    it, and :func:`write_wave_segment` adopts the marker of a
+    marker-less root after every refusal has passed."""
     prefix = f"_param_{name}_"
     found = [
         nm[len(prefix):]
@@ -164,8 +162,6 @@ def assert_index_param(
             "silently mismatch).  Rebuild the index or pass the "
             "matching value."
         )
-    if not found and create:
-        _touch(spark, f"{path}/{prefix}{value}")
 
 
 def refuse_stale_appends(spark: SparkSession, path: str) -> None:
@@ -443,53 +439,88 @@ def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
     return compact_index(spark, path, kind=kind, **geometries[kind])
 
 
-def assert_append_wave(wave) -> None:
-    """Validate an APPEND wave id (shared by every family's
-    append_to_*_index): never the build's 0, never negative, never
-    empty — in both int and string spelling.  Non-numeric string ids are
-    allowed (corpus_job uses run-derived names); numeric strings obey
-    the same >= 1 rule as ints so ``"-1"`` cannot sneak past the string
-    branch and write a layout-violating ``wave=-1`` segment."""
+def _assert_wave_id(wave, first: int, what: str) -> None:
+    """Refuse an empty wave id, or a numeric one below ``first``, in both
+    int and string spelling.  Non-numeric string ids are allowed
+    (corpus_job uses run-derived names); numeric strings obey the same
+    rule as ints so ``"-1"`` cannot sneak past the string branch and
+    write a layout-violating ``wave=-1`` segment."""
     s = str(wave)
     if not s:
-        raise ValueError("append wave id must not be empty")
+        raise ValueError(f"{what} must not be empty")
     try:
         n = int(s)
     except ValueError:
         return  # non-numeric string id: allowed
-    if n < 1:
-        raise ValueError(
-            f"append wave id must not be the build's 0 (or negative): {wave}"
-        )
+    if n < first:
+        qualifier = "the build's 0 (or negative)" if first else "negative"
+        raise ValueError(f"{what} must not be {qualifier}: {wave}")
+
+
+def assert_append_wave(wave) -> None:
+    """Validate an APPEND wave id: never the build's 0, never negative,
+    never empty.  The quantizer families' ``append_to_*_index`` and the
+    jobs' ``--wave-id`` run it; every other writer takes wave 0 as its
+    build."""
+    _assert_wave_id(wave, 1, "append wave id")
+
+
+def check_wave_segment(
+    spark: SparkSession,
+    path: str,
+    wave,
+    kind: str,
+    params: dict | None = None,
+) -> None:
+    """Every refusal :func:`write_wave_segment` makes, writing nothing —
+    for callers that must refuse BEFORE they touch the root themselves
+    (the LSH bucket index checks both its sub-roots before either is
+    written; the streamed loops check before their own-segment delete).
+
+    Order: wave id, layout, kind, pinned params, consumed wave.  The
+    kind is refused BEFORE any param: a foreign family's root must be
+    refused before a marker could be adopted into it."""
+    _assert_wave_id(wave, 0, "wave id")
+    refuse_foreign_layout(spark, path)
+    refuse_other_kind(spark, path, kind)
+    for name, value in (params or {}).items():
+        assert_index_param(spark, path, name, value)
+    refuse_consumed_wave(spark, path, wave)
 
 
 def write_wave_segment(
     df: DataFrame,
     path: str,
-    wave: int,
+    wave,
+    kind: str,
+    params: dict | None = None,
     partition_by: tuple[str, ...] = (),
-    kind: str | None = None,
 ) -> None:
-    """Write ``df`` as ``path/wave=<wave>`` with delete-before-overwrite:
-    a crashed attempt's leftovers are removed first, so retrying the same
-    wave id replays the segment instead of double-appending (the repo's
-    index-append idempotency rule).  Caller contract: ``wave`` is stable
-    across retries of the same wave and unique across waves.
+    """Write ``df`` as ``path/wave=<wave>`` — THE writer of every index
+    segment in the repo.  ``wave`` 0 is the build; any other id (an int
+    ≥ 1 or a non-numeric string) is an append.  Caller contract:
+    ``wave`` is stable across retries of the same wave and unique across
+    waves — a retry replays its segment, a fresh id for the same rows
+    double-appends.
 
-    Refuses a target whose root carries non-wave entries (e.g. a legacy
-    flat pre-round-5 index, or an arbitrary data directory): writing a
-    wave segment next to bare part files creates the mixed layout
-    Spark's partition discovery rejects at the NEXT probe — fail at the
-    write, not after the index is polluted (corpus_job runs the same
-    refusal before its probe).  ``kind`` additionally pins the
-    index FAMILY via :func:`assert_index_kind` — two different index
-    kinds share this layout, so the layout check alone would let one
-    family's build destroy another's."""
+    Every read-only refusal (:func:`check_wave_segment`) runs before
+    anything is created or deleted: an empty or negative wave id; a
+    root carrying non-wave entries (a legacy flat index or an arbitrary
+    data directory — a wave segment beside bare part files is the mixed
+    layout Spark's partition discovery rejects at the NEXT probe);
+    another index family's root (all families share this layout, so
+    one family's wave=0 build would destroy another's); a pinned
+    ``params`` value that differs from the root's (``_param_<name>_
+    <value>`` markers: an index probed or appended at a different
+    geometry silently mismatches); a wave id a compaction consumed.
+    Only then are the ``_index_kind_<kind>`` and param markers adopted
+    and the segment deleted (a crashed attempt's leftovers) and
+    rewritten."""
     spark = df.sparkSession
-    refuse_foreign_layout(spark, path)
-    if kind is not None:
-        assert_index_kind(spark, path, kind)
-    refuse_consumed_wave(spark, path, wave)
+    check_wave_segment(spark, path, wave, kind, params)
+    _touch(spark, f"{path}/_index_kind_{kind}")
+    for name, value in (params or {}).items():
+        _touch(spark, f"{path}/_param_{name}_{value}")
     seg = f"{path}/wave={wave}"
     delete_path(spark, seg)
     writer = df.write.mode("overwrite")

@@ -373,51 +373,33 @@ def lsh_candidate_doc_pairs(
 
 
 def write_minhash_band_index(
-    documents: DataFrame, path: str, k: int = MINHASH_K, bands: int = LSH_BANDS
-) -> None:
-    """Persist the MinHash-LSH band index — (doc_id, band, bucket) written
-    PARTITIONED BY band inside a ``wave=0`` segment — so a recurring
-    crawl never re-shingles the corpus: incremental dedup
-    (:func:`dedup_delta_pairs_against_index`) probes this table instead
-    of re-deriving 10^12 documents' signatures.  WAVE-KEYED like every
-    persisted index since round 5: each append owns one ``wave=<id>``
-    segment with delete-before-overwrite (fsio.write_wave_segment), so
-    at-least-once retries replay instead of double-appending (Iceberg
-    equivalent: ``writeTo(tbl).partitionedBy(col("band"))`` with
-    per-wave overwrite-by-filter)."""
-    from ..fsio import write_wave_segment
-
-    write_wave_segment(
-        _minhash_band_rows(documents, k, bands, materialized=False),
-        path,
-        0,
-        partition_by=("band",),
-        kind="minhash_bands",
-    )
-
-
-def append_to_minhash_band_index(
     documents: DataFrame,
     path: str,
-    wave: int,
+    wave=0,
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
 ) -> None:
-    """Add a delta's band rows as its own ``wave=<id>`` segment (post-
-    probe step of the recurring-crawl loop).  Caller contract: the
-    delta's doc_ids must not already be present (the pipeline's
-    anti-join resume guarantees this), and ``wave`` ≥ 1 is stable across
-    retries of the same wave — a retry replays its segment."""
+    """Persist the MinHash-LSH band index — (doc_id, band, bucket) written
+    PARTITIONED BY band inside a ``wave=<id>`` segment — so a recurring
+    crawl never re-shingles the corpus: incremental dedup
+    (:func:`dedup_delta_pairs_against_index`) probes this table instead
+    of re-deriving 10^12 documents' signatures.  ``wave`` 0 is the
+    build; each later wave (the post-probe step of the recurring-crawl
+    loop) owns its own segment with delete-before-overwrite
+    (fsio.write_wave_segment), so at-least-once retries replay instead
+    of double-appending (Iceberg equivalent:
+    ``writeTo(tbl).partitionedBy(col("band"))`` with per-wave
+    overwrite-by-filter).  Caller contract for a wave: its doc_ids are
+    not already indexed (the pipeline's anti-join resume guarantees
+    this), and ``wave`` is stable across retries of the same wave."""
     from ..fsio import write_wave_segment
 
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
     write_wave_segment(
         _minhash_band_rows(documents, k, bands, materialized=False),
         path,
         wave,
+        "minhash_bands",
         partition_by=("band",),
-        kind="minhash_bands",
     )
 
 
@@ -652,36 +634,25 @@ def simhash_near_dup_pairs_from_sh(
     )
 
 
-def write_simhash_index(
-    documents: DataFrame, path: str, bits: int = SIMHASH_PAIR_BITS
-) -> None:
+def write_simhash_index(sh: DataFrame, path: str, wave=0) -> None:
     """Persist the SimHash fingerprint index — ONE row per document,
     (doc_id, 8-byte hash) — the smallest possible dedup index (~16 B/doc;
     10^12 docs ≈ 16 TB, trivially smaller than re-tokenizing the corpus).
     Band rows derive MAP-SIDE at probe time from the single fingerprint,
     so unlike the MinHash band index nothing per-band is stored.
-    WAVE-KEYED (``wave=0`` build + one segment per append, delete-
-    before-overwrite) — the same layout corpus_job's own incremental
-    index uses, so the two are interchangeable;
-    :func:`append_to_simhash_index` closes the recurring-crawl loop
-    retry-idempotently."""
+
+    ``sh`` is a PRECOMPUTED 64-bit (doc_id, simhash) frame
+    (``simhash(docs, SIMHASH_PAIR_BITS)``): after a probe, the frame
+    that probed the index is the one written, so a wave is hashed once.
+    WAVE-KEYED: ``wave`` 0 is the build, every later wave owns its own
+    segment (retry replays, never double-appends) — the layout
+    corpus_job's incremental index and the streamed loop share.  Caller
+    contract for a wave: doc_ids disjoint from the index (anti-join
+    resume) and ``wave`` stable across retries of the same wave — an
+    int, or a job-managed string id (corpus_job's wave ids)."""
     from ..fsio import write_wave_segment
 
-    write_wave_segment(simhash(documents, bits), path, 0, kind="simhash")
-
-
-def append_to_simhash_index(sh: DataFrame, path: str, wave) -> None:
-    """Add a probed delta's PRECOMPUTED 64-bit (doc_id, simhash) frame as
-    its own ``wave=<id>`` segment (retry replays, never double-appends) —
-    the frame that probed the index is the one appended, so a wave is
-    hashed once.  Caller contract: delta doc_ids are disjoint from the
-    index (anti-join resume) and ``wave`` is stable across retries of
-    the same wave — an int ≥ 1, or a job-managed string id (corpus_job's
-    wave ids) that must not collide with the build's ``wave=0``."""
-    from ..fsio import assert_append_wave, write_wave_segment
-
-    assert_append_wave(wave)
-    write_wave_segment(sh.select("doc_id", "simhash"), path, wave, kind="simhash")
+    write_wave_segment(sh.select("doc_id", "simhash"), path, wave, "simhash")
 
 
 def simhash_delta_pairs_against_index(
@@ -1365,50 +1336,30 @@ def _substring_hist(documents: DataFrame, n: int) -> DataFrame:
 
 
 def write_substring_index(
-    documents: DataFrame, path: str, n: int = SUBSTR_DEDUP_N
+    documents: DataFrame, path: str, wave=0, n: int = SUBSTR_DEDUP_N
 ) -> None:
     """Persist the ExactSubstr shingle histogram — the SEVENTH wave-keyed
     index family: cross-wave duplicated passages survive wave-local
     substring cleaning (compose.py documents the gap), so a recurring
-    crawl probes each wave against this index instead.  ``wave=0``
-    build; :func:`append_to_substring_index` adds one segment per wave
+    crawl probes each wave against this index instead.  ``wave`` 0 is
+    the build; each later wave adds its own segment
     (delete-before-overwrite → retries replay); probes SUM counts across
     segments, so occurrence totals equal the full-recompute histogram.
-    The shingle size is pinned to the root (fsio.assert_index_param):
-    a probe or append at a different ``n`` hashes different shingles and
-    would silently match nothing."""
-    from ..fsio import assert_index_kind, assert_index_param, write_wave_segment
+    Caller contract for a wave: doc_ids disjoint from the index
+    (anti-join resume) and ``wave`` stable across retries of the same
+    wave — an int, or a job-managed string id (corpus_job's uuid wave
+    ids; string ids mix fine with ints, the wave column is never
+    semantic).  The shingle size is pinned to the root: a probe or
+    append at a different ``n`` hashes different shingles and would
+    silently match nothing."""
+    from ..fsio import write_wave_segment
 
-    # kind BEFORE param: refusing a foreign root must happen before any
-    # marker is adopted into it
-    assert_index_kind(documents.sparkSession, path, "substring_hist")
-    assert_index_param(documents.sparkSession, path, "shingle_n", n)
     write_wave_segment(
-        _substring_hist(documents, n), path, 0, kind="substring_hist"
-    )
-
-
-def append_to_substring_index(
-    documents: DataFrame, path: str, wave, n: int = SUBSTR_DEDUP_N
-) -> None:
-    """Add a wave's histogram as its own ``wave=<id>`` segment.  Caller
-    contract: doc_ids disjoint from the index (anti-join resume) and
-    ``wave`` stable across retries of the same wave — an int ≥ 1, or a
-    job-managed string id (corpus_job's uuid wave ids; string ids mix
-    fine with ints, the wave column is never semantic) that must not
-    collide with the build's ``wave=0``."""
-    from ..fsio import (
-        assert_append_wave,
-        assert_index_kind,
-        assert_index_param,
-        write_wave_segment,
-    )
-
-    assert_append_wave(wave)
-    assert_index_kind(documents.sparkSession, path, "substring_hist")
-    assert_index_param(documents.sparkSession, path, "shingle_n", n)
-    write_wave_segment(
-        _substring_hist(documents, n), path, wave, kind="substring_hist"
+        _substring_hist(documents, n),
+        path,
+        wave,
+        "substring_hist",
+        params={"shingle_n": n},
     )
 
 
@@ -1433,7 +1384,7 @@ def substring_delta_clean(
     from ..fsio import assert_index_param, refuse_mid_compaction
 
     refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "shingle_n", n, create=False)
+    assert_index_param(spark, index_path, "shingle_n", n)
     positioned = materialize(_positioned_shingles(delta_documents, n))
     delta_hist = positioned.groupBy("h").agg(
         F.count("*").alias("occ_delta")
@@ -1494,46 +1445,26 @@ def _bloom_bits(documents: DataFrame, k: int = BLOOM_K) -> DataFrame:
 
 
 def write_bloom_index(
-    documents: DataFrame, path: str, k: int = BLOOM_K
+    documents: DataFrame, path: str, wave=0, k: int = BLOOM_K
 ) -> None:
     """Persist the exact-dedup membership Bloom filter — the TENTH
     wave-keyed index family, constant-size like the CMS sketch (≤ 65536
     bit rows per segment, ~0.5 MB) but IDEMPOTENT where CMS is linear:
-    bits combine by OR, so appends need NOT cover disjoint documents —
+    bits combine by OR, so waves need NOT cover disjoint documents —
     re-sending an already-indexed wave, or overlapping waves, yields the
     identical filter (at-least-once ingest without the CMS disjointness
-    contract).  Probes union set bits across segments; compaction
-    re-distincts to one row per bit.  ``k`` is pinned to the root: a
-    probe at a different k tests bit coordinates the index never set
-    and would report seen documents as definitely-new (a false
-    NEGATIVE — the one error class a Bloom filter must never make)."""
-    from ..fsio import assert_index_kind, assert_index_param, write_wave_segment
+    contract).  ``wave`` 0 is the build; each later wave adds its own
+    segment, with ``wave`` stable across retries of the same wave.
+    Probes union set bits across segments; compaction re-distincts to
+    one row per bit.  ``k`` is pinned to the root: a probe at a
+    different k tests bit coordinates the index never set and would
+    report seen documents as definitely-new (a false NEGATIVE — the one
+    error class a Bloom filter must never make)."""
+    from ..fsio import write_wave_segment
 
-    # kind BEFORE param: refusing a foreign root must happen before any
-    # marker is adopted into it
-    assert_index_kind(documents.sparkSession, path, "bloom_bits")
-    assert_index_param(documents.sparkSession, path, "bloom_k", k)
-    write_wave_segment(_bloom_bits(documents, k), path, 0, kind="bloom_bits")
-
-
-def append_to_bloom_index(
-    documents: DataFrame, path: str, wave, k: int = BLOOM_K
-) -> None:
-    """Add a wave's set bits as its own ``wave=<id>`` segment.  Caller
-    contract: ``wave`` stable across retries of the same wave, never the
-    build's 0.  Unlike the CMS family there is NO disjointness
-    requirement — OR is idempotent, overlapping waves are safe."""
-    from ..fsio import (
-        assert_append_wave,
-        assert_index_kind,
-        assert_index_param,
-        write_wave_segment,
+    write_wave_segment(
+        _bloom_bits(documents, k), path, wave, "bloom_bits", params={"bloom_k": k}
     )
-
-    assert_append_wave(wave)
-    assert_index_kind(documents.sparkSession, path, "bloom_bits")
-    assert_index_param(documents.sparkSession, path, "bloom_k", k)
-    write_wave_segment(_bloom_bits(documents, k), path, wave, kind="bloom_bits")
 
 
 def bloom_delta_new_docs(
@@ -1561,7 +1492,7 @@ def bloom_delta_new_docs(
     from ..fsio import assert_index_param, refuse_mid_compaction
 
     refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "bloom_k", k, create=False)
+    assert_index_param(spark, index_path, "bloom_k", k)
     bits = (
         spark.read.parquet(index_path)
         .select("pos")  # explicit: tolerate the wave partition column
@@ -1608,7 +1539,7 @@ def shingle_novelty(
     from ..fsio import assert_index_param, refuse_mid_compaction
 
     refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "shingle_n", n, create=False)
+    assert_index_param(spark, index_path, "shingle_n", n)
     positioned = materialize(_positioned_shingles(delta_documents, n))
     seen_h = (
         spark.read.parquet(index_path)

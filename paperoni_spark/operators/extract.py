@@ -10,8 +10,8 @@ This is the engine's core stage — the whole Readability kernel
 * Arrow record batches are re-chunked inside the UDF by **cumulative span
   bytes** (``_MAX_BATCH_BYTES``) so a run of mega-documents cannot blow up
   worker memory even if the upstream batch row-count is large — the in-UDF
-  half of the skew story (the other half is tiered repartitioning in
-  ``pipeline.job``).
+  half of the skew story (the other half is the byte-ranged scan splits
+  ``pipeline.job`` runs the UDF on).
 * Each output row carries the executor partition id plus kernel metrics
   (nodes_scored, candidates, spans_emitted) so the driver can build the
   per-partition lineage/metrics checkpoint required by the north rule.

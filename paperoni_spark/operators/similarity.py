@@ -357,43 +357,25 @@ def embedding_dedup_clusters(
     )
 
 
-def write_embedding_lsh_index(embeddings: DataFrame, path: str) -> None:
+def write_embedding_lsh_index(embeddings: DataFrame, path: str, wave=0) -> None:
     """Persist the sign-LSH embedding index: (vec_id, emb, code) — the
     vectors WITH their precomputed codes, so an incremental probe
     (:func:`embedding_delta_near_dup_against_index`) never re-runs the
     coding UDF over the corpus and reads exact vectors for the cosine
     gate from the same scan.  The index is one coding pass over the
     corpus, amortized across every future delta wave; WAVE-KEYED
-    (``wave=0`` build, one segment per append) so retries replay —
-    :func:`append_to_embedding_lsh_index` adds a probed wave's rows."""
+    (``wave`` 0 is the build, each probed wave adds its own segment,
+    delete-before-overwrite) so retries replay.  Caller contract for a
+    wave: vec_ids disjoint from the index (anti-join resume) and
+    ``wave`` stable across retries of the same wave."""
     from ..fsio import write_wave_segment
 
-    base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    write_wave_segment(
-        base.select("vec_id", "emb", lsh_code_col(F.col("emb")).alias("code")),
-        path,
-        0,
-        kind="embedding_lsh",
-    )
-
-
-def append_to_embedding_lsh_index(
-    embeddings: DataFrame, path: str, wave: int
-) -> None:
-    """Add a delta wave as its own ``wave=<id>`` segment (delete-before-
-    overwrite — a retried wave replays, never double-appends).  Caller
-    contract: vec_ids disjoint from the index (anti-join resume) and
-    ``wave`` ≥ 1, stable across retries of the same wave."""
-    from ..fsio import write_wave_segment
-
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
     base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
     write_wave_segment(
         base.select("vec_id", "emb", lsh_code_col(F.col("emb")).alias("code")),
         path,
         wave,
-        kind="embedding_lsh",
+        "embedding_lsh",
     )
 
 
@@ -590,9 +572,7 @@ def write_ivf_index(
     from ..fsio import refuse_stale_appends, write_wave_segment
 
     refuse_stale_appends(assigned.sparkSession, path)
-    write_wave_segment(
-        assigned, path, 0, partition_by=("centroid",), kind="ivf"
-    )
+    write_wave_segment(assigned, path, 0, "ivf", partition_by=("centroid",))
     if centroids is not None:
         _write_centroids_table(assigned.sparkSession, path, centroids)
 
@@ -649,10 +629,9 @@ def append_to_ivf_index(embeddings: DataFrame, path: str, wave: int) -> None:
     — retries replay).  Pure map-side: one matmul per Arrow batch, no
     shuffle.  Caller contract: vec_ids disjoint from the index and
     ``wave`` ≥ 1, stable across retries of the same wave."""
-    from ..fsio import write_wave_segment
+    from ..fsio import assert_append_wave, write_wave_segment
 
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
+    assert_append_wave(wave)
     spark = embeddings.sparkSession
     cents = read_ivf_centroids(spark, path)
     base = embeddings.select(
@@ -662,8 +641,8 @@ def append_to_ivf_index(embeddings: DataFrame, path: str, wave: int) -> None:
         base.withColumn("centroid", _ivf_assign_col(cents)),
         path,
         wave,
+        "ivf",
         partition_by=("centroid",),
-        kind="ivf",
     )
 
 
@@ -873,63 +852,6 @@ def ann_pq_topk(
     return _rank_topk_adc(scored, k)
 
 
-def _write_lsh_wave(embeddings: DataFrame, path: str, wave: int) -> None:
-    """Write ONE wave's rows + counts segments, delete-before-overwrite:
-    the shared body of :func:`write_lsh_bucket_index` (wave 0) and
-    :func:`append_to_lsh_bucket_index` (wave ≥ 1).  A crashed attempt's
-    leftovers are removed first, so an at-least-once retry REPLAYS the
-    whole wave instead of double-appending rows into shared directories
-    (the failure mode of the former global-append + counts-swap design:
-    a crash after the rows append but before the swap left rows and
-    histogram permanently disagreeing).  Rows go first, counts second —
-    a mid-crash leaves a wave with rows the histogram doesn't count yet,
-    which only relaxes the probe-side cap guard for that wave until the
-    retry, never corrupts committed waves.
-
-    Guards mirror fsio.write_wave_segment's (this is the one wave writer
-    with a two-table layout, so it can't go through it directly): the
-    ``_index_kind`` marker refuses another family's root, and both
-    sub-roots refuse non-wave entries — appending into a legacy flat
-    pre-round-5 bucket index would otherwise put rows/wave=N beside
-    rows/band=… and only fail at the next probe's partition discovery,
-    after the index is polluted."""
-    from ..fsio import (
-        assert_index_kind,
-        delete_path,
-        refuse_consumed_wave,
-        refuse_foreign_layout,
-    )
-
-    spark = embeddings.sparkSession
-    assert_index_kind(spark, path, "lsh_buckets")
-    subs = (f"{path}/rows", f"{path}/counts")
-    for sub in subs:  # both sub-roots' refusals before either delete
-        refuse_foreign_layout(spark, sub)
-        refuse_consumed_wave(spark, sub, wave)
-    for sub in subs:
-        delete_path(spark, f"{sub}/wave={wave}")
-    base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    # two consumers (rows write + counts agg): materialize the compact
-    # band rows so the wave's coding UDF runs once, per the repo's
-    # multi-consumer cut rule; repartition on the partition columns so
-    # every (band, bkey) directory gets ONE file instead of one per task
-    # that touched it — at production scale the unrepartitioned write is
-    # a tasks × buckets small-files explosion
-    rows = materialize(banded_buckets(base))
-    # EXPLICIT partition count: a bare repartition("band","bkey") is an
-    # AQE-optimizable shuffle that coalesces a small wave into ONE task,
-    # serializing the hundreds of per-bucket file writes (measured 4× on
-    # the sf0.01 build: 12.7 s → 3.1 s); the explicit count is respected
-    # by AQE and keeps the per-bucket writers spread across the executors
-    n_parts = embeddings.sparkSession.sparkContext.defaultParallelism * 2
-    rows.repartition(n_parts, "band", "bkey").write.partitionBy(
-        "band", "bkey"
-    ).mode("overwrite").parquet(f"{path}/rows/wave={wave}")
-    rows.groupBy("band", "bkey").agg(
-        F.count("*").alias("n_vecs")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/counts/wave={wave}")
-
-
 def write_pq_index(
     embeddings: DataFrame,
     path: str,
@@ -952,7 +874,7 @@ def write_pq_index(
     spark = embeddings.sparkSession
     refuse_stale_appends(spark, path)
     coded, codebooks = pq_codebooks_and_codes(embeddings, m, n_codes, iters, dim)
-    write_wave_segment(coded.select("vec_id", "codes"), path, 0, kind="pq")
+    write_wave_segment(coded.select("vec_id", "codes"), path, 0, "pq")
     _write_codebooks_table(spark, path, codebooks)
 
 
@@ -1004,10 +926,9 @@ def append_to_pq_index(
     → retries replay).  Pure map-side: m matmuls per Arrow batch, no
     shuffle.  Caller contract: vec_ids disjoint from the index and
     ``wave`` ≥ 1, stable across retries."""
-    from ..fsio import write_wave_segment
+    from ..fsio import assert_append_wave, write_wave_segment
 
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
+    assert_append_wave(wave)
     spark = embeddings.sparkSession
     books = read_pq_codebooks(spark, path, m, n_codes)
     base = embeddings.select(
@@ -1017,7 +938,7 @@ def append_to_pq_index(
         base.withColumn("codes", _pq_assign_col(books)).select("vec_id", "codes"),
         path,
         wave,
-        kind="pq",
+        "pq",
     )
 
 
@@ -1361,9 +1282,7 @@ def write_ivfpq_index(
     rows = coded.select("vec_id", "codes").join(
         res_base.select("vec_id", "centroid"), "vec_id"
     )
-    write_wave_segment(
-        rows, path, 0, partition_by=("centroid",), kind="ivfpq"
-    )
+    write_wave_segment(rows, path, 0, "ivfpq", partition_by=("centroid",))
     _write_centroids_table(spark, path, centroids)
     _write_codebooks_table(spark, path, codebooks)
 
@@ -1382,10 +1301,9 @@ def append_to_ivfpq_index(
     overwrite → retries replay).  Pure map-side: 1 + m matmuls per
     Arrow batch, no shuffle.  Caller contract: vec_ids disjoint from
     the index and ``wave`` ≥ 1, stable across retries."""
-    from ..fsio import write_wave_segment
+    from ..fsio import assert_append_wave, write_wave_segment
 
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
+    assert_append_wave(wave)
     spark = embeddings.sparkSession
     cents = read_ivf_centroids(spark, path)
     books = read_pq_codebooks(spark, path, m, n_codes)
@@ -1402,8 +1320,8 @@ def append_to_ivfpq_index(
         ),
         path,
         wave,
+        "ivfpq",
         partition_by=("centroid",),
-        kind="ivfpq",
     )
 
 
@@ -1461,7 +1379,7 @@ def ann_ivfpq_topk_indexed(
     return _rank_topk_adc(scored, k)
 
 
-def write_lsh_bucket_index(embeddings: DataFrame, path: str) -> None:
+def write_lsh_bucket_index(embeddings: DataFrame, path: str, wave=0) -> None:
     """Persist the banded sign-LSH bucket index for partition-pruned ANN:
 
     * ``<path>/rows``   — (vec_id) PARTITIONED BY (wave, band, bkey): a
@@ -1481,27 +1399,57 @@ def write_lsh_bucket_index(embeddings: DataFrame, path: str) -> None:
       per-wave segments (a few tiny files per bucket) at probe time.
 
     Both sinks are WAVE-KEYED (``wave=<id>`` subdirectories, the same
-    layout as the streamed wave loops): the initial build is wave 0 and
-    every append owns exactly one wave segment, so retries replay their
-    own segment and committed waves are never touched."""
-    _write_lsh_wave(embeddings, path, 0)
+    layout as the streamed wave loops): ``wave`` 0 is the build and
+    every later wave owns exactly one rows + one counts segment, each
+    written delete-before-overwrite, so an at-least-once retry of the
+    same wave id replays both instead of double-appending, and
+    committed waves are never touched.  The histogram stays exact
+    because each wave's counts derive from that wave's band rows alone
+    and the probe sums segments.  Rows go first, counts second — a
+    mid-crash leaves a wave with rows the histogram doesn't count yet,
+    which only relaxes the probe-side cap guard for that wave until the
+    retry.  Caller contract for a wave: vec_ids disjoint from the index
+    (anti-join resume, as the delta twins) and ``wave`` unique per
+    wave, STABLE across retries of the same wave (a retry under a fresh
+    id would double-append)."""
+    from ..fsio import assert_index_kind, check_wave_segment, write_wave_segment
 
-
-def append_to_lsh_bucket_index(
-    embeddings: DataFrame, path: str, wave: int
-) -> None:
-    """Add a wave to the bucket index under its own ``wave=<id>`` rows +
-    counts segments (delete-before-overwrite — an at-least-once retry of
-    the same wave id replays both segments from scratch, never
-    double-appends).  The histogram stays exact because each wave's
-    counts are derived from that wave's band rows alone and the probe
-    sums segments; no global rewrite, no swap window.  Caller contract:
-    vec_ids disjoint from the index (anti-join resume, as the delta
-    twins) and ``wave`` ≥ 1, unique per wave, STABLE across retries of
-    the same wave (a retry under a fresh id would double-append)."""
-    if wave < 1:
-        raise ValueError(f"append wave id must be >= 1 (0 is the build): {wave}")
-    _write_lsh_wave(embeddings, path, wave)
+    spark = embeddings.sparkSession
+    kind = "lsh_buckets"
+    rows_root, counts_root = f"{path}/rows", f"{path}/counts"
+    # one index, two tables: both sub-roots' refusals (a legacy flat
+    # bucket index, a consumed wave) and the root's kind refusal run
+    # before either segment is touched
+    check_wave_segment(spark, rows_root, wave, kind)
+    check_wave_segment(spark, counts_root, wave, kind)
+    assert_index_kind(spark, path, kind)
+    base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
+    # two consumers (rows write + counts agg): materialize the compact
+    # band rows so the wave's coding UDF runs once, per the repo's
+    # multi-consumer cut rule; repartition on the partition columns so
+    # every (band, bkey) directory gets ONE file instead of one per task
+    # that touched it — at production scale the unrepartitioned write is
+    # a tasks × buckets small-files explosion
+    rows = materialize(banded_buckets(base))
+    # EXPLICIT partition count: a bare repartition("band","bkey") is an
+    # AQE-optimizable shuffle that coalesces a small wave into ONE task,
+    # serializing the hundreds of per-bucket file writes (measured 4× on
+    # the sf0.01 build: 12.7 s → 3.1 s); the explicit count is respected
+    # by AQE and keeps the per-bucket writers spread across the executors
+    n_parts = spark.sparkContext.defaultParallelism * 2
+    write_wave_segment(
+        rows.repartition(n_parts, "band", "bkey"),
+        rows_root,
+        wave,
+        kind,
+        partition_by=("band", "bkey"),
+    )
+    write_wave_segment(
+        rows.groupBy("band", "bkey").agg(F.count("*").alias("n_vecs")).coalesce(1),
+        counts_root,
+        wave,
+        kind,
+    )
 
 
 def compact_lsh_bucket_index(spark, path: str) -> int:
@@ -1526,7 +1474,7 @@ def compact_lsh_bucket_index(spark, path: str) -> int:
 
     assert_index_kind(spark, path, "lsh_buckets")
     # Refuse a HALF-WRITTEN append before folding anything: a crash
-    # between the rows and counts writes of append_to_lsh_bucket_index
+    # between the rows and counts writes of write_lsh_bucket_index
     # is healed by retrying the wave — but only while the wave is still
     # a segment.  If compaction folded the rows half first, the retry
     # would be refused forever and the histogram would permanently

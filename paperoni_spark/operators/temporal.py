@@ -355,45 +355,27 @@ def _user_ref_state(events: DataFrame, ref_type: str) -> DataFrame:
 
 
 def write_user_state_index(
-    events: DataFrame, path: str, ref_type: str = ASOF_REF_TYPE
+    events: DataFrame, path: str, wave=0, ref_type: str = ASOF_REF_TYPE
 ) -> None:
     """Persist per-user latest-ref state — the ELEVENTH wave-keyed index
     family and the second IDEMPOTENT one: state merges by struct-MAX
     (like Bloom's OR, unlike CMS's linear counters), so overlapping or
-    re-sent appends are safe by construction.  One row per user ever
-    seen, O(users) regardless of event volume: the incremental as-of
-    join probes this instead of re-scanning 10^12 historical events.
-    ``ref_type`` is param-pinned — probing a 'click' index for
-    'signup' refs would silently enrich against the wrong stream."""
-    spark = events.sparkSession
-    from ..fsio import assert_index_kind, assert_index_param, write_wave_segment
+    re-sent waves are safe by construction — there is NO disjointness
+    contract, but ``wave`` must stay stable across retries of the same
+    wave (0 is the build).  One row per user ever seen, O(users)
+    regardless of event volume: the incremental as-of join probes this
+    instead of re-scanning 10^12 historical events.  ``ref_type`` is
+    param-pinned — probing a 'click' index for 'signup' refs would
+    silently enrich against the wrong stream."""
+    from ..fsio import write_wave_segment
 
-    # kind BEFORE param: refusing a foreign root must precede adopting
-    # any marker into it
-    assert_index_kind(spark, path, USER_STATE_KIND)
-    assert_index_param(spark, path, "ref_type", ref_type)
-    write_wave_segment(_user_ref_state(events, ref_type), path, 0, kind=USER_STATE_KIND)
-
-
-def append_to_user_state_index(
-    events: DataFrame, path: str, wave, ref_type: str = ASOF_REF_TYPE
-) -> None:
-    """Add a wave's per-user latest-ref state as its own ``wave=<id>``
-    segment.  Unlike every linear family there is NO disjointness
-    contract — max-merge makes re-sent events harmless — but the wave id
-    rules still hold (stable across retries, never the build's 0)."""
-    spark = events.sparkSession
-    from ..fsio import (
-        assert_append_wave,
-        assert_index_kind,
-        assert_index_param,
-        write_wave_segment,
+    write_wave_segment(
+        _user_ref_state(events, ref_type),
+        path,
+        wave,
+        USER_STATE_KIND,
+        params={"ref_type": ref_type},
     )
-
-    assert_append_wave(wave)
-    assert_index_kind(spark, path, USER_STATE_KIND)
-    assert_index_param(spark, path, "ref_type", ref_type)
-    write_wave_segment(_user_ref_state(events, ref_type), path, wave, kind=USER_STATE_KIND)
 
 
 # Explicit read schemas (wave typed as STRING): partition-value
@@ -456,7 +438,7 @@ def asof_enrich_delta(
     from ..fsio import assert_index_param, refuse_mid_compaction
 
     refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "ref_type", ref_type, create=False)
+    assert_index_param(spark, index_path, "ref_type", ref_type)
     carried = _carried_targets(delta_events, target_type, ref_type)
     state = _read_user_state(spark, index_path, exclude_wave=exclude_wave)
     combined = carried.join(state, "user_id", "left")
@@ -498,45 +480,27 @@ def _rollup_partials(events: DataFrame, finest: int) -> DataFrame:
 
 
 def write_rollup_index(
-    events: DataFrame, path: str, finest: int = ROLLUP_RESOLUTIONS_S[0]
+    events: DataFrame, path: str, wave=0, finest: int = ROLLUP_RESOLUTIONS_S[0]
 ) -> None:
     """Persist the finest-grid rollup partials — the TWELFTH wave-keyed
     index family (the hypertable continuous-aggregate pattern): ≤
     (time span / finest) × event_types rows regardless of event volume.
-    ADDITIVE like the CMS counters: appends must cover DISJOINT event
-    sets (a re-counted event double-counts — there is no subtraction),
+    ``wave`` 0 is the build; each later wave adds its own segment.
+    ADDITIVE like the CMS counters: waves must cover DISJOINT event
+    sets (a re-counted event double-counts — there is no subtraction)
+    and ``wave`` must stay stable across retries of the same wave;
     probes sum partials across segments, compaction re-aggregates.
     ``finest`` is param-pinned: a probe at a different grid would merge
     buckets that never align."""
-    spark = events.sparkSession
-    from ..fsio import assert_index_kind, assert_index_param, write_wave_segment
+    from ..fsio import write_wave_segment
 
-    # kind BEFORE param: refusing a foreign root must precede adopting
-    # any marker into it
-    assert_index_kind(spark, path, ROLLUP_KIND)
-    assert_index_param(spark, path, "finest_s", finest)
-    write_wave_segment(_rollup_partials(events, finest), path, 0, kind=ROLLUP_KIND)
-
-
-def append_to_rollup_index(
-    events: DataFrame, path: str, wave, finest: int = ROLLUP_RESOLUTIONS_S[0]
-) -> None:
-    """Add a wave's partials as its own ``wave=<id>`` segment.  Caller
-    contract: events disjoint from the waves already folded in, and
-    ``wave`` stable across retries of the same wave, never the
-    build's 0."""
-    spark = events.sparkSession
-    from ..fsio import (
-        assert_append_wave,
-        assert_index_kind,
-        assert_index_param,
-        write_wave_segment,
+    write_wave_segment(
+        _rollup_partials(events, finest),
+        path,
+        wave,
+        ROLLUP_KIND,
+        params={"finest_s": finest},
     )
-
-    assert_append_wave(wave)
-    assert_index_kind(spark, path, ROLLUP_KIND)
-    assert_index_param(spark, path, "finest_s", finest)
-    write_wave_segment(_rollup_partials(events, finest), path, wave, kind=ROLLUP_KIND)
 
 
 def time_rollup_from_index(
@@ -553,7 +517,7 @@ def time_rollup_from_index(
     from ..fsio import assert_index_param, refuse_mid_compaction
 
     refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "finest_s", resolutions_s[0], create=False)
+    assert_index_param(spark, index_path, "finest_s", resolutions_s[0])
     level = (
         spark.read.schema(ROLLUP_SCHEMA)
         .parquet(index_path)

@@ -746,47 +746,31 @@ def hll_distinct_tokens(documents: DataFrame) -> DataFrame:
 
 
 def write_cms_index(
-    documents: DataFrame, path: str, depth: int = CMS_DEPTH
+    documents: DataFrame, path: str, wave=0, depth: int = CMS_DEPTH
 ) -> None:
     """Persist the count-min sketch — the NINTH wave-keyed index family,
     and the first whose total size is CONSTANT in corpus size (each
     segment is ≤ depth×4096 counter rows, ~50 KB).  CMS counters add
     linearly, so the sketch of an accumulated corpus is the elementwise
-    SUM of its waves' sketches: ``wave=0`` build here,
-    :func:`append_to_cms_index` adds one segment per crawl wave
-    (delete-before-overwrite → retries replay), probes sum counters
-    across segments, and compaction re-aggregates to one row per
-    (d, bucket) — the counts-family geometry.  ``depth`` is pinned to
-    the root (fsio.assert_index_param): a probe at a different depth
-    would min over rows the index never wrote and silently
+    SUM of its waves' sketches: ``wave`` 0 is the build, each later
+    crawl wave adds its own segment (delete-before-overwrite → retries
+    replay), probes sum counters across segments, and compaction
+    re-aggregates to one row per (d, bucket) — the counts-family
+    geometry.  Caller contract for a wave: documents disjoint from the
+    waves already folded in (a re-counted doc double-counts — CMS has
+    no subtraction) and ``wave`` stable across retries of the same
+    wave.  ``depth`` is pinned to the root: a probe at a different
+    depth would min over rows the index never wrote and silently
     under-estimate."""
-    from ..fsio import assert_index_kind, assert_index_param, write_wave_segment
+    from ..fsio import write_wave_segment
 
-    # kind BEFORE param: refusing a foreign root must happen before any
-    # marker is adopted into it
-    assert_index_kind(documents.sparkSession, path, "cms_sketch")
-    assert_index_param(documents.sparkSession, path, "cms_depth", depth)
-    write_wave_segment(_cms_sketch(documents, depth), path, 0, kind="cms_sketch")
-
-
-def append_to_cms_index(
-    documents: DataFrame, path: str, wave, depth: int = CMS_DEPTH
-) -> None:
-    """Add a wave's sketch as its own ``wave=<id>`` segment.  Caller
-    contract: documents disjoint from the waves already folded in (a
-    re-counted doc double-counts — CMS has no subtraction) and ``wave``
-    stable across retries of the same wave, never the build's 0."""
-    from ..fsio import (
-        assert_append_wave,
-        assert_index_kind,
-        assert_index_param,
-        write_wave_segment,
+    write_wave_segment(
+        _cms_sketch(documents, depth),
+        path,
+        wave,
+        "cms_sketch",
+        params={"cms_depth": depth},
     )
-
-    assert_append_wave(wave)
-    assert_index_kind(documents.sparkSession, path, "cms_sketch")
-    assert_index_param(documents.sparkSession, path, "cms_depth", depth)
-    write_wave_segment(_cms_sketch(documents, depth), path, wave, kind="cms_sketch")
 
 
 def cms_delta_heavy_hitters(
@@ -812,7 +796,7 @@ def cms_delta_heavy_hitters(
     from ..fsio import assert_index_param, refuse_mid_compaction
 
     refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "cms_depth", depth, create=False)
+    assert_index_param(spark, index_path, "cms_depth", depth)
     counts = (
         delta_documents.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
         .groupBy("tok")

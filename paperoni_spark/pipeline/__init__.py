@@ -2,7 +2,6 @@ from .job import (
     extract_pipeline,
     lineage_metrics,
     resume_against,
-    tiered_repartition,
     write_output,
 )
 from .session import build_spark
@@ -12,6 +11,5 @@ __all__ = [
     "extract_pipeline",
     "lineage_metrics",
     "resume_against",
-    "tiered_repartition",
     "write_output",
 ]

@@ -350,7 +350,7 @@ def dedup_wave_against_index(
     the two stages compose without double-counting a document.  Returns
     ``(survivors, survivor_fingerprints, rejected_ids, resubmitted_ids)``;
     the caller appends ``survivor_fingerprints``
-    (operators.dedup.append_to_simhash_index) AFTER its sink write
+    (operators.dedup.write_simhash_index) AFTER its sink write
     succeeds, so a failed wave never poisons the index.
 
     Wave docs whose doc_id is ALREADY in the index are split off up

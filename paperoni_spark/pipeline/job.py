@@ -1,16 +1,13 @@
-"""End-to-end extraction job: read → tiered repartition → extract → sinks.
+"""End-to-end extraction job: read → extract → sinks.
 
 Scale design (north rule: "partitioning / shuffle / skew handled explicitly,
 resumable from checkpoint with per-partition lineage + metrics"):
 
-* **Tiered skew repartitioning.**  Documents are split by ``size(spans)``
-  into a light tier and a heavy tier *before* the UDF.  Each tier is
-  hash-repartitioned on ``doc_id`` independently and the tiers are unioned —
-  union is a narrow op, so the final stage has ``light_parts + heavy_parts``
-  tasks with no extra shuffle.  A mega-document therefore lands in a
-  partition with few peers instead of straggling a 10k-row partition.
-  (AQE cannot fix this case: the skew is in per-row *cost*, which Spark's
-  size-based skew split cannot see.)
+* **Scan-aligned skew handling.**  The UDF runs directly on the parquet
+  scan splits, which are byte-ranged; a document's kernel cost is ~linear
+  in its span bytes, so mega-documents land in few-row splits without a
+  shuffle, and the UDF re-chunks Arrow batches by cumulative span bytes
+  (``operators.extract``) to bound worker memory.
 * **Resume.**  ``resume_against`` anti-joins the input on previously
   extracted ``doc_id``s — on a restart only unfinished documents re-run, and
   appends stay idempotent at the doc level.  At cluster scale both tables
@@ -34,31 +31,6 @@ from pyspark.sql import functions as F
 from ..fsio import refuse_flat_layout
 from ..operators.extract import run_extract
 
-# spans beyond this count put a document in the heavy tier
-HEAVY_SPAN_THRESHOLD = 64
-
-
-def tiered_repartition(
-    documents: DataFrame,
-    light_partitions: int,
-    heavy_partitions: int,
-    heavy_threshold: int = HEAVY_SPAN_THRESHOLD,
-) -> DataFrame:
-    """Split by span count and repartition each tier on doc_id hash."""
-    sized = documents.withColumn("_n_spans", F.size("spans"))
-    light = (
-        sized.where(F.col("_n_spans") <= heavy_threshold)
-        .drop("_n_spans")
-        .repartition(light_partitions, "doc_id")
-    )
-    heavy = (
-        sized.where(F.col("_n_spans") > heavy_threshold)
-        .drop("_n_spans")
-        .repartition(heavy_partitions, "doc_id")
-    )
-    return light.union(heavy)
-
-
 def resume_against(documents: DataFrame, done: DataFrame | None) -> DataFrame:
     """Anti-join on the checkpoint table: only un-extracted docs remain."""
     if done is None:
@@ -74,34 +46,19 @@ def extract_pipeline(
     documents: DataFrame,
     base_url: str = "http://example.com/",
     mode: str = "scan",
-    light_partitions: int | None = None,
-    heavy_partitions: int | None = None,
     done: DataFrame | None = None,
 ) -> DataFrame:
-    """Extraction job.
-
-    ``mode="scan"`` (default): **no shuffle** — the UDF runs directly on the
-    parquet scan partitions.  Splits are byte-ranged, and a document's kernel
-    cost is ~linear in its span bytes, so mega-documents are automatically
-    isolated into few-row splits; the in-UDF byte-capped re-chunking bounds
-    memory.  At 100 TB this avoids shuffling the entire corpus just to
-    rebalance it — measured 1.8-2× faster than the tiered mode even at bench
-    scale.
-
-    ``mode="tiered"``: explicit two-tier hash repartitioning (see
-    ``tiered_repartition``) for inputs whose *row cost* is skewed
-    independently of bytes (e.g. pathological retry-heavy documents) or
-    whose file layout clusters heavy docs.  Costs one full shuffle and a
-    second scan of the input.
-    """
-    docs = resume_against(documents, done)
-    if mode == "tiered":
-        spark = documents.sparkSession
-        default_par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        light_partitions = light_partitions or default_par
-        heavy_partitions = heavy_partitions or max(2, default_par // 2)
-        docs = tiered_repartition(docs, light_partitions, heavy_partitions)
-    return run_extract(docs, base_url)
+    """Extraction job: resume, then the UDF on the scan partitions with
+    **no shuffle**.  Splits are byte-ranged, and a document's kernel
+    cost is ~linear in its span bytes, so mega-documents are
+    automatically isolated into few-row splits; the in-UDF byte-capped
+    re-chunking bounds memory.  At 100 TB this avoids shuffling the
+    entire corpus just to rebalance it — measured 1.8-2× faster than a
+    two-tier hash repartition even at bench scale.  ``mode`` accepts
+    only ``"scan"``."""
+    if mode != "scan":
+        raise ValueError(f"unknown extraction mode {mode!r} (only 'scan')")
+    return run_extract(resume_against(documents, done), base_url)
 
 
 def lineage_metrics(

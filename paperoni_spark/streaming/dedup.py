@@ -12,7 +12,7 @@ plain batch ``groupBy(digest)`` oracle row-for-row.
 State is 8 + 8 bytes per distinct document — the minimum any exact
 ingest-dedup can carry — and emission is one row per (batch, digest seen
 in that batch), written through ``foreachBatch`` into ``batch=<id>``
-parquet segments (the same durable layout as the indexed wave loops —
+parquet segments (the same durable layout as the indexed loops' results —
 never a driver-resident sink); the final-state read-back takes each
 digest's latest emission (n_docs is strictly monotone: a group only
 emits when it received rows), a distributed struct-max aggregation.
@@ -201,15 +201,19 @@ def run_streaming_simhash_dedup(
     pair set (per-wave cap sets aren't expressible as one batch query —
     the cap is counted over index ∪ wave at each wave).
 
-    Durability layout: the index and the results are directories of
-    ``batch=<id>`` segments, and every batch writes ONLY its own segment
-    with mode=overwrite.  foreachBatch is at-least-once, so a retried
-    batch first deletes any leftover segment from its failed attempt
-    (restoring the disjoint-ids probe contract) and then rewrites it —
-    idempotent, never appending duplicates.  On restart the checkpoint
-    skips committed batches and the index keeps their segments: the
-    empty bootstrap segment is seeded ONLY when the index does not exist
-    yet, never wiping fingerprints a prior run committed."""
+    Durability layout: the index is an ordinary ``simhash`` index root
+    (``wave=<id>`` segments written by fsio.write_wave_segment, so an
+    index built by ``write_simhash_index`` can seed the stream and the
+    stream's segments compact like any other) and the results are a
+    directory of ``batch=<id>`` segments; every batch writes ONLY its
+    own segment with mode=overwrite.  foreachBatch is at-least-once, so
+    a retried batch first deletes any leftover segment from its failed
+    attempt (restoring the disjoint-ids probe contract) and then
+    rewrites it — idempotent, never appending duplicates.  On restart
+    the checkpoint skips committed batches and the index keeps their
+    segments: the empty ``wave=0`` build is seeded ONLY when the root
+    holds no wave segment yet, never wiping fingerprints a prior run
+    committed."""
     from ..materialize import materialize
     from ..operators import dedup as dedup_ops
 
@@ -218,12 +222,7 @@ def run_streaming_simhash_dedup(
     bits = dedup_ops.SIMHASH_PAIR_BITS
     kwargs = {} if cap is _DEFAULT_CAP else {"cap": cap}
 
-    def bootstrap(seed_path: str) -> None:
-        dedup_ops.simhash(
-            spark.createDataFrame([], DOCUMENTS_TABLE_SCHEMA), bits
-        ).write.parquet(seed_path)
-
-    def wave(batch_df: DataFrame, batch_id: int):
+    def wave(batch_df: DataFrame):
         # hash ONCE: the same materialized (doc_id, simhash) frame feeds
         # the probe and becomes the wave's index segment
         sh = materialize(dedup_ops.simhash(batch_df, bits))
@@ -232,9 +231,10 @@ def run_streaming_simhash_dedup(
         )
         return pairs, sh
 
+    empty = dedup_ops.simhash(spark.createDataFrame([], DOCUMENTS_TABLE_SCHEMA), bits)
     return _run_indexed_wave_stream(
         spark, docs_dir, index_dir, results_dir, DOCUMENTS_TABLE_SCHEMA,
-        bootstrap, wave, ["doc_a", "doc_b", "hamming"],
+        "simhash", empty, wave, ["doc_a", "doc_b", "hamming"],
         max_files_per_trigger, path_glob, state_partitions,
     )
 
@@ -245,7 +245,8 @@ def _run_indexed_wave_stream(
     index_dir: str,
     results_dir: str,
     input_schema: StructType,
-    bootstrap_writer,
+    kind: str,
+    empty_segment: DataFrame,
     process_wave,
     out_cols: list[str],
     max_files_per_trigger: int | None = None,
@@ -253,29 +254,34 @@ def _run_indexed_wave_stream(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Shared scaffolding for the streamed recurring-crawl loops — the
-    exactly-once/restart machinery lives HERE, once: conditional empty
-    bootstrap (never wiping a prior run's committed segments), per-batch
-    own-index-segment delete before the probe (at-least-once retries
-    restore the disjoint-ids contract), batch-keyed overwrite writes for
-    both sinks, and the accumulated read-back.  ``process_wave(batch_df,
-    batch_id)`` returns ``(pairs_df, index_segment_df)``; the
-    restart-retention test covers every loop built on this driver.
-    These loops keep NO operator state (the index is the state), but
-    ``state_partitions`` still pins the shuffle width of the per-batch
-    probe jobs — a gate-scale wave doesn't need the session's full
-    width."""
-    from ..fsio import delete_path, path_exists
+    exactly-once/restart machinery lives HERE, once: the index root is
+    an ordinary ``kind`` index, so every segment goes through
+    fsio.write_wave_segment and its refusals.  ``empty_segment`` seeds
+    the ``wave=0`` build only when the root holds no wave segment
+    (never wiping a prior run's committed segments).  Batch ``<id>``
+    owns the index segment ``wave=b<id>`` — stable across retries and
+    never the build's 0 — and deletes it before the probe (at-least-once
+    retries restore the disjoint-ids contract); results are batch-keyed
+    overwrite writes, read back accumulated.  ``process_wave(batch_df)``
+    returns ``(pairs_df, index_segment_df)``; the restart-retention test
+    covers every loop built on this scaffolding.  These loops keep NO
+    operator state (the index is the state), but ``state_partitions``
+    still pins the shuffle width of the per-batch probe jobs — a
+    gate-scale wave doesn't need the session's full width."""
+    from ..fsio import check_wave_segment, delete_path, wave_names, write_wave_segment
     from .util import state_shuffle_partitions
 
-    if not path_exists(spark, index_dir):
-        bootstrap_writer(f"{index_dir}/batch=-1")
+    if not wave_names(spark, index_dir):
+        write_wave_segment(empty_segment, index_dir, 0, kind)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        wave = f"b{batch_id}"
+        check_wave_segment(spark, index_dir, wave, kind)
         # a failed prior attempt of THIS batch leaves its own segment
-        delete_path(spark, f"{index_dir}/batch={batch_id}")
-        pairs, segment = process_wave(batch_df, batch_id)
+        delete_path(spark, f"{index_dir}/wave={wave}")
+        pairs, segment = process_wave(batch_df)
         pairs.write.mode("overwrite").parquet(f"{results_dir}/batch={batch_id}")
-        segment.write.mode("overwrite").parquet(f"{index_dir}/batch={batch_id}")
+        write_wave_segment(segment, index_dir, wave, kind)
 
     reader = spark.readStream.schema(input_schema).option(
         "pathGlobFilter", path_glob
@@ -317,9 +323,10 @@ def run_streaming_embedding_dedup(
     """The vector twin of :func:`run_streaming_simhash_dedup` — semantic
     near-dup sweep as a stream: each wave is sign-LSH-coded ONCE (the
     materialized (vec_id, emb, code) frame feeds the probe and becomes
-    the wave's index segment), probed against the persisted index, and
-    written under the same batch-segmented idempotent layout (own
-    segment deleted before the probe; restart keeps committed segments).
+    the wave's index segment), probed against the persisted
+    ``embedding_lsh`` index, and written under the same wave-keyed
+    idempotent layout (own segment deleted before the probe; restart
+    keeps committed segments).
     Completes the streamed recurring-crawl trilogy: text fingerprints
     (SimHash), and vectors here — the pair surfaces exactly once, in the
     batch where its later vector arrives."""
@@ -332,12 +339,7 @@ def run_streaming_embedding_dedup(
     if cap is not _DEFAULT_CAP:
         kwargs["cap"] = cap
 
-    def bootstrap(seed_path: str) -> None:
-        spark.createDataFrame(
-            [], "vec_id: long, emb: array<double>, code: string"
-        ).write.parquet(seed_path)
-
-    def wave(batch_df: DataFrame, batch_id: int):
+    def wave(batch_df: DataFrame):
         base = batch_df.select(
             "vec_id", sim._to_double(F.col("embedding")).alias("emb")
         )
@@ -355,8 +357,9 @@ def run_streaming_embedding_dedup(
         )
         return pairs, coded
 
+    empty = spark.createDataFrame([], "vec_id: long, emb: array<double>, code: string")
     return _run_indexed_wave_stream(
         spark, emb_dir, index_dir, results_dir, EMBEDDINGS_TABLE_SCHEMA,
-        bootstrap, wave, ["vec_a", "vec_b", "cosine"],
+        "embedding_lsh", empty, wave, ["vec_a", "vec_b", "cosine"],
         max_files_per_trigger, path_glob, state_partitions,
     )

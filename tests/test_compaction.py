@@ -50,9 +50,9 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
     ids (including the build's 0, so a stale rebuild can't interleave
     with the merged segment) are refused afterwards."""
     path = str(tmp_path / "sh_idx")
-    dedup.write_simhash_index(_split(docs, "doc_id", 0, 6), path)
-    dedup.append_to_simhash_index(_sh(_split(docs, "doc_id", 6, 8)), path, 1)
-    dedup.append_to_simhash_index(_sh(_split(docs, "doc_id", 8, 9)), path, 2)
+    dedup.write_simhash_index(_sh(_split(docs, "doc_id", 0, 6)), path)
+    dedup.write_simhash_index(_sh(_split(docs, "doc_id", 6, 8)), path, 1)
+    dedup.write_simhash_index(_sh(_split(docs, "doc_id", 8, 9)), path, 2)
     delta = _split(docs, "doc_id", 9, 10)
     before = _rows(dedup.simhash_delta_pairs_against_index(spark, delta, path))
 
@@ -69,7 +69,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
         with pytest.raises(ValueError, match="owned by a compaction"):
             fsio.write_wave_segment(docs.limit(1), path, wid, kind="simhash")
     # fresh ids append fine, and a second compaction folds them again
-    dedup.append_to_simhash_index(_sh(delta), path, 4)
+    dedup.write_simhash_index(_sh(delta), path, 4)
     assert fsio.compact_index_kind(spark, path, "simhash") == 2
     assert fsio.wave_names(spark, path) == ["wave=5"]
 
@@ -83,7 +83,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
 def test_compaction_noop_and_foreign(spark, docs, tmp_path):
     """Single-segment roots are a no-op; flat foreign dirs are refused."""
     path = str(tmp_path / "sh_single")
-    dedup.write_simhash_index(docs, path)
+    dedup.write_simhash_index(_sh(docs), path)
     assert fsio.compact_index_kind(spark, path, "simhash") == 0
     assert fsio.wave_names(spark, path) == ["wave=0"]
 
@@ -102,7 +102,7 @@ def test_substring_compaction_parity(spark, docs, tmp_path):
     delta = _split(docs, "doc_id", 9, 10)
     path = str(tmp_path / "sub_idx")
     dedup.write_substring_index(corpus, path, n=8)
-    dedup.append_to_substring_index(wave1, path, 1, n=8)
+    dedup.write_substring_index(wave1, path, 1, n=8)
     before = _rows(
         dedup.substring_delta_clean(spark, delta, path, n=8).select(
             "doc_id", "text_clean", "n_removed"
@@ -152,7 +152,7 @@ def test_lsh_bucket_compaction_parity(spark, embeds, tmp_path):
     corpus = embeds.where(F.col("vec_id") % 10 < 8)
     wave1 = embeds.where(F.col("vec_id") % 10 >= 8)
     similarity.write_lsh_bucket_index(corpus, path)
-    similarity.append_to_lsh_bucket_index(wave1, path, 1)
+    similarity.write_lsh_bucket_index(wave1, path, 1)
     before = _rows(similarity.ann_lsh_topk_indexed(spark, embeds, path))
     assert similarity.compact_lsh_bucket_index(spark, path) == 2
     assert fsio.wave_names(spark, f"{path}/rows") == ["wave=2"]
@@ -166,7 +166,7 @@ def test_lsh_bucket_compaction_parity(spark, embeds, tmp_path):
     assert counts.count() == counts.select("band", "bkey").distinct().count()
     # appends at consumed ids are refused on the sub-roots too
     with pytest.raises(ValueError, match="owned by a compaction"):
-        similarity.append_to_lsh_bucket_index(wave1, path, 1)
+        similarity.write_lsh_bucket_index(wave1, path, 1)
 
 
 def test_lsh_half_append_refused(spark, embeds, tmp_path):
@@ -179,11 +179,11 @@ def test_lsh_half_append_refused(spark, embeds, tmp_path):
         embeds.where(F.col("vec_id") % 10 < 8), path
     )
     wave1 = embeds.where(F.col("vec_id") % 10 >= 8)
-    similarity.append_to_lsh_bucket_index(wave1, path, 1)
+    similarity.write_lsh_bucket_index(wave1, path, 1)
     fsio.delete_path(spark, f"{path}/counts/wave=1")  # the crash window
     with pytest.raises(ValueError, match="half-written append"):
         similarity.compact_lsh_bucket_index(spark, path)
-    similarity.append_to_lsh_bucket_index(wave1, path, 1)  # the retry
+    similarity.write_lsh_bucket_index(wave1, path, 1)  # the retry
     assert similarity.compact_lsh_bucket_index(spark, path) == 2
 
 
@@ -193,8 +193,8 @@ def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
     re-running compact_index resumes from the manifest and converges to
     the same result."""
     path = str(tmp_path / "sh_crash")
-    dedup.write_simhash_index(_split(docs, "doc_id", 0, 6), path)
-    dedup.append_to_simhash_index(_sh(_split(docs, "doc_id", 6, 9)), path, 1)
+    dedup.write_simhash_index(_sh(_split(docs, "doc_id", 0, 6)), path)
+    dedup.write_simhash_index(_sh(_split(docs, "doc_id", 6, 9)), path, 1)
     expected = _rows(spark.read.parquet(path).drop("wave"))
 
     real_delete = fsio.delete_path
@@ -214,7 +214,7 @@ def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
 
     assert fsio.path_exists(spark, f"{path}/{fsio._COMPACT_MANIFEST}")
     with pytest.raises(ValueError, match="mid-commit"):
-        dedup.append_to_simhash_index(_sh(docs.limit(1)), path, 7)
+        dedup.write_simhash_index(_sh(docs.limit(1)), path, 7)
     # PROBES refuse too: in this window the folded rows may exist only
     # in the invisible _compact_tmp — a normal read would silently
     # return a truncated pair set
@@ -234,7 +234,7 @@ def test_cms_compaction_parity(spark, docs, tmp_path):
 
     path = str(tmp_path / "cms_idx")
     textstats.write_cms_index(_split(docs, "doc_id", 0, 7), path)
-    textstats.append_to_cms_index(_split(docs, "doc_id", 7, 9), path, 1)
+    textstats.write_cms_index(_split(docs, "doc_id", 7, 9), path, 1)
     delta = _split(docs, "doc_id", 9, 10)
     before = _rows(textstats.cms_delta_heavy_hitters(spark, delta, path))
     totals_before = _rows(
@@ -259,7 +259,7 @@ def test_bloom_compaction_parity(spark, docs, tmp_path):
     at a consumed wave id is refused forever."""
     path = str(tmp_path / "bloom_idx")
     dedup.write_bloom_index(_split(docs, "doc_id", 0, 7), path)
-    dedup.append_to_bloom_index(_split(docs, "doc_id", 7, 9), path, 1)
+    dedup.write_bloom_index(_split(docs, "doc_id", 7, 9), path, 1)
     delta = _split(docs, "doc_id", 9, 10)
     before = _rows(dedup.bloom_delta_new_docs(spark, delta, path))
     bits_before = {
@@ -273,4 +273,4 @@ def test_bloom_compaction_parity(spark, docs, tmp_path):
         dedup.bloom_delta_new_docs(spark, delta, path, k=2).collect()
     assert _rows(dedup.bloom_delta_new_docs(spark, delta, path)) == before
     with pytest.raises(ValueError, match="owned by a compaction"):
-        dedup.append_to_bloom_index(_split(docs, "doc_id", 7, 9), path, 1)
+        dedup.write_bloom_index(_split(docs, "doc_id", 7, 9), path, 1)

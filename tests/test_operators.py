@@ -240,11 +240,11 @@ def test_dedup_delta_never_reshingles(spark, docs, ddb, tmp_path):
 
     # the recurring loop's write-back: append the probed delta, then a
     # second wave finds its duplicate against a WAVE-1 doc via the index
-    dedup.append_to_minhash_band_index(delta, index_path, wave=1)
+    dedup.write_minhash_band_index(delta, index_path, wave=1)
     # at-least-once retry of the SAME wave replays its segment —
     # the index does not grow and probes stay correct
     n_before = spark.read.parquet(index_path).count()
-    dedup.append_to_minhash_band_index(delta, index_path, wave=1)
+    dedup.write_minhash_band_index(delta, index_path, wave=1)
     assert spark.read.parquet(index_path).count() == n_before
     seed = delta.orderBy("doc_id").limit(1).collect()[0]
     wave2 = spark.createDataFrame(
@@ -279,7 +279,10 @@ def test_simhash_delta_never_rehashes(spark, docs, ddb, tmp_path):
     corpus_path = str(tmp_path / "corpus_src")
     corpus.write.parquet(corpus_path)
     index_path = str(tmp_path / "sh_index")
-    dedup.write_simhash_index(spark.read.parquet(corpus_path), index_path)
+    dedup.write_simhash_index(
+        dedup.simhash(spark.read.parquet(corpus_path), dedup.SIMHASH_PAIR_BITS),
+        index_path,
+    )
     shutil.rmtree(corpus_path)  # corpus text gone — re-hashing impossible
     got_df = dedup.simhash_delta_pairs_against_index(spark, delta, index_path)
     got = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in got_df.collect()}
@@ -289,9 +292,9 @@ def test_simhash_delta_never_rehashes(spark, docs, ddb, tmp_path):
     # append the wave, then an exact copy of a delta doc (hamming 0)
     # surfaces against the WAVE-1 fingerprint via the index
     delta_sh = dedup.simhash(delta, dedup.SIMHASH_PAIR_BITS)
-    dedup.append_to_simhash_index(delta_sh, index_path, wave=1)
+    dedup.write_simhash_index(delta_sh, index_path, wave=1)
     n_before = spark.read.parquet(index_path).count()
-    dedup.append_to_simhash_index(delta_sh, index_path, wave=1)  # retry replays
+    dedup.write_simhash_index(delta_sh, index_path, wave=1)  # retry replays
     assert spark.read.parquet(index_path).count() == n_before
     seed = delta.orderBy("doc_id").limit(1).collect()[0]
     wave2 = spark.createDataFrame(
@@ -559,7 +562,6 @@ def test_embedding_delta_never_recodes(spark, embeds, ddb, tmp_path):
     import shutil
 
     from paperoni_spark.operators.similarity import (
-        append_to_embedding_lsh_index,
         embedding_delta_near_dup_against_index,
         embedding_near_dup_pairs,
         write_embedding_lsh_index,
@@ -594,10 +596,10 @@ def test_embedding_delta_never_recodes(spark, embeds, ddb, tmp_path):
     # the recurring loop's write-back: append the probed wave, then an
     # exact copy of a wave-1 delta vector surfaces (cosine 1.0) against
     # the appended codes via the index — mirrors the MinHash/SimHash twins
-    append_to_embedding_lsh_index(delta, index_path, wave=1)
+    write_embedding_lsh_index(delta, index_path, wave=1)
     # at-least-once retry of the SAME wave replays its segment
     n_before = spark.read.parquet(index_path).count()
-    append_to_embedding_lsh_index(delta, index_path, wave=1)
+    write_embedding_lsh_index(delta, index_path, wave=1)
     assert spark.read.parquet(index_path).count() == n_before
     seed = delta.orderBy("vec_id").limit(1).collect()[0]
     wave2 = spark.createDataFrame(
@@ -917,14 +919,14 @@ def test_ann_lsh_index_partition_pruned(spark, embeds, ddb, tmp_path):
     # rows-table cardinality, so the over-cap guard keeps working)
     from paperoni_spark.operators.similarity import (
         _LSH_ROWS_SCHEMA,
-        append_to_lsh_bucket_index,
+        write_lsh_bucket_index,
     )
 
     seed = embeds.orderBy("vec_id").limit(1).collect()[0]
     wave = spark.createDataFrame(
         [(10_000_001, list(seed["embedding"]))], "vec_id: long, embedding: array<double>"
     )
-    append_to_lsh_bucket_index(wave, path, wave=1)
+    write_lsh_bucket_index(wave, path, wave=1)
     after = ann_lsh_topk_indexed(spark, embeds.unionByName(wave.withColumn("label", F.lit(None).cast("int"))), path)
     top = {(r["query_id"], r["vec_id"]): (r["score"], r["rank"]) for r in after.collect()}
     assert top[(seed["vec_id"], 10_000_001)] == (1.0, 1)
@@ -942,11 +944,11 @@ def test_ann_lsh_index_partition_pruned(spark, embeds, ddb, tmp_path):
     # at-least-once retry of the SAME wave id replays its own segments —
     # rows are NOT double-appended and the histogram stays exact (the
     # failure mode of the former global-append + counts-swap design)
-    append_to_lsh_bucket_index(wave, path, wave=1)
+    write_lsh_bucket_index(wave, path, wave=1)
     assert index_state() == (n_rows, n_counted)
-    # wave 0 is reserved for the build
+    # a negative wave id is refused (0 is the build)
     with pytest.raises(ValueError):
-        append_to_lsh_bucket_index(wave, path, wave=0)
+        write_lsh_bucket_index(wave, path, wave=-1)
 
 
 def test_repetition_stats(spark, docs, ddb):
@@ -1052,7 +1054,7 @@ def test_ann_pq_index(spark, embeds, ddb, tmp_path):
     flat.mkdir()
     (flat / "part-00000.parquet").touch()
     with pytest.raises(ValueError):
-        write_wave_segment(embeds.limit(1), str(flat), 1)
+        write_wave_segment(embeds.limit(1), str(flat), 1, kind="pq")
 
 
 def test_index_kind_marker(spark, embeds, docs, tmp_path):
@@ -1061,22 +1063,20 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     committed segment: the _index_kind marker must (a) refuse a foreign
     family BEFORE anything is deleted, (b) adopt a legacy marker-less
     index, (c) extend to the two-table LSH bucket index, whose writer
-    bypasses write_wave_segment."""
+    checks both sub-roots before writing either."""
     from paperoni_spark.fsio import write_wave_segment
     from paperoni_spark.operators.dedup import (
         SIMHASH_PAIR_BITS,
-        append_to_simhash_index,
         simhash,
         write_simhash_index,
     )
     from paperoni_spark.operators.similarity import (
-        append_to_lsh_bucket_index,
         write_lsh_bucket_index,
     )
 
     # (a) cross-family refusal, committed build left untouched
     sim_path = str(tmp_path / "simhash_idx")
-    write_simhash_index(docs, sim_path)
+    write_simhash_index(simhash(docs, SIMHASH_PAIR_BITS), sim_path)
     before = sorted(r["doc_id"] for r in spark.read.parquet(sim_path).collect())
     with pytest.raises(ValueError, match="simhash"):
         write_wave_segment(embeds.limit(1), sim_path, 0, kind="pq")
@@ -1087,11 +1087,11 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     # (b) a pre-round-6 index (wave layout, no marker) is adopted: the
     # matching family appends fine and the marker appears
     legacy = tmp_path / "legacy_idx"
-    write_simhash_index(docs, str(legacy))
+    write_simhash_index(simhash(docs, SIMHASH_PAIR_BITS), str(legacy))
     for p in legacy.iterdir():
         if p.name.startswith("_index_kind_"):
             p.unlink()
-    append_to_simhash_index(
+    write_simhash_index(
         simhash(docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), SIMHASH_PAIR_BITS),
         str(legacy),
         1,
@@ -1109,7 +1109,75 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     (lsh_path / "rows").mkdir(parents=True)
     (lsh_path / "rows" / "part-00000.parquet").touch()
     with pytest.raises(ValueError, match="not a wave-segmented"):
-        append_to_lsh_bucket_index(embeds, str(lsh_path), 1)
+        write_lsh_bucket_index(embeds, str(lsh_path), 1)
+
+
+_WAVE_ID_FAMILIES = [
+    "minhash_bands", "simhash", "substring_hist", "bloom_bits", "cms_sketch",
+    "embedding_lsh", "lsh_buckets", "user_state", "time_rollup", "ivf", "pq",
+    "ivfpq",
+]
+
+
+@pytest.mark.parametrize("family", _WAVE_ID_FAMILIES)
+def test_wave_id_rule_every_family(spark, docs, embeds, tmp_path, family):
+    """One wave-id rule for every index family's segment writer (the
+    quantizer families' append): a non-numeric string id is a wave like
+    any other, an empty or negative id is refused with ValueError before
+    the root is touched."""
+    from paperoni_spark.operators import temporal
+
+    small_docs = docs.orderBy("doc_id").limit(40)
+    small_embeds = embeds.orderBy("vec_id").limit(64)
+    events = contract.load(spark, SF_DIR, "events").orderBy("event_id").limit(200)
+    sh = dedup.simhash(small_docs, dedup.SIMHASH_PAIR_BITS)
+
+    def ivf_build(p):
+        assigned, centroids = similarity.ivf_assignments(small_embeds, n_centroids=4)
+        similarity.write_ivf_index(assigned, p, centroids)
+
+    # family -> (build at wave 0, write the given wave)
+    writers = {
+        "minhash_bands": (None, lambda p, w: dedup.write_minhash_band_index(small_docs, p, w)),
+        "simhash": (None, lambda p, w: dedup.write_simhash_index(sh, p, w)),
+        "substring_hist": (None, lambda p, w: dedup.write_substring_index(small_docs, p, w, n=8)),
+        "bloom_bits": (None, lambda p, w: dedup.write_bloom_index(small_docs, p, w)),
+        "cms_sketch": (None, lambda p, w: textstats.write_cms_index(small_docs, p, w)),
+        "embedding_lsh": (None, lambda p, w: similarity.write_embedding_lsh_index(small_embeds, p, w)),
+        "lsh_buckets": (None, lambda p, w: similarity.write_lsh_bucket_index(small_embeds, p, w)),
+        "user_state": (None, lambda p, w: temporal.write_user_state_index(events, p, w)),
+        "time_rollup": (None, lambda p, w: temporal.write_rollup_index(events, p, w)),
+        "ivf": (ivf_build, lambda p, w: similarity.append_to_ivf_index(small_embeds, p, w)),
+        "pq": (
+            lambda p: similarity.write_pq_index(small_embeds, p),
+            lambda p, w: similarity.append_to_pq_index(small_embeds, p, w),
+        ),
+        "ivfpq": (
+            lambda p: similarity.write_ivfpq_index(small_embeds, p, n_centroids=4),
+            lambda p, w: similarity.append_to_ivfpq_index(small_embeds, p, w),
+        ),
+    }
+    build, write = writers[family]
+    path = str(tmp_path / family)
+    if build is None:
+        write(path, 0)
+    else:
+        build(path)
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, n), path)
+            for d, dirs, files in os.walk(path)
+            for n in dirs + files
+        )
+
+    write(path, "w1")
+    after_w1 = listing()
+    assert any("wave=w1" in n for n in after_w1), after_w1
+    for bad in ("", "-1"):
+        with pytest.raises(ValueError, match="wave id"):
+            write(path, bad)
+        assert listing() == after_w1, bad
 
 
 def test_ann_ivfpq_topk(spark, embeds, ddb):
@@ -1713,6 +1781,51 @@ def test_streaming_simhash_restart(spark, tmp_path):
     assert set((r["doc_a"], r["doc_b"]) for r in r1) <= set(pairs2)
 
 
+def test_streaming_simhash_over_operator_index(spark, tmp_path):
+    """The streamed loop writes through the same segment writer as the
+    operators: run over an index built by write_simhash_index, it adds a
+    kind-marked ``wave=`` segment beside the build (no second layout),
+    the root still reads as one table, the batch doc duplicating a build
+    doc pairs with it, and compaction folds the stream's segment like
+    any other."""
+    import glob as g
+    import shutil
+
+    from paperoni_spark import fsio
+    from paperoni_spark.streaming.dedup import run_streaming_simhash_dedup
+
+    t1 = "alpha beta gamma delta epsilon zeta eta theta"
+    build = spark.createDataFrame(
+        [(1, t1), (2, "one two three four five six seven eight")],
+        "doc_id: long, text: string",
+    )
+    index = str(tmp_path / "ix")
+    dedup.write_simhash_index(dedup.simhash(build, dedup.SIMHASH_PAIR_BITS), index)
+
+    batch = spark.createDataFrame(
+        [(3, t1, "en", "s", len(t1))],
+        "doc_id: long, text: string, lang: string, source: string, n_chars: long",
+    )
+    stage = str(tmp_path / "stage")
+    batch.coalesce(1).write.parquet(stage)
+    (tmp_path / "docs").mkdir()
+    shutil.move(g.glob(stage + "/part-*.parquet")[0], str(tmp_path / "docs" / "b0.parquet"))
+
+    rows = run_streaming_simhash_dedup(
+        spark, str(tmp_path / "docs"), index, str(tmp_path / "res"),
+        max_files_per_trigger=1, cap=10**9,
+    ).collect()
+    names = sorted(os.listdir(index))
+    assert all(n.startswith(("wave=", "_", ".")) for n in names), names
+    assert "_index_kind_simhash" in names
+    assert spark.read.parquet(index).count() == 3
+    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
+    assert pairs.get((1, 3)) == 0, pairs
+    assert fsio.compact_index_kind(spark, index, "simhash") == 2
+    assert len(fsio.wave_names(spark, index)) == 1
+    assert spark.read.parquet(index).count() == 3
+
+
 def test_streaming_embedding_pairs(spark, embeds, ddb):
     """Vector twin of the streamed near-dup loop: oracle parity with the
     whole-corpus banded sweep, cross-batch pairs present (planted twins
@@ -1914,7 +2027,6 @@ def test_substring_delta_index(spark, docs, tmp_path):
     result), never double-counts (a double-counted histogram would
     erroneously flag singleton delta shingles as duplicated)."""
     from paperoni_spark.operators.dedup import (
-        append_to_substring_index,
         substring_dedup,
         substring_delta_clean,
         write_substring_index,
@@ -1933,7 +2045,7 @@ def test_substring_delta_index(spark, docs, tmp_path):
     delta = base.where(F.col("doc_id") % 3 == 2)
     path = str(tmp_path / "substr_idx")
     write_substring_index(wave0, path, n=n)
-    append_to_substring_index(wave1, path, 1, n=n)
+    write_substring_index(wave1, path, 1, n=n)
 
     got = sorted(
         map(tuple, substring_delta_clean(spark, delta, path, n=n).collect())
@@ -1951,7 +2063,7 @@ def test_substring_delta_index(spark, docs, tmp_path):
     hist_before = sorted(
         map(tuple, spark.read.parquet(path).select("h", "occ").collect())
     )
-    append_to_substring_index(wave1, path, 1, n=n)
+    write_substring_index(wave1, path, 1, n=n)
     assert (
         sorted(map(tuple, spark.read.parquet(path).select("h", "occ").collect()))
         == hist_before
@@ -2071,7 +2183,6 @@ def test_index_geometry_guards(spark, docs, embeds, tmp_path):
     retrained quantizers would silently mis-score every appended
     vector's old codes."""
     from paperoni_spark.operators.dedup import (
-        append_to_substring_index,
         substring_delta_clean,
         write_substring_index,
     )
@@ -2083,15 +2194,15 @@ def test_index_geometry_guards(spark, docs, embeds, tmp_path):
     sub = str(tmp_path / "sub_idx")
     write_substring_index(docs, sub, n=8)
     with pytest.raises(ValueError, match="shingle_n=8"):
-        append_to_substring_index(
+        write_substring_index(
             docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), sub, 1, n=5
         )
     with pytest.raises(ValueError, match="shingle_n=8"):
         substring_delta_clean(spark, docs, sub, n=5).collect()
-    with pytest.raises(ValueError, match="must not be the build"):
-        append_to_substring_index(docs, sub, "0", n=8)
+    with pytest.raises(ValueError, match="must not be negative"):
+        write_substring_index(docs, sub, "-1", n=8)
     # matching n appends fine
-    append_to_substring_index(
+    write_substring_index(
         docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), sub, 1, n=8
     )
 
@@ -2281,11 +2392,10 @@ def test_cms_index_waves_linearity_and_replay(spark, docs, tmp_path):
     """CMS linearity is the index family's whole premise: a build + an
     append must estimate EXACTLY like a single-pass index over the union
     (counter sums are order-independent).  Plus the family invariants:
-    append retry replays (same counters, same probe), the build wave id
-    is refused for appends, the depth geometry pin refuses a mismatched
+    append retry replays (same counters, same probe), a negative wave id
+    is refused, the depth geometry pin refuses a mismatched
     probe, and a foreign family cannot write into the root."""
     from paperoni_spark.operators.textstats import (
-        append_to_cms_index,
         cms_delta_heavy_hitters,
         write_cms_index,
     )
@@ -2295,7 +2405,7 @@ def test_cms_index_waves_linearity_and_replay(spark, docs, tmp_path):
     delta = docs.where(F.col("doc_id") % 3 == 2)
     path = str(tmp_path / "cms_idx")
     write_cms_index(wave0, path)
-    append_to_cms_index(wave1, path, 1)
+    write_cms_index(wave1, path, 1)
     got = sorted(map(tuple, cms_delta_heavy_hitters(spark, delta, path).collect()))
 
     single = str(tmp_path / "cms_single")
@@ -2309,7 +2419,7 @@ def test_cms_index_waves_linearity_and_replay(spark, docs, tmp_path):
     before = sorted(
         map(tuple, spark.read.parquet(path).select("d", "bucket", "cnt").collect())
     )
-    append_to_cms_index(wave1, path, 1)
+    write_cms_index(wave1, path, 1)
     assert (
         sorted(
             map(
@@ -2325,7 +2435,7 @@ def test_cms_index_waves_linearity_and_replay(spark, docs, tmp_path):
     )
 
     with pytest.raises(ValueError, match="wave id"):
-        append_to_cms_index(wave1, path, 0)
+        write_cms_index(wave1, path, -1)
     with pytest.raises(ValueError, match="cms_depth"):
         cms_delta_heavy_hitters(spark, delta, path, depth=6).collect()
     from paperoni_spark.operators.dedup import write_substring_index
@@ -2408,10 +2518,9 @@ def test_bloom_index_idempotent_or_and_replay(spark, docs, tmp_path):
     overlapping appends — including re-sending an ALREADY-INDEXED wave —
     leave the filter identical to the single-pass build over the union
     (CMS would double-count; this family has no disjointness clause).
-    Plus the family invariants: retry replay, build-wave refusal, k
+    Plus the family invariants: retry replay, negative-wave refusal, k
     geometry pin, foreign-kind refusal before marker adoption."""
     from paperoni_spark.operators.dedup import (
-        append_to_bloom_index,
         bloom_delta_new_docs,
         write_bloom_index,
     )
@@ -2421,10 +2530,10 @@ def test_bloom_index_idempotent_or_and_replay(spark, docs, tmp_path):
     delta = docs.where(F.col("doc_id") % 3 == 2)
     path = str(tmp_path / "bloom_idx")
     write_bloom_index(wave0, path)
-    append_to_bloom_index(wave1, path, 1)
+    write_bloom_index(wave1, path, 1)
     # OVERLAPPING append: wave0 ∪ wave1 re-sent under a fresh wave id —
     # pure OR idempotence, the filter must not change
-    append_to_bloom_index(docs.where(F.col("doc_id") % 3 != 2), path, 2)
+    write_bloom_index(docs.where(F.col("doc_id") % 3 != 2), path, 2)
     got = sorted(
         tuple(r)
         for r in bloom_delta_new_docs(spark, delta, path).collect()
@@ -2452,14 +2561,14 @@ def test_bloom_index_idempotent_or_and_replay(spark, docs, tmp_path):
     before = sorted(
         r["pos"] for r in spark.read.parquet(f"{path}/wave=1").collect()
     )
-    append_to_bloom_index(wave1, path, 1)
+    write_bloom_index(wave1, path, 1)
     assert (
         sorted(r["pos"] for r in spark.read.parquet(f"{path}/wave=1").collect())
         == before
     )
 
     with pytest.raises(ValueError, match="wave id"):
-        append_to_bloom_index(wave1, path, 0)
+        write_bloom_index(wave1, path, -1)
     with pytest.raises(ValueError, match="bloom_k"):
         bloom_delta_new_docs(spark, delta, path, k=2).collect()
     from paperoni_spark.operators.textstats import write_cms_index
@@ -2735,10 +2844,10 @@ def test_asof_delta_enrich(spark, ddb, tmp_path):
     assert base == full
 
     # overlapping re-append: the SAME history sent again as wave 1
-    temporal.append_to_user_state_index(hist, idx, wave=1)
+    temporal.write_user_state_index(hist, idx, wave=1)
     assert probe() == base
     # and a genuinely overlapping partial wave
-    temporal.append_to_user_state_index(hist.limit(200), idx, wave=2)
+    temporal.write_user_state_index(hist.limit(200), idx, wave=2)
     assert probe() == base
 
     folded = fsio.compact_index_kind(spark, idx, "user_state")
@@ -2791,7 +2900,7 @@ def test_time_rollup_index(spark, ddb, tmp_path):
     cut = F.expr(f"TIMESTAMP_NTZ '{contract._ASOF_CUTOFF}'")
     idx = str(tmp_path / "rollup")
     temporal.write_rollup_index(events.where(F.col("ts") < cut), idx)
-    temporal.append_to_rollup_index(events.where(F.col("ts") >= cut), idx, wave=1)
+    temporal.write_rollup_index(events.where(F.col("ts") >= cut), idx, wave=1)
 
     def probe():
         return sorted(

@@ -19,7 +19,6 @@ from paperoni_spark.pipeline import (
     extract_pipeline,
     lineage_metrics,
     resume_against,
-    tiered_repartition,
 )
 from paperoni_spark.spans import extract_document, fixture_corpus, synth_corpus
 
@@ -77,21 +76,21 @@ def test_spark_matches_kernel_span_for_span(spark, fixture_df):
 
 
 def test_extract_pipeline_end_to_end(spark, fixture_df):
-    extracted = extract_pipeline(fixture_df, mode="tiered", light_partitions=4, heavy_partitions=2)
+    extracted = extract_pipeline(fixture_df)
     rows = extracted.collect()
     assert len(rows) == len(fixture_corpus())
     # tiny docs legitimately fail extraction (reference behavior: retries
     # re-walk the consumed DOM, mod.rs:1615-1616 no-page-cache)
     errored = {r["doc_id"] for r in rows if r["status"] != "ok"}
     assert errored == {"fx-simple", "fx-brs", "fx-grab-empty"}
-    # mega doc flows through the heavy tier and still extracts
+    # mega doc shares the scan partitions and still extracts
     mega = next(r for r in rows if r["doc_id"] == "fx-mega")
     assert mega["status"] == "ok"
     assert mega["spans_emitted"] > 100
 
 
 def test_lineage_metrics(spark, fixture_df):
-    extracted = extract_pipeline(fixture_df, mode="tiered", light_partitions=3, heavy_partitions=1)
+    extracted = extract_pipeline(fixture_df)
     metrics = lineage_metrics(extracted, run_id="test-run").collect()
     assert len(metrics) >= 1
     total_docs = sum(m["doc_count"] for m in metrics)
@@ -120,19 +119,12 @@ def test_lineage_started_at_is_per_call(spark, fixture_df, tmp_path):
 
 
 def test_resume_anti_join(spark, fixture_df):
-    extracted = extract_pipeline(fixture_df, mode="tiered", light_partitions=2, heavy_partitions=1)
+    extracted = extract_pipeline(fixture_df)
     done = extracted.select("doc_id", "status")
     remaining = resume_against(fixture_df, done)
     # everything ok is done; only the error docs remain for retry
     ids = sorted(r["doc_id"] for r in remaining.collect())
     assert ids == ["fx-brs", "fx-grab-empty", "fx-simple"]
-
-
-def test_tiered_repartition_partition_counts(spark):
-    docs = make_documents_df(spark, synth_corpus(300))
-    tiered = tiered_repartition(docs, light_partitions=5, heavy_partitions=3)
-    assert tiered.rdd.getNumPartitions() == 8
-    assert tiered.count() == 300
 
 
 def test_synth_corpus_on_spark(spark):
@@ -543,8 +535,8 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     survive, and the index grows by exactly the survivors."""
     from paperoni_spark.operators.dedup import (
         SIMHASH_PAIR_BITS,
-        append_to_simhash_index,
         simhash,
+        write_simhash_index,
     )
     from paperoni_spark.pipeline.compose import (
         build_training_corpus,
@@ -559,7 +551,7 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     corpus1 = corpus1.persist()
     n1 = corpus1.count()
     assert n1 > 0
-    append_to_simhash_index(simhash(corpus1, SIMHASH_PAIR_BITS), index, wave=1)
+    write_simhash_index(simhash(corpus1, SIMHASH_PAIR_BITS), index, wave=1)
 
     # wave 2: 4 new docs + 3 re-crawls of wave-1 content under new ids
     recrawl = []
@@ -588,7 +580,7 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     assert all(not i.startswith("w2-") for i in surv_ids)
     # index grows by exactly the survivors
     assert {r["doc_id"] for r in surv_sh.collect()} == surv_ids
-    append_to_simhash_index(surv_sh, index, wave=2)
+    write_simhash_index(surv_sh, index, wave=2)
     n_index = spark.read.parquet(index).count()
     assert n_index == n1 + len(surv_ids)
     # retry idempotence: re-submitting the SAME wave yields zero
@@ -984,7 +976,8 @@ def test_events_job_waves(tmp_path_factory):
     full-history batch as-of restricted to the wave), idempotent retry
     of a wave whose indexes were already appended (the exclude-wave
     probe), the rollup-index additive identity, and the out-of-order
-    refusal.  Subprocess: events_job.main owns (and stops) its session."""
+    and build-wave-id refusals (the latter leaves every root as it
+    was).  Subprocess: events_job.main owns (and stops) its session."""
     import subprocess
     import sys
 
@@ -1013,6 +1006,20 @@ events_main(["--input", "synthetic:2000", "--wave-id", "w1"] + base)
 events_main(["--input", "synthetic:1000:2000", "--wave-id", "w2", "--append"] + base)
 # retry w2: its index segments already exist — must replay, not refuse
 events_main(["--input", "synthetic:1000:2000", "--wave-id", "w2", "--append"] + base)
+# --append at the build's wave id: refused before anything is written
+def _listings():
+    return {{
+        root: sorted(os.path.relpath(os.path.join(d, n), root)
+                     for d, dirs, files in os.walk(root) for n in dirs + files)
+        for root in (out, met, ust, ru)
+    }}
+before = _listings()
+try:
+    events_main(["--input", "synthetic:1000:3000", "--wave-id", "0", "--append"] + base)
+    raise AssertionError("--append --wave-id 0 was not refused")
+except SystemExit as e:
+    assert "build's 0" in str(e), e
+assert _listings() == before
 # out-of-order wave: refused loudly
 try:
     events_main(["--input", "synthetic:500:1500", "--wave-id", "w3", "--append"] + base)
@@ -1030,12 +1037,11 @@ except SystemExit as e:
     assert "rollup" in str(e), e
 # restore the rollup index for the identity check below (rebuild from
 # the two ingested waves; disjoint, so partials reproduce exactly)
-from paperoni_spark.operators.temporal import append_to_rollup_index
 _sp = (_S.builder.master("local[4]").config("spark.sql.shuffle.partitions", "4")
        .config("spark.sql.session.timeZone", "UTC")
        .config("spark.ui.enabled", "false").getOrCreate())
 write_rollup_index(_synth(_sp, "synthetic:2000"), ru)
-append_to_rollup_index(_synth(_sp, "synthetic:1000:2000"), ru, "w2")
+write_rollup_index(_synth(_sp, "synthetic:1000:2000"), ru, "w2")
 _sp.stop()
 
 from pyspark.sql import SparkSession
