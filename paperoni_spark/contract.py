@@ -2378,7 +2378,7 @@ def q_ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sq_dist_sql(e: str, c: str) -> str:
-    """The rounded expanded-form squared distance every IVF/PQ oracle
+    """The rounded expanded-form squared distance every IVF oracle
     shares (mirrors the engine's numpy form term-for-term)."""
     r = similarity.IVF_ROUND
     return (
@@ -2393,8 +2393,9 @@ def _ivf_lloyd_ctes(
     """Shared coarse-quantizer CTE chain: ``base`` → Lloyd iterations →
     ``af`` (final assignment), ``q`` (query vectors), ``probes`` (the
     nprobe nearest centroids per query, rounded-distance + cid
-    tie-break).  Single source for oracle_ann_ivf_topk and
-    oracle_ann_ivfpq_topk — the deterministic-k-means replay lives once."""
+    tie-break).  Single source for oracle_ann_ivf_topk,
+    oracle_semantic_dedup and oracle_cluster_balanced_sample — the
+    deterministic-k-means replay lives once."""
     r = similarity.IVF_ROUND
     dist = _sq_dist_sql
     ctes = [
@@ -2445,32 +2446,6 @@ def _ivf_lloyd_ctes(
     FROM q CROSS JOIN {prev} s) WHERE rn <= {nprobe})"""
     )
     return ctes
-
-
-def q_ann_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN served from the persisted PQ codes index — result-identical
-    to ann_pq_topk (same oracle): the corpus side is the m-ints-per-
-    vector codes table, the quantizer is the persisted _codebooks side
-    table, and no corpus vector is read or re-encoded at probe time."""
-    embeds = load(spark, sf_dir, "embeddings")
-    index_path = _memo_index(
-        "pq_index", sf_dir, lambda p: similarity.write_pq_index(embeds, p)
-    )
-    return similarity.ann_pq_topk_indexed(spark, embeds, index_path)
-
-
-def q_ann_ivfpq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC served from the persisted index — result-identical to
-    ann_ivfpq_residual_topk (same oracle): the scan is partition-pruned
-    to the probed clusters' residual-code partitions and never touches
-    a corpus vector."""
-    embeds = load(spark, sf_dir, "embeddings")
-    index_path = _memo_index(
-        "ivfpq_index",
-        sf_dir,
-        lambda p: similarity.write_ivfpq_index(embeds, p),
-    )
-    return similarity.ann_ivfpq_topk_indexed(spark, embeds, index_path)
 
 
 def oracle_ann_ivf_topk(
@@ -2573,236 +2548,6 @@ def oracle_cluster_balanced_sample(
 SELECT vec_id, cid::INT AS centroid, rk::BIGINT AS rk
 FROM ranked WHERE rk <= {cap}"""
     )
-
-
-def _pq_subspace_ctes(
-    m: int, n_codes: int, iters: int, dim: int, src: str = "base"
-) -> tuple[list[str], list[str]]:
-    """Shared per-subspace PQ CTE chains (assumes ``src`` — a
-    (vec_id, emb) frame — is already in the WITH list): for each
-    subspace mi, the sliced subvectors, the Lloyd iterations, and
-    ``code{mi}`` (final code per vector).  Returns
-    (ctes, final_codebook_cte_names).  Single source for
-    oracle_ann_pq_topk and oracle_ann_ivfpq_topk; the residual IVFADC
-    oracle points ``src`` at the residual frame."""
-    if dim % m:
-        raise ValueError(f"PQ oracle: m={m} must divide dim={dim}")
-    r = similarity.IVF_ROUND
-    sd = dim // m
-    dist = _sq_dist_sql
-    ctes: list[str] = []
-    final_books: list[str] = []
-    for mi in range(m):
-        lo, hi = mi * sd + 1, (mi + 1) * sd
-        ctes.append(f"s{mi} AS (SELECT vec_id, emb[{lo}:{hi}] AS sub FROM {src})")
-        ctes.append(
-            f"""c0_{mi} AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, sub AS c
-  FROM (SELECT vec_id, sub FROM s{mi} ORDER BY vec_id LIMIT {n_codes}))"""
-        )
-        prev = f"c0_{mi}"
-        for it in range(1, iters + 1):
-            ctes.append(
-                f"""a{it}_{mi} AS (
-  SELECT vec_id, sub, cid FROM (
-    SELECT b.vec_id, b.sub, s.cid,
-           row_number() OVER (PARTITION BY b.vec_id
-                              ORDER BY {dist('b.sub', 's.c')} ASC, s.cid ASC) AS rn
-    FROM s{mi} b CROSS JOIN {prev} s) WHERE rn = 1)"""
-            )
-            ctes.append(
-                f"""m{it}_{mi} AS (
-  SELECT a.cid, i AS dim, round(avg(a.sub[i]), {r}) AS m
-  FROM a{it}_{mi} a, unnest(generate_series(1, {sd})) AS t(i) GROUP BY 1, 2)"""
-            )
-            ctes.append(
-                f"""c{it}_{mi} AS (
-  SELECT s.cid, coalesce(mm.c, s.c) AS c
-  FROM {prev} s LEFT JOIN (SELECT cid, list(m ORDER BY dim) AS c
-                           FROM m{it}_{mi} GROUP BY cid) mm USING (cid))"""
-            )
-            prev = f"c{it}_{mi}"
-        ctes.append(
-            f"""code{mi} AS (
-  SELECT vec_id, cid FROM (
-    SELECT b.vec_id, s.cid,
-           row_number() OVER (PARTITION BY b.vec_id
-                              ORDER BY {dist('b.sub', 's.c')} ASC, s.cid ASC) AS rn
-    FROM s{mi} b CROSS JOIN {prev} s) WHERE rn = 1)"""
-        )
-        final_books.append(prev)
-    return ctes, final_books
-
-
-def _adc_sql(
-    m: int, sd: int, final_books: list[str], qemb: str, vec_alias: str
-) -> tuple[str, str]:
-    """(joins, adc_expr) for the ADC sum: per-subspace code + codebook
-    joins against candidate alias ``vec_alias``, and the LEFT-ASSOCIATED
-    sum of rounded subspace distances from the query's raw subvectors —
-    the engine's table-lookup arithmetic term-for-term."""
-    joins, terms = [], []
-    for mi in range(m):
-        lo, hi = mi * sd + 1, (mi + 1) * sd
-        joins.append(
-            f"JOIN code{mi} k{mi} ON k{mi}.vec_id = {vec_alias}.vec_id "
-            f"JOIN {final_books[mi]} f{mi} ON f{mi}.cid = k{mi}.cid"
-        )
-        terms.append(_sq_dist_sql(f"{qemb}[{lo}:{hi}]", f"f{mi}.c"))
-    return " ".join(joins), " + ".join(terms)
-
-
-_PQ_RANKED_TAIL = """ranked AS (
-  SELECT query_id, vec_id, adc_dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY adc_dist ASC, vec_id ASC) AS rank
-  FROM scored)"""
-
-
-def oracle_ann_pq_topk(
-    m: int = similarity.PQ_M,
-    n_codes: int = similarity.PQ_K,
-    iters: int = similarity.PQ_ITERS,
-    n_queries: int = 10,
-    k: int = 5,
-    dim: int = similarity.EMBED_DIM,
-) -> str:
-    """DuckDB twin of similarity.ann_pq_topk: the per-subspace
-    deterministic k-means (same rules as the IVF oracle) unrolled as one
-    CTE chain PER SUBSPACE, then the ADC linear scan."""
-    r = similarity.IVF_ROUND
-    sd = dim // m
-    pq_ctes, final_books = _pq_subspace_ctes(m, n_codes, iters, dim)
-    ctes = [
-        "base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)"
-    ] + pq_ctes
-    ctes.append(
-        f"q AS (SELECT vec_id AS query_id, emb FROM base WHERE vec_id < {n_queries})"
-    )
-    joins, adc = _adc_sql(m, sd, final_books, "q.emb", "v")
-    ctes.append(
-        f"""scored AS (
-  SELECT q.query_id, v.vec_id, round({adc}, {r}) AS adc_dist
-  FROM base v CROSS JOIN q {joins}
-  WHERE v.vec_id != q.query_id)"""
-    )
-    ctes.append(_PQ_RANKED_TAIL)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT query_id, vec_id, adc_dist, rank::INT AS rank "
-        f"FROM ranked WHERE rank <= {k}"
-    )
-
-
-def oracle_ann_ivfpq_topk(
-    n_centroids: int = 16,
-    ivf_iters: int = 2,
-    nprobe: int = 2,
-    m: int = similarity.PQ_M,
-    n_codes: int = similarity.PQ_K,
-    pq_iters: int = similarity.PQ_ITERS,
-    n_queries: int = 10,
-    k: int = 5,
-    dim: int = similarity.EMBED_DIM,
-    residual: bool = False,
-) -> str:
-    """DuckDB twin of similarity.ann_ivfpq_topk: the coarse-quantizer
-    Lloyd replay (shared with the IVF oracle) restricts candidates to
-    each query's probed clusters, and the per-subspace PQ replay (shared
-    with the PQ oracle) scores them by the ADC sum — the full production
-    composition replayed end-to-end.  Note the IVF chain's ``q`` CTE
-    carries the query vectors as ``qemb``; the ADC terms slice it.
-
-    ``residual=True`` replays classical IVFADC: the PQ chain trains on
-    the residual frame (``rbase`` = emb − assigned coarse centroid,
-    exact per-element FP subtraction on both engines), and the scored
-    CTE joins each candidate against its query's PER-PROBE residual
-    (``qres``) instead of the raw query vector."""
-    r = similarity.IVF_ROUND
-    sd = dim // m
-    ctes = _ivf_lloyd_ctes(n_centroids, ivf_iters, dim, n_queries, nprobe)
-    cfinal = f"c{ivf_iters}"
-    if residual:
-        ctes.append(
-            # MATERIALIZED: every subspace chain references rbase, and
-            # unlike the raw path's `base` (a plain scan) re-inlining
-            # this computed chain re-runs af + the transform per
-            # reference (measured 10.8 s -> ~1 s at sf0.01)
-            f"""rbase AS MATERIALIZED (
-  SELECT a.vec_id,
-         list_transform(generate_series(1, {dim}), i -> a.emb[i] - s.c[i]) AS emb
-  FROM af a JOIN {cfinal} s ON s.cid = a.cid)"""
-        )
-        pq_ctes, final_books = _pq_subspace_ctes(
-            m, n_codes, pq_iters, dim, src="rbase"
-        )
-        ctes += pq_ctes
-        ctes.append(
-            f"""qres AS (
-  SELECT q.query_id, p.cid,
-         list_transform(generate_series(1, {dim}), i -> q.qemb[i] - s.c[i]) AS emb
-  FROM q JOIN probes p USING (query_id) JOIN {cfinal} s ON s.cid = p.cid)"""
-        )
-        joins, adc = _adc_sql(m, sd, final_books, "r.emb", "a")
-        ctes.append(
-            f"""scored AS (
-  SELECT r.query_id, a.vec_id, round({adc}, {r}) AS adc_dist
-  FROM af a JOIN qres r ON a.cid = r.cid
-  {joins}
-  WHERE a.vec_id != r.query_id)"""
-        )
-    else:
-        pq_ctes, final_books = _pq_subspace_ctes(m, n_codes, pq_iters, dim)
-        ctes += pq_ctes
-        joins, adc = _adc_sql(m, sd, final_books, "q.qemb", "a")
-        ctes.append(
-            f"""scored AS (
-  SELECT q.query_id, a.vec_id, round({adc}, {r}) AS adc_dist
-  FROM af a JOIN probes p ON a.cid = p.cid JOIN q ON q.query_id = p.query_id
-  {joins}
-  WHERE a.vec_id != q.query_id)"""
-        )
-    ctes.append(_PQ_RANKED_TAIL)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT query_id, vec_id, adc_dist, rank::INT AS rank "
-        f"FROM ranked WHERE rank <= {k}"
-    )
-
-
-def oracle_ann_recall_at_k() -> str:
-    """recall@k of the four approximate paths vs exact cosine top-k —
-    COMPOSED from the existing method oracles verbatim (each wrapped as
-    a derived-table subquery so their CTE names never collide): any edit
-    to a method's replay automatically propagates here."""
-    method_oracles = {
-        "lsh": oracle_ann_lsh_topk(),
-        "ivf": oracle_ann_ivf_topk(),
-        "pq": oracle_ann_pq_topk(),
-        "ivfpq": oracle_ann_ivfpq_topk(),
-    }
-    assert tuple(method_oracles) == similarity.ANN_RECALL_METHODS
-    union = "\n  UNION ALL\n".join(
-        f"SELECT '{name}' AS method, query_id, vec_id FROM ({sql}\n) {name}_t"
-        for name, sql in method_oracles.items()
-    )
-    methods = ", ".join(f"'{m}'" for m in similarity.ANN_RECALL_METHODS)
-    return f"""
-WITH exact AS (
-  SELECT query_id, vec_id FROM ({oracle_cosine_topk()}
-  ) exact_t),
-approx AS (
-  {union}),
-hits AS (
-  SELECT method, count(*)::BIGINT AS n_hits
-  FROM approx JOIN exact USING (query_id, vec_id) GROUP BY 1),
-methods AS (SELECT unnest([{methods}]) AS method),
-totals AS (SELECT count(*)::BIGINT AS n_exact FROM exact)
-SELECT m.method, coalesce(h.n_hits, 0)::BIGINT AS n_hits, t.n_exact,
-       round(coalesce(h.n_hits, 0) / t.n_exact, 6) AS recall
-FROM methods m LEFT JOIN hits h USING (method) CROSS JOIN totals t
-"""
 
 
 N_PLANTED_TWINS = 10
@@ -3760,29 +3505,11 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # k-means made engine-portable (rounded distances/means, cid
         # tie-breaks) so the DuckDB twin replays the exact Lloyd iterations
         "ann_ivf_topk": lambda spark, sf: similarity.ann_ivf_topk(load(spark, sf, "embeddings")),
-        # PQ ADC: compressed-linear-scan ANN (per-subspace deterministic
-        # k-means, same Lloyd-replay oracle family as IVF)
-        "ann_pq_topk": lambda spark, sf: similarity.ann_pq_topk(load(spark, sf, "embeddings")),
-        # IVF-PQ: the production composition (coarse probe restriction +
-        # ADC ranking over codes)
-        "ann_ivfpq_topk": lambda spark, sf: similarity.ann_ivfpq_topk(load(spark, sf, "embeddings")),
-        # retrieval QUALITY of the whole approximate stack vs exact truth
-        "ann_recall_at_k": lambda spark, sf: similarity.ann_recall_at_k(
-            load(spark, sf, "embeddings")
-        ),
         # cross-wave ExactSubstr: delta probed against the persisted
         # shingle histogram (the seventh wave-keyed index family)
         "substring_delta": q_substring_delta,
         # per-doc novelty of the delta's shingle stream vs the same index
         "shingle_novelty": q_shingle_novelty,
-        # classical IVFADC: PQ over residuals, per-probe query tables
-        "ann_ivfpq_residual_topk": lambda spark, sf: similarity.ann_ivfpq_topk(
-            load(spark, sf, "embeddings"), residual=True
-        ),
-        # the same composition served from the persisted pruned index
-        "ann_ivfpq_topk_indexed": q_ann_ivfpq_topk_indexed,
-        # PQ served from the persisted codes index (frozen codebooks)
-        "ann_pq_topk_indexed": q_ann_pq_topk_indexed,
         "embedding_near_dup": lambda spark, sf: similarity.embedding_near_dup_pairs(
             planted_embeddings(load(spark, sf, "embeddings"))
         ),
@@ -3940,9 +3667,6 @@ def build_oracles() -> dict[str, str]:
         "ann_lsh_topk": oracle_ann_lsh_topk(),
         "ann_lsh_topk_indexed": oracle_ann_lsh_topk(),
         "ann_ivf_topk": oracle_ann_ivf_topk(),
-        "ann_pq_topk": oracle_ann_pq_topk(),
-        "ann_ivfpq_topk": oracle_ann_ivfpq_topk(),
-        "ann_recall_at_k": oracle_ann_recall_at_k(),
         "perplexity_buckets": oracle_perplexity_buckets(),
         "cms_heavy_hitters": oracle_cms_heavy_hitters(),
         "cms_delta_heavy_hitters": oracle_cms_delta_heavy_hitters(),
@@ -3964,9 +3688,6 @@ def build_oracles() -> dict[str, str]:
         "label_centroid_similarity": oracle_label_centroid_similarity(),
         "pmi_collocations": oracle_pmi_collocations(),
         "substring_delta": oracle_substring_delta(),
-        "ann_ivfpq_residual_topk": oracle_ann_ivfpq_topk(residual=True),
-        "ann_ivfpq_topk_indexed": oracle_ann_ivfpq_topk(residual=True),
-        "ann_pq_topk_indexed": oracle_ann_pq_topk(),
         "media_feature_stats": oracle_media_feature_stats(),
         "pdf_page_stats": oracle_pdf_page_stats(),
         "embedding_near_dup": oracle_embedding_near_dup(),

@@ -350,12 +350,6 @@ class Node:
         return f"<Node {self.type}>"
 
 
-def next_sibling_chain(node: Optional[Node]) -> Iterator[Node]:
-    while node is not None:
-        yield node
-        node = node.next_sibling
-
-
 _SELECTOR_CACHE: dict[str, object] = {}
 _SIMPLE_RE = __import__("re").compile(
     r"^([a-zA-Z][a-zA-Z0-9-]*)?(?:#([\w-]+))?((?:\.[\w-]+)*)$"

@@ -2,7 +2,7 @@
 (tests/test_contract.py::test_hadoop_fs_only_in_fsio) — jobs and operators
 probe, list and delete paths only through these functions.
 
-Every persisted index in this repo (the twelve index families and the
+Every persisted index in this repo (the ten index families and the
 streamed wave loops) follows ONE durability rule: a writer owns exactly
 one ``wave=<id>`` segment and replays it with delete-before-overwrite,
 so an at-least-once retry is idempotent and committed segments are
@@ -126,7 +126,7 @@ def assert_index_kind(spark: SparkSession, path: str, kind: str) -> None:
     """Refuse to touch an index root claimed by a DIFFERENT index kind.
 
     All round-5+ indexes share the ``wave=<id>`` layout, so the layout
-    guard alone cannot stop e.g. ``write_pq_index`` pointed at a simhash
+    guard alone cannot stop e.g. ``write_ivf_index`` pointed at a simhash
     index: the wave=0 delete-before-overwrite would silently destroy the
     other family's committed build segment and the damage only surfaces
     as missing columns at the next probe.  Each index root therefore
@@ -165,18 +165,19 @@ def assert_index_param(spark: SparkSession, path: str, name: str, value) -> None
 
 
 def refuse_stale_appends(spark: SparkSession, path: str) -> None:
-    """Refuse to REBUILD a quantizer-bearing index (IVF / PQ / IVFADC)
-    over existing append segments: a rebuild retrains the quantizers and
-    replaces wave=0 + the side tables, but wave≥1 code rows were encoded
-    against the OLD quantizers — probes would decode them with the new
-    ADC tables and return wrong rankings with no error.  A rebuild must
-    start from a clean path (or the caller deletes the appends first)."""
+    """Refuse to REBUILD a quantizer-bearing index (IVF) over existing
+    append segments: a rebuild retrains the coarse quantizer and
+    replaces wave=0 + the ``_centroids`` side table, but wave≥1 rows
+    were assigned against the OLD centroids — probes would pick
+    clusters by the new centroids and miss appended vectors with no
+    error.  A rebuild must start from a clean path (or the caller
+    deletes the appends first)."""
     stale = [nm for nm in wave_names(spark, path) if nm != "wave=0"]
     if stale:
         raise ValueError(
-            f"{path} carries appended segments ({stale[:3]}) encoded "
-            "against the CURRENT quantizers — rebuilding would retrain "
-            "them and silently mis-score every appended vector.  Delete "
+            f"{path} carries appended segments ({stale[:3]}) assigned "
+            "against the CURRENT centroids — rebuilding would retrain "
+            "them and silently mis-probe every appended vector.  Delete "
             "the index to rebuild from scratch."
         )
 
@@ -298,7 +299,8 @@ def compact_index(
     with segment COUNT even when row count is flat.  Compaction restores
     build-time read geometry without touching any trained state: rows
     are unioned (and optionally re-aggregated via ``transform``), never
-    re-encoded, so quantizer-bearing families stay valid by construction.
+    re-assigned, so the quantizer-bearing ivf family stays valid by
+    construction.
 
     Caller contract: an OFFLINE maintenance op — no concurrent appends.
     Crash-safe in-place commit:
@@ -428,8 +430,6 @@ def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
             )
         },
         "ivf": {"partition_by": ("centroid",)},
-        "pq": {},
-        "ivfpq": {"partition_by": ("centroid",)},
     }
     if kind not in geometries:
         raise ValueError(
@@ -459,9 +459,9 @@ def _assert_wave_id(wave, first: int, what: str) -> None:
 
 def assert_append_wave(wave) -> None:
     """Validate an APPEND wave id: never the build's 0, never negative,
-    never empty.  The quantizer families' ``append_to_*_index`` and the
-    jobs' ``--wave-id`` run it; every other writer takes wave 0 as its
-    build."""
+    never empty.  ``append_to_ivf_index`` (the one quantizer family,
+    whose append assigns against the frozen centroids) and the jobs'
+    ``--wave-id`` run it; every other writer takes wave 0 as its build."""
     _assert_wave_id(wave, 1, "append wave id")
 
 

@@ -86,23 +86,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _rank_topk_adc(scored: DataFrame, k: int) -> DataFrame:
-    """Shared ADC top-k tail — (adc_dist asc, vec_id asc) ranking for
-    ann_pq_topk / ann_pq_topk_indexed / both ann_ivfpq_topk branches;
-    the oracles\' _PQ_RANKED_TAIL mirrors exactly this block, so it
-    lives once (the ADC twin of _rank_topk)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rank")
-    )
-
-
 CENTROID_MEAN_ROUND = 6
 CENTROID_COS_ROUND = 4
 
@@ -578,8 +561,8 @@ def write_ivf_index(
 
 
 def _write_centroids_table(spark, path: str, centroids) -> None:
-    """The ``_centroids`` side table (k × dim doubles, one file) — shared
-    by write_ivf_index and write_ivfpq_index."""
+    """The ``_centroids`` side table (k × dim doubles, one file) written
+    beside an IVF index."""
     # repartition(1), not coalesce(1): one output file either way, but
     # coalesce over a Python-pickled local relation measures a flat ~4 s
     # per action on this Spark build (vs ~0.5 s through the shuffle)
@@ -587,20 +570,6 @@ def _write_centroids_table(spark, path: str, centroids) -> None:
         [(i, list(c)) for i, c in enumerate(centroids)],
         "centroid: int, coords: array<double>",
     ).repartition(1).write.mode("overwrite").parquet(f"{path}/_centroids")
-
-
-def _write_codebooks_table(spark, path: str, codebooks) -> None:
-    """The ``_codebooks`` side table (m × n_codes × dim/m doubles, one
-    file) — shared by write_pq_index and write_ivfpq_index."""
-    # repartition(1), not coalesce(1) — same rationale as _centroids
-    spark.createDataFrame(
-        [
-            (mi, ci, [float(x) for x in c])
-            for mi, cb in enumerate(codebooks)
-            for ci, c in enumerate(cb)
-        ],
-        "sub: int, code: int, coords: array<double>",
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/_codebooks")
 
 
 def read_ivf_centroids(spark, path: str) -> list[list[float]]:
@@ -665,22 +634,13 @@ def ann_ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 2,
-    trained: tuple[DataFrame, list[list[float]]] | None = None,
 ) -> DataFrame:
     """IVF ANN: rank candidates only within the query's ``nprobe`` nearest
     clusters.  The corpus side is assigned map-side and joined on the
     cluster id — at scale the assigned table is written partitioned by
     centroid (:func:`write_ivf_index`) so probes become partition-pruned
-    scans (:func:`ivf_probe_scan`).
-
-    ``trained`` takes a precomputed ``ivf_assignments`` result so a
-    composite caller (ann_recall_at_k) trains the coarse quantizer ONCE
-    per invocation instead of once per method — the training is the
-    dominant cost and the result is deterministic, so sharing it within
-    one query call changes nothing downstream."""
-    assigned, centroids = (
-        trained if trained is not None else ivf_assignments(embeddings, n_centroids)
-    )
+    scans (:func:`ivf_probe_scan`)."""
+    assigned, centroids = ivf_assignments(embeddings, n_centroids)
     queries = assigned.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
@@ -703,279 +663,6 @@ def ann_ivf_topk(
     return _rank_topk(scored, k)
 
 
-PQ_M = 4  # subspaces
-PQ_K = 16  # centroids per subspace (codes fit one byte up to 256)
-PQ_ITERS = 2
-
-
-def _pq_assign_col(codebooks: list[list[list[float]]]):
-    """Per-subspace nearest-centroid codes as one ``array<int>`` column:
-    one numpy matmul PER SUBSPACE per Arrow batch (the vectorized path —
-    interpreted HOF distances are ~10× slower here, same measurement as
-    IVF assignment).  Distances are rounded before argmin and np.argmin
-    takes the first minimum — ties break to the lowest code, matching
-    the oracle's (d, cid) ordering."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    sqs = [(cm * cm).sum(axis=1) for cm in mats]
-    sd = mats[0].shape[1]
-
-    @pandas_udf("array<int>")
-    def assign_udf(emb):
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        codes = np.empty((len(mat), len(mats)), dtype=np.int32)
-        for mi, (cm, cs) in enumerate(zip(mats, sqs)):
-            sub = mat[:, mi * sd : (mi + 1) * sd]
-            d = (
-                (sub * sub).sum(axis=1)[:, None]
-                - 2.0 * (sub @ cm.T)
-                + cs[None, :]
-            )
-            codes[:, mi] = np.argmin(np.round(d, IVF_ROUND), axis=1)
-        return pd.Series(list(codes))
-
-    return assign_udf(F.col("emb"))
-
-
-def pq_codebooks_and_codes(
-    embeddings: DataFrame,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    dim: int = EMBED_DIM,
-    projected: bool = False,
-) -> tuple[DataFrame, list[list[list[float]]]]:
-    """Product-quantization training + encoding: deterministic k-means
-    per SUBSPACE (the vector split into ``m`` contiguous blocks), with
-    the exact rules that make IVF engine-portable — lowest-vec_id
-    seeds, rounded distances with first-min ties, per-iteration means
-    rounded to IVF_ROUND, empty clusters keep their centroid — so the
-    DuckDB oracle replays every Lloyd step per subspace.
-
-    All ``m`` subspaces train TOGETHER: each iteration is one combined
-    assignment pass (one UDF, m matmuls) plus one dimension-exploded
-    partial-aggregated mean — 2 jobs per iteration regardless of m,
-    and the codebooks (m × n_codes × dim/m doubles) stay driver-side
-    control-plane, like the IVF quantizer.  Returns the materialized
-    ``(vec_id, emb, codes)`` frame and the codebooks.
-
-    ``projected=True`` takes a frame already carrying ``(vec_id, emb)``
-    doubles (e.g. the residual frame of the IVFADC composition) instead
-    of the raw ``embedding`` column."""
-    if dim % m:
-        raise ValueError(
-            f"PQ requires m to divide the dimension evenly: dim={dim}, m={m} "
-            f"would silently drop the trailing {dim % m} dimension(s)"
-        )
-    base = (
-        embeddings.select("vec_id", "emb")
-        if projected
-        else embeddings.select(
-            "vec_id", _to_double(F.col("embedding")).alias("emb")
-        )
-    )
-    sd = dim // m
-    seeds = base.orderBy("vec_id").limit(n_codes).select("emb").collect()
-    codebooks = [
-        [list(r["emb"])[mi * sd : (mi + 1) * sd] for r in seeds]
-        for mi in range(m)
-    ]
-    for _ in range(iters):
-        coded = base.withColumn("codes", _pq_assign_col(codebooks))
-        rows = (
-            coded.select("codes", F.posexplode("emb").alias("dim", "val"))
-            .select(
-                F.expr(f"int(dim div {sd})").alias("sub"),
-                F.expr(f"int(dim % {sd})").alias("subdim"),
-                F.expr(f"element_at(codes, int(dim div {sd}) + 1)").alias("code"),
-                "val",
-            )
-            .groupBy("sub", "code", "subdim")
-            .agg(F.avg("val").alias("mean"))
-            .collect()
-        )
-        new_books = [[list(c) for c in cb] for cb in codebooks]
-        for r in rows:
-            new_books[r["sub"]][r["code"]][r["subdim"]] = round(
-                r["mean"], IVF_ROUND
-            )
-        codebooks = new_books
-    # the coded frame feeds the ADC scan AND the query-table collect —
-    # materialize so the m-matmul encoding runs once (the IVF rule)
-    coded = materialize(base.withColumn("codes", _pq_assign_col(codebooks)))
-    return coded, codebooks
-
-
-def ann_pq_topk(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    dim: int = EMBED_DIM,
-    trained: tuple[DataFrame, list[list[list[float]]]] | None = None,
-) -> DataFrame:
-    """PQ ADC top-k: the compressed-linear-scan ANN path.  The corpus is
-    encoded once into ``m`` small codes per vector (m bytes at k≤256 —
-    at 10^12 vectors the scan reads m-byte codes instead of dim×4-byte
-    floats, a ~64× IO reduction at the default geometry); each query
-    carries a per-subspace distance lookup TABLE (n_queries × m ×
-    n_codes doubles — bounded driver-side control-plane, computed with
-    the same rounded expanded-form distance the assignment uses), and
-    the approximate squared-L2 is m table lookups + (m−1) adds per
-    candidate, pure JVM expressions over the broadcast query row.
-    Ranking is (adc_dist asc, vec_id asc) — rank 1 = nearest.
-
-    ``trained`` takes a precomputed ``pq_codebooks_and_codes`` result —
-    same single-training-per-invocation contract as ann_ivf_topk's."""
-    spark = embeddings.sparkSession
-    coded, codebooks = (
-        trained
-        if trained is not None
-        else pq_codebooks_and_codes(embeddings, m, n_codes, iters, dim)
-    )
-    queries = _pq_query_tables(spark, coded, codebooks, n_queries, dim // m)
-    scored = (
-        coded.select("vec_id", "codes")
-        .crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(_adc_expr(m, n_codes), IVF_ROUND).alias("adc_dist"),
-        )
-    )
-    return _rank_topk_adc(scored, k)
-
-
-def write_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    dim: int = EMBED_DIM,
-) -> None:
-    """Materialize the PQ index: the corpus's codes (vec_id + m small
-    ints; m BYTES per vector at production k≤256 — the whole point: a
-    10^12-vector ANN scan that reads ~4 TB of codes instead of ~256 TB
-    of floats) in a ``wave=0`` segment, plus the trained codebooks as an
-    ``_codebooks`` side table (m × n_codes × dim/m doubles — invisible
-    to partition discovery, same convention as the IVF ``_centroids``),
-    making the index self-contained: waves append with the FROZEN
-    codebooks via :func:`append_to_pq_index`, and probes never touch
-    corpus vectors (:func:`ann_pq_topk_indexed`)."""
-    from ..fsio import refuse_stale_appends, write_wave_segment
-
-    spark = embeddings.sparkSession
-    refuse_stale_appends(spark, path)
-    coded, codebooks = pq_codebooks_and_codes(embeddings, m, n_codes, iters, dim)
-    write_wave_segment(coded.select("vec_id", "codes"), path, 0, "pq")
-    _write_codebooks_table(spark, path, codebooks)
-
-
-def read_pq_codebooks(
-    spark, path: str, m: int = PQ_M, n_codes: int = PQ_K
-) -> list[list[list[float]]]:
-    """The persisted PQ quantizer (control-plane, like IVF centroids).
-    Fails LOUDLY on a missing side table, a geometry mismatch (an index
-    written with different m/n_codes than the reader expects), or an
-    incomplete codebook — each would otherwise mis-encode appends and
-    mis-score probes silently.  Also refuses a mid-commit compaction of
-    the codes table every caller is about to scan."""
-    from ..fsio import path_exists, refuse_mid_compaction
-
-    refuse_mid_compaction(spark, path)
-
-    if not path_exists(spark, f"{path}/_codebooks"):
-        raise ValueError(
-            f"PQ index at {path} has no _codebooks side table — it was "
-            "written without its quantizer and cannot serve appends or "
-            "probes; rebuild with write_pq_index"
-        )
-    rows = spark.read.parquet(f"{path}/_codebooks").collect()
-    books: list[list] = [[None] * n_codes for _ in range(m)]
-    for r in rows:
-        if r["sub"] >= m or r["code"] >= n_codes:
-            raise ValueError(
-                f"PQ index at {path} was written with a different geometry "
-                f"than requested (found sub={r['sub']}, code={r['code']} vs "
-                f"m={m}, n_codes={n_codes})"
-            )
-        books[r["sub"]][r["code"]] = list(r["coords"])
-    missing = [(mi, ci) for mi in range(m) for ci in range(n_codes) if books[mi][ci] is None]
-    if missing:
-        raise ValueError(f"PQ codebooks at {path} are incomplete: {missing[:4]}")
-    return books
-
-
-def append_to_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    wave: int,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-) -> None:
-    """Add a wave: encode against the FROZEN persisted codebooks
-    (standard production PQ — retraining is an offline rebuild) and
-    write the wave's own ``wave=<id>`` segment (delete-before-overwrite
-    → retries replay).  Pure map-side: m matmuls per Arrow batch, no
-    shuffle.  Caller contract: vec_ids disjoint from the index and
-    ``wave`` ≥ 1, stable across retries."""
-    from ..fsio import assert_append_wave, write_wave_segment
-
-    assert_append_wave(wave)
-    spark = embeddings.sparkSession
-    books = read_pq_codebooks(spark, path, m, n_codes)
-    base = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("emb")
-    )
-    write_wave_segment(
-        base.withColumn("codes", _pq_assign_col(books)).select("vec_id", "codes"),
-        path,
-        wave,
-        "pq",
-    )
-
-
-def ann_pq_topk_indexed(
-    spark,
-    embeddings: DataFrame,
-    index_path: str,
-    n_queries: int = 10,
-    k: int = 5,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    dim: int = EMBED_DIM,
-) -> DataFrame:
-    """PQ ADC served from the PERSISTED index — result-identical to
-    :func:`ann_pq_topk` when the index was built from ``embeddings``,
-    but the corpus side is the codes table alone: the scan never reads
-    (or re-encodes) a corpus vector.  Query vectors come from the
-    caller's frame; their ADC tables are built against the persisted
-    codebooks (driver control-plane)."""
-    books = read_pq_codebooks(spark, index_path, m, n_codes)
-    base = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("emb")
-    )
-    qtables = _pq_query_tables(spark, base, books, n_queries, dim // m)
-    codes = spark.read.parquet(index_path).select("vec_id", "codes")
-    scored = (
-        codes.crossJoin(F.broadcast(qtables))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(_adc_expr(m, n_codes), IVF_ROUND).alias("adc_dist"),
-        )
-    )
-    return _rank_topk_adc(scored, k)
-
-
 def _ivf_probes_col(
     centroids: list[list[float]], nprobe: int, qemb_col
 ):
@@ -983,8 +670,8 @@ def _ivf_probes_col(
     sorted (rounded distance, centroid-id) structs, so probe selection
     is total-order deterministic even under distance ties
     (array_position on a sorted distance array would duplicate probes
-    on ties).  Shared by ann_ivf_topk and ann_ivfpq_topk, mirrored by
-    both oracles' ``probes`` CTE."""
+    on ties).  Used by ann_ivf_topk, mirrored by its oracle's ``probes``
+    CTE."""
 
     def dist_to(cent):
         return F.round(
@@ -1003,380 +690,6 @@ def _ivf_probes_col(
         )
     )
     return F.array(*[pairs[p]["cid"].cast("int") for p in range(nprobe)])
-
-
-def _adc_table_flat(
-    q, codebooks: list[list[list[float]]], sd: int
-) -> list[float]:
-    """One query vector's flat ADC lookup table: per subspace, the
-    rounded EXPANDED-form distance to every codebook centroid — THE
-    oracle-mirrored arithmetic ((q−c)² sums in a different FP order and
-    can diverge after rounding), single-sourced for the raw and
-    residual query-table builders."""
-    import numpy as np
-
-    flat: list[float] = []
-    for mi, cb in enumerate(codebooks):
-        sub = q[mi * sd : (mi + 1) * sd]
-        cm = np.array(cb, dtype=np.float64)
-        d = (sub @ sub) - 2.0 * (cm @ sub) + (cm * cm).sum(axis=1)
-        flat.extend(float(x) for x in np.round(d, IVF_ROUND))
-    return flat
-
-
-def _pq_query_tables(
-    spark,
-    coded: DataFrame,
-    codebooks: list[list[list[float]]],
-    n_queries: int,
-    sd: int,
-) -> DataFrame:
-    """Per-query ADC lookup tables as a broadcastable (query_id, tbl)
-    frame — n_queries × m × n_codes doubles of bounded driver-side
-    control-plane, computed with the same rounded EXPANDED-form distance
-    the assignment uses ((q−c)² sums in a different FP order and can
-    diverge after rounding).  Shared by ann_pq_topk and ann_ivfpq_topk."""
-    import numpy as np
-
-    qrows = (
-        coded.where(F.col("vec_id") < n_queries)
-        .select("vec_id", "emb")
-        .orderBy("vec_id")
-        .collect()
-    )
-    qtables = [
-        (
-            int(r["vec_id"]),
-            _adc_table_flat(np.array(r["emb"], dtype=np.float64), codebooks, sd),
-        )
-        for r in qrows
-    ]
-    return spark.createDataFrame(qtables, "query_id: long, tbl: array<double>")
-
-
-def _adc_expr(m: int, n_codes: int):
-    """The ADC distance: m table lookups + (m−1) LEFT-ASSOCIATED adds —
-    the oracles sum their per-subspace terms in the same order, so the
-    IEEE result is bit-identical before the final round."""
-    adc = None
-    for mi in range(m):
-        term = F.expr(
-            f"element_at(tbl, {mi * n_codes} + element_at(codes, {mi + 1}) + 1)"
-        )
-        adc = term if adc is None else adc + term
-    return adc
-
-
-def _residual_col(centroids: list[list[float]]):
-    """``emb − centroids[centroid]`` as one vectorized pandas UDF (a
-    numpy row-gather + subtract per Arrow batch).  FP subtraction of two
-    exactly-representable doubles is exact, so the residuals are
-    bit-identical to the DuckDB oracle's per-element list_transform —
-    no rounding layer needed at this step."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cents = np.array(centroids, dtype=np.float64)
-
-    @pandas_udf("array<double>")
-    def res_udf(emb, cid):
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        r = mat - cents[cid.to_numpy()]
-        return pd.Series(list(r))
-
-    return res_udf(F.col("emb"), F.col("centroid"))
-
-
-def _pq_residual_query_tables(
-    spark,
-    query_rows,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    sd: int,
-):
-    """Per-(query, probed-centroid) ADC lookup tables — classical IVFADC
-    needs one table per probe because the query RESIDUAL (q − c_probe)
-    differs per cluster.  n_queries × nprobe × m × n_codes doubles of
-    bounded driver-side control-plane; same rounded expanded-form
-    distance as every other quantizer step."""
-    import numpy as np
-
-    cents = np.array(centroids, dtype=np.float64)
-    rows = [
-        (
-            int(r["query_id"]),
-            int(cid),
-            _adc_table_flat(
-                np.array(r["qemb"], dtype=np.float64) - cents[cid],
-                codebooks,
-                sd,
-            ),
-        )
-        for r in query_rows
-        for cid in r["probes"]
-    ]
-    return spark.createDataFrame(
-        rows, "query_id: long, centroid: int, tbl: array<double>"
-    )
-
-
-def ann_ivfpq_topk(
-    embeddings: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 2,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    dim: int = EMBED_DIM,
-    residual: bool = False,
-    ivf_trained: tuple[DataFrame, list[list[float]]] | None = None,
-    pq_trained: tuple[DataFrame, list[list[list[float]]]] | None = None,
-) -> DataFrame:
-    """IVF-PQ ANN — the production 10^12-vector composition: the coarse
-    IVF quantizer restricts each query to its ``nprobe`` clusters
-    (partition-prunable at scale via write_ivf_index), and within them
-    candidates are ranked by PQ ADC distance over m-byte codes — the
-    scan reads codes, never the float vectors.  Both trainings follow
-    the deterministic engine-portable rules, so the DuckDB oracle
-    replays coarse Lloyd + per-subspace Lloyd + probe selection + the
-    ADC sum end-to-end.
-
-    ``residual=False`` (default) PQ-encodes RAW vectors — the simpler
-    composition, kept for the amortized-index path.  ``residual=True``
-    is classical IVFADC: PQ trains on and encodes the RESIDUALS
-    (vector − its coarse centroid), recovering most of the accuracy
-    lost to coarse quantization at identical code size; each query then
-    carries one ADC table PER PROBED CLUSTER (its residual differs per
-    cluster), and the candidate join becomes a plain equi-join on the
-    probed centroid.  Both trainings follow the same deterministic
-    engine-portable rules, so the oracle replays either composition
-    end-to-end.  Ranking is (adc_dist asc, vec_id asc).
-
-    ``ivf_trained`` / ``pq_trained`` (raw path only) take precomputed
-    training results — the single-training-per-invocation contract.
-    When training here, the independent jobs OVERLAP on driver threads
-    (guide §2.6 shape): the raw path's coarse-Lloyd and subspace-Lloyd
-    loops share no state, so their per-iteration collects interleave and
-    the wall is max(ivf, pq) instead of the sum; the residual path's PQ
-    depends on the IVF result, but the query-sample collect only needs
-    the coarse quantizer, so it overlaps the residual PQ training."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = embeddings.sparkSession
-    if residual:
-        assigned, centroids = (
-            ivf_trained
-            if ivf_trained is not None
-            else ivf_assignments(embeddings, n_centroids)
-        )
-        # IVFADC: quantize residuals; probes computed with the SAME
-        # Spark expression as the raw path, collected (bounded: the
-        # query sample) to build the per-(query, probe) tables
-        # PQ training consumes this frame ~2×/iteration + the final
-        # encode — materialize so the residual UDF runs once, not five
-        # times (the multi-consumer cut rule; `assigned` is already cut)
-        res_base = materialize(
-            assigned.select("vec_id", _residual_col(centroids).alias("emb"))
-        )
-
-        def _train_res_pq():
-            return pq_codebooks_and_codes(
-                res_base, m, n_codes, iters, dim, projected=True
-            )
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_train_res_pq)
-            query_rows = (
-                assigned.where(F.col("vec_id") < n_queries)
-                .select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("emb").alias("qemb"),
-                    _ivf_probes_col(centroids, nprobe, F.col("emb")).alias(
-                        "probes"
-                    ),
-                )
-                .orderBy("query_id")
-                .collect()
-            )
-            coded, codebooks = fut.result()
-        qtables = _pq_residual_query_tables(
-            spark, query_rows, centroids, codebooks, dim // m
-        )
-        cand = (
-            assigned.select("vec_id", "centroid")
-            .join(F.broadcast(qtables), "centroid")
-            .where(F.col("vec_id") != F.col("query_id"))
-        )
-        scored = cand.join(coded.select("vec_id", "codes"), "vec_id").select(
-            "query_id",
-            "vec_id",
-            F.round(_adc_expr(m, n_codes), IVF_ROUND).alias("adc_dist"),
-        )
-        return _rank_topk_adc(scored, k)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = (
-            None
-            if pq_trained is not None
-            else pool.submit(
-                pq_codebooks_and_codes, embeddings, m, n_codes, iters, dim
-            )
-        )
-        assigned, centroids = (
-            ivf_trained
-            if ivf_trained is not None
-            else ivf_assignments(embeddings, n_centroids)
-        )
-        coded, codebooks = pq_trained if fut is None else fut.result()
-    queries = assigned.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    queries = queries.withColumn(
-        "probes", _ivf_probes_col(centroids, nprobe, F.col("qemb"))
-    ).drop("qemb")
-    qtables = _pq_query_tables(spark, coded, codebooks, n_queries, dim // m)
-    queries = queries.join(qtables, "query_id")
-    cand = assigned.select("vec_id", "centroid").join(
-        F.broadcast(queries),
-        F.array_contains(F.col("probes"), F.col("centroid")),
-    ).where(F.col("vec_id") != F.col("query_id"))
-    scored = cand.join(coded.select("vec_id", "codes"), "vec_id").select(
-        "query_id",
-        "vec_id",
-        F.round(_adc_expr(m, n_codes), IVF_ROUND).alias("adc_dist"),
-    )
-    return _rank_topk_adc(scored, k)
-
-
-def write_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    dim: int = EMBED_DIM,
-) -> None:
-    """Persist the full IVFADC index — the production 10^12-vector
-    artifact: RESIDUAL PQ codes (the ann_ivfpq_topk(residual=True)
-    composition) written ``wave=0/centroid=…`` so probes are
-    partition-pruned to the probed clusters, plus the ``_centroids``
-    and ``_codebooks`` side tables that make it self-contained (waves
-    append against the FROZEN quantizers; probes never read a corpus
-    vector).  Kind-marked ``ivfpq`` — the eighth wave-keyed family."""
-    from ..fsio import refuse_stale_appends, write_wave_segment
-
-    spark = embeddings.sparkSession
-    refuse_stale_appends(spark, path)
-    assigned, centroids = ivf_assignments(embeddings, n_centroids)
-    res_base = materialize(
-        assigned.select(
-            "vec_id", "centroid", _residual_col(centroids).alias("emb")
-        )
-    )
-    coded, codebooks = pq_codebooks_and_codes(
-        res_base.select("vec_id", "emb"), m, n_codes, iters, dim, projected=True
-    )
-    rows = coded.select("vec_id", "codes").join(
-        res_base.select("vec_id", "centroid"), "vec_id"
-    )
-    write_wave_segment(rows, path, 0, "ivfpq", partition_by=("centroid",))
-    _write_centroids_table(spark, path, centroids)
-    _write_codebooks_table(spark, path, codebooks)
-
-
-def append_to_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    wave: int,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-) -> None:
-    """Add a wave to the IVFADC index: coarse-assign against the FROZEN
-    centroids, residual-encode against the FROZEN codebooks (standard
-    production IVFADC — retraining is an offline rebuild), write the
-    wave's own ``wave=<id>/centroid=…`` segment (delete-before-
-    overwrite → retries replay).  Pure map-side: 1 + m matmuls per
-    Arrow batch, no shuffle.  Caller contract: vec_ids disjoint from
-    the index and ``wave`` ≥ 1, stable across retries."""
-    from ..fsio import assert_append_wave, write_wave_segment
-
-    assert_append_wave(wave)
-    spark = embeddings.sparkSession
-    cents = read_ivf_centroids(spark, path)
-    books = read_pq_codebooks(spark, path, m, n_codes)
-    base = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("emb")
-    )
-    assigned = base.withColumn("centroid", _ivf_assign_col(cents))
-    res = assigned.select(
-        "vec_id", "centroid", _residual_col(cents).alias("emb")
-    )
-    write_wave_segment(
-        res.withColumn("codes", _pq_assign_col(books)).select(
-            "vec_id", "centroid", "codes"
-        ),
-        path,
-        wave,
-        "ivfpq",
-        partition_by=("centroid",),
-    )
-
-
-def ann_ivfpq_topk_indexed(
-    spark,
-    embeddings: DataFrame,
-    index_path: str,
-    n_queries: int = 10,
-    k: int = 5,
-    nprobe: int = 2,
-    m: int = PQ_M,
-    n_codes: int = PQ_K,
-    dim: int = EMBED_DIM,
-) -> DataFrame:
-    """IVFADC served from the PERSISTED index — result-identical to
-    :func:`ann_ivfpq_topk` with ``residual=True`` when the index was
-    built from ``embeddings``: probe selection uses the frozen persisted
-    centroids, the scan reads ONLY the probed clusters' code partitions
-    (PartitionFilters on ``centroid`` — the file listing is pruned
-    before any IO), and candidates are scored by residual ADC against
-    per-(query, probe) tables from the persisted quantizers.  No corpus
-    vector is read or re-encoded at probe time; query vectors come from
-    the caller's frame."""
-    cents = read_ivf_centroids(spark, index_path)
-    books = read_pq_codebooks(spark, index_path, m, n_codes)
-    base = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("emb")
-    )
-    query_rows = (
-        base.where(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("qemb"),
-            _ivf_probes_col(cents, nprobe, F.col("emb")).alias("probes"),
-        )
-        .orderBy("query_id")
-        .collect()
-    )
-    qtables = _pq_residual_query_tables(
-        spark, query_rows, cents, books, dim // m
-    )
-    probe_cids = sorted({int(c) for r in query_rows for c in r["probes"]})
-    rows = ivf_probe_scan(spark, index_path, probe_cids).select(
-        "vec_id", "centroid", "codes"
-    )
-    scored = (
-        rows.join(F.broadcast(qtables), "centroid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(_adc_expr(m, n_codes), IVF_ROUND).alias("adc_dist"),
-        )
-    )
-    return _rank_topk_adc(scored, k)
 
 
 def write_lsh_bucket_index(embeddings: DataFrame, path: str, wave=0) -> None:
@@ -1822,88 +1135,4 @@ def cluster_balanced_sample(
         "vec_id",
         cap_per_cluster,
         salt,
-    )
-
-
-# the four approximate paths measured by ann_recall_at_k, in report order
-ANN_RECALL_METHODS = ("lsh", "ivf", "pq", "ivfpq")
-
-
-def ann_recall_at_k(
-    embeddings: DataFrame, n_queries: int = 10, k: int = 5
-) -> DataFrame:
-    """Measured retrieval QUALITY of the approximate ANN stack: recall@k
-    of each path (sign-LSH multi-probe, IVF, PQ ADC, IVF-PQ) against the
-    exact :func:`cosine_topk` ground truth on the same corpus — the
-    correctness oracles pin determinism, this pins how much of the true
-    top-k the approximations actually return.  recall = |approx ∩ exact|
-    / |exact| aggregated over all queries (with exactly k exact rows per
-    query the aggregate equals the mean per-query recall).  One row per
-    method, including zero-hit methods (LEFT join from the method list).
-
-    Scale shape: ground truth is computed for the bounded query SAMPLE
-    only (broadcast queries — the existing cosine_topk plan), each
-    approximate path keeps its own production plan, and the join/agg
-    moves only (method, query_id, vec_id) id tuples.
-
-    The quantizers train ONCE per invocation (ivf for ivf+ivfpq, pq for
-    pq+ivfpq — they are deterministic, so sharing within the call is
-    pure dedup of identical work; the round-7 job audit measured both
-    trainings running twice here), and the two independent trainings
-    overlap with the ground-truth materialization on driver threads
-    (guide §2.6)."""
-    from concurrent.futures import ThreadPoolExecutor
-    from functools import reduce
-
-    spark = embeddings.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ivf = pool.submit(ivf_assignments, embeddings)
-        f_pq = pool.submit(pq_codebooks_and_codes, embeddings)
-        # 5 consumers of the ground truth (4 joins + the total) —
-        # materialize the tiny (n_queries × k) id set, per the
-        # multi-consumer cut rule; runs while the quantizers train
-        exact = materialize(
-            cosine_topk(embeddings, n_queries, k).select("query_id", "vec_id")
-        )
-        ivf_trained = f_ivf.result()
-        pq_trained = f_pq.result()
-    approx = {
-        "lsh": ann_lsh_topk(embeddings, n_queries, k),
-        "ivf": ann_ivf_topk(embeddings, n_queries, k, trained=ivf_trained),
-        "pq": ann_pq_topk(embeddings, n_queries, k, trained=pq_trained),
-        "ivfpq": ann_ivfpq_topk(
-            embeddings,
-            n_queries,
-            k,
-            ivf_trained=ivf_trained,
-            pq_trained=pq_trained,
-        ),
-    }
-    assert tuple(approx) == ANN_RECALL_METHODS
-    unioned = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            df.select(F.lit(name).alias("method"), "query_id", "vec_id")
-            for name, df in approx.items()
-        ],
-    )
-    hits = (
-        unioned.join(F.broadcast(exact), ["query_id", "vec_id"])
-        .groupBy("method")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    methods = spark.createDataFrame(
-        [(name,) for name in ANN_RECALL_METHODS], "method: string"
-    )
-    totals = exact.agg(F.count("*").alias("n_exact"))
-    n_hits = F.coalesce("n_hits", F.lit(0)).cast("long")
-    return (
-        methods.join(hits, "method", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "method",
-            n_hits.alias("n_hits"),
-            "n_exact",
-            F.round(n_hits / F.col("n_exact"), 6).alias("recall"),
-        )
     )

@@ -679,8 +679,7 @@ def hll_distinct_tokens(documents: DataFrame) -> DataFrame:
     2007) — the constant-memory cardinality sketch a 100-TB vocabulary
     census would maintain (256 registers/stratum here vs a
     corpus-sized exact distinct), reported ALONGSIDE the exact count so
-    retrieval quality is measured, not asserted (the ann_recall_at_k
-    discipline).
+    the sketch's error is measured, not asserted.
 
     Engine portability is structural, not numeric: the register index
     is the first 2 md5 hex chars, and rho (leading-zero count + 1 over

@@ -44,17 +44,6 @@ def corpus_build(documents: DataFrame, base_url: str = "http://example.com/") ->
     )
 
 
-def corpus_dedup_stats(documents: DataFrame) -> DataFrame:
-    """Pipeline summary: documents in, unique extracted texts out."""
-    built = corpus_build(documents)
-    return built.agg(
-        F.count("*").alias("docs_ok"),
-        F.countDistinct("fingerprint").alias("unique_texts"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.sum("n_images").alias("total_images"),
-    )
-
-
 def build_training_corpus(
     documents: DataFrame,
     base_url: str = "http://example.com/",

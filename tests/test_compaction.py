@@ -75,7 +75,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
 
     # compacting with the wrong family's geometry is refused up front
     with pytest.raises(ValueError, match="is a 'simhash' index"):
-        fsio.compact_index_kind(spark, path, "pq")
+        fsio.compact_index_kind(spark, path, "ivf")
     with pytest.raises(ValueError, match="no compaction geometry"):
         fsio.compact_index_kind(spark, path, "nonsense")
 
@@ -127,21 +127,28 @@ def test_substring_compaction_parity(spark, docs, tmp_path):
     assert after == before
 
 
-def test_pq_compaction_parity(spark, embeds, tmp_path):
-    """Quantizer-bearing family: codes are merged untouched (never
-    re-encoded), the probe ranking is identical, and the post-compaction
-    rebuild refusal still holds (the merged segment is not wave=0)."""
-    path = str(tmp_path / "pq_idx")
+def test_ivf_compaction_parity(spark, embeds, tmp_path):
+    """Quantizer-bearing family: assigned rows are merged untouched
+    (never re-assigned) under the centroid partition layout, the probe
+    scan returns identical rows, and the post-compaction rebuild refusal
+    still holds (the merged segment is not wave=0)."""
+    path = str(tmp_path / "ivf_idx")
     corpus = embeds.where(F.col("vec_id") % 10 < 8)
     wave1 = embeds.where(F.col("vec_id") % 10 >= 8)
-    similarity.write_pq_index(corpus, path)
-    similarity.append_to_pq_index(wave1, path, 1)
-    before = _rows(similarity.ann_pq_topk_indexed(spark, embeds, path))
-    assert fsio.compact_index_kind(spark, path, "pq") == 2
-    after = _rows(similarity.ann_pq_topk_indexed(spark, embeds, path))
-    assert after == before
+    assigned, centroids = similarity.ivf_assignments(corpus)
+    similarity.write_ivf_index(assigned, path, centroids)
+    similarity.append_to_ivf_index(wave1, path, 1)
+    probes = [0, 3, 7]
+
+    def probe_rows():
+        scan = similarity.ivf_probe_scan(spark, path, probes)
+        return _rows(scan.select("vec_id", "centroid", "emb"))
+
+    before = probe_rows()
+    assert fsio.compact_index_kind(spark, path, "ivf") == 2
+    assert probe_rows() == before
     with pytest.raises(ValueError, match="appended segments"):
-        similarity.write_pq_index(embeds, path)
+        similarity.write_ivf_index(assigned, path, centroids)
 
 
 def test_lsh_bucket_compaction_parity(spark, embeds, tmp_path):

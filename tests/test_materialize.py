@@ -1,22 +1,11 @@
-"""The materialization-policy knob: operators default to localCheckpoint
-(executor-local, right for idempotent analytics) but a long-lived pipeline
-can swap in reliable checkpoint() or a persisted table at the SAME cut
-points and get identical rows — the node-loss-tolerance option the
-localCheckpoint tradeoff note in CLAUDE.md points at."""
+"""Helpers around the streamed contract queries' scratch roots: the
+generation reaper and the micro-batch stager."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-
-from paperoni_spark.materialize import (
-    get_materialize_mode,
-    materialize,
-    materialize_mode,
-    set_materialize_mode,
-)
-from paperoni_spark.operators import dedup
 
 
 @pytest.fixture()
@@ -26,61 +15,6 @@ def small_docs(spark):
         for i in range(20)
     ] + [(100, "alpha beta gamma delta epsilon zeta token3 eta theta iota kappa")]
     return spark.createDataFrame(rows, "doc_id: long, text: string")
-
-
-def _pairs(df):
-    return sorted(
-        (r["doc_a"], r["doc_b"], r["n_shared_bands"]) for r in df.collect()
-    )
-
-
-def test_materialize_modes_row_identical(spark, small_docs, tmp_path):
-    """checkpoint and table modes survive their round-trips with rows
-    identical to the localCheckpoint default, through a real operator whose
-    pipeline crosses the materialization cut (LSH band rows) AND through
-    the lazy per-round cut in connected components."""
-    baseline_pairs = _pairs(dedup.lsh_candidate_doc_pairs(small_docs))
-    baseline_clusters = sorted(
-        map(tuple, dedup.dedup_clusters(small_docs).collect())
-    )
-    assert get_materialize_mode() == "localCheckpoint"
-
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    with materialize_mode("checkpoint"):
-        assert _pairs(dedup.lsh_candidate_doc_pairs(small_docs)) == baseline_pairs
-        assert (
-            sorted(map(tuple, dedup.dedup_clusters(small_docs).collect()))
-            == baseline_clusters
-        )
-    assert get_materialize_mode() == "localCheckpoint"  # restored
-
-    mat_dir = str(tmp_path / "mat")
-    spark.conf.set("paperoni.materialize.dir", mat_dir)
-    try:
-        with materialize_mode("table"):
-            assert (
-                _pairs(dedup.lsh_candidate_doc_pairs(small_docs))
-                == baseline_pairs
-            )
-            # through the per-round CC cut too: table mode writes every
-            # iteration's labels to parquet even though the default
-            # localCheckpoint cut is lazy (schema/nullability round-trip)
-            assert (
-                sorted(map(tuple, dedup.dedup_clusters(small_docs).collect()))
-                == baseline_clusters
-            )
-        # the frame really was persisted as a readable table
-        assert os.path.isdir(mat_dir) and os.listdir(mat_dir)
-    finally:
-        spark.conf.unset("paperoni.materialize.dir")
-
-
-def test_materialize_mode_guards(spark, small_docs):
-    with pytest.raises(ValueError, match="unknown materialize mode"):
-        set_materialize_mode("bogus")
-    with materialize_mode("table"):
-        with pytest.raises(ValueError, match="paperoni.materialize.dir"):
-            materialize(small_docs)
 
 
 def test_stream_tmp_reaps_previous_generation():

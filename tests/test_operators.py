@@ -870,6 +870,17 @@ def test_ivf_probe_scan_partition_pruned(spark, embeds, tmp_path_factory):
         F.col("vec_id") == 10_000_001
     ).collect()
     assert len(got) == 1 and got[0]["centroid"] == seed["centroid"]
+    # an index without its quantizer side table fails loudly
+    with pytest.raises(ValueError, match="_centroids"):
+        similarity.read_ivf_centroids(spark, str(tmp_path_factory.mktemp("none")))
+    # a legacy flat directory (bare part files) is refused at the WRITE,
+    # not discovered as a broken mixed layout at the next probe
+    from paperoni_spark.fsio import write_wave_segment
+
+    flat = tmp_path_factory.mktemp("flatdir")
+    (flat / "part-00000.parquet").touch()
+    with pytest.raises(ValueError):
+        write_wave_segment(embeds.limit(1), str(flat), 1, kind="ivf")
 
 
 def test_ann_lsh_index_partition_pruned(spark, embeds, ddb, tmp_path):
@@ -968,95 +979,6 @@ def test_repetition_stats(spark, docs, ddb):
     assert got[3]["n_bigrams"] == 0 and got[3]["top_bigram_frac"] == 0.0
 
 
-def test_ann_pq_topk(spark, embeds, ddb):
-    """PQ ADC ANN: oracle parity (per-subspace Lloyd replay), rank/
-    distance monotonicity, and the reconstruction-minimum property — an
-    exact twin of a query shares all its codes, so its ADC distance is
-    the query's attainable minimum (assignment picks each subspace's
-    argmin code) and the twin lands at rank 1."""
-    from paperoni_spark.operators.similarity import ann_pq_topk
-
-    result = ann_pq_topk(embeds)
-    rows = result.collect()
-    assert_matches_oracle(result, ddb, contract.oracle_ann_pq_topk())
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        dists = [r["adc_dist"] for r in rs]
-        assert dists == sorted(dists), (q, dists)
-
-    twin = contract.planted_embeddings(embeds)
-    got = {
-        (r["query_id"], r["vec_id"]): r
-        for r in ann_pq_topk(twin).collect()
-    }
-    twin_row = got.get((0, contract.TWIN_ID_OFFSET))
-    assert twin_row is not None
-    q0 = [r for (q, _), r in got.items() if q == 0]
-    assert twin_row["adc_dist"] == min(r["adc_dist"] for r in q0)
-
-
-def test_ann_pq_index(spark, embeds, ddb, tmp_path):
-    """Persisted PQ index: result-identical to the in-query scan, corpus
-    side served entirely from the codes table (source deleted after the
-    build), frozen-codebook append surfaces a twin at the query's
-    attainable-minimum ADC, retries replay, and a quantizer-less index
-    fails loudly."""
-    import shutil
-
-    from paperoni_spark.operators.similarity import (
-        ann_pq_topk,
-        ann_pq_topk_indexed,
-        append_to_pq_index,
-        read_pq_codebooks,
-        write_pq_index,
-    )
-
-    corpus_path = str(tmp_path / "emb_src")
-    embeds.write.parquet(corpus_path)
-    path = str(tmp_path / "pq_index")
-    write_pq_index(spark.read.parquet(corpus_path), path)
-    shutil.rmtree(corpus_path)  # corpus vectors gone — re-encoding impossible
-    got = ann_pq_topk_indexed(spark, embeds, path)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, ann_pq_topk(embeds).collect())
-    )
-    assert_matches_oracle(got, ddb, contract.oracle_ann_pq_topk())
-
-    seed = embeds.orderBy("vec_id").limit(1).collect()[0]
-    wave_df = spark.createDataFrame(
-        [(10_000_001, list(seed["embedding"]))],
-        "vec_id: long, embedding: array<double>",
-    )
-    append_to_pq_index(wave_df, path, 1)
-    after = {
-        (r["query_id"], r["vec_id"]): r
-        for r in ann_pq_topk_indexed(spark, embeds, path).collect()
-    }
-    twin = after.get((seed["vec_id"], 10_000_001))
-    assert twin is not None  # identical codes → attainable-minimum ADC
-    q0 = [r for (q, _), r in after.items() if q == seed["vec_id"]]
-    assert twin["adc_dist"] == min(r["adc_dist"] for r in q0)
-    # at-least-once retry of the same wave replays its segment
-    n_before = spark.read.parquet(path).count()
-    append_to_pq_index(wave_df, path, 1)
-    assert spark.read.parquet(path).count() == n_before
-    with pytest.raises(ValueError):
-        read_pq_codebooks(spark, str(tmp_path / "no_such_index"))
-    # a legacy flat directory (bare part files) is refused at the WRITE,
-    # not discovered as a broken mixed layout at the next probe
-    from paperoni_spark.fsio import write_wave_segment
-
-    flat = tmp_path / "flatdir"
-    flat.mkdir()
-    (flat / "part-00000.parquet").touch()
-    with pytest.raises(ValueError):
-        write_wave_segment(embeds.limit(1), str(flat), 1, kind="pq")
-
-
 def test_index_kind_marker(spark, embeds, docs, tmp_path):
     """All wave-keyed indexes share one layout, so the layout guard alone
     can't stop one family's wave=0 build from destroying another's
@@ -1079,7 +1001,7 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     write_simhash_index(simhash(docs, SIMHASH_PAIR_BITS), sim_path)
     before = sorted(r["doc_id"] for r in spark.read.parquet(sim_path).collect())
     with pytest.raises(ValueError, match="simhash"):
-        write_wave_segment(embeds.limit(1), sim_path, 0, kind="pq")
+        write_wave_segment(embeds.limit(1), sim_path, 0, kind="ivf")
     assert sorted(
         r["doc_id"] for r in spark.read.parquet(sim_path).collect()
     ) == before
@@ -1098,7 +1020,7 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     )
     assert (legacy / "_index_kind_simhash").exists()
     with pytest.raises(ValueError, match="simhash"):
-        write_wave_segment(embeds.limit(1), str(legacy), 2, kind="pq")
+        write_wave_segment(embeds.limit(1), str(legacy), 2, kind="ivf")
 
     # (c) the LSH bucket index: foreign-kind refusal at its root, and the
     # flat-legacy refusal on its rows/ sub-root (the one writer that
@@ -1114,15 +1036,14 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
 
 _WAVE_ID_FAMILIES = [
     "minhash_bands", "simhash", "substring_hist", "bloom_bits", "cms_sketch",
-    "embedding_lsh", "lsh_buckets", "user_state", "time_rollup", "ivf", "pq",
-    "ivfpq",
+    "embedding_lsh", "lsh_buckets", "user_state", "time_rollup", "ivf",
 ]
 
 
 @pytest.mark.parametrize("family", _WAVE_ID_FAMILIES)
 def test_wave_id_rule_every_family(spark, docs, embeds, tmp_path, family):
     """One wave-id rule for every index family's segment writer (the
-    quantizer families' append): a non-numeric string id is a wave like
+    ivf family's append): a non-numeric string id is a wave like
     any other, an empty or negative id is refused with ValueError before
     the root is touched."""
     from paperoni_spark.operators import temporal
@@ -1148,14 +1069,6 @@ def test_wave_id_rule_every_family(spark, docs, embeds, tmp_path, family):
         "user_state": (None, lambda p, w: temporal.write_user_state_index(events, p, w)),
         "time_rollup": (None, lambda p, w: temporal.write_rollup_index(events, p, w)),
         "ivf": (ivf_build, lambda p, w: similarity.append_to_ivf_index(small_embeds, p, w)),
-        "pq": (
-            lambda p: similarity.write_pq_index(small_embeds, p),
-            lambda p, w: similarity.append_to_pq_index(small_embeds, p, w),
-        ),
-        "ivfpq": (
-            lambda p: similarity.write_ivfpq_index(small_embeds, p, n_centroids=4),
-            lambda p, w: similarity.append_to_ivfpq_index(small_embeds, p, w),
-        ),
     }
     build, write = writers[family]
     path = str(tmp_path / family)
@@ -1178,43 +1091,6 @@ def test_wave_id_rule_every_family(spark, docs, embeds, tmp_path, family):
         with pytest.raises(ValueError, match="wave id"):
             write(path, bad)
         assert listing() == after_w1, bad
-
-
-def test_ann_ivfpq_topk(spark, embeds, ddb):
-    """IVF-PQ composition: oracle parity (coarse Lloyd + per-subspace
-    Lloyd + probe restriction + ADC replayed end-to-end), rank/distance
-    monotonicity, and probe restriction actually binds (with nprobe <
-    n_centroids some query's top set differs from the unrestricted PQ
-    scan — the composition is not a no-op)."""
-    from paperoni_spark.operators.similarity import ann_ivfpq_topk, ann_pq_topk
-
-    result = ann_ivfpq_topk(embeds)
-    rows = result.collect()
-    assert_matches_oracle(result, ddb, contract.oracle_ann_ivfpq_topk())
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        dists = [r["adc_dist"] for r in rs]
-        assert dists == sorted(dists), (q, dists)
-    # the probe restriction binds: every IVF-PQ hit scores identically
-    # to the full PQ scan on the shared pairs (same codes, same tables),
-    # and at least one query's top set differs from the unrestricted scan
-    full = {
-        (r["query_id"], r["vec_id"]): r["adc_dist"]
-        for r in ann_pq_topk(embeds, k=50).collect()
-    }
-    restricted = {(r["query_id"], r["vec_id"]): r["adc_dist"] for r in rows}
-    for key, d in restricted.items():
-        if key in full:
-            assert full[key] == d, key
-    top_full = {
-        (r["query_id"], r["vec_id"])
-        for r in ann_pq_topk(embeds).collect()
-    }
-    assert set(restricted) != top_full
 
 
 def test_normalized_dedup(spark, docs, ddb):
@@ -1920,104 +1796,6 @@ def test_connected_components_random_graphs(spark):
         assert got == want, (case, n, edges)
 
 
-def test_ann_recall_at_k(spark, embeds, ddb):
-    """Retrieval-quality metric: oracle parity (the composed four-method
-    replay), plus structural invariants — one row per method, recall in
-    [0, 1], n_exact = n_queries × k on this corpus, and each method's
-    n_hits equals a directly-computed intersection with the exact
-    ground truth (pinning the join/agg arithmetic, not just the oracle)."""
-    from paperoni_spark.operators.similarity import (
-        ANN_RECALL_METHODS,
-        ann_ivf_topk,
-        ann_recall_at_k,
-        cosine_topk,
-    )
-
-    result = ann_recall_at_k(embeds)
-    rows = {r["method"]: r for r in result.collect()}
-    assert set(rows) == set(ANN_RECALL_METHODS)
-    for r in rows.values():
-        assert r["n_exact"] == 50
-        assert 0.0 <= r["recall"] <= 1.0
-        assert abs(r["recall"] - r["n_hits"] / r["n_exact"]) < 1e-9
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in cosine_topk(embeds).select("query_id", "vec_id").collect()
-    }
-    ivf_hits = {
-        (r["query_id"], r["vec_id"])
-        for r in ann_ivf_topk(embeds).select("query_id", "vec_id").collect()
-    } & exact
-    assert rows["ivf"]["n_hits"] == len(ivf_hits)
-    assert_matches_oracle(result, ddb, contract.oracle_ann_recall_at_k())
-
-
-def test_ann_ivfpq_residual(spark, embeds, ddb):
-    """Classical IVFADC (residual=True): oracle parity end-to-end, rank
-    monotonicity, and the RECONSTRUCTION-ERROR twin — at identical code
-    size, quantizing residuals must reconstruct the corpus strictly
-    better (lower total squared error) than quantizing raw vectors,
-    which is the entire point of residual encoding."""
-    import numpy as np
-
-    from paperoni_spark.operators.similarity import (
-        PQ_M,
-        _residual_col,
-        ann_ivfpq_topk,
-        ivf_assignments,
-        pq_codebooks_and_codes,
-    )
-    from paperoni_spark.materialize import materialize
-
-    result = ann_ivfpq_topk(embeds, residual=True)
-    rows = result.collect()
-    assert_matches_oracle(result, ddb, contract.oracle_ann_ivfpq_topk(residual=True))
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        dists = [r["adc_dist"] for r in rs]
-        assert dists == sorted(dists), (q, dists)
-    # the residual composition is not a relabeled raw scan: the two
-    # score different ADC distances (residual tables differ per probe)
-    raw = {(r["query_id"], r["vec_id"]): r["adc_dist"] for r in
-           ann_ivfpq_topk(embeds).collect()}
-    res = {(r["query_id"], r["vec_id"]): r["adc_dist"] for r in rows}
-    shared = set(raw) & set(res)
-    assert shared and any(raw[kk] != res[kk] for kk in shared)
-
-    # reconstruction-error twin, identical code size (m × log2(K) bits)
-    assigned, centroids = ivf_assignments(embeds)
-    cents = np.array(centroids, dtype=np.float64)
-    arows = assigned.select("vec_id", "emb", "centroid").collect()
-    X = np.stack([np.array(r["emb"]) for r in arows])
-    cid = np.array([r["centroid"] for r in arows])
-
-    def decode(coded_df, books):
-        by_id = {r["vec_id"]: r["codes"] for r in
-                 coded_df.select("vec_id", "codes").collect()}
-        sd = X.shape[1] // PQ_M
-        out = np.empty_like(X)
-        ids = [r["vec_id"] for r in arows]
-        for i, vid in enumerate(ids):
-            codes = by_id[vid]
-            for mi in range(PQ_M):
-                out[i, mi * sd:(mi + 1) * sd] = books[mi][codes[mi]]
-        return out
-
-    raw_coded, raw_books = pq_codebooks_and_codes(embeds)
-    err_raw = float(((X - decode(raw_coded, raw_books)) ** 2).sum())
-    res_base = materialize(
-        assigned.select("vec_id", _residual_col(centroids).alias("emb"))
-    )
-    res_coded, res_books = pq_codebooks_and_codes(res_base, projected=True)
-    recon_res = cents[cid] + decode(res_coded, res_books)
-    err_res = float(((X - recon_res) ** 2).sum())
-    assert err_res < err_raw, (err_res, err_raw)
-
-
 def test_substring_delta_index(spark, docs, tmp_path):
     """Cross-wave ExactSubstr: (a) the delta probe is row-identical to
     the whole-corpus substring_dedup restricted to the delta ids, with
@@ -2099,96 +1877,21 @@ def test_connected_components_chain_converges_fast(spark):
         _cc_fixpoint(nodes, chain, max_rounds=2)
 
 
-def test_ann_ivfpq_indexed(spark, embeds, ddb, tmp_path):
-    """The persisted IVFADC index: (a) probe is result-identical to the
-    in-query residual composition and oracle-green; (b) probes never
-    touch a corpus vector (index built from a parquet copy that is then
-    DELETED); (c) the probe scan is partition-pruned to the probed
-    clusters; (d) an at-least-once retry of an append wave replays its
-    segment; (e) an appended exact twin of a query surfaces at the
-    attainable-minimum ADC distance (frozen-quantizer encode path)."""
-    import shutil
-
-    from paperoni_spark.operators.similarity import (
-        ann_ivfpq_topk,
-        ann_ivfpq_topk_indexed,
-        append_to_ivfpq_index,
-        write_ivfpq_index,
-    )
-
-    path = str(tmp_path / "ivfpq_idx")
-    corpus_path = str(tmp_path / "corpus")
-    embeds.write.parquet(corpus_path)
-    write_ivfpq_index(spark.read.parquet(corpus_path), path)
-    shutil.rmtree(corpus_path)  # corpus vectors gone — re-encoding impossible
-    got = ann_ivfpq_topk_indexed(spark, embeds, path)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, ann_ivfpq_topk(embeds, residual=True).collect())
-    )
-    assert_matches_oracle(got, ddb, contract.oracle_ann_ivfpq_topk(residual=True))
-    # partition-pruned probe: only probed centroid directories are read
-    from paperoni_spark.operators.similarity import (
-        _ivf_probes_col,
-        _to_double,
-        ivf_probe_scan,
-        read_ivf_centroids,
-    )
-
-    cents = read_ivf_centroids(spark, path)
-    probe_rows = (
-        embeds.where(F.col("vec_id") < 10)
-        .select(
-            _ivf_probes_col(cents, 2, _to_double(F.col("embedding"))).alias("p")
-        )
-        .collect()
-    )
-    probe_cids = sorted({int(c) for r in probe_rows for c in r["p"]})
-    scan = ivf_probe_scan(spark, path, probe_cids)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "centroid" in pf and "IN" in pf.upper()
-    read_dirs = {
-        r[0]
-        for r in scan.select(
-            F.regexp_extract(F.input_file_name(), r"centroid=(\d+)", 1)
-        ).distinct().collect()
-    }
-    assert read_dirs == {str(c) for c in probe_cids}
-
-    # append: twin of the lowest query id; retry replays the segment
-    seed = embeds.orderBy("vec_id").limit(1).collect()[0]
-    wave_df = spark.createDataFrame(
-        [(20_000_001, list(seed["embedding"]))],
-        "vec_id: long, embedding: array<double>",
-    )
-    append_to_ivfpq_index(wave_df, path, 1)
-    n_before = spark.read.parquet(path).count()
-    append_to_ivfpq_index(wave_df, path, 1)
-    assert spark.read.parquet(path).count() == n_before
-    after = {
-        (r["query_id"], r["vec_id"]): r
-        for r in ann_ivfpq_topk_indexed(spark, embeds, path).collect()
-    }
-    twin = after.get((seed["vec_id"], 20_000_001))
-    assert twin is not None
-    q0 = [r for (q, _), r in after.items() if q == seed["vec_id"]]
-    assert twin["adc_dist"] == min(r["adc_dist"] for r in q0)
-
-
 def test_index_geometry_guards(spark, docs, embeds, tmp_path):
     """Round-6 geometry guards: (a) the substring index pins its shingle
     size — probing or appending at a different n would hash disjoint
-    digests and silently match nothing; (b) quantizer-bearing indexes
-    (IVF/PQ/IVFADC) refuse a REBUILD over existing append segments —
-    retrained quantizers would silently mis-score every appended
-    vector's old codes."""
+    digests and silently match nothing; (b) the quantizer-bearing IVF
+    index refuses a REBUILD over existing append segments — retrained
+    centroids would silently mis-probe every appended vector's old
+    assignment."""
     from paperoni_spark.operators.dedup import (
         substring_delta_clean,
         write_substring_index,
     )
     from paperoni_spark.operators.similarity import (
-        append_to_pq_index,
-        write_pq_index,
+        append_to_ivf_index,
+        ivf_assignments,
+        write_ivf_index,
     )
 
     sub = str(tmp_path / "sub_idx")
@@ -2206,20 +1909,21 @@ def test_index_geometry_guards(spark, docs, embeds, tmp_path):
         docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), sub, 1, n=8
     )
 
-    pq = str(tmp_path / "pq_idx")
-    write_pq_index(embeds, pq)
+    assigned, centroids = ivf_assignments(embeds)
+    ivf = str(tmp_path / "ivf_idx")
+    write_ivf_index(assigned, ivf, centroids)
     seed = embeds.orderBy("vec_id").limit(1).collect()[0]
     wave_df = spark.createDataFrame(
         [(30_000_001, list(seed["embedding"]))],
         "vec_id: long, embedding: array<double>",
     )
-    append_to_pq_index(wave_df, pq, 1)
+    append_to_ivf_index(wave_df, ivf, 1)
     with pytest.raises(ValueError, match="appended segments"):
-        write_pq_index(embeds, pq)
+        write_ivf_index(assigned, ivf, centroids)
     # a pure wave=0 rebuild (no appends) stays allowed
-    pq2 = str(tmp_path / "pq_idx2")
-    write_pq_index(embeds, pq2)
-    write_pq_index(embeds, pq2)
+    ivf2 = str(tmp_path / "ivf_idx2")
+    write_ivf_index(assigned, ivf2, centroids)
+    write_ivf_index(assigned, ivf2, centroids)
 
 
 def test_semantic_dedup(spark, embeds, ddb):

@@ -70,15 +70,6 @@ PLAN_CONTRACTS = {
     # the whole-corpus operator (the index side adds a JOIN, not a pass
     # over the corpus), still no pair enumeration
     "substring_delta": (4, ["lang", "source", "n_chars"]),
-    # persisted-IVFADC probe: the codes scan is partition-pruned and
-    # broadcast-joined to the per-(query, probe) tables — the only
-    # shuffle is the top-k window's partition by query_id; no Python
-    # anywhere at probe time (encode happened at index build)
-    "ann_ivfpq_topk_indexed": (1, ["label"]),
-    # in-query residual IVFADC: same single ranking shuffle in the FINAL
-    # plan (training jobs run eagerly before it; the scan side is the
-    # materialized codes frame joined to broadcast tables)
-    "ann_ivfpq_residual_topk": (1, []),
     # zipf head/tail split scorers: every fact-side join is a broadcast
     # (head) or runs over the materialized doc_tf/lp frames — the only
     # shuffle in the FINAL plan is the closing per-doc agg / rank window

@@ -199,28 +199,6 @@ def test_per_document_url_column(spark):
     assert any(u.startswith("http://example.com/") for u in b_imgs)
 
 
-def test_sql_udtf_surface(spark, fixture_df):
-    """The SQL-callable UDTF produces the same results as the batch path."""
-    from paperoni_spark.pipeline.sql_api import register_sql_api
-
-    register_sql_api(spark)
-    fixture_df.createOrReplaceTempView("documents_spans")
-    got = {
-        r["doc_id"]: r
-        for r in spark.sql(
-            "SELECT * FROM extract_articles(TABLE(SELECT doc_id, spans FROM documents_spans))"
-        ).collect()
-    }
-    from paperoni_spark.operators.extract import run_extract
-
-    batch = {r["doc_id"]: r for r in run_extract(fixture_df).collect()}
-    assert set(got) == set(batch)
-    for doc_id, r in got.items():
-        assert r["status"] == batch[doc_id]["status"]
-        assert r["spans_emitted"] == batch[doc_id]["spans_emitted"]
-        assert r["extracted"] == batch[doc_id]["extracted"]
-
-
 def test_bucketed_resume_antijoin_is_shuffle_free(spark, tmp_path_factory):
     """Scale path for resume: documents and extracted bucketed on doc_id
     co-locate the anti-join — the physical plan has ZERO Exchange nodes
@@ -252,7 +230,7 @@ def test_bucketed_resume_antijoin_is_shuffle_free(spark, tmp_path_factory):
 
 
 def test_corpus_build_composition(spark):
-    from paperoni_spark.pipeline.compose import corpus_build, corpus_dedup_stats
+    from paperoni_spark.pipeline.compose import corpus_build
 
     docs = make_documents_df(spark, synth_corpus(40))
     built = corpus_build(docs).collect()
@@ -260,10 +238,9 @@ def test_corpus_build_composition(spark):
     for r in built:
         assert r["n_tokens"] > 0 and r["n_chars"] > 0
         assert len(r["fingerprint"]) == 32
-    stats = corpus_dedup_stats(docs).collect()[0]
-    assert stats["docs_ok"] == 40
-    assert stats["unique_texts"] == 40  # synthetic docs are all distinct
-    assert stats["total_images"] > 0
+    # synthetic docs are all distinct, and some carry images
+    assert len({r["fingerprint"] for r in built}) == 40
+    assert sum(r["n_images"] for r in built) > 0
 
 
 def test_mega_document_through_pipeline(spark):
