@@ -2,7 +2,8 @@
 
 entry()     — flagship extraction run (fixture + synthetic corpus) at sf0.001.
 queries()   — operator surface from SURVEY.md §2 + the training-data ops
-              (dedup / similarity / text-analysis / multimodal / streaming).
+              (dedup / similarity / text-analysis / sampling / temporal /
+              streaming), plus the PDF/layout parse path.
 oracle_sql()— DuckDB equivalents; the extraction kernel's oracle is the
               frozen golden span corpus rendered as a VALUES table.
 """

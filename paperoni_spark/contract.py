@@ -31,18 +31,14 @@ from pyspark.sql.types import (
 
 from .operators import (
     dedup,
-    graph,
-    multimodal,
-    packing,
     pdf,
-    pii,
     sampling,
     sessionize,
     similarity,
     temporal,
     textstats,
 )
-from .operators.extract import run_extract
+from .operators.extract import interleave_stats, run_extract
 from .pipeline.job import extract_pipeline
 from .spans import fixture_corpus, synth_corpus
 from .streaming import run_streaming_window_counts, windowed_event_counts
@@ -124,7 +120,7 @@ def q_interleave_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SAME frozen golden spans the span-equality gate uses
     (the profile is a pure function of the golden sequence)."""
     extracted = run_extract(fixture_documents_df(spark))
-    return multimodal.interleave_stats(extracted.select("doc_id", "extracted"))
+    return interleave_stats(extracted.select("doc_id", "extracted"))
 
 
 def oracle_interleave_stats() -> str:
@@ -970,45 +966,6 @@ JOIN norms nb ON nb.label = dots.label_b
 """
 
 
-def oracle_source_overlap_matrix() -> str:
-    """DuckDB twin of dedup.source_overlap_matrix: same winnow selection
-    CTEs as oracle_winnow_overlap_pairs, projected to (source, fp)."""
-    w = dedup.WINNOW_WINDOW - 1
-    return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS arr FROM documents),
-sh AS (
-  SELECT doc_id, i AS pos, md5(arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2]) AS h
-  FROM toks, unnest(generate_series(1, len(arr) - 2)) AS t(i)
-  WHERE len(arr) >= 3
-),
-sel AS (
-  SELECT DISTINCT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND {w} FOLLOWING) AS fp
-  FROM sh
-),
-sf AS (
-  SELECT DISTINCT coalesce(d.source, '{dedup.NULL_SOURCE_LABEL}') AS source, s.fp
-  FROM sel s JOIN documents d USING (doc_id)
-),
-sizes AS (SELECT source, count(*) AS n_fp FROM sf GROUP BY source),
-pairs AS (
-  SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_shared
-  FROM sf a JOIN sf b USING (fp)
-  WHERE a.source < b.source GROUP BY 1, 2
-)
-SELECT g.source_a, g.source_b,
-       coalesce(p.n_shared, 0)::BIGINT AS n_shared,
-       round(coalesce(p.n_shared, 0)::DOUBLE / least(na.n_fp, nb.n_fp), 6)
-         AS containment
-FROM (SELECT a.source AS source_a, b.source AS source_b
-      FROM sizes a JOIN sizes b ON a.source < b.source) g
-JOIN sizes na ON na.source = g.source_a
-JOIN sizes nb ON nb.source = g.source_b
-LEFT JOIN pairs p ON p.source_a = g.source_a AND p.source_b = g.source_b
-"""
-
-
 _ASOF_CUTOFF = "2024-01-24 00:00:00"
 
 
@@ -1191,47 +1148,6 @@ _CAND_SELECT = """
 
 def oracle_lsh_candidate_doc_pairs() -> str:
     return f"WITH {_capped_cand_ctes()}\n{_CAND_SELECT}"
-
-
-def oracle_doc_pagerank() -> str:
-    """DuckDB twin of graph.doc_pagerank: the Lloyd-style lockstep replay
-    (IVF k-means precedent) — each PageRank iteration is one chained CTE,
-    every term exact long arithmetic (``//`` == Spark ``div`` on
-    non-negative longs), the edge CTE composes the lsh_candidate_doc_pairs
-    oracle as a derived table so edits to the pair replay propagate."""
-    S = graph.PAGERANK_SCALE
-    dn, dd = graph.PAGERANK_DAMP_NUM, graph.PAGERANK_DAMP_DEN
-    teleport = f"({S} * {dd - dn}) // ({dd} * (SELECT n FROM nn))"
-    ctes = [
-        "pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ("
-        + oracle_lsh_candidate_doc_pairs()
-        + ") t)",
-        "edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs "
-        "UNION ALL SELECT doc_b, doc_a FROM pairs)",
-        "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
-        "nd AS MATERIALIZED (SELECT d.doc_id, coalesce(g.deg, 0) AS deg "
-        "FROM documents d LEFT JOIN deg g ON g.src = d.doc_id)",
-        "nn AS (SELECT count(*) AS n FROM nd)",
-        f"pr0 AS MATERIALIZED (SELECT doc_id, deg, {S} // (SELECT n FROM nn) AS pr FROM nd)",
-    ]
-    for i in range(graph.PAGERANK_ITERS):
-        share = (
-            f"(SELECT coalesce(sum((pr * {dn}) // {dd}), 0) FROM pr{i} "
-            f"WHERE deg = 0) // (SELECT n FROM nn)"
-        )
-        ctes.append(
-            f"pr{i + 1} AS MATERIALIZED (SELECT n.doc_id, n.deg, "
-            f"({teleport} + {share} + coalesce(s.c, 0))::BIGINT AS pr "
-            f"FROM nd n LEFT JOIN ("
-            f"SELECT e.dst AS doc_id, sum((p.pr * {dn}) // ({dd} * p.deg)) AS c "
-            f"FROM pr{i} p JOIN edges e ON e.src = p.doc_id "
-            f"WHERE p.deg > 0 GROUP BY e.dst) s ON s.doc_id = n.doc_id)"
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT doc_id, pr::BIGINT AS pr_scaled FROM pr{graph.PAGERANK_ITERS}"
-    )
 
 
 _NORM_PLANT_N = 20
@@ -2688,63 +2604,6 @@ FROM documents GROUP BY lang
 """
 
 
-def oracle_media_resize_sample() -> str:
-    hexpos = "strpos('0123456789abcdef', substr(h, {i}, 1)) - 1"
-
-    def byte(i: int) -> str:
-        return f"(({hexpos.format(i=2 * i + 1)}) * 16 + ({hexpos.format(i=2 * i + 2)}))"
-
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id,
-         CASE (doc_id % 4) WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png'
-                           WHEN 2 THEN 'audio/ogg' ELSE 'video/mp4' END AS mime,
-         md5(text) AS h
-  FROM documents
-),
-dims AS (
-  SELECT media_id, mime,
-         (64 + {byte(0)} % 192) AS src_w,
-         (64 + {byte(1)} % 192) AS src_h,
-         (100 + {byte(2)} % 900) AS dur
-  FROM media
-),
-scaled AS (
-  SELECT media_id, mime, src_w, src_h, dur,
-         least(224.0 / src_w, 224.0 / src_h) AS scale
-  FROM dims
-)
-SELECT media_id, mime,
-       greatest(1, floor(src_w * scale))::INT AS out_width,
-       greatest(1, floor(src_h * scale))::INT AS out_height,
-       (greatest(1, floor(src_w * scale))::BIGINT * greatest(1, floor(src_h * scale))::BIGINT * 3) AS out_bytes,
-       CASE WHEN mime LIKE 'video/%'
-            THEN array_to_string(list_slice(range(0, dur, greatest(1, dur // 8)), 1, 8), '|')
-            ELSE '' END AS frame_indices
-FROM scaled
-"""
-
-
-def oracle_media_feature_stats() -> str:
-    hexpos = "strpos('0123456789abcdef', substr(md5(text), {i}, 1)) - 1"
-    b0 = f"(({hexpos.format(i=1)}) * 16 + ({hexpos.format(i=2)}))"
-    b1 = f"(({hexpos.format(i=3)}) * 16 + ({hexpos.format(i=4)}))"
-    return f"""
-WITH media AS (
-  SELECT doc_id AS media_id,
-         CASE (doc_id % 4) WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png'
-                           WHEN 2 THEN 'audio/ogg' ELSE 'video/mp4' END AS mime,
-         strlen(text)::BIGINT AS n_bytes,
-         (64 + {b0} % 192)::INT AS width,
-         (64 + {b1} % 192)::INT AS height
-  FROM documents
-)
-SELECT mime, count(*)::BIGINT AS n_media, sum(n_bytes)::BIGINT AS total_bytes,
-       round(avg(width), 4) AS avg_width, round(avg(height), 4) AS avg_height
-FROM media GROUP BY mime
-"""
-
-
 def oracle_session_stats() -> str:
     gap_us = sessionize.DEFAULT_GAP_MINUTES * 60 * 1_000_000
     return f"""
@@ -2850,9 +2709,8 @@ FROM events GROUP BY 1, 2
 # ------------------------------------------------------------- the contract
 
 
-# ---- line-level dedup / PII redaction / per-source cap (the remaining
-# web-pipeline staples: CCNet boilerplate removal, C4-style PII scrub,
-# RefinedWeb domain caps)
+# ---- line-level dedup / per-source cap (the remaining web-pipeline
+# staples: CCNet boilerplate removal, RefinedWeb domain caps)
 
 LINE_PLANT_N = 40
 _LINE_HEADER = "shared header boilerplate"
@@ -3241,58 +3099,6 @@ FROM documents d LEFT JOIN per_doc USING (doc_id)
 """
 
 
-_PII_PLANT_N = 25
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus text is clean word soup, so the gate unions planted
-    docs carrying synthetic PII — example.com addresses, the reserved
-    fictional 555-01xx phone block, RFC-1918 10.x addresses; no real
-    data per the task rules."""
-    docs = load(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    planted = docs.where(i < _PII_PLANT_N).select(
-        (i + PLANT_ID_OFFSET).alias("doc_id"),
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            i.cast("string"),
-            F.lit("@example.com call 800-555-01"),
-            F.lpad(i.cast("string"), 2, "0"),
-            F.lit(" from 10.0.0."),
-            i.cast("string"),
-        ).alias("text"),
-    )
-    return pii.pii_redact(docs.select("doc_id", "text").union(planted))
-
-
-def oracle_pii_redact() -> str:
-    return f"""
-WITH probed AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {PLANT_ID_OFFSET},
-         text || ' contact user' || doc_id::VARCHAR
-              || '@example.com call 800-555-01' || lpad(doc_id::VARCHAR, 2, '0')
-              || ' from 10.0.0.' || doc_id::VARCHAR
-  FROM documents WHERE doc_id < {_PII_PLANT_N}
-)
-SELECT doc_id,
-       len(regexp_extract_all(text, '{pii.EMAIL_RE}'))::BIGINT AS n_emails,
-       len(regexp_extract_all(text, '{pii.PHONE_RE}'))::BIGINT AS n_phones,
-       len(regexp_extract_all(text, '{pii.IP_RE}'))::BIGINT AS n_ips,
-       (len(regexp_extract_all(text, '{pii.EMAIL_RE}'))
-        + len(regexp_extract_all(text, '{pii.PHONE_RE}'))
-        + len(regexp_extract_all(text, '{pii.IP_RE}'))) > 0 AS has_pii,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(text, '{pii.EMAIL_RE}', '{pii.EMAIL_TAG}', 'g'),
-           '{pii.PHONE_RE}', '{pii.PHONE_TAG}', 'g'),
-         '{pii.IP_RE}', '{pii.IP_TAG}', 'g') AS text_redacted
-FROM probed
-"""
-
-
 def oracle_length_stats() -> str:
     """Spark's exact ``percentile`` and DuckDB's ``quantile_cont`` share
     the (p·(n−1)) linear-interpolation definition; rounded to 6."""
@@ -3304,47 +3110,6 @@ def oracle_length_stats() -> str:
 SELECT lang, count(*)::BIGINT AS n_docs, {qs},
        min(n_chars) AS min_chars, max(n_chars) AS max_chars
 FROM documents GROUP BY lang
-"""
-
-
-def oracle_sequence_pack(seq_len: int = 256) -> str:
-    """Naive single-window twin of packing.sequence_pack — the two-phase
-    bucket cut is row-identical because bucket order (doc_id div B) plus
-    in-bucket doc_id order IS the global doc_id order."""
-    return f"""
-WITH t AS (
-  SELECT doc_id, (len({_TOKENS}) + 1)::BIGINT AS n_tokens FROM documents
-),
-c AS (
-  SELECT doc_id, n_tokens,
-         coalesce(sum(n_tokens) OVER (
-           ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0)::BIGINT AS start_token
-  FROM t
-)
-SELECT doc_id, n_tokens, start_token,
-       (start_token // {seq_len})::BIGINT AS start_seq,
-       ((start_token + n_tokens - 1) // {seq_len})::BIGINT AS end_seq
-FROM c
-"""
-
-
-def oracle_shard_assignments(n_shards: int = 8) -> str:
-    """Naive single-window twin of packing.shard_assignments — the
-    two-phase bucket rank is row-identical because bucket-DESC order +
-    in-bucket (n_tokens DESC, doc_id ASC) IS the global order."""
-    return f"""
-WITH t AS (
-  SELECT doc_id, len({_TOKENS})::BIGINT AS n_tokens FROM documents
-),
-r AS (
-  SELECT doc_id, n_tokens,
-         row_number() OVER (ORDER BY n_tokens DESC, doc_id ASC) AS rank
-  FROM t
-)
-SELECT doc_id, n_tokens, rank::BIGINT AS rank,
-       ((rank - 1) % {n_shards})::INT AS shard
-FROM r
 """
 
 
@@ -3419,8 +3184,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_ngram_stats": lambda spark, sf: dedup.dup_ngram_stats(load(spark, sf, "documents")),
         # Lee-et-al. exact-substring dedup (planted shared passage + within-doc repeat)
         "substring_dedup": q_substring_dedup,
-        # C4-style PII scrub (planted synthetic PII)
-        "pii_redact": q_pii_redact,
         # deterministic corpus sampling (training-mix construction)
         "hash_sample": lambda spark, sf: sampling.hash_sample(
             load(spark, sf, "documents"), fraction=0.2
@@ -3436,17 +3199,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # RefinedWeb-style per-domain cap (two-phase prefix cut, unit weights)
         "source_cap_sample": lambda spark, sf: sampling.source_cap_sample(
             load(spark, sf, "documents")
-        ),
-        # concat-then-chunk training-sequence packing manifest (gate uses
-        # a short seq_len + small buckets so chunk boundaries and the
-        # two-phase offset path are both exercised on 500 docs)
-        "sequence_pack": lambda spark, sf: packing.sequence_pack(
-            load(spark, sf, "documents"), seq_len=256, bucket_size=64
-        ),
-        # size-balanced round-robin shard export (two-phase DESC rank;
-        # small bucket width so multiple rank buckets exist at gate SF)
-        "shard_assignments": lambda spark, sf: packing.shard_assignments(
-            load(spark, sf, "documents"), n_shards=8, bucket_tokens=16
         ),
         # streaming extraction (foreachBatch over a multi-trigger file
         # source) against the same golden oracle as the batch path
@@ -3528,13 +3280,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load(spark, sf, "embeddings")
         ),
         "bpe_token_stats": lambda spark, sf: textstats.bpe_token_stats(load(spark, sf, "documents")),
-        "media_resize_sample": lambda spark, sf: multimodal.media_resize_and_sample(
-            multimodal.media_table_from_documents(load(spark, sf, "documents"))
-        ),
-        # multimodal plumbing
-        "media_feature_stats": lambda spark, sf: multimodal.media_feature_stats(
-            multimodal.media_table_from_documents(load(spark, sf, "documents"))
-        ),
         # interleaved-payload profile over extracted span sequences
         "interleave_stats": q_interleave_stats,
         # PDF/layout parse path (stub decoder, real plumbing)
@@ -3556,16 +3301,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "session_concurrency": lambda spark, sf: temporal.session_concurrency(
             load(_utc(spark), sf, "events")
-        ),
-        # centrality over the near-dup candidate graph (iterative, exact
-        # integer mass — the CC loop's PageRank sibling)
-        "doc_pagerank": lambda spark, sf: graph.doc_pagerank(
-            load(spark, sf, "documents")
-        ),
-        # cross-source contamination matrix (winnow fingerprints projected
-        # to sources; per-key join multiplicity bounded by source count)
-        "source_overlap_matrix": lambda spark, sf: dedup.source_overlap_matrix(
-            load(spark, sf, "documents")
         ),
         # incremental as-of join against the persisted user-state index
         # (eleventh wave-keyed family; idempotent max-merge appends)
@@ -3640,7 +3375,6 @@ def build_oracles() -> dict[str, str]:
         "line_dedup": oracle_line_dedup(),
         "dup_ngram_stats": oracle_dup_ngram_stats(),
         "substring_dedup": oracle_substring_dedup(),
-        "pii_redact": oracle_pii_redact(),
         "hash_sample": oracle_hash_sample(),
         "stratified_sample": oracle_stratified_sample(),
         "token_budget_sample": oracle_token_budget_sample(),
@@ -3649,8 +3383,6 @@ def build_oracles() -> dict[str, str]:
         "token_stats": oracle_token_stats(),
         "length_stats": oracle_length_stats(),
         "length_stats_approx": oracle_length_stats_approx(),
-        "sequence_pack": oracle_sequence_pack(),
-        "shard_assignments": oracle_shard_assignments(),
         "interleave_stats": oracle_interleave_stats(),
         "quality_scores": oracle_quality_scores(),
         "quality_filter": oracle_quality_filter(),
@@ -3680,15 +3412,12 @@ def build_oracles() -> dict[str, str]:
         "asof_join_enrich": oracle_asof_join_enrich(),
         "time_rollup": oracle_time_rollup(),
         "session_concurrency": oracle_session_concurrency(),
-        "doc_pagerank": oracle_doc_pagerank(),
-        "source_overlap_matrix": oracle_source_overlap_matrix(),
         "asof_delta_enrich": oracle_asof_join_enrich(delta_only=True),
         "streaming_asof_enrich": oracle_asof_join_enrich(),
         "time_rollup_delta": oracle_time_rollup(),
         "label_centroid_similarity": oracle_label_centroid_similarity(),
         "pmi_collocations": oracle_pmi_collocations(),
         "substring_delta": oracle_substring_delta(),
-        "media_feature_stats": oracle_media_feature_stats(),
         "pdf_page_stats": oracle_pdf_page_stats(),
         "embedding_near_dup": oracle_embedding_near_dup(),
         "semantic_dedup": oracle_semantic_dedup(),
@@ -3696,7 +3425,6 @@ def build_oracles() -> dict[str, str]:
         "embedding_dedup_clusters": oracle_embedding_dedup_clusters(),
         "embedding_delta_near_dup": oracle_embedding_delta_near_dup(),
         "bpe_token_stats": oracle_bpe_token_stats(),
-        "media_resize_sample": oracle_media_resize_sample(),
         "docs_joined_labels": oracle_docs_joined_labels(),
         "session_stats": oracle_session_stats(),
         "windowed_events": oracle_windowed_events(),

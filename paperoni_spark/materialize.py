@@ -17,11 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Cut the lineage of ``df`` with ``localCheckpoint`` and return the
-    materialized frame.  By default the cut is LAZY: the blocks are
-    written by the first action that computes the frame (the
-    connected-components loop relies on this — each round's labels are
-    realized by that round's convergence count, one job per round).
-    ``eager`` forces immediate computation."""
-    return df.localCheckpoint(eager=eager)
+    materialized frame.  The cut is LAZY: the blocks are written by the
+    first action that computes the frame (the connected-components loop
+    relies on this — each round's labels are realized by that round's
+    convergence count, one job per round)."""
+    return df.localCheckpoint(False)

@@ -1,4 +1,3 @@
 from .extract import EXTRACT_RESULT_SCHEMA, make_extract_batch, run_extract
 
 __all__ = ["EXTRACT_RESULT_SCHEMA", "make_extract_batch", "run_extract"]
-from . import dedup, multimodal, sessionize, similarity, textstats  # noqa: F401,E402

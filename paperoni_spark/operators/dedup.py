@@ -180,72 +180,6 @@ def winnow_overlap_pairs(
     )
 
 
-NULL_SOURCE_LABEL = "(null)"
-
-
-def source_overlap_matrix(
-    documents: DataFrame, n: int = 3, window: int = WINNOW_WINDOW
-) -> DataFrame:
-    """Cross-source contamination matrix over winnowing fingerprints: for
-    every unordered pair of sources, how many DISTINCT fingerprints they
-    share, and the containment n_shared / min(|fps_a|, |fps_b|) — the
-    corpus-mixing diagnostic read before setting source weights (a pair
-    with high containment is double-counting the same text).
-
-    Scale shape: the (source, fp) projection bounds the fp self-join's
-    per-key multiplicity by SOURCE CARDINALITY (a config-sized constant),
-    so unlike the doc-level overlap join no df-cap is needed — boilerplate
-    fingerprints cannot explode pairs, they count toward shared mass
-    (deliberate: the matrix measures raw shared-fingerprint volume).  The
-    pair grid and sizes are source-cardinality-sized; every data-sized
-    shuffle is keyed by doc_id (winnow window), (source, fp) (distinct),
-    or fp (the bounded join).  NULL sources fold into a pinned sentinel
-    label BEFORE any join (a NULL output cell cannot cross the gate, and
-    a NULL join key would silently drop the stratum).
-
-    Zero-overlap pairs are kept (n_shared = 0); sources with no
-    fingerprints at all (every doc shorter than the shingle width) have
-    no row — containment is undefined without a denominator."""
-    # the sentinel must not SILENTLY merge with a real source literally
-    # named like it — that would union two strata's fingerprints and
-    # corrupt every containment involving either, with no error.  The
-    # guard scan is source-only + pushed filter + limit 1: noise next
-    # to the shingle pass.
-    if documents.where(F.col("source") == NULL_SOURCE_LABEL).limit(1).count():
-        raise ValueError(
-            f"a real source is named {NULL_SOURCE_LABEL!r} — it would "
-            "silently merge with the NULL-source stratum; rename the "
-            "sentinel (dedup.NULL_SOURCE_LABEL)"
-        )
-    sel = _winnow_selected(documents, n, window)
-    src = documents.select(
-        "doc_id", F.coalesce("source", F.lit(NULL_SOURCE_LABEL)).alias("source")
-    )
-    sf = sel.join(src, "doc_id").select("source", "fp").distinct()
-    sizes = sf.groupBy("source").agg(F.count("*").alias("n_fp"))
-    pairs = (
-        sf.alias("a")
-        .join(sf.alias("b"), "fp")
-        .where(F.col("a.source") < F.col("b.source"))
-        .groupBy(
-            F.col("a.source").alias("source_a"),
-            F.col("b.source").alias("source_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.select(F.col("source").alias("source_a"), F.col("n_fp").alias("na"))
-    sb = sizes.select(F.col("source").alias("source_b"), F.col("n_fp").alias("nb"))
-    grid = sa.join(sb, F.col("source_a") < F.col("source_b"))
-    return grid.join(pairs, ["source_a", "source_b"], "left").select(
-        "source_a",
-        "source_b",
-        F.coalesce("n_shared", F.lit(0)).cast("long").alias("n_shared"),
-        F.round(
-            F.coalesce("n_shared", F.lit(0)) / F.least(F.col("na"), F.col("nb")), 6
-        ).alias("containment"),
-    )
-
-
 def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """K-permutation MinHash over word 3-gram shingles.
 
@@ -851,7 +785,7 @@ def _cc_fixpoint(
             )
             # propagated labels feed BOTH sides of the shortcut self-join
             # — materialize so the edge join + agg runs once per round.
-            # LAZY (eager=False): the checkpoint blocks are written the
+            # The cut is LAZY: the checkpoint blocks are written the
             # first time the round's ONE action (the convergence count
             # below) computes the frame, so a round costs one job instead
             # of three (two eager checkpoints + the count) while keeping

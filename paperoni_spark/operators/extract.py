@@ -24,6 +24,7 @@ from typing import Any, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -179,3 +180,37 @@ def run_extract(
             yield out.drop(columns=["extracted"])
 
     return documents.mapInPandas(stats_batch, schema=STATS_RESULT_SCHEMA)
+
+
+def interleave_stats(extracted: DataFrame) -> DataFrame:
+    """Per-document interleaving profile of an extracted span sequence —
+    how text and media alternate (span counts by kind, number of
+    homogeneous runs, media fraction).  The profile a mix designer uses
+    to stratify an interleaved corpus by media density / alternation
+    before sampling.
+
+    Fully map-side over the span ARRAY (higher-order functions on the
+    row, no explode, no shuffle — at 100 TB this runs at scan speed and
+    never moves a span).  Documents with no extracted spans produce no
+    row, matching the exploded span-level view."""
+    kinds = F.expr("transform(extracted, s -> s.kind)")
+    base = extracted.select("doc_id", kinds.alias("kinds")).where(
+        F.size("kinds") > 0
+    )
+    n_spans = F.size("kinds")
+    n_media = F.size(F.expr("filter(kinds, k -> k != 'text')"))
+    # runs = 1 + (# adjacent kind changes); the CASE guards size-1 arrays
+    # (sequence(2, 1) would otherwise produce a DESCENDING range)
+    n_runs = F.expr(
+        "CASE WHEN size(kinds) < 2 THEN 1 "
+        "ELSE 1 + size(filter(sequence(2, size(kinds)), "
+        "i -> element_at(kinds, i) != element_at(kinds, i - 1))) END"
+    )
+    return base.select(
+        "doc_id",
+        n_spans.cast("long").alias("n_spans"),
+        (n_spans - n_media).cast("long").alias("n_text_spans"),
+        n_media.cast("long").alias("n_media_spans"),
+        n_runs.cast("long").alias("n_runs"),
+        F.round(n_media / n_spans, 6).alias("media_frac"),
+    )

@@ -1,6 +1,7 @@
-"""Operator-suite tests: dedup / similarity / textstats / multimodal /
-streaming over the driver's sf0.001 tables, including a pytest-side replica
-of the driver's DuckDB-oracle gate for a representative subset."""
+"""Operator-suite tests: dedup / similarity / textstats / sampling /
+temporal / streaming over the driver's sf0.001 tables, including a
+pytest-side replica of the driver's DuckDB-oracle gate for a
+representative subset."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pytest
 
 import paperoni_spark.contract as contract
 from pyspark.sql import functions as F
-from paperoni_spark.operators import dedup, multimodal, similarity, textstats
+from paperoni_spark.operators import dedup, similarity, textstats
 from paperoni_spark.streaming import run_streaming_window_counts
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -441,17 +442,6 @@ def test_bucket_cap_excludes_degenerate_cluster(spark):
     assert capped_off.count() == n * (n - 1) // 2
 
 
-def test_media_features_plumbing(spark, docs):
-    media = multimodal.media_table_from_documents(docs)
-    feats = multimodal.media_features(media).limit(20).collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert 64 <= r["width"] < 256
-        assert 64 <= r["height"] < 256
-        assert len(r["feature"]) == multimodal.FEATURE_DIM
-        assert r["n_bytes"] > 0
-
-
 def test_streaming_equals_batch(spark, ddb):
     from paperoni_spark.streaming import windowed_event_counts
 
@@ -629,21 +619,6 @@ def test_bpe_token_stats(spark, docs, ddb):
     assert_matches_oracle(
         contract.textstats.bpe_token_stats(docs), ddb, contract.oracle_bpe_token_stats()
     )
-
-
-def test_media_resize_sample(spark, docs, ddb):
-    from paperoni_spark.operators import multimodal
-
-    media = multimodal.media_table_from_documents(docs)
-    result = multimodal.media_resize_and_sample(media)
-    rows = result.collect()
-    for r in rows[:30]:
-        assert max(r["out_width"], r["out_height"]) <= 224
-        if r["mime"].startswith("video/"):
-            assert 1 <= len(r["frame_indices"].split("|")) <= 8
-        else:
-            assert r["frame_indices"] == ""
-    assert_matches_oracle(result, ddb, contract.oracle_media_resize_sample())
 
 
 def test_shingle_df_cap_blocks_boilerplate(spark):
@@ -1170,7 +1145,7 @@ def test_interleave_stats(spark, ddb):
     """Interleaved-payload profile: oracle parity against the frozen
     golden span sequences, plus a hand-checked micro-fixture (runs,
     media fraction, single-span doc, empty doc excluded)."""
-    from paperoni_spark.operators.multimodal import interleave_stats
+    from paperoni_spark.operators.extract import interleave_stats
 
     result = contract.q_interleave_stats(spark, SF_DIR)
     assert_matches_oracle(result, ddb, contract.oracle_interleave_stats())
@@ -1198,73 +1173,6 @@ def test_interleave_stats(spark, ddb):
     assert r1["n_runs"] == 3 and r1["media_frac"] == 0.5
     r2 = got[2]
     assert (r2["n_spans"], r2["n_runs"], r2["media_frac"]) == (1, 1, 0.0)
-
-
-def test_sequence_pack(spark, docs, ddb):
-    """Concat-then-chunk packing manifest: oracle parity (two-phase
-    bucket prefix sum ≡ the naive single window), global contiguity of
-    the token layout, boundary-crossing docs present, and a hand-checked
-    micro-fixture."""
-    from paperoni_spark.operators.packing import sequence_pack
-
-    result = contract.build_queries()["sequence_pack"](spark, SF_DIR)
-    rows = sorted(result.collect(), key=lambda r: r["doc_id"])
-    assert_matches_oracle(result, ddb, contract.oracle_sequence_pack())
-    # the layout is gapless and ordered: each doc starts where the
-    # previous one ended
-    cum = 0
-    for r in rows:
-        assert r["start_token"] == cum, r
-        cum += r["n_tokens"]
-    # short gate seq_len guarantees chunk-boundary crossings
-    assert any(r["end_seq"] > r["start_seq"] for r in rows)
-
-    adv = spark.createDataFrame(
-        [
-            (0, "a b c d e f g"),        # 7 tokens + EOD = 8
-            (1, "h i j k"),              # 4 + 1 = 5
-            (2, "l m n o p q r s t u v w"),  # 12 + 1 = 13
-            (3, "x"),                    # 1 + 1 = 2
-        ],
-        "doc_id: long, text: string",
-    )
-    got = {
-        r["doc_id"]: r for r in sequence_pack(adv, seq_len=10, bucket_size=2).collect()
-    }
-    assert (got[0]["start_token"], got[0]["start_seq"], got[0]["end_seq"]) == (0, 0, 0)
-    assert (got[1]["start_token"], got[1]["start_seq"], got[1]["end_seq"]) == (8, 0, 1)
-    assert (got[2]["start_token"], got[2]["start_seq"], got[2]["end_seq"]) == (13, 1, 2)
-    assert (got[3]["start_token"], got[3]["start_seq"], got[3]["end_seq"]) == (26, 2, 2)
-
-
-def test_shard_assignments(spark, docs, ddb):
-    """Size-balanced shard export: oracle parity (two-phase DESC rank ≡
-    the naive single window), ranks form a permutation, and the
-    longest-first round-robin dealing bounds the per-shard token spread
-    by one maximum document (telescoping over dealing rounds)."""
-    from paperoni_spark.operators.packing import shard_assignments
-
-    result = contract.build_queries()["shard_assignments"](spark, SF_DIR)
-    rows = result.collect()
-    assert_matches_oracle(result, ddb, contract.oracle_shard_assignments())
-    ranks = sorted(r["rank"] for r in rows)
-    assert ranks == list(range(1, len(rows) + 1))
-    totals: dict[int, int] = {}
-    for r in rows:
-        totals[r["shard"]] = totals.get(r["shard"], 0) + r["n_tokens"]
-    assert len(totals) == 8
-    max_doc = max(r["n_tokens"] for r in rows)
-    assert max(totals.values()) - min(totals.values()) <= max_doc
-
-    adv = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d"), (3, "a b c"), (4, "a b")],
-        "doc_id: long, text: string",
-    )
-    got = {
-        r["doc_id"]: (r["rank"], r["shard"])
-        for r in shard_assignments(adv, n_shards=2, bucket_tokens=2).collect()
-    }
-    assert got == {1: (1, 0), 2: (2, 1), 3: (3, 0), 4: (4, 1)}
 
 
 def test_substring_dedup(spark, docs, ddb):
@@ -1332,31 +1240,6 @@ def test_line_dedup(spark, docs, ddb):
         r["doc_id"]: r for r in line_dedup(adv, df_cap=5).collect()
     }
     assert kept_all[0]["text_clean"] == f"unique line 0\n{boiler}"
-
-
-def test_pii_redact(spark, docs, ddb):
-    from paperoni_spark.operators.pii import pii_redact
-
-    assert_matches_oracle(
-        contract.q_pii_redact(spark, SF_DIR), ddb, contract.oracle_pii_redact()
-    )
-    adv = spark.createDataFrame(
-        [
-            (1, "mail a.b-c_d@sub.example.org and e@f.io now"),
-            (2, "call 123-456-7890 or visit 192.168.1.254 ok"),
-            (3, "clean text with no identifiers at all"),
-            (4, "almost 12-345-6789 and 1.2.3 and user@nodot"),
-        ],
-        "doc_id: long, text: string",
-    )
-    got = {r["doc_id"]: r for r in pii_redact(adv).collect()}
-    assert got[1]["n_emails"] == 2 and got[1]["has_pii"]
-    assert got[1]["text_redacted"] == "mail <EMAIL> and <EMAIL> now"
-    assert got[2]["n_phones"] == 1 and got[2]["n_ips"] == 1
-    assert got[2]["text_redacted"] == "call <PHONE> or visit <IP> ok"
-    assert not got[3]["has_pii"]
-    assert got[3]["text_redacted"] == "clean text with no identifiers at all"
-    assert got[4]["n_emails"] == 0 and got[4]["n_phones"] == 0 and got[4]["n_ips"] == 0
 
 
 def test_source_cap_sample(spark, docs, ddb):
@@ -2429,85 +2312,6 @@ def test_session_concurrency(spark, ddb):
     assert {
         (r.user_id, r.session_idx): r.n_concurrent for r in rows
     } == expected
-
-
-def test_doc_pagerank(spark, ddb):
-    """Integer PageRank vs the chained-CTE SQL replay, plus a full
-    Python big-int replay of the five iterations (same floor-division
-    semantics — the strongest cross-check available: three independent
-    implementations must agree bit-for-bit), plus the mass laws."""
-    import collections
-
-    from paperoni_spark.operators import dedup, graph
-
-    docs = contract.load(spark, SF_DIR, "documents")
-    out_df = graph.doc_pagerank(docs)
-    assert_matches_oracle(out_df, ddb, contract.oracle_doc_pagerank())
-    rows = out_df.collect()
-
-    ids = [r.doc_id for r in docs.select("doc_id").collect()]
-    pairs = dedup.lsh_candidate_doc_pairs(docs).select("doc_a", "doc_b").collect()
-    nbrs = collections.defaultdict(list)
-    for p in pairs:
-        nbrs[p.doc_a].append(p.doc_b)
-        nbrs[p.doc_b].append(p.doc_a)
-    n = len(ids)
-    S, dn, dd = graph.PAGERANK_SCALE, graph.PAGERANK_DAMP_NUM, graph.PAGERANK_DAMP_DEN
-    teleport = S * (dd - dn) // (dd * n)
-    pr = {v: S // n for v in ids}
-    for _ in range(graph.PAGERANK_ITERS):
-        dangling = sum(pr[v] * dn // dd for v in ids if not nbrs[v])
-        share = dangling // n
-        new = {v: teleport + share for v in ids}
-        for v in ids:
-            deg = len(nbrs[v])
-            if deg:
-                c = pr[v] * dn // (dd * deg)
-                for u in nbrs[v]:
-                    new[u] += c
-        pr = new
-    assert {r.doc_id: r.pr_scaled for r in rows} == pr
-    total = sum(pr.values())
-    assert 0.99 * S <= total <= S
-    # isolated docs all carry the identical floor (teleport + share)
-    floor_pr = min(pr.values())
-    for v in ids:
-        if not nbrs[v]:
-            assert pr[v] == floor_pr
-
-
-def test_source_overlap_matrix(spark, ddb):
-    """Cross-source fingerprint matrix vs the SQL replay, plus a
-    set-arithmetic brute force from the engine's own winnow selection
-    (n_shared must equal the literal intersection size) and the grid
-    law: every unordered source pair appears exactly once."""
-    from paperoni_spark.operators import dedup
-
-    docs = contract.load(spark, SF_DIR, "documents")
-    out_df = dedup.source_overlap_matrix(docs)
-    assert_matches_oracle(out_df, ddb, contract.oracle_source_overlap_matrix())
-    rows = out_df.collect()
-
-    sel = (
-        dedup._winnow_selected(docs)
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .select("source", "fp")
-        .distinct()
-        .collect()
-    )
-    by_src = {}
-    for r in sel:
-        by_src.setdefault(r.source, set()).add(r.fp)
-    assert {(r.source_a, r.source_b) for r in rows} == {
-        (a, b) for a in by_src for b in by_src if a < b
-    }
-    for r in rows:
-        a, b = by_src[r.source_a], by_src[r.source_b]
-        assert r.n_shared == len(a & b)
-        assert abs(
-            r.containment - round(len(a & b) / min(len(a), len(b)), 6)
-        ) < 1e-9
-        assert 0.0 <= r.containment <= 1.0
 
 
 def test_asof_delta_enrich(spark, ddb, tmp_path):

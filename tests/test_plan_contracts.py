@@ -40,7 +40,6 @@ PLAN_CONTRACTS = {
     # pure map-side: zero shuffles end-to-end, scan-speed at any scale
     "quality_filter": (0, ["source", "n_chars"]),
     "hash_sample": (0, ["text", "source", "n_chars"]),
-    "pii_redact": (0, ["lang", "source", "n_chars"]),
     "fingerprints": (0, ["lang", "source", "n_chars"]),
     "quality_scores": (0, ["source", "n_chars"]),
     # single-shuffle partial-aggregated rollups with pruned scans
@@ -61,10 +60,6 @@ PLAN_CONTRACTS = {
     # rewrite join — 4 shuffles, NO pair enumeration (the cartesian/
     # shuffle ceilings pin that no occurrence×occurrence join appears)
     "substring_dedup": (4, ["lang", "source", "n_chars"]),
-    # two-phase packing prefix sum: bucket-summary agg + in-bucket window
-    # (the global single-partition window runs over the tiny summary only
-    # and is not a hash/range exchange); reads its materialized cut
-    "sequence_pack": (2, []),
     # cross-wave ExactSubstr probe: delta histogram + index-restriction
     # join/sum + covered-union + rewrite join — same 4-shuffle ceiling as
     # the whole-corpus operator (the index side adds a JOIN, not a pass
@@ -149,11 +144,6 @@ PLAN_CONTRACTS = {
     # the points ∪ queries union (a band-keyed join would be quadratic
     # within a skewed band) — no session-pair set is ever formed
     "session_concurrency": (8, []),
-    # source contamination matrix: winnow window + (source, fp) distinct
-    # + the fp join (per-key multiplicity bounded by source count); the
-    # (source, fp) exchange is reused across sizes and both join sides,
-    # and only (doc_id, text) / (doc_id, source) are read
-    "source_overlap_matrix": (9, ["lang", "n_chars"]),
     # centroid geometry: one (label, dim) partial-agg shuffle over the
     # exploded dims; everything after is label-cardinality-bounded
     # (norms broadcast, dim join multiplicity = |labels|), vec_id never

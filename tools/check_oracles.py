@@ -4,8 +4,9 @@ schema (column names), and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
-Prints one ok/FAIL line per query with its wall seconds; exits 1 if any
-query fails.
+Prints one ok/FAIL line per query with the Spark and the DuckDB oracle
+seconds apart (a slow oracle must not read as a slow Spark query); exits 1
+if any query fails, a query without an oracle included.
 """
 
 from __future__ import annotations
@@ -41,9 +42,9 @@ def normalize(value):
 def rowset(cols, rows):
     """Canonicalize exactly like the driver gate: pandas DataFrame, columns
     sorted by name, then multi-column ``sort_values``.  Critically this
-    REPRODUCES the driver's failure mode on unhashable cells (list-typed
-    columns raise TypeError in pandas factorize) — round 1's
-    media_resize_sample passed a repr-based local sort but broke the driver.
+    REPRODUCES the driver's failure mode on unhashable cells: a list-typed
+    column raises TypeError in pandas factorize, so a query that returns
+    one fails here as it would at the driver.
     """
     ordered = sorted(cols)
     df = pd.DataFrame(
@@ -72,11 +73,15 @@ def main() -> int:
         if only and name not in only:
             continue
         t_q = time.monotonic()
+        secs = []  # per phase, Spark then oracle; done() closes the open one
 
         def done(ok: bool, detail: str) -> None:
-            secs = time.monotonic() - t_q
+            secs.append(time.monotonic() - t_q)
+            timing = ", ".join(
+                f"{side} {s:.1f}s" for side, s in zip(("spark", "oracle"), secs)
+            )
             tag = "ok  " if ok else "FAIL"
-            print(f"{tag} {name}: {detail} [{secs:.1f}s]")
+            print(f"{tag} {name}: {detail} [{timing}]")
 
         try:
             sdf = fn(spark, sf_dir)
@@ -86,9 +91,8 @@ def main() -> int:
             done(False, f"spark error {type(e).__name__}: {e}")
             failures += 1
             continue
-        if name not in oracles:
-            done(True, f"rows-only ({len(srows)} rows)")
-            continue
+        secs.append(time.monotonic() - t_q)
+        t_q = time.monotonic()
         try:
             res = con.execute(oracles[name])
             orows = res.fetchall()
