@@ -2,8 +2,10 @@
 
 The full funnel over an interleaved-spans documents table: extraction →
 plain-text flattening → language guess → quality filter → exact-dedup
-survivor selection, writing the surviving corpus plus a per-stage funnel
-accounting.  Cluster usage::
+survivor selection → [SimHash near-dup clusters] → [exact-substring
+cleaning] → [SimHash index probe], writing the surviving corpus plus a
+per-stage funnel accounting (every stage lives in
+pipeline.compose.build_training_corpus).  Cluster usage::
 
     zip -r engine.zip paperoni_spark
     spark-submit --py-files engine.zip jobs/corpus_job.py \
@@ -189,6 +191,7 @@ def main(argv: list[str] | None = None) -> None:
     spark = apply_engine_confs(
         SparkSession.builder.appName("paperoni-corpus-build").getOrCreate()
     )
+    committed = {}
     if args.dedup_index is not None:
         wave = args.wave_id or uuid.uuid4().hex
         committed = _prepare_index_roots(spark, args, wave)
@@ -200,94 +203,42 @@ def main(argv: list[str] | None = None) -> None:
     else:
         documents = spark.read.parquet(args.input)
 
-    # persist=True: both sinks share one extraction pass.  When the
-    # cross-wave index drives substring cleaning, the wave-local compose
-    # stage is suppressed — the index probe counts within-wave occurrences
-    # too, so running both would clean twice and double-account the funnel
     substring_n = (
         None if args.substring_clean in (None, -1) else args.substring_clean
+    )
+    # an index root joins the funnel only once it holds committed waves:
+    # the first wave bootstraps it (no probe; wave-local substring
+    # cleaning, since index ∪ wave is just the wave)
+    dedup_index, substring_index = (
+        root if committed.get(root) else None
+        for root in (args.dedup_index, args.substring_index)
     )
     corpus, funnel, fingerprints = build_training_corpus(
         documents,
         base_url=args.base_url,
-        persist=True,
         near_dup=args.near_dup,
         max_hamming=args.max_hamming,
-        substring_clean=args.substring_clean is not None
-        and args.substring_index is None,
+        substring_clean=args.substring_clean is not None,
         substring_n=substring_n,
         model_filter=args.model_filter is not False,
         model_threshold=args.model_filter
         if args.model_filter not in (False, None)
         else None,
+        dedup_index=dedup_index,
+        substring_index=substring_index,
     )
-    if args.dedup_index is not None:
-        from paperoni_spark.pipeline.compose import (
-            dedup_wave_against_index,
-            stage_count,
-        )
-
-        if args.substring_index is not None:
-            # cleaning runs BEFORE the simhash dedup probe: the index's
-            # fingerprints cover CLEANED written text, so the wave must
-            # be probed in the same form — probing raw text would shift
-            # near-dups by the removed boilerplate mass and silently
-            # admit docs the wave-local configuration rejected
-            from paperoni_spark.materialize import materialize
-            from paperoni_spark.operators.dedup import (
-                SUBSTR_DEDUP_N,
-                substring_dedup,
-                substring_delta_clean,
-            )
-            from paperoni_spark.pipeline.compose import apply_substring_rewrite
-            from pyspark.sql import functions as F
-
-            n_sub = SUBSTR_DEDUP_N if substring_n is None else substring_n
-            # the probe joins re-run per consumer — cut the corpus once
-            corpus = materialize(corpus)
-            if committed[args.substring_index]:
-                clean_res = substring_delta_clean(
-                    spark,
-                    corpus.select("doc_id", "text"),
-                    args.substring_index,
-                    n=n_sub,
-                )
-            else:
-                # bootstrap: no committed waves yet — index ∪ wave is
-                # just the wave, i.e. the whole-corpus operator
-                clean_res = substring_dedup(
-                    corpus.select("doc_id", "text"), n=n_sub
-                )
-            cleaned = materialize(clean_res.where(F.col("n_removed") > 0))
-            corpus, funnel, fingerprints = apply_substring_rewrite(
-                corpus, cleaned, funnel, fingerprints
-            )
+    if args.dedup_index is None:
+        mode = "append" if args.append else "overwrite"
+        corpus.write.mode(mode).parquet(args.output)
+        if args.funnel is not None:
+            funnel.write.mode(mode).parquet(args.funnel)
+    else:
         from paperoni_spark.operators.dedup import (
-            SIMHASH_PAIR_BITS,
-            simhash,
+            SUBSTR_DEDUP_N,
             write_simhash_index,
+            write_substring_index,
         )
 
-        if fingerprints is None:
-            # no near-dup stage hashed the wave: hash the final text here,
-            # once — the probe cuts it and hands its survivors to the
-            # index append
-            fingerprints = simhash(corpus, SIMHASH_PAIR_BITS)
-        if committed[args.dedup_index]:
-            corpus, fingerprints, rejected, resubmitted = dedup_wave_against_index(
-                spark,
-                corpus,
-                fingerprints,
-                args.dedup_index,
-                max_hamming=args.max_hamming,
-            )
-            # persist the (tiny) reject-id set: the corpus anti-join, the
-            # funnel count and the index append all consume it — without
-            # the cache each one re-runs the index probe
-            rejected = rejected.persist()
-            funnel = funnel.unionByName(
-                stage_count("rejected:near_duplicate_vs_corpus", rejected)
-            ).unionByName(stage_count("rejected:already_ingested", resubmitted))
         corpus.write.mode("overwrite").parquet(
             os.path.join(args.output, f"wave={wave}")
         )
@@ -295,42 +246,19 @@ def main(argv: list[str] | None = None) -> None:
             funnel.write.mode("overwrite").parquet(
                 os.path.join(args.funnel, f"wave={wave}")
             )
-        # the written rows' fingerprints as the wave's index segment,
-        # written LAST (a failed wave never poisons the index; after a
-        # probe they descend from its materialized cut, so this re-runs
-        # neither extraction nor hashing).  Bootstraps a missing
-        # index on the first run.  The operator-built simhash indexes
-        # share this wave=<id> layout (write = wave 0); anything WITHOUT
-        # wave= segments is refused above as foreign.
+        # the index segments are written LAST, so a failed wave never
+        # poisons an index: the written rows' fingerprints, and the WRITTEN
+        # text's shingle histogram (a removed span is gone — future waves
+        # dup against surviving content).  A first wave bootstraps both
         write_simhash_index(fingerprints, args.dedup_index, wave)
         if args.substring_index is not None:
-            # the WRITTEN text's histogram: the index reflects what is in
-            # the corpus (a removed span is gone — future waves dup
-            # against surviving content, not against deleted bytes).
-            # write_substring_index replays delete-before-overwrite
-            # AND pins kind + shingle_n markers; string wave ids format
-            # into the same wave=<id> layout
-            from paperoni_spark.operators.dedup import write_substring_index
-
             write_substring_index(
                 corpus.select("doc_id", "text"),
                 args.substring_index,
                 wave,
-                n=n_sub,
+                n=SUBSTR_DEDUP_N if substring_n is None else substring_n,
             )
-    else:
-        mode = "append" if args.append else "overwrite"
-        corpus.write.mode(mode).parquet(args.output)
-        if args.funnel is not None:
-            funnel.write.mode(mode).parquet(args.funnel)
-    # both sinks consumed — release the shared extraction cache.  The
-    # persisted frame is internal to build_training_corpus, so drop it via
-    # the catalog; this job owns the whole session, so the blanket clear is
-    # exact (redundant before spark.stop() here, load-bearing if this main
-    # is ever embedded in a longer-lived session)
-    spark.catalog.clearCache()
     spark.stop()
-
 
 if __name__ == "__main__":
     main(sys.argv[1:])

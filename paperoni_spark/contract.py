@@ -227,7 +227,7 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline.compose import build_training_corpus
 
     _, funnel, _ = build_training_corpus(
-        planted_near_dup_documents(spark), near_dup=True, persist=True, max_hamming=1
+        planted_near_dup_documents(spark), near_dup=True, max_hamming=1
     )
     return funnel
 

@@ -30,5 +30,13 @@ def test_hadoop_fs_only_in_fsio():
         for n, line in enumerate(f.read_text().splitlines(), 1)
         if api.search(line)
     ]
-    assert len(files) > 40
+    # the scan must reach the modules that call fsio (an empty or
+    # mis-rooted scan would pass the hits check vacuously)
+    scanned = {f.relative_to(root).as_posix() for f in files}
+    assert {
+        "jobs/corpus_job.py",
+        "jobs/events_job.py",
+        "paperoni_spark/streaming/dedup.py",
+        "paperoni_spark/fsio.py",
+    } <= scanned
     assert hits == []

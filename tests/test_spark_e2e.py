@@ -345,6 +345,16 @@ def test_build_training_corpus_funnel(spark):
     # survivors are unique by fingerprint
     fps = [r["fingerprint"] for r in rows]
     assert len(fps) == len(set(fps))
+    # the row set per configuration: a stage without docs has no row,
+    # except a configured stage after exact dedup, which reports its 0
+    assert stages == {"kept": 5, "rejected:too_short": 1, "rejected:duplicate": 1}
+    _, near_funnel, _ = build_training_corpus(docs, near_dup=True, max_hamming=0)
+    assert {r["stage"]: r["n_docs"] for r in near_funnel.collect()} == {
+        "kept": 5,
+        "rejected:too_short": 1,
+        "rejected:duplicate": 1,
+        "rejected:near_duplicate": 0,
+    }
 
 
 def test_build_training_corpus_substring_clean(spark):
@@ -379,7 +389,7 @@ def test_build_training_corpus_substring_clean(spark):
         spark, [doc("aaa", True), doc("bbb", True), doc("ccc", False)]
     )
     corpus, funnel, _ = build_training_corpus(
-        docs, substring_clean=True, substring_n=8, persist=True
+        docs, substring_clean=True, substring_n=8
     )
     rows = {r["doc_id"]: r for r in corpus.collect()}
     assert set(rows) == {"doc-aaa", "doc-bbb", "doc-ccc"}
@@ -409,9 +419,7 @@ def test_build_training_corpus_near_dup_stage(spark):
     from paperoni_spark.pipeline.compose import build_training_corpus
 
     docs = contract.planted_near_dup_documents(spark, n_docs=30)
-    corpus, funnel, _ = build_training_corpus(
-        docs, near_dup=True, persist=True, max_hamming=1
-    )
+    corpus, funnel, _ = build_training_corpus(docs, near_dup=True, max_hamming=1)
     rows = corpus.collect()
     ids = {r["doc_id"] for r in rows}
     stages = {r["stage"]: r["n_docs"] for r in funnel.collect()}
@@ -430,25 +438,46 @@ def test_build_training_corpus_near_dup_stage(spark):
     )
 
 
-def test_malformed_span_inputs_never_crash(spark):
-    """input_hint-schema edge cases (null spans, empty arrays, null text,
-    media-only, null kind) must flow through as error rows, never task
-    failures — at 10^12 docs a poison row must not kill a partition."""
-    rows = [
+# input_hint-schema edge cases: null spans, empty arrays, null text,
+# media-only, null kind
+MALFORMED_SPAN_DOCS = [
+    {"doc_id": d, "spans": s}
+    for d, s in [
         ("d-null-spans", None),
         ("d-empty-spans", []),
         ("d-null-text", [{"kind": "text", "text": None, "media_ref": None, "offset": 0}]),
         ("d-media-only", [{"kind": "media", "text": None, "media_ref": "http://x/y.png", "offset": 0}]),
         ("d-null-kind", [{"kind": None, "text": "<p>hi</p>", "media_ref": None, "offset": 0}]),
     ]
-    df = make_documents_df(spark, [
-        {"doc_id": d, "spans": s} for d, s in rows
-    ])
+]
+
+
+def test_malformed_span_inputs_never_crash(spark):
+    """Malformed span rows must flow through as error rows, never task
+    failures — at 10^12 docs a poison row must not kill a partition."""
+    df = make_documents_df(spark, MALFORMED_SPAN_DOCS)
     got = {r["doc_id"]: (r["status"], r["spans_emitted"]) for r in run_extract(df).collect()}
     assert len(got) == 5
     for doc_id, (status, emitted) in got.items():
         assert status == "error:ReadabilityError", (doc_id, status)
         assert emitted == 0
+
+
+def test_malformed_span_inputs_through_corpus_funnel(spark):
+    """The malformed rows beside two good docs on the corpus path: the
+    build completes, none of them reaches the corpus, and the funnel —
+    which starts at extracted documents — is the run without them."""
+    from paperoni_spark.pipeline.compose import build_training_corpus
+
+    good = synth_corpus(2)
+    corpus, funnel, _ = build_training_corpus(
+        make_documents_df(spark, good + MALFORMED_SPAN_DOCS)
+    )
+    _, clean_funnel, _ = build_training_corpus(make_documents_df(spark, good))
+    ids = {r["doc_id"] for r in corpus.collect()}
+    assert ids.isdisjoint(d["doc_id"] for d in MALFORMED_SPAN_DOCS)
+    assert ids == {d["doc_id"] for d in good}
+    assert sorted(funnel.collect()) == sorted(clean_funnel.collect())
 
 
 def test_streaming_extraction_matches_golden(spark, tmp_path_factory):
@@ -510,11 +539,7 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     (same text, new doc_ids) plus genuinely new docs — the re-crawls are
     rejected vs the INDEX (never vs the wave itself), the new docs
     survive, and the index grows by exactly the survivors."""
-    from paperoni_spark.operators.dedup import (
-        SIMHASH_PAIR_BITS,
-        simhash,
-        write_simhash_index,
-    )
+    from paperoni_spark.operators.dedup import write_simhash_index
     from paperoni_spark.pipeline.compose import (
         build_training_corpus,
         dedup_wave_against_index,
@@ -524,11 +549,10 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     index = str(tmp / "sh_index")
 
     wave1_docs = make_documents_df(spark, synth_corpus(6))
-    corpus1, _, _ = build_training_corpus(wave1_docs, persist=True)
-    corpus1 = corpus1.persist()
+    corpus1, _, sh1 = build_training_corpus(wave1_docs)
     n1 = corpus1.count()
     assert n1 > 0
-    write_simhash_index(simhash(corpus1, SIMHASH_PAIR_BITS), index, wave=1)
+    write_simhash_index(sh1, index, wave=1)
 
     # wave 2: 4 new docs + 3 re-crawls of wave-1 content under new ids
     recrawl = []
@@ -537,14 +561,13 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
         d["doc_id"] = "w2-" + d["doc_id"]
         recrawl.append(d)
     wave2_docs = make_documents_df(spark, synth_corpus(4, start=6) + recrawl)
-    corpus2, _, _ = build_training_corpus(wave2_docs, persist=True)
-    corpus2 = corpus2.persist()
-    sh2 = simhash(corpus2, SIMHASH_PAIR_BITS)
     # hamming 0: exact re-crawl detection (the synthetic corpus is
     # near-dup-dense at the default Hamming 3 — a genuinely new doc can
     # legitimately land within 3 bits of the corpus)
-    survivors, surv_sh, rejected, resubmitted = dedup_wave_against_index(
-        spark, corpus2, sh2, index, max_hamming=0
+    _, _, sh2 = build_training_corpus(wave2_docs)
+    rejected, resubmitted = dedup_wave_against_index(spark, sh2, index, max_hamming=0)
+    survivors, funnel, surv_sh = build_training_corpus(
+        wave2_docs, dedup_index=index, max_hamming=0
     )
     assert resubmitted.count() == 0  # all wave-2 ids are new
     rej_ids = {r["doc_id"] for r in rejected.collect()}
@@ -555,6 +578,10 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     # new content survives; nothing from wave 1 appears in wave-2 output
     assert surv_ids and surv_ids.isdisjoint(wave1_ids)
     assert all(not i.startswith("w2-") for i in surv_ids)
+    # the funnel marks exactly the probe's rejects
+    stages = {r["stage"]: r["n_docs"] for r in funnel.collect()}
+    assert stages["rejected:near_duplicate_vs_corpus"] == len(rej_ids)
+    assert stages["rejected:already_ingested"] == 0
     # index grows by exactly the survivors
     assert {r["doc_id"] for r in surv_sh.collect()} == surv_ids
     write_simhash_index(surv_sh, index, wave=2)
@@ -563,14 +590,16 @@ def test_incremental_corpus_waves(spark, tmp_path_factory):
     # retry idempotence: re-submitting the SAME wave yields zero
     # survivors — already-ingested ids split off, the rest rejected as
     # near-dups of their own earlier copies — and the index never grows
-    s3, _, r3, re3 = dedup_wave_against_index(
-        spark, corpus2, sh2, index, max_hamming=0
+    r3, re3 = dedup_wave_against_index(spark, sh2, index, max_hamming=0)
+    s3, funnel3, _ = build_training_corpus(
+        wave2_docs, dedup_index=index, max_hamming=0
     )
     assert s3.count() == 0
     assert {r["doc_id"] for r in re3.collect()} == surv_ids
     assert {r["doc_id"] for r in r3.collect()} == rej_ids
-    corpus1.unpersist()
-    corpus2.unpersist()
+    stages3 = {r["stage"]: r["n_docs"] for r in funnel3.collect()}
+    assert stages3["rejected:already_ingested"] == len(surv_ids)
+    assert stages3["rejected:near_duplicate_vs_corpus"] == len(rej_ids)
 
 
 def test_corpus_job_substring_index(tmp_path_factory):
