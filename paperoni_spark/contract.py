@@ -384,15 +384,6 @@ FROM documents GROUP BY source
 """
 
 
-def oracle_token_stats() -> str:
-    return f"""
-SELECT lang, count(*)::BIGINT AS doc_count,
-       sum(len({_TOKENS}))::BIGINT AS total_tokens,
-       round(avg(len({_TOKENS})), 4) AS avg_tokens
-FROM documents GROUP BY lang
-"""
-
-
 def oracle_quality_scores() -> str:
     return f"""
 SELECT doc_id, lang,
@@ -432,72 +423,6 @@ SELECT doc_id, lang, (reject_reason IS NULL) AS keep, reject_reason FROM flagged
 """
 
 
-def oracle_unigram_logprob() -> str:
-    return f"""
-WITH doc_tf AS (
-  SELECT doc_id, tok, count(*) AS tf_dt
-  FROM (SELECT doc_id, unnest({_TOKENS}) AS tok FROM documents)
-  GROUP BY doc_id, tok
-),
-counts AS (SELECT tok, sum(tf_dt) AS tf FROM doc_tf GROUP BY tok),
-total AS (SELECT sum(tf) AS total FROM counts),
-scored AS (
-  SELECT d.doc_id, d.tf_dt, log2(c.tf) - log2(total.total) AS lp
-  FROM doc_tf d JOIN counts c USING (tok) CROSS JOIN total
-),
-agg AS (
-  SELECT doc_id, sum(tf_dt)::BIGINT AS n_tokens,
-         round(sum(tf_dt * lp) / sum(tf_dt), 6) AS avg_log2_prob
-  FROM scored GROUP BY doc_id
-)
-SELECT doc_id, n_tokens, avg_log2_prob,
-       round(pow(2.0, -avg_log2_prob), 4) AS perplexity
-FROM agg
-"""
-
-
-def oracle_perplexity_buckets() -> str:
-    """DuckDB twin of textstats.perplexity_buckets: the unigram-LM CTE
-    chain (identical to oracle_unigram_logprob up to the rounded per-doc
-    mean), then a plain per-lang row_number — the single-window plan the
-    two-phase band ranking must stay row-identical to.  The bucket index
-    is the same INTEGER division ((rk-1)*3 // n), never FP."""
-    return f"""
-WITH doc_tf AS (
-  SELECT doc_id, tok, count(*) AS tf_dt
-  FROM (SELECT doc_id, unnest({_TOKENS}) AS tok FROM documents)
-  GROUP BY doc_id, tok
-),
-counts AS (SELECT tok, sum(tf_dt) AS tf FROM doc_tf GROUP BY tok),
-total AS (SELECT sum(tf) AS total FROM counts),
-scored AS (
-  SELECT d.doc_id, d.tf_dt, log2(c.tf) - log2(total.total) AS lp
-  FROM doc_tf d JOIN counts c USING (tok) CROSS JOIN total
-),
-agg AS (
-  SELECT doc_id, round(sum(tf_dt * lp) / sum(tf_dt), 6) AS avg_log2_prob
-  FROM scored GROUP BY doc_id
-),
-j AS (
-  SELECT a.doc_id, d.lang, a.avg_log2_prob
-  FROM agg a JOIN documents d USING (doc_id)
-),
-ranked AS (
-  SELECT doc_id, lang, avg_log2_prob,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY avg_log2_prob DESC, doc_id ASC) AS rk,
-         count(*) OVER (PARTITION BY lang) AS n_docs
-  FROM j
-)
-SELECT doc_id, lang, avg_log2_prob,
-       CASE ((rk - 1) * 3) // n_docs
-         WHEN 0 THEN '{textstats.PPL_BUCKET_NAMES[0]}'
-         WHEN 1 THEN '{textstats.PPL_BUCKET_NAMES[1]}'
-         ELSE '{textstats.PPL_BUCKET_NAMES[2]}' END AS ppl_bucket
-FROM ranked
-"""
-
-
 def oracle_cms_heavy_hitters() -> str:
     """DuckDB twin of textstats.cms_heavy_hitters: the same
     build-from-vocab-counts sketch (sums per bucket commute with the
@@ -534,75 +459,6 @@ ranked AS (
 SELECT token, tf::BIGINT AS true_count, est::BIGINT AS cms_estimate,
        (est - tf)::BIGINT AS overestimate, rank::INT AS rank
 FROM ranked WHERE rank <= {k}
-"""
-
-
-def oracle_bigram_logprob() -> str:
-    """DuckDB twin of textstats.bigram_logprob: bigrams unrolled by
-    index (same arr[i]/arr[i+1] form as oracle_repetition_stats), the
-    identical interpolation literals, and the identical association
-    ``λ·(bf/ff) + (1−λ)·(uf/total)`` inside one log2 — a re-associated
-    form would round differently on FP boundaries."""
-    lam, lam_c = textstats.BIGRAM_LAMBDA, textstats.BIGRAM_LAMBDA_C
-    return f"""
-WITH base AS (
-  SELECT doc_id, {_TOKENS} AS arr FROM documents
-  WHERE len({_TOKENS}) >= 2
-),
-bg AS (
-  SELECT doc_id, arr[i] AS w1, arr[i+1] AS w2
-  FROM base, unnest(generate_series(1, len(arr) - 1)) AS t(i)
-),
-bg_dt AS (SELECT doc_id, w1, w2, count(*) AS tf_dt FROM bg GROUP BY 1, 2, 3),
-bgc AS (SELECT w1, w2, sum(tf_dt) AS bf FROM bg_dt GROUP BY 1, 2),
-fc AS (SELECT w1, sum(bf) AS ff FROM bgc GROUP BY 1),
-uni AS (
-  SELECT tok, count(*) AS uf
-  FROM (SELECT unnest(arr) AS tok FROM base) GROUP BY 1
-),
-tot AS (SELECT sum(uf) AS total FROM uni),
-blp AS (
-  SELECT b.w1, b.w2,
-         log2({lam} * (b.bf / f.ff) + {lam_c} * (u.uf / t.total)) AS lp
-  FROM bgc b JOIN fc f USING (w1) JOIN uni u ON u.tok = b.w2 CROSS JOIN tot t
-),
-agg AS (
-  SELECT doc_id, sum(tf_dt)::BIGINT AS n_bigrams,
-         round(sum(tf_dt * lp) / sum(tf_dt), 6) AS avg_log2_prob
-  FROM bg_dt JOIN blp USING (w1, w2) GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams, avg_log2_prob,
-       round(pow(2.0, -avg_log2_prob), 4) AS perplexity
-FROM agg
-"""
-
-
-def oracle_source_kl_divergence() -> str:
-    """DuckDB twin of textstats.source_kl_divergence: identical
-    log-difference association inside the per-token term, division only
-    at the final rounded mean, null-safe source join (IS NOT DISTINCT
-    FROM — the eqNullSafe mirror)."""
-    return f"""
-WITH st AS (
-  SELECT source, tok, count(*) AS tf_st
-  FROM (SELECT source, unnest({_TOKENS}) AS tok FROM documents)
-  GROUP BY source, tok
-),
-counts AS (SELECT tok, sum(tf_st) AS tf FROM st GROUP BY tok),
-total AS (SELECT sum(tf) AS total FROM counts),
-ts AS (SELECT source AS src2, sum(tf_st) AS ts FROM st GROUP BY source),
-scored AS (
-  SELECT s.source, s.tf_st, log2(c.tf) - log2(total.total) AS lp_c
-  FROM st s JOIN counts c USING (tok) CROSS JOIN total
-),
-contrib AS (
-  SELECT scored.source, tf_st,
-         tf_st * ((log2(tf_st) - log2(ts.ts)) - lp_c) AS term
-  FROM scored JOIN ts ON scored.source IS NOT DISTINCT FROM ts.src2
-)
-SELECT source, sum(tf_st)::BIGINT AS n_tokens,
-       round(sum(term) / sum(tf_st), 6) AS kl_bits
-FROM contrib GROUP BY source
 """
 
 
@@ -687,59 +543,6 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-def oracle_hll_distinct_tokens() -> str:
-    """DuckDB twin of textstats.hll_distinct_tokens: the identical
-    string-level rho (regexp leading-zero count + nibble CASE table —
-    never FP log2), exact power-of-two register sums, the same embedded
-    alpha literal, and ln() only inside the small-range branch."""
-    t = textstats
-    hexpos = "strpos('0123456789abcdef', substr(h, {i}, 1)) - 1"
-    reg = f"(({hexpos.format(i=1)}) * 16 + ({hexpos.format(i=2)}))"
-    nib = " ".join(
-        f"WHEN '{ch}' THEN {lz}" for ch, lz in sorted(t.HLL_NIBBLE_LZ.items())
-    )
-    m = float(t.HLL_M)
-    return f"""
-WITH toks AS (
-  SELECT lang, unnest({_TOKENS}) AS tok FROM documents
-),
-hashed AS (SELECT lang, tok, md5(tok) AS h FROM toks),
-nzc AS (
-  SELECT lang, tok, h,
-         length(regexp_extract(substr(h, 3, {t.HLL_SUB_HEX}), '^(0*)', 1)) AS nz
-  FROM hashed
-),
-rho AS (
-  SELECT lang, {reg} AS reg,
-         CASE WHEN nz = {t.HLL_SUB_HEX} THEN {4 * t.HLL_SUB_HEX + 1}
-              ELSE 4 * nz
-                   + (CASE substr(substr(h, 3, {t.HLL_SUB_HEX}), nz + 1, 1)
-                        {nib} ELSE 0 END)
-                   + 1 END AS rho
-  FROM nzc
-),
-regs AS (SELECT lang, reg, max(rho) AS m_j FROM rho GROUP BY lang, reg),
-sk AS (
-  SELECT lang, count(*) AS n_present,
-         sum(power(2.0, -m_j)) AS sum_present
-  FROM regs GROUP BY lang
-),
-ex AS (SELECT lang, count(DISTINCT tok)::BIGINT AS exact_distinct
-       FROM toks GROUP BY lang),
-est AS (
-  SELECT sk.lang, ex.exact_distinct,
-         {t.HLL_ALPHA}::DOUBLE * {m}::DOUBLE * {m}::DOUBLE
-           / (sum_present + ({m}::DOUBLE - n_present)) AS raw,
-         ({m}::DOUBLE - n_present) AS zeros
-  FROM sk JOIN ex ON sk.lang IS NOT DISTINCT FROM ex.lang
-)
-SELECT lang, exact_distinct,
-       round(CASE WHEN raw <= 2.5 * {m}::DOUBLE AND zeros > 0
-                  THEN {m}::DOUBLE * ln({m}::DOUBLE / zeros) ELSE raw END, 4) AS hll_estimate
-FROM est
-"""
-
-
 def oracle_bloom_delta_new_docs() -> str:
     """DuckDB twin of the persisted-Bloom probe: base bits replayed from
     the even ids (distinct positions — OR idempotence), the same 4-hex
@@ -810,72 +613,6 @@ FROM agg
 """
 
 
-def oracle_source_temperature_mix() -> str:
-    """DuckDB twin of textstats.source_temperature_mix: the same α
-    literal, pow() immediately quantized to an integer relative weight
-    (exact sums), and the weight/epoch divisions in the identical
-    left-associated expression shape."""
-    t = textstats
-    return f"""
-WITH per_src AS (
-  SELECT source, sum(len({_TOKENS}))::BIGINT AS n_tokens
-  FROM documents GROUP BY source
-),
-tot AS (SELECT sum(n_tokens) AS total FROM per_src),
-wi AS (
-  SELECT source, n_tokens, total,
-         round(pow(n_tokens / total, {t.MIX_ALPHA}) * {t.MIX_W_SCALE}, 0)::BIGINT AS w_int
-  FROM per_src CROSS JOIN tot
-),
-wt AS (SELECT sum(w_int) AS w_total FROM wi)
-SELECT source, n_tokens,
-       round(n_tokens / total, 6) AS p_raw,
-       round(w_int / w_total, 6) AS mix_weight,
-       round(w_int / w_total * total / n_tokens, 4) AS expected_epochs
-FROM wi CROSS JOIN wt
-"""
-
-
-def oracle_zipf_law_fit() -> str:
-    """DuckDB twin of textstats.zipf_law_fit: the naive whole-stratum
-    rank window IS the oracle (the banded two-phase is the scale
-    implementation — band order refines tf order, so ranks agree),
-    quantized integer regression sums (DuckDB sums BIGINT into HUGEINT;
-    exact either way at the bounded head size), and the final divisions
-    on exact integer inputs."""
-    t = textstats
-    return f"""
-WITH counts AS (
-  SELECT lang, tok, count(*) AS tf
-  FROM (SELECT lang, unnest({_TOKENS}) AS tok FROM documents)
-  GROUP BY lang, tok
-),
-ranked AS (
-  SELECT lang, tf,
-         row_number() OVER (PARTITION BY lang ORDER BY tf DESC, tok ASC) AS rk
-  FROM counts
-),
-pts AS (
-  SELECT lang,
-         round(log2(rk) * {t.ZIPF_Q}, 0)::BIGINT AS x,
-         round(log2(tf) * {t.ZIPF_Q}, 0)::BIGINT AS y
-  FROM ranked WHERE rk <= {t.ZIPF_TOP_K}
-),
-sums AS (
-  SELECT lang, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy
-  FROM pts GROUP BY lang
-)
-SELECT lang, n::INT AS n_head,
-       round((n*sxy - sx*sy)::DOUBLE / (n*sxx - sx*sx)::DOUBLE, 4) AS zipf_slope,
-       CASE WHEN (n*syy - sy*sy) = 0 THEN NULL
-            ELSE round((n*sxy - sx*sy)::DOUBLE * (n*sxy - sx*sy)::DOUBLE
-                       / ((n*sxx - sx*sx)::DOUBLE * (n*syy - sy*sy)::DOUBLE), 4)
-       END AS zipf_r2
-FROM sums WHERE n >= 2
-"""
-
-
 def oracle_funnel_conversion() -> str:
     """DuckDB twin of sessionize.funnel_conversion: per-step first-touch
     completion times via the same monotone user-keyed min-joins, exact
@@ -903,40 +640,6 @@ c AS ({unions})
 SELECT step, event_type, n_users::BIGINT AS n_users,
        round(n_users / (SELECT count(*) FROM s1), 6) AS conv_rate
 FROM c
-"""
-
-
-def oracle_pmi_collocations() -> str:
-    """DuckDB twin of textstats.pmi_collocations: the SAME five-term
-    left-to-right log2 sum and milli-bit quantization; top-K under the
-    identical total order."""
-    t = textstats
-    return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS arr FROM documents),
-base AS (SELECT * FROM toks WHERE len(arr) >= 2),
-bg AS (
-  SELECT arr[i] AS w1, arr[i+1] AS w2
-  FROM base, unnest(generate_series(1, len(arr) - 1)) AS s(i)
-),
-bgc AS (
-  SELECT w1, w2, count(*) AS bf FROM bg GROUP BY 1, 2
-  HAVING count(*) >= {t.PMI_MIN_COUNT}
-),
-uni AS (
-  SELECT tok, count(*) AS uf
-  FROM (SELECT unnest(arr) AS tok FROM base) u GROUP BY 1
-),
-tot AS (SELECT (SELECT sum(uf) FROM uni) AS n_uni,
-               (SELECT count(*) FROM bg) AS n_bi)
-SELECT w1, w2, bf::BIGINT AS n_ab,
-       round((log2(bf) + 2 * log2(n_uni) - log2(n_bi)
-              - log2(u1.uf) - log2(u2.uf)) * {t.PMI_Q}, 0)::BIGINT AS pmi_q
-FROM bgc
-CROSS JOIN tot
-JOIN uni u1 ON u1.tok = w1
-JOIN uni u2 ON u2.tok = w2
-ORDER BY pmi_q DESC, w1, w2
-LIMIT {t.PMI_TOP_K}
 """
 
 
@@ -1054,48 +757,6 @@ SELECT a.user_id, a.session_idx,
        (count(*) - 1)::BIGINT AS n_concurrent
 FROM iv a JOIN iv b ON b.s_us <= a.e_us AND b.e_us >= a.s_us
 GROUP BY a.user_id, a.session_idx
-"""
-
-
-def oracle_repetition_stats() -> str:
-    return f"""
-WITH base AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-bg AS (
-  SELECT doc_id, arr[i] || ' ' || arr[i+1] AS bg
-  FROM (SELECT doc_id, toks AS arr FROM base),
-       unnest(generate_series(1, len(arr) - 1)) AS t(i)
-  WHERE len(arr) >= 2
-),
-per_doc AS (
-  SELECT doc_id, max(n) AS top_bg, sum(n) AS n_bigrams
-  FROM (SELECT doc_id, bg, count(*) AS n FROM bg GROUP BY 1, 2) GROUP BY doc_id
-)
-SELECT b.doc_id, len(b.toks)::INT AS n_tokens,
-       coalesce(p.n_bigrams, 0)::BIGINT AS n_bigrams,
-       round(coalesce(p.top_bg::DOUBLE / p.n_bigrams, 0.0), 6) AS top_bigram_frac,
-       round((len(b.toks) - len(list_distinct(b.toks)))::DOUBLE / len(b.toks), 6) AS dup_token_frac
-FROM base b LEFT JOIN per_doc p USING (doc_id)
-"""
-
-
-def oracle_lang_id() -> str:
-    return """
-SELECT lang,
-       CASE WHEN (' ' || lower(text) || ' ') LIKE '% the %'
-              OR (' ' || lower(text) || ' ') LIKE '% and %'
-              OR (' ' || lower(text) || ' ') LIKE '% of %'
-            THEN 'en' ELSE 'und' END AS lang_guess,
-       count(*)::BIGINT AS n_docs
-FROM documents GROUP BY 1, 2
-"""
-
-
-def oracle_fingerprints() -> str:
-    return """
-SELECT doc_id,
-       md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
-       length(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))::INT AS norm_len
-FROM documents
 """
 
 
@@ -2053,136 +1714,9 @@ WHERE n_shared >= 2
 """
 
 
-_BENCH_N_DOCS = 3
-
-
 # ≢ 0 (mod 2) AND (mod 3): planted twins must land in a different staged
 # micro-batch than their seeds under both 2- and 3-batch doc_id%n staging
 PLANT_ID_OFFSET = 2_000_003
-
-
-def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination probe: the 'benchmark' is a deterministic selection
-    of corpus documents (the _BENCH_N_DOCS lowest md5('bench:'||doc_id)
-    keys — no external data per the task rules).  Gate seeding à la
-    planted_embeddings: the probed corpus is additionally unioned with one
-    PLANTED document per benchmark text (its first 20 tokens + a unique
-    tail), so the gate compares real partial-overlap contamination — not
-    just the benchmark docs flagging themselves."""
-    from pyspark.sql.window import Window
-
-    docs = load(spark, sf_dir, "documents")
-    key = F.md5(F.concat(F.lit("bench:"), F.col("doc_id").cast("string")))
-    bench = (
-        docs.select("text", key.alias("k"))
-        .orderBy("k")
-        .limit(_BENCH_N_DOCS)
-        .select("text", F.row_number().over(Window.orderBy("k")).alias("i"))
-    )
-    head20 = F.concat_ws(
-        " ", F.slice(textstats.tokens_col(F.col("text")), 1, 20)
-    )
-    planted = bench.select(
-        (F.lit(PLANT_ID_OFFSET) + F.col("i")).cast("long").alias("doc_id"),
-        F.concat(
-            head20, F.lit(" planted contamination tail "), F.col("i")
-        ).alias("text"),
-    )
-    probed = docs.select("doc_id", "text").union(planted)
-    return textstats.benchmark_contamination(probed, bench.select("text"))
-
-
-def oracle_benchmark_contamination() -> str:
-    n = textstats.CONTAM_NGRAM
-    return f"""
-WITH bench AS (
-  SELECT text, row_number() OVER (ORDER BY md5('bench:' || doc_id::VARCHAR)) AS i
-  FROM documents
-  ORDER BY md5('bench:' || doc_id::VARCHAR) LIMIT {_BENCH_N_DOCS}
-),
-planted AS (
-  SELECT ({PLANT_ID_OFFSET} + i)::BIGINT AS doc_id,
-         array_to_string(arr[1:20], ' ') || ' planted contamination tail ' || i AS text
-  FROM (SELECT i, {_TOKENS} AS arr FROM bench)
-),
-probed AS (SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM planted),
-btoks AS (SELECT {_TOKENS} AS arr FROM bench),
-bngrams AS (
-  SELECT DISTINCT array_to_string(arr[i:i+{n - 1}], ' ') AS ngram
-  FROM btoks, unnest(generate_series(1, len(arr) - {n - 1})) AS t(i)
-  WHERE len(arr) >= {n}
-),
-dtoks AS (SELECT doc_id, {_TOKENS} AS arr FROM probed),
-dngrams AS (
-  SELECT DISTINCT doc_id, array_to_string(arr[i:i+{n - 1}], ' ') AS ngram
-  FROM dtoks, unnest(generate_series(1, len(arr) - {n - 1})) AS t(i)
-  WHERE len(arr) >= {n}
-),
-hits AS (
-  SELECT doc_id, count(*) AS n_contaminated
-  FROM dngrams JOIN bngrams USING (ngram) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(h.n_contaminated, 0)::BIGINT AS n_contaminated,
-       (coalesce(h.n_contaminated, 0) > 0) AS contaminated
-FROM (SELECT doc_id FROM probed) d LEFT JOIN hits h USING (doc_id)
-"""
-
-
-_PLANT_SENTENCES = {
-    # deterministic stopword-dense sentences (synthesized in-repo per the
-    # no-external-data rule); one doc per language, id PLANT_ID_OFFSET+1..
-    "de": "der hund und die katze ist nicht mit ein haus von den bergen",
-    "es": "el perro y los gatos es que una casa por las montanas con del se",
-    "fr": "le chien est dans une maison qui est pas des montagnes du au les",
-    "en": "the cat is on a mat of the house and it is for the best in town",
-}
-
-
-def q_lang_id_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Profile-based language ID.  The driver corpus's text is the same
-    English-ish word soup for every labeled lang (no real signal), so the
-    gate unions PLANTED stopword-dense sentences per language — the
-    confusion matrix then checks actual cross-language discrimination."""
-    docs = load(spark, sf_dir, "documents").select("lang", "text")
-    planted = spark.createDataFrame(
-        sorted(_PLANT_SENTENCES.items()), "lang: string, text: string"
-    )
-    return textstats.lang_id_profile(docs.union(planted))
-
-
-def oracle_lang_id_profile() -> str:
-    plant_rows = ", ".join(
-        f"('p:{lang}', '{lang}', '{text}')"
-        for lang, text in sorted(_PLANT_SENTENCES.items())
-    )
-    score_rows = " UNION ALL ".join(
-        f"SELECT rid, '{lang}' AS cand, "
-        f"len(list_filter(arr, t -> t IN ({', '.join(repr(w) for w in words)}))) AS score"
-        " FROM toks"
-        for lang, words in sorted(textstats.LANG_PROFILES.items())
-    )
-    return f"""
-WITH probed AS (
-  SELECT doc_id::VARCHAR AS rid, lang, text FROM documents
-  UNION ALL SELECT * FROM (VALUES {plant_rows}) v(rid, lang, text)
-),
-toks AS (
-  SELECT rid, lang, {_TOKENS} AS arr FROM probed
-),
-scores AS ({score_rows}),
-best AS (
-  SELECT rid, cand, score,
-         row_number() OVER (PARTITION BY rid ORDER BY score DESC, cand ASC) AS rnk
-  FROM scores
-),
-guessed AS (
-  SELECT t.lang, CASE WHEN b.score = 0 THEN 'und' ELSE b.cand END AS lang_guess
-  FROM toks t JOIN best b ON b.rid = t.rid AND b.rnk = 1
-)
-SELECT lang, lang_guess, count(*)::BIGINT AS n_docs
-FROM guessed GROUP BY 1, 2
-"""
 
 
 def oracle_cosine_topk() -> str:
@@ -2590,17 +2124,6 @@ walk AS (
 SELECT doc AS vec_id, min(reach) AS cluster,
        (doc = min(reach)) AS is_survivor
 FROM walk GROUP BY doc
-"""
-
-
-def oracle_bpe_token_stats() -> str:
-    pattern = textstats.BPE_ISH_PATTERN.replace("\\", "\\\\")
-    toks = f"regexp_extract_all(text, '{pattern}', 0)"
-    return f"""
-SELECT lang, count(*)::BIGINT AS doc_count,
-       sum(len({toks}))::BIGINT AS total_bpe_tokens,
-       round(avg(len(list_distinct({toks}))), 4) AS avg_unique_tokens
-FROM documents GROUP BY lang
 """
 
 
@@ -3034,7 +2557,7 @@ def q_bloom_delta_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (even ids — builds the constant-size bit index once per sf_dir,
     bench-amortized) and a DELTA wave (odd ids — membership-tested
     against the index bits).  The wrapper joins back the EXACT base
-    membership as ``actually_seen`` — the hll exact-yardstick
+    membership as ``actually_seen`` — the exact-yardstick
     discipline: the oracle then pins both the filter's verdicts AND its
     measured false positives (possibly_seen ⊇ actually_seen is the
     no-false-negative guarantee, enforced row-by-row by the hash
@@ -3099,37 +2622,6 @@ FROM documents d LEFT JOIN per_doc USING (doc_id)
 """
 
 
-def oracle_length_stats() -> str:
-    """Spark's exact ``percentile`` and DuckDB's ``quantile_cont`` share
-    the (p·(n−1)) linear-interpolation definition; rounded to 6."""
-    qs = ", ".join(
-        f"round(quantile_cont(n_chars, {p}), 6) AS p{tag}_chars"
-        for p, tag in ((0.5, "50"), (0.9, "90"), (0.99, "99"))
-    )
-    return f"""
-SELECT lang, count(*)::BIGINT AS n_docs, {qs},
-       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-FROM documents GROUP BY lang
-"""
-
-
-def oracle_length_stats_approx() -> str:
-    """The 10^12-scale mode's oracle: at gate SF every lang group fits
-    inside the pinned sketch accuracy, so Spark's percentile_approx is
-    lossless and returns exactly DuckDB's ``quantile_disc`` element
-    (verified element-identical; production keeps the same code path
-    with bounded 1/accuracy rank error)."""
-    qs = ", ".join(
-        f"quantile_disc(n_chars, {p})::DOUBLE AS p{tag}_chars"
-        for p, tag in ((0.5, "50"), (0.9, "90"), (0.99, "99"))
-    )
-    return f"""
-SELECT lang, count(*)::BIGINT AS n_docs, {qs},
-       min(n_chars) AS min_chars, max(n_chars) AS max_chars
-FROM documents GROUP BY lang
-"""
-
-
 def oracle_source_cap_sample(cap: int = 10) -> str:
     """Single-window twin of sampling.source_cap_sample — the two-phase
     prefix cut keeps rows and ranks identical to this plan because prefix
@@ -3173,7 +2665,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_containment": q_ngram_containment,
         "winnow_fingerprints": lambda spark, sf: dedup.winnow_fingerprints(load(spark, sf, "documents")),
         "winnow_overlap_pairs": lambda spark, sf: dedup.winnow_overlap_pairs(load(spark, sf, "documents")),
-        "benchmark_contamination": q_benchmark_contamination,
         "dedup_delta_pairs": q_dedup_delta_pairs,
         "simhash_delta_pairs": q_simhash_delta_pairs,
         "dedup_clusters": lambda spark, sf: dedup.dedup_clusters(load(spark, sf, "documents")),
@@ -3203,34 +2694,17 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming extraction (foreachBatch over a multi-trigger file
         # source) against the same golden oracle as the batch path
         "streaming_extract_spans": q_streaming_extract_spans,
-        # text analysis family
-        "token_stats": lambda spark, sf: textstats.token_stats(load(spark, sf, "documents")),
-        "length_stats": lambda spark, sf: textstats.length_stats(load(spark, sf, "documents")),
-        # the bounded-sketch scale mode (lossless at gate SF — see oracle)
-        "length_stats_approx": lambda spark, sf: textstats.length_stats(
-            load(spark, sf, "documents"), approx=True
-        ),
+        # text analysis family: the funnel's quality stages, keywords and
+        # the count-min sketch
         "quality_scores": lambda spark, sf: textstats.quality_scores(load(spark, sf, "documents")),
         "quality_filter": lambda spark, sf: textstats.quality_filter(load(spark, sf, "documents")),
-        "unigram_logprob": lambda spark, sf: textstats.unigram_logprob(load(spark, sf, "documents")),
-        "repetition_stats": lambda spark, sf: textstats.repetition_stats(load(spark, sf, "documents")),
-        # interpolated bigram LM (the CCNet-style filter, one order up)
-        "bigram_logprob": lambda spark, sf: textstats.bigram_logprob(load(spark, sf, "documents")),
-        "source_kl_divergence": lambda spark, sf: textstats.source_kl_divergence(load(spark, sf, "documents")),
         # per-doc top-k TF-IDF keywords (round-then-rank, term tie-break)
         "tfidf_top_terms": lambda spark, sf: textstats.tfidf_top_terms(load(spark, sf, "documents")),
-        # CCNet-style head/middle/tail perplexity tertiles per language
-        "perplexity_buckets": lambda spark, sf: textstats.perplexity_buckets(load(spark, sf, "documents")),
         # count-min-sketch heavy hitters (constant-memory counting)
         "cms_heavy_hitters": lambda spark, sf: textstats.cms_heavy_hitters(load(spark, sf, "documents")),
         # heavy hitters of the ACCUMULATED corpus from the persisted
         # constant-size sketch (only the delta wave is tokenized)
         "cms_delta_heavy_hitters": q_cms_delta_heavy_hitters,
-        # HyperLogLog distinct-token census per language (constant-memory
-        # cardinality sketch, reported against the exact yardstick)
-        "hll_distinct_tokens": lambda spark, sf: textstats.hll_distinct_tokens(
-            load(spark, sf, "documents")
-        ),
         # recurring-crawl admission gate from the persisted Bloom filter
         # (definitely-new vs possibly-seen, O(delta), exact yardstick)
         "bloom_delta_new_docs": q_bloom_delta_new_docs,
@@ -3238,17 +2712,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_classifier_scores": lambda spark, sf: textstats.quality_classifier_scores(
             load(spark, sf, "documents")
         ),
-        # temperature-scaled source sampling weights (p^alpha mixing)
-        "source_temperature_mix": lambda spark, sf: textstats.source_temperature_mix(
-            load(spark, sf, "documents")
-        ),
-        # per-language Zipf slope/R^2 over the vocabulary head
-        "zipf_law_fit": lambda spark, sf: textstats.zipf_law_fit(
-            load(spark, sf, "documents")
-        ),
-        "lang_id": lambda spark, sf: textstats.lang_id(load(spark, sf, "documents")),
-        "lang_id_profile": q_lang_id_profile,
-        "fingerprints": lambda spark, sf: textstats.fingerprints(load(spark, sf, "documents")),
         # similarity family
         "cosine_topk": lambda spark, sf: similarity.cosine_topk(load(spark, sf, "embeddings")),
         "lsh_sign_buckets": lambda spark, sf: similarity.lsh_sign_buckets(load(spark, sf, "embeddings")),
@@ -3258,7 +2721,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # tie-breaks) so the DuckDB twin replays the exact Lloyd iterations
         "ann_ivf_topk": lambda spark, sf: similarity.ann_ivf_topk(load(spark, sf, "embeddings")),
         # cross-wave ExactSubstr: delta probed against the persisted
-        # shingle histogram (the seventh wave-keyed index family)
+        # shingle-histogram index
         "substring_delta": q_substring_delta,
         # per-doc novelty of the delta's shingle stream vs the same index
         "shingle_novelty": q_shingle_novelty,
@@ -3279,7 +2742,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cluster_balanced_sample": lambda spark, sf: similarity.cluster_balanced_sample(
             load(spark, sf, "embeddings")
         ),
-        "bpe_token_stats": lambda spark, sf: textstats.bpe_token_stats(load(spark, sf, "documents")),
         # interleaved-payload profile over extracted span sequences
         "interleave_stats": q_interleave_stats,
         # PDF/layout parse path (stub decoder, real plumbing)
@@ -3303,21 +2765,17 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load(_utc(spark), sf, "events")
         ),
         # incremental as-of join against the persisted user-state index
-        # (eleventh wave-keyed family; idempotent max-merge appends)
+        # (idempotent max-merge appends)
         "asof_delta_enrich": q_asof_delta_enrich,
         # the streaming twin: per-user (ts, id) group state, append-mode
         # emission, same oracle as the batch as-of join
         "streaming_asof_enrich": q_streaming_asof_enrich,
         # continuous-aggregate probe: persisted finest-grid partials
-        # (twelfth wave-keyed family, additive), full-recompute oracle
+        # (additive), full-recompute oracle
         "time_rollup_delta": q_time_rollup_delta,
         # per-label centroid geometry (rounded means, label-bounded joins)
         "label_centroid_similarity": lambda spark, sf: similarity.label_centroid_similarity(
             load(spark, sf, "embeddings")
-        ),
-        # phrase mining: top-K bigram PMI (quantized milli-bit logs)
-        "pmi_collocations": lambda spark, sf: textstats.pmi_collocations(
-            load(spark, sf, "documents")
         ),
         "session_stats": lambda spark, sf: sessionize.session_stats(load(_utc(spark), sf, "events")),
         # streaming (batch shape + true Structured Streaming run + custom
@@ -3367,7 +2825,6 @@ def build_oracles() -> dict[str, str]:
         "ngram_containment": oracle_ngram_containment(),
         "winnow_fingerprints": oracle_winnow_fingerprints(),
         "winnow_overlap_pairs": oracle_winnow_overlap_pairs(),
-        "benchmark_contamination": oracle_benchmark_contamination(),
         "dedup_delta_pairs": oracle_dedup_delta_pairs(),
         "simhash_delta_pairs": oracle_simhash_delta_pairs(),
         "dedup_clusters": oracle_dedup_clusters(),
@@ -3380,33 +2837,19 @@ def build_oracles() -> dict[str, str]:
         "token_budget_sample": oracle_token_budget_sample(),
         "source_cap_sample": oracle_source_cap_sample(),
         "streaming_extract_spans": golden_spans_values_sql(),
-        "token_stats": oracle_token_stats(),
-        "length_stats": oracle_length_stats(),
-        "length_stats_approx": oracle_length_stats_approx(),
         "interleave_stats": oracle_interleave_stats(),
         "quality_scores": oracle_quality_scores(),
         "quality_filter": oracle_quality_filter(),
-        "unigram_logprob": oracle_unigram_logprob(),
-        "bigram_logprob": oracle_bigram_logprob(),
-        "source_kl_divergence": oracle_source_kl_divergence(),
         "tfidf_top_terms": oracle_tfidf_top_terms(),
-        "repetition_stats": oracle_repetition_stats(),
-        "lang_id": oracle_lang_id(),
-        "lang_id_profile": oracle_lang_id_profile(),
-        "fingerprints": oracle_fingerprints(),
         "cosine_topk": oracle_cosine_topk(),
         "lsh_sign_buckets": oracle_lsh_sign_buckets(),
         "ann_lsh_topk": oracle_ann_lsh_topk(),
         "ann_lsh_topk_indexed": oracle_ann_lsh_topk(),
         "ann_ivf_topk": oracle_ann_ivf_topk(),
-        "perplexity_buckets": oracle_perplexity_buckets(),
         "cms_heavy_hitters": oracle_cms_heavy_hitters(),
         "cms_delta_heavy_hitters": oracle_cms_delta_heavy_hitters(),
-        "hll_distinct_tokens": oracle_hll_distinct_tokens(),
         "bloom_delta_new_docs": oracle_bloom_delta_new_docs(),
         "quality_classifier_scores": oracle_quality_classifier_scores(),
-        "source_temperature_mix": oracle_source_temperature_mix(),
-        "zipf_law_fit": oracle_zipf_law_fit(),
         "shingle_novelty": oracle_shingle_novelty(),
         "funnel_conversion": oracle_funnel_conversion(),
         "asof_join_enrich": oracle_asof_join_enrich(),
@@ -3416,7 +2859,6 @@ def build_oracles() -> dict[str, str]:
         "streaming_asof_enrich": oracle_asof_join_enrich(),
         "time_rollup_delta": oracle_time_rollup(),
         "label_centroid_similarity": oracle_label_centroid_similarity(),
-        "pmi_collocations": oracle_pmi_collocations(),
         "substring_delta": oracle_substring_delta(),
         "pdf_page_stats": oracle_pdf_page_stats(),
         "embedding_near_dup": oracle_embedding_near_dup(),
@@ -3424,7 +2866,6 @@ def build_oracles() -> dict[str, str]:
         "cluster_balanced_sample": oracle_cluster_balanced_sample(),
         "embedding_dedup_clusters": oracle_embedding_dedup_clusters(),
         "embedding_delta_near_dup": oracle_embedding_delta_near_dup(),
-        "bpe_token_stats": oracle_bpe_token_stats(),
         "docs_joined_labels": oracle_docs_joined_labels(),
         "session_stats": oracle_session_stats(),
         "windowed_events": oracle_windowed_events(),

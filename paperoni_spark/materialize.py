@@ -1,7 +1,7 @@
 """Materialization cut for multi-consumer intermediate frames.
 
 Every operator that derives an expensive frame consumed by 2+ plan
-branches (LSH band/code rows, IVF assignments, unigram doc_tf/counts,
+branches (LSH band/code rows, IVF assignments, TF-IDF doc_tf/df counts,
 token-budget scores, connected-component labels) materializes it once
 instead of re-deriving the whole subtree per consumer — without this the
 sign-LSH UDF ran 12× per near-dup query (round-3 plan audit).
@@ -19,8 +19,12 @@ from pyspark.sql import DataFrame
 
 def materialize(df: DataFrame) -> DataFrame:
     """Cut the lineage of ``df`` with ``localCheckpoint`` and return the
-    materialized frame.  The cut is LAZY: the blocks are written by the
-    first action that computes the frame (the connected-components loop
-    relies on this — each round's labels are realized by that round's
-    convergence count, one job per round)."""
+    materialized frame.  The cut is only partly lazy.  With AQE on (as
+    build_spark configures it), the call finalizes the adaptive plan,
+    so every shuffle map stage of ``df`` runs right here, as one job or
+    more.  Only the result stage waits: the checkpoint blocks are
+    written by the first action that computes the frame.  A one-shuffle
+    ``groupBy().count()`` frame on ``local[2]`` runs 1 job at this call
+    and 2 more at its first ``count()``; a frame with no shuffle runs
+    nothing here."""
     return df.localCheckpoint(False)

@@ -785,11 +785,13 @@ def _cc_fixpoint(
             )
             # propagated labels feed BOTH sides of the shortcut self-join
             # — materialize so the edge join + agg runs once per round.
-            # The cut is LAZY: the checkpoint blocks are written the
-            # first time the round's ONE action (the convergence count
-            # below) computes the frame, so a round costs one job instead
-            # of three (two eager checkpoints + the count) while keeping
-            # the same compute-once and lineage-truncation guarantees.
+            # Neither cut in a round is lazy end to end: with AQE on,
+            # each materialize call runs its frame's shuffle map stages
+            # at once (the edge join + agg here, the shortcut join
+            # below), and only the result stages that write the
+            # checkpoint blocks wait for the round's convergence count.
+            # A round therefore costs several jobs, not one (61 jobs over
+            # 7 rounds for a 64-node chain on local[2]).
             prop = materialize(
                 labels.join(neighbor_min, "doc_id", "left").select(
                     "doc_id",
@@ -1421,7 +1423,7 @@ def bloom_delta_new_docs(
     plane — the anti-join rule for data-dependent hot sets doesn't
     apply).  Returns (doc_id, digest, possibly_seen); pair it with an
     exact check where history is still queryable to MEASURE the
-    false-positive rate (the hll exact-yardstick discipline — the gate
+    false-positive rate (the exact-yardstick discipline — the gate
     query does exactly that)."""
     from ..fsio import assert_index_param, refuse_mid_compaction
 

@@ -357,16 +357,16 @@ def _user_ref_state(events: DataFrame, ref_type: str) -> DataFrame:
 def write_user_state_index(
     events: DataFrame, path: str, wave=0, ref_type: str = ASOF_REF_TYPE
 ) -> None:
-    """Persist per-user latest-ref state — the ELEVENTH wave-keyed index
-    family and the second IDEMPOTENT one: state merges by struct-MAX
-    (like Bloom's OR, unlike CMS's linear counters), so overlapping or
-    re-sent waves are safe by construction — there is NO disjointness
-    contract, but ``wave`` must stay stable across retries of the same
-    wave (0 is the build).  One row per user ever seen, O(users)
-    regardless of event volume: the incremental as-of join probes this
-    instead of re-scanning 10^12 historical events.  ``ref_type`` is
-    param-pinned — probing a 'click' index for 'signup' refs would
-    silently enrich against the wrong stream."""
+    """Persist per-user latest-ref state — an IDEMPOTENT wave-keyed
+    index family: state merges by struct-MAX (unlike the rollup's
+    additive partials), so overlapping or re-sent waves are safe by
+    construction — there is NO disjointness contract, but ``wave`` must
+    stay stable across retries of the same wave (0 is the build).  One
+    row per user ever seen, O(users) regardless of event volume: the
+    incremental as-of join probes this instead of re-scanning 10^12
+    historical events.  ``ref_type`` is param-pinned — probing a 'click'
+    index for 'signup' refs would silently enrich against the wrong
+    stream."""
     from ..fsio import write_wave_segment
 
     write_wave_segment(
@@ -482,11 +482,11 @@ def _rollup_partials(events: DataFrame, finest: int) -> DataFrame:
 def write_rollup_index(
     events: DataFrame, path: str, wave=0, finest: int = ROLLUP_RESOLUTIONS_S[0]
 ) -> None:
-    """Persist the finest-grid rollup partials — the TWELFTH wave-keyed
-    index family (the hypertable continuous-aggregate pattern): ≤
+    """Persist the finest-grid rollup partials — a wave-keyed index
+    family (the hypertable continuous-aggregate pattern): ≤
     (time span / finest) × event_types rows regardless of event volume.
     ``wave`` 0 is the build; each later wave adds its own segment.
-    ADDITIVE like the CMS counters: waves must cover DISJOINT event
+    ADDITIVE like the shingle histogram: waves must cover DISJOINT event
     sets (a re-counted event double-counts — there is no subtraction)
     and ``wave`` must stay stable across retries of the same wave;
     probes sum partials across segments, compaction re-aggregates.

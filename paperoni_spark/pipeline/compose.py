@@ -138,8 +138,8 @@ def build_training_corpus(
         # model gate AFTER the rules (first failing rule wins, the model
         # verdict only judges rule survivors — one reason per doc keeps
         # the funnel reconciliation exact).  Map-side integer fold: the
-        # composed pipeline stays shuffle-free per stage, and the logit
-        # equals the standalone operator's bit-for-bit (test-pinned)
+        # composed pipeline stays shuffle-free per stage, and the
+        # standalone quality_classifier_scores projects the same logit
         from ..operators.textstats import QC_THRESHOLD, quality_logit_col
 
         thr = QC_THRESHOLD if model_threshold is None else model_threshold

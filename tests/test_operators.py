@@ -342,60 +342,9 @@ def test_winnow_overlap_pairs(spark, docs, ddb):
     assert "LeftAnti" in plan
 
 
-def test_lang_id_profile(spark, docs, ddb):
-    assert_matches_oracle(
-        contract.q_lang_id_profile(spark, SF_DIR),
-        ddb,
-        contract.oracle_lang_id_profile(),
-    )
-    # each stopword-dense sentence classifies as its own language; a
-    # no-stopword doc falls back to 'und'
-    rows = [(lang, text) for lang, text in contract._PLANT_SENTENCES.items()]
-    rows.append(("xx", "zzqx gibberish tokens wholly outside every profile"))
-    df = spark.createDataFrame(rows, "lang: string, text: string")
-    got = {(r["lang"], r["lang_guess"]) for r in textstats.lang_id_profile(df).collect()}
-    assert got == {("de", "de"), ("en", "en"), ("es", "es"), ("fr", "fr"), ("xx", "und")}
-
-
-def test_benchmark_contamination(spark, docs, ddb):
-    from paperoni_spark.operators.textstats import benchmark_contamination
-
-    assert_matches_oracle(
-        contract.q_benchmark_contamination(spark, SF_DIR),
-        ddb,
-        contract.oracle_benchmark_contamination(),
-    )
-    # a doc sharing one 13-gram with the benchmark is flagged; others not
-    bench_text = " ".join(f"benchword{i}" for i in range(13))
-    corpus = spark.createDataFrame(
-        [
-            (1, "prefix words " + bench_text + " suffix words"),
-            (2, "entirely clean document with no overlapping grams at all " * 2),
-        ],
-        "doc_id: long, text: string",
-    )
-    bench = spark.createDataFrame([(bench_text,)], "text: string")
-    got = {r["doc_id"]: (r["n_contaminated"], r["contaminated"]) for r in benchmark_contamination(corpus, bench).collect()}
-    assert got == {1: (1, True), 2: (0, False)}
-    # the benchmark n-gram set is a bounded eval suite: forced broadcast is
-    # the intended plan (map-side probe of the corpus)
-    plan = benchmark_contamination(corpus, bench)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # a corpus-scale frame handed as the benchmark fails LOUDLY before the
-    # forced broadcast can OOM the driver
-    with pytest.raises(ValueError, match="force-broadcast"):
-        benchmark_contamination(corpus, bench, max_benchmark_rows=0)
-
-
 def test_quality_scores_matches_oracle(spark, docs, ddb):
     assert_matches_oracle(
         textstats.quality_scores(docs), ddb, contract.oracle_quality_scores()
-    )
-
-
-def test_fingerprints_matches_oracle(spark, docs, ddb):
-    assert_matches_oracle(
-        textstats.fingerprints(docs), ddb, contract.oracle_fingerprints()
     )
 
 
@@ -615,12 +564,6 @@ def test_embedding_dedup_clusters(spark, embeds, ddb):
         assert got[seed][1] and not got[twin][1]
 
 
-def test_bpe_token_stats(spark, docs, ddb):
-    assert_matches_oracle(
-        contract.textstats.bpe_token_stats(docs), ddb, contract.oracle_bpe_token_stats()
-    )
-
-
 def test_shingle_df_cap_blocks_boilerplate(spark):
     """Hot-shingle guard: documents whose ONLY overlap is a boilerplate
     shingle (df > cap) never become candidates, while the same corpus
@@ -772,34 +715,6 @@ def test_token_budget_sample(spark, docs, ddb):
     )
 
 
-def test_unigram_logprob(spark, docs, ddb):
-    from paperoni_spark.operators.textstats import unigram_logprob
-
-    result = unigram_logprob(docs)
-    rows = result.collect()
-    assert len(rows) == docs.count()
-    for r in rows:
-        assert r["avg_log2_prob"] < 0  # probabilities < 1
-        assert r["perplexity"] > 1
-    assert_matches_oracle(result, ddb, contract.oracle_unigram_logprob())
-    # a gibberish doc (all-unique tokens) scores lower than a common-word doc
-    adv = spark.createDataFrame(
-        [(900001, "en", "the of and the of and the of and " * 10),
-         (900002, "en", " ".join(f"zzqx{i}gibber" for i in range(90)))],
-        "doc_id: long, lang: string, text: string",
-    )
-    scored = {r["doc_id"]: r["avg_log2_prob"] for r in unigram_logprob(docs.select("doc_id", "lang", "text").union(adv)).collect()}
-    assert scored[900002] < scored[900001]
-    # head/tail split: with a tiny head_k that genuinely routes hot tokens
-    # map-side and cold tokens through the shuffled join, values must be
-    # IDENTICAL (lp depends only on (tf, total), not the branch)
-    split = unigram_logprob(docs, head_k=3)
-    assert sorted(map(tuple, split.collect())) == sorted(map(tuple, rows))
-    plan = split._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # head matches map-side
-    assert "LeftAnti" in plan  # tail routing is the anti-join on head keys
-
-
 def test_ivf_probe_scan_partition_pruned(spark, embeds, tmp_path_factory):
     """The IVF scale path, demonstrated: the assigned table written
     partitioned by centroid yields probe scans that prune to exactly the
@@ -935,23 +850,6 @@ def test_ann_lsh_index_partition_pruned(spark, embeds, ddb, tmp_path):
     # a negative wave id is refused (0 is the build)
     with pytest.raises(ValueError):
         write_lsh_bucket_index(wave, path, wave=-1)
-
-
-def test_repetition_stats(spark, docs, ddb):
-    from paperoni_spark.operators.textstats import repetition_stats
-
-    result = repetition_stats(docs)
-    assert_matches_oracle(result, ddb, contract.oracle_repetition_stats())
-    adv = spark.createDataFrame(
-        [(1, "spam spam spam spam spam spam"),
-         (2, "all tokens here are fully distinct words"),
-         (3, "single")],
-        "doc_id: long, text: string",
-    )
-    got = {r["doc_id"]: r for r in repetition_stats(adv).collect()}
-    assert got[1]["top_bigram_frac"] == 1.0 and got[1]["dup_token_frac"] > 0.8
-    assert got[2]["dup_token_frac"] == 0.0
-    assert got[3]["n_bigrams"] == 0 and got[3]["top_bigram_frac"] == 0.0
 
 
 def test_index_kind_marker(spark, embeds, docs, tmp_path):
@@ -1441,41 +1339,6 @@ def test_streaming_exact_dedup_restart(spark, tmp_path):
         assert os.path.getmtime(p) == m, p
 
 
-def test_length_stats(spark, docs, ddb):
-    """Exact percentiles: Spark `percentile` == DuckDB `quantile_cont`
-    (shared linear-interpolation definition), plus a hand-checked
-    interpolated value on a tiny fixture."""
-    from paperoni_spark.operators.textstats import length_stats
-
-    assert_matches_oracle(length_stats(docs), ddb, contract.oracle_length_stats())
-    adv = spark.createDataFrame(
-        [(i, "x", "en", "s", n) for i, n in enumerate([10, 20, 40, 80])],
-        "doc_id: long, text: string, lang: string, source: string, n_chars: long",
-    )
-    row = length_stats(adv).collect()[0]
-    # p50 of [10,20,40,80]: index 1.5 -> 20 + 0.5*(40-20) = 30
-    assert row["p50_chars"] == 30.0
-    # p90: index 2.7 -> 40 + 0.7*(80-40) = 68
-    assert row["p90_chars"] == 68.0
-    assert row["min_chars"] == 10 and row["max_chars"] == 80
-
-    # scale mode: approx (bounded sketch) gated against quantile_disc
-    assert_matches_oracle(
-        length_stats(docs, approx=True), ddb, contract.oracle_length_stats_approx()
-    )
-    # exact ≡ approx wherever the interpolation rank is integral: a
-    # 101-value group puts p50/p90/p99 exactly on elements 50/90/99
-    big = spark.createDataFrame(
-        [(i, "x", "en", "s", (i * 7) % 101 + 1) for i in range(101)],
-        "doc_id: long, text: string, lang: string, source: string, n_chars: long",
-    )
-    exact = length_stats(big).collect()[0]
-    apx = length_stats(big, approx=True).collect()[0]
-    assert exact.asDict() == apx.asDict()
-    # both modes share one schema (the profiling consumer can swap modes)
-    assert length_stats(docs).schema == length_stats(docs, approx=True).schema
-
-
 def test_streaming_simhash_pairs(spark, docs, ddb):
     """Streamed per-wave index probe+append accumulates exactly the
     whole-corpus pair sweep: oracle parity, and every pair surfaces in
@@ -1763,7 +1626,8 @@ def test_connected_components_chain_converges_fast(spark):
 def test_index_geometry_guards(spark, docs, embeds, tmp_path):
     """Round-6 geometry guards: (a) the substring index pins its shingle
     size — probing or appending at a different n would hash disjoint
-    digests and silently match nothing; (b) the quantizer-bearing IVF
+    digests and silently match nothing, and a write into another family's
+    root is refused before that pin is adopted; (b) the quantizer-bearing IVF
     index refuses a REBUILD over existing append segments — retrained
     centroids would silently mis-probe every appended vector's old
     assignment."""
@@ -1791,6 +1655,17 @@ def test_index_geometry_guards(spark, docs, embeds, tmp_path):
     write_substring_index(
         docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), sub, 1, n=8
     )
+    # a foreign family's root is refused BEFORE the shingle_n marker is
+    # adopted into it (a marker left behind would pin the wrong family)
+    from paperoni_spark.operators.temporal import write_user_state_index
+
+    ust = str(tmp_path / "ust_idx")
+    write_user_state_index(
+        contract.load(spark, SF_DIR, "events").orderBy("event_id").limit(50), ust
+    )
+    with pytest.raises(ValueError, match="refusing to write"):
+        write_substring_index(docs, ust, n=8)
+    assert not os.path.exists(os.path.join(ust, "_param_shingle_n_8"))
 
     assigned, centroids = ivf_assignments(embeds)
     ivf = str(tmp_path / "ivf_idx")
@@ -1828,67 +1703,11 @@ def test_semantic_dedup(spark, embeds, ddb):
             assert r["sim"] >= similarity.SEMANTIC_DEDUP_THRESHOLD
 
 
-def test_bigram_logprob(spark, docs, ddb):
-    """Interpolated bigram LM: oracle match plus sanity — probabilities
-    are genuine (< 1 ⇒ negative log2; perplexity = 2^-avg), and the
-    conditional model sharpens the unigram proxy on most of its own
-    training corpus (not all: the λ-mixture charges up to −log2 λ per
-    token against docs whose bigram contexts are diffuse — 392/500 on
-    the frozen sf0.001 corpus, pinned loosely at 3/4)."""
-    out = textstats.bigram_logprob(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_bigram_logprob())
-    rows = out.collect()
-    assert rows
-    for r in rows:
-        assert r["avg_log2_prob"] < 0
-        assert r["perplexity"] == pytest.approx(
-            2.0 ** -r["avg_log2_prob"], rel=1e-3
-        )
-    uni = {
-        r["doc_id"]: r["avg_log2_prob"]
-        for r in textstats.unigram_logprob(docs).collect()
-    }
-    sharper = sum(1 for r in rows if r["avg_log2_prob"] >= uni[r["doc_id"]])
-    assert sharper >= 0.75 * len(rows)
-
-
-def test_source_kl_divergence(spark, docs, ddb):
-    """Per-source KL vs corpus: oracle match plus information-theoretic
-    sanity — KL is non-negative (up to the 6-decimal rounding), every
-    source present, token totals reconcile with the corpus, and a
-    PLANTED out-of-distribution source (vocabulary disjoint from the
-    rest) dominates every natural source's divergence."""
-    out = textstats.source_kl_divergence(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_source_kl_divergence())
-    rows = out.collect()
-    n_sources = docs.select("source").distinct().count()
-    assert len(rows) == n_sources
-    assert all(r["kl_bits"] >= -1e-6 for r in rows)
-    total = sum(r["n_tokens"] for r in rows)
-    from pyspark.sql import functions as F
-
-    expected = docs.select(
-        F.sum(F.size(textstats.tokens_col(F.col("text")))).alias("n")
-    ).collect()[0]["n"]
-    assert total == expected
-
-    planted = docs.unionByName(
-        spark.createDataFrame(
-            [(900001 + i, "zzq%d zzw%d zzq%d" % (i, i, i), "en", "oodsrc", 17)
-             for i in range(5)],
-            docs.schema,
-        )
-    )
-    prows = {r["source"]: r["kl_bits"]
-             for r in textstats.source_kl_divergence(planted).collect()}
-    ood = prows.pop("oodsrc")
-    assert ood > max(prows.values())
-
-
 def test_tfidf_top_terms(spark, docs, ddb):
     """Top-k TF-IDF keywords: oracle match plus shape — exactly top_k
     ranks per doc (the corpus has ≥ top_k distinct terms everywhere),
-    scores non-increasing within a doc."""
+    scores non-increasing within a doc, and the head/tail split changes
+    the plan, never the rows."""
     out = textstats.tfidf_top_terms(docs)
     assert_matches_oracle(out, ddb, contract.oracle_tfidf_top_terms())
     rows = out.collect()
@@ -1902,34 +1721,14 @@ def test_tfidf_top_terms(spark, docs, ddb):
         )
         scores = [r["tfidf"] for r in doc_rows]
         assert scores == sorted(scores, reverse=True)
-
-
-def test_perplexity_buckets(spark, docs, ddb):
-    """CCNet tertiles: oracle match plus the structural invariants —
-    per-lang bucket sizes are balanced to within one doc, and every
-    head doc scores at least as well as every tail doc in its lang."""
-    out = textstats.perplexity_buckets(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_perplexity_buckets())
-    rows = out.collect()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r)
-    for lang, rs in by_lang.items():
-        sizes = {b: 0 for b in textstats.PPL_BUCKET_NAMES}
-        for r in rs:
-            sizes[r["ppl_bucket"]] += 1
-        if len(rs) >= 3:
-            assert max(sizes.values()) - min(sizes.values()) <= 1, (lang, sizes)
-        head_min = min(
-            (r["avg_log2_prob"] for r in rs if r["ppl_bucket"] == "head"),
-            default=None,
-        )
-        tail_max = max(
-            (r["avg_log2_prob"] for r in rs if r["ppl_bucket"] == "tail"),
-            default=None,
-        )
-        if head_min is not None and tail_max is not None:
-            assert head_min >= tail_max
+    # head/tail split: with a tiny head_k that genuinely routes hot tokens
+    # map-side and cold tokens through the shuffled join, rows must be
+    # IDENTICAL (the score depends only on (tf, df, N), not the branch)
+    split = textstats.tfidf_top_terms(docs, head_k=3)
+    assert sorted(map(tuple, split.collect())) == sorted(map(tuple, rows))
+    plan = split._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan  # head matches map-side
+    assert "LeftAnti" in plan  # tail routing is the anti-join on head keys
 
 
 def test_cms_heavy_hitters(spark, docs, ddb):
@@ -2035,18 +1834,6 @@ def test_cms_index_waves_linearity_and_replay(spark, docs, tmp_path):
     assert not _os.path.exists(_os.path.join(path, "_param_shingle_n_8"))
 
 
-def test_hll_distinct_tokens(spark, docs, ddb):
-    """HLL census: oracle match plus the estimator sanity band — with
-    256 registers the standard error is ~1.04/sqrt(256) ≈ 6.5%, so the
-    estimate must land within 5σ of exact (a hash-quality failure or a
-    rho off-by-one lands far outside)."""
-    out = textstats.hll_distinct_tokens(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_hll_distinct_tokens())
-    for r in out.collect():
-        rel = abs(r["hll_estimate"] - r["exact_distinct"]) / r["exact_distinct"]
-        assert rel < 5 * 1.04 / (textstats.HLL_M ** 0.5), (r, rel)
-
-
 def test_quality_classifier_scores(spark, docs, ddb):
     """Model-based quality gate: oracle match plus the integer-weight
     invariants — the logit is bounded by the weight range, and kept is
@@ -2058,34 +1845,6 @@ def test_quality_classifier_scores(spark, docs, ddb):
     for r in rows:
         assert -1.0 <= r["quality_logit"] < 1.0
         assert r["kept"] == (r["quality_logit"] >= textstats.QC_THRESHOLD)
-
-
-def test_source_temperature_mix(spark, docs, ddb):
-    """Temperature mixing: oracle match plus the α<1 flattening law —
-    weights sum to ~1 and every below-average source is upweighted
-    relative to its raw share (p^α lifts the tail, damps the head)."""
-    out = textstats.source_temperature_mix(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_source_temperature_mix())
-    rows = out.collect()
-    assert abs(sum(r["mix_weight"] for r in rows) - 1.0) < 1e-4
-    mean_p = 1.0 / len(rows)
-    for r in rows:
-        if r["p_raw"] < mean_p * 0.5:
-            assert r["mix_weight"] > r["p_raw"], r
-        assert r["expected_epochs"] > 0
-
-
-def test_zipf_law_fit(spark, docs, ddb):
-    """Zipf fit: oracle match (banded two-phase ranks == the oracle's
-    whole-stratum window) plus the power-law sanity band — natural-ish
-    text slopes land negative with a real fit quality."""
-    out = textstats.zipf_law_fit(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_zipf_law_fit())
-    rows = out.collect()
-    assert rows, "every lang stratum vanished"
-    for r in rows:
-        assert r["zipf_slope"] < 0, r
-        assert 0.0 <= r["zipf_r2"] <= 1.0, r
 
 
 def test_bloom_delta_matches_oracle(spark, ddb):
@@ -2463,29 +2222,3 @@ def test_label_centroid_similarity(spark, ddb):
         )
         assert abs(r.cosine - want) < 1e-9
         assert -1.0 <= r.cosine <= 1.0
-
-
-def test_pmi_collocations(spark, ddb):
-    """Top-K PMI collocations vs the SQL replay, plus the laws: exactly
-    top_k rows, min_count respected, the (pmi_q desc, w1, w2) order, and
-    exact bigram counts vs a Python Counter replay."""
-    import collections
-
-    from paperoni_spark.operators import textstats
-
-    docs = contract.load(spark, SF_DIR, "documents")
-    out_df = textstats.pmi_collocations(docs)
-    assert_matches_oracle(out_df, ddb, contract.oracle_pmi_collocations())
-    rows = out_df.collect()
-    assert len(rows) == textstats.PMI_TOP_K
-
-    counts = collections.Counter()
-    for r in docs.select("text").collect():
-        t = r.text.strip().split()
-        if len(t) >= 2:
-            counts.update(zip(t, t[1:]))
-    keys = [(-r.pmi_q, r.w1, r.w2) for r in rows]
-    assert keys == sorted(keys)
-    for r in rows:
-        assert r.n_ab >= textstats.PMI_MIN_COUNT
-        assert counts[(r.w1, r.w2)] == r.n_ab

@@ -40,12 +40,12 @@ PLAN_CONTRACTS = {
     # pure map-side: zero shuffles end-to-end, scan-speed at any scale
     "quality_filter": (0, ["source", "n_chars"]),
     "hash_sample": (0, ["text", "source", "n_chars"]),
-    "fingerprints": (0, ["lang", "source", "n_chars"]),
     "quality_scores": (0, ["source", "n_chars"]),
+    # hashed-linear quality model: a map-side integer fold over each
+    # doc's tokens (the funnel's own logit expression) — tokens never
+    # leave their row, and the scan reads only (doc_id, text)
+    "quality_classifier_scores": (0, ["lang", "source", "n_chars"]),
     # single-shuffle partial-aggregated rollups with pruned scans
-    "length_stats": (1, ["text", "doc_id", "source"]),
-    "lang_id": (1, ["doc_id", "source", "n_chars"]),
-    "token_stats": (1, ["doc_id", "source", "n_chars"]),
     "minhash_signatures": (1, ["lang", "source", "n_chars"]),
     # lsh_sign_buckets reads its materialized coded frame (no parquet
     # scan in the final plan) — only the shuffle/cartesian/arrow
@@ -65,22 +65,16 @@ PLAN_CONTRACTS = {
     # the whole-corpus operator (the index side adds a JOIN, not a pass
     # over the corpus), still no pair enumeration
     "substring_delta": (4, ["lang", "source", "n_chars"]),
-    # zipf head/tail split scorers: every fact-side join is a broadcast
-    # (head) or runs over the materialized doc_tf/lp frames — the only
-    # shuffle in the FINAL plan is the closing per-doc agg / rank window
+    # zipf head/tail split scorer: every fact-side join is a broadcast
+    # (head) or runs over the materialized doc_tf/df frames — the only
+    # shuffle in the FINAL plan is the closing rank window
     # (the corpus tokenize+agg shuffles live inside the materialization);
     # the n_docs count scan reads ZERO columns (struct<>)
     "tfidf_top_terms": (1, []),
-    "bigram_logprob": (1, []),
     # frozen-centroid assignment over the materialized coded frame +
     # within-cluster min-id pruning: one shuffle (the cluster-keyed
     # pair stage), no pair cartesian, no Python at query time
     "semantic_dedup": (1, []),
-    # CCNet tertiles: the data-wide shuffles are the materialized LM
-    # scoring (inside the cut) and the per-(lang, band) rank window; the
-    # other exchanges run over the band histogram / stratum totals —
-    # summary tables bounded by score range × lang, not corpus size
-    "perplexity_buckets": (5, []),
     # count-min sketch: the vocab-count agg lives inside the
     # materialization; the final plan shuffles only the (d, bucket)
     # sketch build and the per-token min — the sketch join back is a
@@ -96,28 +90,6 @@ PLAN_CONTRACTS = {
     # (d, bucket, cnt) (wave never read) and both sketch joins are
     # forced broadcasts of ≤ depth×4096 rows
     "cms_delta_heavy_hitters": (3, []),
-    # HLL census: register maxima + per-lang fold + the exact-distinct
-    # yardstick's two-phase count — rho is map-side string work, the
-    # register table is ≤ 256 rows per stratum
-    "hll_distinct_tokens": (4, []),
-    # per-source KL rollup: the head/tail split again, plus exactly two
-    # source-keyed shuffles (the broadcast-side per-source totals agg
-    # and the closing rollup) — source cardinality is tiny, so both are
-    # cheap at any corpus size
-    "source_kl_divergence": (2, []),
-    # hashed-linear quality model: map-side md5 weights feeding ONE
-    # partial-aggregated doc shuffle — tokens never leave their split,
-    # and the scan reads only (doc_id, text)
-    "quality_classifier_scores": (1, ["lang", "source", "n_chars"]),
-    # temperature mix: the source rollup lives inside the
-    # materialization; the final plan is 1-row total aggs + broadcast
-    # cross joins — zero data-sized shuffles
-    "source_temperature_mix": (0, []),
-    # zipf head fit: band histogram + offsets window + in-band rank +
-    # the closing per-lang regression agg — every post-materialization
-    # exchange moves a summary (bands × langs / top-k head), never the
-    # vocabulary
-    "zipf_law_fit": (4, []),
     # persisted-Bloom probe: delta digest distinct + per-digest hit agg
     # + the verdict join — the bit table is a forced broadcast (≤ 65536
     # rows by construction, pruned to pos alone), and only (doc_id,
@@ -149,10 +121,6 @@ PLAN_CONTRACTS = {
     # (norms broadcast, dim join multiplicity = |labels|), vec_id never
     # read
     "label_centroid_similarity": (6, ["vec_id"]),
-    # PMI top-K: the tokenize/count passes live behind the materialize
-    # cuts; the final plan is broadcast joins + ONE TakeOrdered — never
-    # a corpus-wide sort or window
-    "pmi_collocations": (0, []),
 }
 
 

@@ -933,9 +933,9 @@ def test_corpus_job_refusals_leave_indexes_untouched(tmp_path_factory):
 
 def test_build_training_corpus_model_filter(spark):
     """The opt-in model quality gate: the map-side fold logit equals the
-    standalone operator's bit-for-bit, model rejects are attributed as
-    rejected:model_quality AFTER the rules (one reason per doc), and the
-    funnel still reconciles with the written corpus."""
+    standalone operator's (a projection of the same fold), model rejects
+    are attributed as rejected:model_quality AFTER the rules (one reason
+    per doc), and the funnel still reconciles with the written corpus."""
     from paperoni_spark.operators import textstats
     from paperoni_spark.pipeline.compose import build_training_corpus
     from pyspark.sql import functions as F
@@ -953,7 +953,7 @@ def test_build_training_corpus_model_filter(spark):
     assert stages.get("rejected:model_quality", 0) > 0
     assert stages.get("kept", 0) - stages.get("rejected:duplicate", 0) == len(rows)
 
-    # row-identity: the fold expression == the explode+agg operator
+    # row-identity: the fold expression == the standalone operator
     plain, _, _ = build_training_corpus(docs)
     flat = plain.select("doc_id", "text")
     via_expr = flat.select(
