@@ -423,45 +423,6 @@ SELECT doc_id, lang, (reject_reason IS NULL) AS keep, reject_reason FROM flagged
 """
 
 
-def oracle_cms_heavy_hitters() -> str:
-    """DuckDB twin of textstats.cms_heavy_hitters: the same
-    build-from-vocab-counts sketch (sums per bucket commute with the
-    token-stream build), positional 3-hex-char bucket decode (the
-    simhash byte-decode idiom), min over depth rows, and the rounded-
-    free all-integer ranking with the token tie-break."""
-    d, k = textstats.CMS_DEPTH, textstats.CMS_TOP_K
-    seeds = ", ".join(str(i) for i in range(d))
-    hexpos = "strpos('0123456789abcdef', substr(h, {i}, 1)) - 1"
-    bucket = (
-        f"(({hexpos.format(i=1)}) * 256 + ({hexpos.format(i=2)}) * 16"
-        f" + ({hexpos.format(i=3)}))"
-    )
-    return f"""
-WITH counts AS (
-  SELECT tok, count(*) AS tf
-  FROM (SELECT unnest({_TOKENS}) AS tok FROM documents) GROUP BY tok
-),
-hashed AS (
-  SELECT tok, tf, d, {bucket} AS bucket
-  FROM (SELECT tok, tf, d, md5('cms' || d::VARCHAR || ':' || tok) AS h
-        FROM counts, unnest([{seeds}]) AS t(d))
-),
-sketch AS (SELECT d, bucket, sum(tf) AS cnt FROM hashed GROUP BY d, bucket),
-est AS (
-  SELECT tok, tf, min(cnt) AS est
-  FROM hashed JOIN sketch USING (d, bucket) GROUP BY tok, tf
-),
-ranked AS (
-  SELECT tok AS token, tf, est,
-         row_number() OVER (ORDER BY est DESC, tok ASC) AS rank
-  FROM est
-)
-SELECT token, tf::BIGINT AS true_count, est::BIGINT AS cms_estimate,
-       (est - tf)::BIGINT AS overestimate, rank::INT AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
 def oracle_tfidf_top_terms() -> str:
     """DuckDB twin of textstats.tfidf_top_terms: round-then-rank with
     the term tie-break (the repo-wide engine-portability rule)."""
@@ -486,102 +447,6 @@ ranked AS (
 )
 SELECT doc_id, term, tfidf, rank::INT AS rank
 FROM ranked WHERE rank <= {textstats.TFIDF_TOP_K}
-"""
-
-
-def oracle_cms_delta_heavy_hitters() -> str:
-    """DuckDB twin of the persisted-CMS probe: base and delta sketches
-    replayed from scratch (counter sums across wave segments equal the
-    one-pass sketch — the linearity the index family is built on), the
-    same positional bucket decode, and the delta-candidate min."""
-    d, k = textstats.CMS_DEPTH, textstats.CMS_TOP_K
-    seeds = ", ".join(str(i) for i in range(d))
-    hexpos = "strpos('0123456789abcdef', substr(h, {i}, 1)) - 1"
-    bucket = (
-        f"(({hexpos.format(i=1)}) * 256 + ({hexpos.format(i=2)}) * 16"
-        f" + ({hexpos.format(i=3)}))"
-    )
-    return f"""
-WITH bcounts AS (
-  SELECT tok, count(*) AS tf
-  FROM (SELECT unnest({_TOKENS}) AS tok FROM documents WHERE doc_id % 2 = 0)
-  GROUP BY tok
-),
-bhashed AS (
-  SELECT tf, d, {bucket} AS bucket
-  FROM (SELECT tf, d, md5('cms' || d::VARCHAR || ':' || tok) AS h
-        FROM bcounts, unnest([{seeds}]) AS t(d))
-),
-bsketch AS (SELECT d, bucket, sum(tf) AS cnt FROM bhashed GROUP BY d, bucket),
-dcounts AS (
-  SELECT tok, count(*) AS tf
-  FROM (SELECT unnest({_TOKENS}) AS tok FROM documents WHERE doc_id % 2 = 1)
-  GROUP BY tok
-),
-dhashed AS (
-  SELECT tok, tf, d, {bucket} AS bucket
-  FROM (SELECT tok, tf, d, md5('cms' || d::VARCHAR || ':' || tok) AS h
-        FROM dcounts, unnest([{seeds}]) AS t(d))
-),
-dsketch AS (SELECT d, bucket, sum(tf) AS cnt FROM dhashed GROUP BY d, bucket),
-comb AS (
-  SELECT ds.d, ds.bucket, ds.cnt + coalesce(bs.cnt, 0) AS cnt
-  FROM dsketch ds LEFT JOIN bsketch bs USING (d, bucket)
-),
-est AS (
-  SELECT tok, tf, min(cnt) AS est
-  FROM dhashed JOIN comb USING (d, bucket) GROUP BY tok, tf
-),
-ranked AS (
-  SELECT tok AS token, tf, est,
-         row_number() OVER (ORDER BY est DESC, tok ASC) AS rank
-  FROM est
-)
-SELECT token, tf::BIGINT AS delta_count, est::BIGINT AS cms_estimate,
-       rank::INT AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def oracle_bloom_delta_new_docs() -> str:
-    """DuckDB twin of the persisted-Bloom probe: base bits replayed from
-    the even ids (distinct positions — OR idempotence), the same 4-hex
-    positional decode, the all-k-probes-hit membership test over the
-    delta's distinct digests, and the exact-membership yardstick the
-    gate query adds (false positives measured, false negatives
-    impossible)."""
-    d = dedup
-    seeds = ", ".join(str(i) for i in range(d.BLOOM_K))
-    hexpos = "strpos('0123456789abcdef', substr(h, {i}, 1)) - 1"
-    pos = (
-        f"(({hexpos.format(i=1)}) * 4096 + ({hexpos.format(i=2)}) * 256"
-        f" + ({hexpos.format(i=3)}) * 16 + ({hexpos.format(i=4)}))"
-    )
-    return f"""
-WITH bdig AS (
-  SELECT DISTINCT md5(text) AS digest FROM documents WHERE doc_id % 2 = 0
-),
-bpos AS (
-  SELECT DISTINCT {pos} AS pos
-  FROM (SELECT md5('bloom' || i::VARCHAR || ':' || digest) AS h
-        FROM bdig, unnest([{seeds}]) AS t(i))
-),
-delta AS (
-  SELECT doc_id, md5(text) AS digest FROM documents WHERE doc_id % 2 = 1
-),
-dpos AS (
-  SELECT digest, {pos} AS pos
-  FROM (SELECT digest, md5('bloom' || i::VARCHAR || ':' || digest) AS h
-        FROM (SELECT DISTINCT digest FROM delta), unnest([{seeds}]) AS t(i))
-),
-hits AS (
-  SELECT digest, count(*) AS n_hit FROM dpos JOIN bpos USING (pos)
-  GROUP BY digest
-)
-SELECT d.doc_id, d.digest,
-       coalesce(h.n_hit, 0) = {d.BLOOM_K} AS possibly_seen,
-       d.digest IN (SELECT digest FROM bdig) AS actually_seen
-FROM delta d LEFT JOIN hits h USING (digest)
 """
 
 
@@ -1236,7 +1101,6 @@ def _stage_micro_batches(
     docs: DataFrame,
     prefix: str = "stage_",
     n_batches: int = 2,
-    key_col: str = "doc_id",
     root: str | None = None,
     class_expr=None,
 ) -> tuple[str, str]:
@@ -1265,7 +1129,7 @@ def _stage_micro_batches(
     cls = (
         class_expr
         if class_expr is not None
-        else (F.col(key_col) % n_batches).cast("int")
+        else (F.col("doc_id") % n_batches).cast("int")
     )
     (
         docs.withColumn("_b", cls)
@@ -1342,58 +1206,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {dedup.SIMHASH_HAMMING_MAX}
 """
 
 
-def q_streaming_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vector twin of streaming_simhash_pairs: each micro-batch is
-    coded once, probed against the persisted sign-LSH index, and written
-    as its own idempotent segment.  Cap lifted so the accumulated union
-    provably equals the whole-corpus banded sweep (band collision is a
-    global property of two codes, independent of which wave carried
-    each vector)."""
-    from .streaming.dedup import run_streaming_embedding_dedup
-
-    embeds = planted_embeddings(load(spark, sf_dir, "embeddings"))
-    tmp, emb_dir = _stage_micro_batches(
-        embeds, root=_stream_tmp("semb"), key_col="vec_id"
-    )
-    return run_streaming_embedding_dedup(
-        spark,
-        emb_dir,
-        os.path.join(tmp, "index"),
-        os.path.join(tmp, "results"),
-        max_files_per_trigger=1,
-        cap=None,  # structurally lifted: no per-wave histogram jobs
-        state_partitions=_STREAM_STATE_PARTITIONS,
-    )
-
-
-def oracle_streaming_embedding_pairs() -> str:
-    """Whole-planted-corpus banded cosine sweep with the cap lifted —
-    what the streamed union of per-wave probes must equal."""
-    cos = (
-        "round(list_dot_product(ea.emb, eb.emb) / "
-        "(sqrt(list_dot_product(ea.emb, ea.emb)) * "
-        "sqrt(list_dot_product(eb.emb, eb.emb))), 3)"
-    )
-    return f"""
-WITH planted AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + {TWIN_ID_OFFSET}, embedding FROM embeddings WHERE vec_id < {N_PLANTED_TWINS}
-),
-base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM planted),
-{_bands_cte(cap=10**9)},
-cand AS (
-  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_a,
-         greatest(a.vec_id, b.vec_id) AS vec_b
-  FROM capped a JOIN capped b USING (band, bkey)
-  WHERE a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, {cos} AS cosine
-FROM cand JOIN base ea ON ea.vec_id = vec_a JOIN base eb ON eb.vec_id = vec_b
-WHERE {cos} >= {similarity.EMBED_NEAR_DUP_THRESHOLD}
-"""
-
-
 def oracle_token_budget_sample() -> str:
     cases = " ".join(
         f"WHEN '{lang}' THEN {b}" for lang, b in sorted(_TOKEN_BUDGETS.items())
@@ -1456,15 +1268,13 @@ FROM walk GROUP BY doc
 # md5-prefix idiom as sampling.sample_key so both engines agree.
 _DELTA_SALT = "delta:"
 _DELTA_PREFIX_CHARS = ("0", "1", "2")
-_EMB_DELTA_PREFIX_CHARS = tuple("01234567")  # ~50%; see q_embedding_delta_near_dup
 
 
-def _delta_flag_col(key_col: str = "doc_id", chars: tuple = _DELTA_PREFIX_CHARS):
+def _delta_flag_col():
     # sampling.sample_key is the single source of truth for the
-    # md5(salt || key) membership-key idiom the oracles mirror verbatim;
-    # every corpus/delta split (documents AND embeddings) derives from here
-    return F.substring(sampling.sample_key(_DELTA_SALT, key_col), 1, 1).isin(
-        *chars
+    # md5(salt || key) membership-key idiom the oracles mirror verbatim
+    return F.substring(sampling.sample_key(_DELTA_SALT, "doc_id"), 1, 1).isin(
+        *_DELTA_PREFIX_CHARS
     )
 
 
@@ -1494,55 +1304,10 @@ def _memo_index(kind: str, sf_dir: str, builder) -> str:
     return _INDEX_MEMO[key]
 
 
-def q_dedup_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The recurring-crawl shape: build the MinHash band index from the
-    corpus partition ONCE (persisted, partitioned by band), then probe it
-    with only the delta's band rows — the corpus is never re-shingled
-    (dedup.dedup_delta_pairs_against_index; the never-reshingled property
-    is pinned by tests/test_operators.py::test_dedup_delta_never_reshingles,
-    which deletes the corpus source after the index write)."""
-    docs = load(spark, sf_dir, "documents")
-    corpus = docs.where(~_delta_flag_col())
-    delta = docs.where(_delta_flag_col())
-    # the returned DF reads the index lazily, so the tmp dir must outlive
-    # this call — _memo_index reaps it at interpreter exit (same pattern
-    # as q_streaming_extract_spans) and reuses the build across calls
-    index_path = _memo_index(
-        "band_index", sf_dir, lambda p: dedup.write_minhash_band_index(corpus, p)
-    )
-    return dedup.dedup_delta_pairs_against_index(spark, delta, index_path)
-
-
-def oracle_dedup_delta_pairs() -> str:
-    """Full-recompute twin restricted to delta-touching pairs: band rows
-    over ALL documents, over-cap buckets (counted over index ∪ delta, what
-    the incremental operator sees) excluded, probe side = delta."""
-    delta_pred = (
-        f"substr(md5('{_DELTA_SALT}' || doc_id::VARCHAR), 1, 1) IN "
-        f"({', '.join(repr(c) for c in _DELTA_PREFIX_CHARS)})"
-    )
-    return f"""
-WITH {_SIG_CTE}, bands AS ({_minhash_bands_sql()}),
-flagged AS (SELECT b.*, {delta_pred} AS is_delta FROM bands b),
-capped AS (
-  SELECT f.* FROM flagged f
-  JOIN (SELECT band, bucket FROM flagged GROUP BY 1, 2
-        HAVING count(*) <= {dedup.MINHASH_BUCKET_CAP}) ok USING (band, bucket)
-)
-SELECT least(a.doc_id, b.doc_id) AS doc_a,
-       greatest(a.doc_id, b.doc_id) AS doc_b,
-       count(*)::BIGINT AS n_shared_bands
-FROM capped a JOIN capped b USING (band, bucket)
-WHERE a.is_delta AND a.doc_id != b.doc_id
-  AND (NOT b.is_delta OR a.doc_id < b.doc_id)
-GROUP BY 1, 2
-"""
-
-
 def q_simhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental fingerprint sweep: persist the corpus partition's
     SimHash index (16 B/doc), then probe it with only the delta hashed —
-    the recurring-crawl twin of dedup_delta_pairs on the simhash side."""
+    the corpus is never re-hashed."""
     docs = load(spark, sf_dir, "documents")
     corpus = docs.where(~_delta_flag_col())
     delta = docs.where(_delta_flag_col())
@@ -1557,8 +1322,9 @@ def q_simhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_simhash_delta_pairs() -> str:
-    """Full-recompute twin restricted to delta-touching pairs (see
-    oracle_dedup_delta_pairs for the split/cap semantics)."""
+    """Full-recompute twin restricted to delta-touching pairs: band rows
+    over ALL documents, over-cap buckets (counted over index ∪ delta,
+    what the incremental operator sees) excluded, probe side = delta."""
     bits = dedup.SIMHASH_PAIR_BITS
     bands = dedup.SIMHASH_BANDS
     band_bits = bits // bands
@@ -1752,18 +1518,18 @@ def _band_key_sql(emb: str, band: int) -> str:
     return " || ".join(bits)
 
 
-def _bands_cte(src: str = "base", cap: int | None = None) -> str:
-    """bands: one row per (vector, band); capped: rows in under-cap buckets."""
+def _bands_cte() -> str:
+    """bands: one row per (vector, band) of ``base``; capped: rows in
+    under-cap buckets."""
     per_band = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band, ({_band_key_sql('emb', b)}) AS bkey FROM {src}"
+        f"SELECT vec_id, {b} AS band, ({_band_key_sql('emb', b)}) AS bkey FROM base"
         for b in range(similarity.N_BANDS)
     )
-    the_cap = similarity.MAX_BUCKET if cap is None else cap
     return f"""bands AS ({per_band}),
 capped AS (
   SELECT b.* FROM bands b
   JOIN (SELECT band, bkey FROM bands GROUP BY 1, 2
-        HAVING count(*) <= {the_cap}) ok USING (band, bkey))"""
+        HAVING count(*) <= {similarity.MAX_BUCKET}) ok USING (band, bkey))"""
 
 
 def oracle_lsh_sign_buckets() -> str:
@@ -1810,21 +1576,6 @@ ranked AS (
 )
 SELECT query_id, vec_id, score, rank::INT AS rank FROM ranked WHERE rank <= 5
 """
-
-
-def q_ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN served from the persisted partition-pruned bucket index —
-    result-identical to ann_lsh_topk (same oracle), but the corpus-sized
-    rows table is read pruned to the probed buckets' directories
-    (tests/test_operators.py::test_ann_lsh_index_partition_pruned asserts
-    the pruned scan)."""
-    embeds = load(spark, sf_dir, "embeddings")
-    index_path = _memo_index(
-        "lsh_bucket_index",
-        sf_dir,
-        lambda p: similarity.write_lsh_bucket_index(embeds, p),
-    )
-    return similarity.ann_lsh_topk_indexed(spark, embeds, index_path)
 
 
 def _sq_dist_sql(e: str, c: str) -> str:
@@ -2049,63 +1800,6 @@ jp AS (
 
 def oracle_embedding_near_dup() -> str:
     return f"WITH {_embedding_edges_cte()} SELECT vec_a, vec_b, cosine FROM jp"
-
-
-def q_embedding_delta_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental semantic dedup: persist the corpus partition's sign-LSH
-    index (vectors + precomputed codes), then probe with only the delta
-    coded — the embedding twin of dedup_delta_pairs/simhash_delta_pairs
-    completing the incremental trilogy (shingle / fingerprint / vector)."""
-    embeds = planted_embeddings(load(spark, sf_dir, "embeddings"))
-    # wider split than the documents one (~50% vs ~19%): the embeddings
-    # fixture is 4× smaller and the planted pair set is only 10 — the
-    # wide split keeps a meaningfully-sized reject set in the gate
-    flag = _delta_flag_col("vec_id", _EMB_DELTA_PREFIX_CHARS)
-    corpus = embeds.where(~flag)
-    delta = embeds.where(flag)
-    index_path = _memo_index(
-        "emb_lsh_index",
-        sf_dir,
-        lambda p: similarity.write_embedding_lsh_index(corpus, p),
-    )
-    return similarity.embedding_delta_near_dup_against_index(
-        spark, delta, index_path
-    )
-
-
-def oracle_embedding_delta_near_dup() -> str:
-    """Full-recompute twin restricted to delta-touching pairs: same
-    banding/cap/cosine chain as the whole-corpus oracle, cap counted over
-    index ∪ delta (the whole planted corpus), probe side = delta."""
-    delta_pred = (
-        f"substr(md5('{_DELTA_SALT}' || vec_id::VARCHAR), 1, 1) IN "
-        f"({', '.join(repr(c) for c in _EMB_DELTA_PREFIX_CHARS)})"
-    )
-    cos = (
-        "round(list_dot_product(ea.emb, eb.emb) / "
-        "(sqrt(list_dot_product(ea.emb, ea.emb)) * "
-        "sqrt(list_dot_product(eb.emb, eb.emb))), 3)"
-    )
-    return f"""
-WITH planted AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + {TWIN_ID_OFFSET}, embedding FROM embeddings WHERE vec_id < {N_PLANTED_TWINS}
-),
-base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM planted),
-{_bands_cte()},
-flagged AS (SELECT c.*, {delta_pred} AS is_delta FROM capped c),
-cand AS (
-  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_a,
-         greatest(a.vec_id, b.vec_id) AS vec_b
-  FROM flagged a JOIN flagged b USING (band, bkey)
-  WHERE a.is_delta AND a.vec_id != b.vec_id
-    AND (NOT b.is_delta OR a.vec_id < b.vec_id)
-)
-SELECT vec_a, vec_b, {cos} AS cosine
-FROM cand JOIN base ea ON ea.vec_id = vec_a JOIN base eb ON eb.vec_id = vec_b
-WHERE {cos} >= {similarity.EMBED_NEAR_DUP_THRESHOLD}
-"""
 
 
 def oracle_embedding_dedup_clusters() -> str:
@@ -2534,57 +2228,6 @@ def q_asof_delta_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temporal.asof_enrich_delta(spark, delta, index_path)
 
 
-def q_cms_delta_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted-CMS probe: the corpus split into a BASE wave (even ids
-    — builds the constant-size sketch index once per sf_dir,
-    bench-amortized) and a DELTA wave (odd ids — tokenized and estimated
-    against index ∪ delta counter sums).  The oracle replays BOTH
-    sketches in SQL — counter sums across segments equal the
-    full-recompute sketch."""
-    docs = load(spark, sf_dir, "documents")
-    index_path = _memo_index(
-        "cms_sketch",
-        sf_dir,
-        lambda p: textstats.write_cms_index(docs.where(F.col("doc_id") % 2 == 0), p),
-    )
-    return textstats.cms_delta_heavy_hitters(
-        spark, docs.where(F.col("doc_id") % 2 == 1), index_path
-    )
-
-
-def q_bloom_delta_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted-Bloom admission gate: the corpus split into a BASE wave
-    (even ids — builds the constant-size bit index once per sf_dir,
-    bench-amortized) and a DELTA wave (odd ids — membership-tested
-    against the index bits).  The wrapper joins back the EXACT base
-    membership as ``actually_seen`` — the exact-yardstick
-    discipline: the oracle then pins both the filter's verdicts AND its
-    measured false positives (possibly_seen ⊇ actually_seen is the
-    no-false-negative guarantee, enforced row-by-row by the hash
-    compare)."""
-    docs = load(spark, sf_dir, "documents")
-    index_path = _memo_index(
-        "bloom_bits",
-        sf_dir,
-        lambda p: dedup.write_bloom_index(docs.where(F.col("doc_id") % 2 == 0), p),
-    )
-    probed = dedup.bloom_delta_new_docs(
-        spark, docs.where(F.col("doc_id") % 2 == 1), index_path
-    )
-    base = (
-        docs.where(F.col("doc_id") % 2 == 0)
-        .select(F.md5("text").alias("digest"))
-        .distinct()
-        .withColumn("seen", F.lit(True))
-    )
-    return probed.join(base, "digest", "left").select(
-        "doc_id",
-        "digest",
-        "possibly_seen",
-        F.coalesce("seen", F.lit(False)).alias("actually_seen"),
-    )
-
-
 def oracle_substring_delta() -> str:
     """The whole-corpus ExactSubstr replay restricted to the delta wave:
     a delta doc's rewrite depends only on per-digest occurrence TOTALS,
@@ -2665,7 +2308,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_containment": q_ngram_containment,
         "winnow_fingerprints": lambda spark, sf: dedup.winnow_fingerprints(load(spark, sf, "documents")),
         "winnow_overlap_pairs": lambda spark, sf: dedup.winnow_overlap_pairs(load(spark, sf, "documents")),
-        "dedup_delta_pairs": q_dedup_delta_pairs,
         "simhash_delta_pairs": q_simhash_delta_pairs,
         "dedup_clusters": lambda spark, sf: dedup.dedup_clusters(load(spark, sf, "documents")),
         "simhash_dedup_clusters": lambda spark, sf: dedup.simhash_dedup_clusters(load(spark, sf, "documents")),
@@ -2694,20 +2336,11 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming extraction (foreachBatch over a multi-trigger file
         # source) against the same golden oracle as the batch path
         "streaming_extract_spans": q_streaming_extract_spans,
-        # text analysis family: the funnel's quality stages, keywords and
-        # the count-min sketch
+        # text analysis family: the funnel's quality stages and keywords
         "quality_scores": lambda spark, sf: textstats.quality_scores(load(spark, sf, "documents")),
         "quality_filter": lambda spark, sf: textstats.quality_filter(load(spark, sf, "documents")),
         # per-doc top-k TF-IDF keywords (round-then-rank, term tie-break)
         "tfidf_top_terms": lambda spark, sf: textstats.tfidf_top_terms(load(spark, sf, "documents")),
-        # count-min-sketch heavy hitters (constant-memory counting)
-        "cms_heavy_hitters": lambda spark, sf: textstats.cms_heavy_hitters(load(spark, sf, "documents")),
-        # heavy hitters of the ACCUMULATED corpus from the persisted
-        # constant-size sketch (only the delta wave is tokenized)
-        "cms_delta_heavy_hitters": q_cms_delta_heavy_hitters,
-        # recurring-crawl admission gate from the persisted Bloom filter
-        # (definitely-new vs possibly-seen, O(delta), exact yardstick)
-        "bloom_delta_new_docs": q_bloom_delta_new_docs,
         # fastText-style hashed-linear quality model (integer weights)
         "quality_classifier_scores": lambda spark, sf: textstats.quality_classifier_scores(
             load(spark, sf, "documents")
@@ -2716,7 +2349,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cosine_topk": lambda spark, sf: similarity.cosine_topk(load(spark, sf, "embeddings")),
         "lsh_sign_buckets": lambda spark, sf: similarity.lsh_sign_buckets(load(spark, sf, "embeddings")),
         "ann_lsh_topk": lambda spark, sf: similarity.ann_lsh_topk(load(spark, sf, "embeddings")),
-        "ann_lsh_topk_indexed": q_ann_lsh_topk_indexed,
         # k-means made engine-portable (rounded distances/means, cid
         # tie-breaks) so the DuckDB twin replays the exact Lloyd iterations
         "ann_ivf_topk": lambda spark, sf: similarity.ann_ivf_topk(load(spark, sf, "embeddings")),
@@ -2732,8 +2364,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_dedup_clusters": lambda spark, sf: similarity.embedding_dedup_clusters(
             planted_embeddings(load(spark, sf, "embeddings"))
         ),
-        # incremental semantic dedup against the persisted sign-LSH index
-        "embedding_delta_near_dup": q_embedding_delta_near_dup,
         # SemDeDup: k-means blocking + within-cluster cosine pruning
         "semantic_dedup": lambda spark, sf: similarity.semantic_dedup(
             load(spark, sf, "embeddings")
@@ -2800,8 +2430,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_normalized_dedup": q_streaming_normalized_dedup,
         # recurring-crawl near-dup: per-wave index probe + append as a stream
         "streaming_simhash_pairs": q_streaming_simhash_pairs,
-        # the vector twin: per-wave sign-LSH probe + segment append
-        "streaming_embedding_pairs": q_streaming_embedding_pairs,
     }
 
 
@@ -2825,7 +2453,6 @@ def build_oracles() -> dict[str, str]:
         "ngram_containment": oracle_ngram_containment(),
         "winnow_fingerprints": oracle_winnow_fingerprints(),
         "winnow_overlap_pairs": oracle_winnow_overlap_pairs(),
-        "dedup_delta_pairs": oracle_dedup_delta_pairs(),
         "simhash_delta_pairs": oracle_simhash_delta_pairs(),
         "dedup_clusters": oracle_dedup_clusters(),
         "simhash_dedup_clusters": oracle_simhash_dedup_clusters(),
@@ -2844,11 +2471,7 @@ def build_oracles() -> dict[str, str]:
         "cosine_topk": oracle_cosine_topk(),
         "lsh_sign_buckets": oracle_lsh_sign_buckets(),
         "ann_lsh_topk": oracle_ann_lsh_topk(),
-        "ann_lsh_topk_indexed": oracle_ann_lsh_topk(),
         "ann_ivf_topk": oracle_ann_ivf_topk(),
-        "cms_heavy_hitters": oracle_cms_heavy_hitters(),
-        "cms_delta_heavy_hitters": oracle_cms_delta_heavy_hitters(),
-        "bloom_delta_new_docs": oracle_bloom_delta_new_docs(),
         "quality_classifier_scores": oracle_quality_classifier_scores(),
         "shingle_novelty": oracle_shingle_novelty(),
         "funnel_conversion": oracle_funnel_conversion(),
@@ -2865,7 +2488,6 @@ def build_oracles() -> dict[str, str]:
         "semantic_dedup": oracle_semantic_dedup(),
         "cluster_balanced_sample": oracle_cluster_balanced_sample(),
         "embedding_dedup_clusters": oracle_embedding_dedup_clusters(),
-        "embedding_delta_near_dup": oracle_embedding_delta_near_dup(),
         "docs_joined_labels": oracle_docs_joined_labels(),
         "session_stats": oracle_session_stats(),
         "windowed_events": oracle_windowed_events(),
@@ -2876,5 +2498,4 @@ def build_oracles() -> dict[str, str]:
         "streaming_exact_dedup": oracle_streaming_exact_dedup(),
         "streaming_normalized_dedup": oracle_streaming_normalized_dedup(),
         "streaming_simhash_pairs": oracle_streaming_simhash_pairs(),
-        "streaming_embedding_pairs": oracle_streaming_embedding_pairs(),
     }

@@ -2,14 +2,16 @@
 (tests/test_contract.py::test_hadoop_fs_only_in_fsio) — jobs and operators
 probe, list and delete paths only through these functions.
 
-Every persisted index in this repo (the ten index families and the
-streamed wave loops) follows ONE durability rule: a writer owns exactly
-one ``wave=<id>`` segment and replays it with delete-before-overwrite,
-so an at-least-once retry is idempotent and committed segments are
-never touched.  :func:`write_wave_segment` is the only code that writes
-a segment.  These helpers go through the Hadoop FileSystem API so any
-scheme the cluster mounts (file://, hdfs://, s3a://) behaves
-identically.
+Every persisted index in this repo (the five index families —
+``simhash`` and ``substring_hist`` written by corpus_job, ``user_state``
+and ``time_rollup`` by events_job, and the quantizer-bearing ``ivf`` —
+and the streamed SimHash loop) follows ONE durability rule: a writer
+owns exactly one ``wave=<id>`` segment and replays it with
+delete-before-overwrite, so an at-least-once retry is idempotent and
+committed segments are never touched.  :func:`write_wave_segment` is
+the only code that writes a segment.  These helpers go through the
+Hadoop FileSystem API so any scheme the cluster mounts (file://,
+hdfs://, s3a://) behaves identically.
 """
 
 from __future__ import annotations
@@ -186,16 +188,6 @@ _COMPACT_MANIFEST = "_compact_manifest"
 _CONSUMED_PREFIX = "_compacted_wave_"
 
 
-def _consumed_ids(spark: SparkSession, path: str) -> set:
-    """Wave ids owned by prior compactions of ``path`` (folded segments
-    plus merged-segment own ids), as strings."""
-    return {
-        nm[len(_CONSUMED_PREFIX):]
-        for nm in _entry_names(spark, path)
-        if nm.startswith(_CONSUMED_PREFIX)
-    }
-
-
 def refuse_mid_compaction(
     spark: SparkSession, path: str, op: str = "reading"
 ) -> None:
@@ -289,7 +281,6 @@ def compact_index(
     path: str,
     partition_by: tuple[str, ...] = (),
     kind: str | None = None,
-    schema: str | None = None,
     transform=None,
 ) -> int:
     """Fold every committed ``wave=<id>`` segment of an index into ONE
@@ -316,11 +307,9 @@ def compact_index(
     A crash anywhere re-runs to completion: re-invoking compact_index on
     a manifest-bearing root RESUMES step 3 exactly (the manifest is the
     source of truth for what was consumed), never re-reads partially
-    deleted segments.  ``schema`` forces the read schema (indexes whose
-    partition-column inference is lossy — e.g. binary-string bkeys);
-    ``transform`` runs on the merged frame before the write (explicit
-    repartition for partitioned rewrites, count re-aggregation for
-    histogram families).  Returns the number of segments folded (0 =
+    deleted segments.  ``transform`` runs on the merged frame before the
+    write (explicit repartition for partitioned rewrites, count
+    re-aggregation for histogram families).  Returns the number of segments folded (0 =
     nothing to do)."""
     fs, _ = _fs_for(spark, path)
     tmp = f"{path}/_compact_tmp"
@@ -338,15 +327,14 @@ def compact_index(
             if w.split("=", 1)[1].lstrip("-").isdigit()
         ]
         new_id = max(int_ids, default=-1) + 1
-        reader = spark.read.schema(schema) if schema else spark.read
-        merged = reader.parquet(path).drop("wave")
+        merged = spark.read.parquet(path).drop("wave")
         if transform is not None:
             merged = transform(merged)
         elif partition_by:
             # EXPLICIT partition count before a partitioned rewrite: a
             # bare repartition(cols) is AQE-coalesced to one task and the
             # per-directory file writes serialize (the round-4 finding —
-            # measured 4× on the LSH build)
+            # measured 4× on a partitioned index build)
             merged = merged.repartition(
                 spark.sparkContext.defaultParallelism * 2, *partition_by
             )
@@ -381,12 +369,10 @@ def compact_index(
 
 
 def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
-    """:func:`compact_index` with the right geometry for each
-    single-table index family (the two-table ``lsh_buckets`` family has
-    its own wrapper, ``similarity.compact_lsh_bucket_index``).  The kind
-    is VERIFIED against the root's ``_index_kind`` marker before
-    anything is read — compacting with the wrong family's geometry would
-    silently drop the partition layout probes prune on."""
+    """:func:`compact_index` with the right geometry for each index
+    family.  The kind is VERIFIED against the root's ``_index_kind``
+    marker before anything is read — compacting with the wrong family's
+    geometry would silently drop the partition layout probes prune on."""
     from pyspark.sql import functions as F
 
     def _merge_user_state(df):
@@ -397,7 +383,6 @@ def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
         return merge_user_state(df)
 
     geometries: dict[str, dict] = {
-        "minhash_bands": {"partition_by": ("band",)},
         "simhash": {},
         "substring_hist": {
             # histogram family: re-aggregate so the merged segment holds
@@ -406,17 +391,6 @@ def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
             "transform": lambda df: df.groupBy("h").agg(
                 F.sum("occ").alias("occ")
             )
-        },
-        "embedding_lsh": {},
-        "cms_sketch": {
-            # counts family: re-aggregate to one row per counter again
-            "transform": lambda df: df.groupBy("d", "bucket").agg(
-                F.sum("cnt").alias("cnt")
-            )
-        },
-        "bloom_bits": {
-            # idempotent-OR family: re-distinct to one row per set bit
-            "transform": lambda df: df.select("pos").distinct()
         },
         "user_state": {
             # idempotent-MAX family: re-merge to one row per user again
@@ -474,8 +448,7 @@ def check_wave_segment(
 ) -> None:
     """Every refusal :func:`write_wave_segment` makes, writing nothing —
     for callers that must refuse BEFORE they touch the root themselves
-    (the LSH bucket index checks both its sub-roots before either is
-    written; the streamed loops check before their own-segment delete).
+    (the streamed SimHash loop checks before its own-segment delete).
 
     Order: wave id, layout, kind, pinned params, consumed wave.  The
     kind is refused BEFORE any param: a foreign family's root must be

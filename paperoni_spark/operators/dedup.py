@@ -204,18 +204,12 @@ def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
 
 
 def _minhash_band_rows(
-    documents: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    materialized: bool = True,
+    documents: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
 ) -> DataFrame:
     """(doc_id, band, bucket): one row per (document, band), where bucket is
     the md5 of that band's signature slice — the LSH banding key.  Derived
     map-side from the signature table; each doc contributes exactly
-    ``bands`` rows of a few bytes each.  ``materialized=False`` skips the
-    multi-consumer cut for single-consumer callers (the index writers):
-    they stream band rows straight to their sink instead of staging a full
-    extra copy in executor storage first."""
+    ``bands`` rows of a few bytes each."""
     rows_per_band = k // bands
     sig = minhash_signatures(documents, k)
     # one EXPLODE of per-band structs, not a 4-way union: the union form
@@ -246,7 +240,7 @@ def _minhash_band_rows(
     # band rows are tiny (ids + 2 hashes, no text) and feed up to four
     # consumers (histogram, anti-join, both self-join sides): materialize
     # once so the shingle+minhash pipeline never re-derives per consumer
-    return materialize(rows) if materialized else rows
+    return materialize(rows)
 
 
 def lsh_candidate_pairs(
@@ -302,105 +296,6 @@ def lsh_candidate_doc_pairs(
         a.join(b, ["band", "bucket"])
         .where(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("long").alias("n_shared_bands"))
-    )
-
-
-def write_minhash_band_index(
-    documents: DataFrame,
-    path: str,
-    wave=0,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-) -> None:
-    """Persist the MinHash-LSH band index — (doc_id, band, bucket) written
-    PARTITIONED BY band inside a ``wave=<id>`` segment — so a recurring
-    crawl never re-shingles the corpus: incremental dedup
-    (:func:`dedup_delta_pairs_against_index`) probes this table instead
-    of re-deriving 10^12 documents' signatures.  ``wave`` 0 is the
-    build; each later wave (the post-probe step of the recurring-crawl
-    loop) owns its own segment with delete-before-overwrite
-    (fsio.write_wave_segment), so at-least-once retries replay instead
-    of double-appending (Iceberg equivalent:
-    ``writeTo(tbl).partitionedBy(col("band"))`` with per-wave
-    overwrite-by-filter).  Caller contract for a wave: its doc_ids are
-    not already indexed (the pipeline's anti-join resume guarantees
-    this), and ``wave`` is stable across retries of the same wave."""
-    from ..fsio import write_wave_segment
-
-    write_wave_segment(
-        _minhash_band_rows(documents, k, bands, materialized=False),
-        path,
-        wave,
-        "minhash_bands",
-        partition_by=("band",),
-    )
-
-
-def dedup_delta_pairs_against_index(
-    spark,
-    delta_docs: DataFrame,
-    index_path: str,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    cap: int = MINHASH_BUCKET_CAP,
-) -> DataFrame:
-    """Incremental (delta-vs-corpus) dedup: MinHash-LSH candidate pairs
-    TOUCHING THE DELTA — (doc_a, doc_b, n_shared_bands), doc_a < doc_b —
-    where at least one side is a new document.  Only the delta is shingled
-    and min-hashed; the corpus side comes entirely from the persisted band
-    index (:func:`write_minhash_band_index`), so a daily 50k-doc wave costs
-    O(delta) compute + one equi-join against the index — never a corpus
-    re-shingle (at 10^12 docs the difference between a daily job and an
-    impossible one).
-
-    Semantics match a full :func:`lsh_candidate_doc_pairs` recompute
-    restricted to delta-touching pairs: bucket sizes for the over-cap
-    guard are counted over index ∪ delta (what the full recompute would
-    see), and the same unhinted anti-join excludes over-cap buckets.
-    Delta-delta pairs orient by doc_id; delta-corpus pairs join exactly
-    once (the probe side is always the delta), so ``count(*)`` per ordered
-    pair is the shared-band count.  Caller contract: delta doc_ids are
-    disjoint from the index (the pipeline's anti-join resume —
-    pipeline/job.py — is the standard way to guarantee it)."""
-    from ..fsio import refuse_mid_compaction
-
-    refuse_mid_compaction(spark, index_path)
-    delta_rows = _minhash_band_rows(delta_docs, k, bands)
-    index_rows = spark.read.parquet(index_path).select(
-        "doc_id", F.col("band").cast("int").alias("band"), "bucket"
-    )
-    all_rows = index_rows.withColumn("from_delta", F.lit(False)).unionByName(
-        delta_rows.withColumn("from_delta", F.lit(True))
-    )
-    hot = (
-        all_rows.groupBy("band", "bucket")
-        .agg(F.count("*").alias("n_in_bucket"))
-        .where(F.col("n_in_bucket") > cap)
-        .select("band", "bucket")
-    )
-    # hot feeds BOTH anti-joins (probe + target) with different downstream
-    # column sets, so nothing below it canonicalizes for ReusedExchange —
-    # without this cut each consumer re-scans the whole index for the
-    # bucket histogram (executed-plan audit: 6 index scans → 2).  The
-    # over-cap key set is tiny by construction.
-    hot = materialize(hot)
-    probe = (
-        delta_rows.join(hot, ["band", "bucket"], "left_anti")
-        .select(F.col("doc_id").alias("probe_id"), "band", "bucket")
-    )
-    target = all_rows.join(hot, ["band", "bucket"], "left_anti").select(
-        F.col("doc_id").alias("target_id"), "band", "bucket", "from_delta"
-    )
-    return (
-        probe.join(target, ["band", "bucket"])
-        .where(F.col("probe_id") != F.col("target_id"))
-        # delta-delta pairs appear in both orientations: keep one
-        .where(~F.col("from_delta") | (F.col("probe_id") < F.col("target_id")))
-        .groupBy(
-            F.least("probe_id", "target_id").alias("doc_a"),
-            F.greatest("probe_id", "target_id").alias("doc_b"),
-        )
         .agg(F.count("*").cast("long").alias("n_shared_bands"))
     )
 
@@ -573,7 +468,7 @@ def write_simhash_index(sh: DataFrame, path: str, wave=0) -> None:
     (doc_id, 8-byte hash) — the smallest possible dedup index (~16 B/doc;
     10^12 docs ≈ 16 TB, trivially smaller than re-tokenizing the corpus).
     Band rows derive MAP-SIDE at probe time from the single fingerprint,
-    so unlike the MinHash band index nothing per-band is stored.
+    so nothing per-band is stored.
 
     ``sh`` is a PRECOMPUTED 64-bit (doc_id, simhash) frame
     (``simhash(docs, SIMHASH_PAIR_BITS)``): after a probe, the frame
@@ -602,9 +497,10 @@ def simhash_delta_pairs_against_index(
     within ``max_hamming`` bits TOUCHING THE DELTA — only the delta is
     tokenized and hashed; the corpus side is the persisted fingerprint
     index (:func:`write_simhash_index`).  Same pigeonhole-exact banding,
-    over-cap guard counted over index ∪ delta (full-recompute semantics),
-    and disjoint-ids caller contract as the MinHash twin
-    (:func:`dedup_delta_pairs_against_index`)."""
+    and over-cap guard counted over index ∪ delta (full-recompute
+    semantics) as the whole-corpus :func:`simhash_near_dup_pairs`.
+    Caller contract: delta doc_ids are disjoint from the index (the
+    pipeline's anti-join resume is the standard way to guarantee it)."""
     return simhash_delta_pairs_from_sh(
         spark,
         simhash(delta_docs, bits),
@@ -666,7 +562,12 @@ def simhash_delta_pairs_from_sh(
             .where(F.col("n_in_bucket") > cap)
             .select("band", "bkey")
         )
-        hot = materialize(hot)  # feeds both anti-joins (see MinHash twin)
+        # hot feeds BOTH anti-joins (probe + target) with different
+        # downstream column sets, so nothing below it canonicalizes for
+        # ReusedExchange — without this cut each consumer re-scans the
+        # whole index for the bucket histogram.  The over-cap key set is
+        # tiny by construction.
+        hot = materialize(hot)
         kept_delta = delta_rows.join(hot, ["band", "bkey"], "left_anti")
         kept_all = all_rows.join(hot, ["band", "bkey"], "left_anti")
     probe = kept_delta.select(
@@ -723,13 +624,15 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components over an arbitrary near-dup pair graph: label
     every node (``doc_id``) with its component's minimum doc_id and mark
     that minimum as the survivor (the row a dedup pass would keep).
-    ``pairs`` carries (doc_a, doc_b) — any edge source: n-gram Jaccard,
-    SimHash Hamming, winnowing overlap, embedding cosine.
+    ``pairs`` carries (doc_a, doc_b) edges between members of ``nodes``
+    — any edge source: n-gram Jaccard, SimHash Hamming, winnowing
+    overlap, embedding cosine.
 
-    Each round is min-label propagation over the edges (one equi-join +
-    partial-agg shuffle) followed by a POINTER-DOUBLING shortcut
-    (``label ← label(label)``, a self-join of the label table): plain
-    propagation alone needs O(diameter) rounds — an adversarial
+    Only edge endpoints are labelled: a node without an edge is its own
+    cluster.  Each round is min-label propagation over the edges (one
+    equi-join + partial-agg shuffle) followed by a POINTER-DOUBLING
+    shortcut (``label ← label(label)``, a self-join of the label table):
+    plain propagation alone needs O(diameter) rounds — an adversarial
     chain-shaped duplicate graph would stall it — while the shortcut
     compounds path lengths geometrically, so convergence is O(log n)
     rounds on any topology (test-pinned: a 1,000-node chain converges in
@@ -754,17 +657,63 @@ CC_MAX_ROUNDS = 64
 def _cc_fixpoint(
     nodes: DataFrame, pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS
 ) -> tuple[DataFrame, int]:
-    """The propagate+shortcut loop; returns (labels, rounds) so the
-    convergence-rate property test can observe round counts."""
+    """The propagate+shortcut loop; returns (labels of every node,
+    rounds) so the convergence-rate property test can observe round
+    counts.
+
+    The fixpoint test runs BEFORE each round: the labels are final iff
+    every edge joins equal labels.  A component whose edges all agree
+    carries one label; that label is some member's id and never exceeds
+    any member's own id, so it is the component minimum.  Before the
+    first round every endpoint carries its own id, so the test is a
+    filter of the edges (an edgeless graph costs that one check and no
+    round).  After a round the test is the next round's propagation
+    step: some edge disagrees iff some propagated label moves, since
+    min-propagation leaves every label in place exactly when each
+    node's label is ≤ all its neighbours' — i.e. when both ends of every
+    edge agree.  Converging therefore costs no extra round."""
     from pyspark import StorageLevel
 
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = nodes.select("doc_id", F.col("doc_id").alias("cluster"))
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        # (doc_id, cluster, mid): mid is the least label over the node
+        # and its neighbours.  It feeds BOTH sides of the shortcut
+        # self-join and the fixpoint test — materialize so the edge join
+        # + agg runs once.  No cut in the loop is lazy end to end: with
+        # AQE on, each materialize call runs its frame's shuffle map
+        # stages at once, and only the result stages that write the
+        # checkpoint blocks wait for the next action, so a round costs
+        # several jobs, not one.
+        neighbor_min = (
+            edges.join(
+                labels.select(
+                    F.col("doc_id").alias("doc_a"), F.col("cluster").alias("nc")
+                ),
+                "doc_a",
+            )
+            .groupBy(F.col("doc_b").alias("doc_id"))
+            .agg(F.min("nc").alias("nmin"))
+        )
+        return materialize(
+            labels.join(neighbor_min, "doc_id", "left").select(
+                "doc_id",
+                "cluster",
+                F.least(F.col("cluster"), F.coalesce("nmin", "cluster")).alias("mid"),
+            )
+        )
+
+    # only edge endpoints are labelled, each starting with its own id
+    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
+        "doc_id", F.col("doc_id").alias("cluster")
+    )
+    unsettled = edges.where(F.col("doc_a") != F.col("doc_b"))
+    prop = None
     rounds = 0
     try:
-        while True:
+        while not unsettled.isEmpty():
             rounds += 1
             if rounds > max_rounds:
                 raise RuntimeError(
@@ -773,57 +722,31 @@ def _cc_fixpoint(
                     "at 2^rounds nodes, so this is an oscillation bug, not "
                     "a large graph"
                 )
-            neighbor_min = (
-                edges.join(
-                    labels.select(
-                        F.col("doc_id").alias("doc_a"), F.col("cluster").alias("nc")
-                    ),
-                    "doc_a",
-                )
-                .groupBy(F.col("doc_b").alias("doc_id"))
-                .agg(F.min("nc").alias("nmin"))
-            )
-            # propagated labels feed BOTH sides of the shortcut self-join
-            # — materialize so the edge join + agg runs once per round.
-            # Neither cut in a round is lazy end to end: with AQE on,
-            # each materialize call runs its frame's shuffle map stages
-            # at once (the edge join + agg here, the shortcut join
-            # below), and only the result stages that write the
-            # checkpoint blocks wait for the round's convergence count.
-            # A round therefore costs several jobs, not one (61 jobs over
-            # 7 rounds for a 64-node chain on local[2]).
-            prop = materialize(
-                labels.join(neighbor_min, "doc_id", "left").select(
-                    "doc_id",
-                    F.least(F.col("cluster"), F.coalesce("nmin", "cluster")).alias(
-                        "mid"
-                    ),
-                    "cluster",
-                )
-            )
+            if prop is None:
+                prop = propagate(labels)
             # pointer doubling: label ← label(label).  The shortcut join
             # moves only the label table (id pairs), never the edges.
             shortcut = prop.select(
                 F.col("doc_id").alias("mid"), F.col("mid").alias("jump")
             )
-            updated = materialize(
+            labels = materialize(
                 prop.join(shortcut, "mid", "left").select(
                     "doc_id",
-                    F.least(F.col("mid"), F.coalesce("jump", "mid")).alias(
-                        "new_cluster"
-                    ),
-                    "cluster",
+                    F.least(F.col("mid"), F.coalesce("jump", "mid")).alias("cluster"),
                 )
             )
-            changed = updated.where(
-                F.col("new_cluster") != F.col("cluster")
-            ).count()
-            labels = updated.select("doc_id", F.col("new_cluster").alias("cluster"))
-            if changed == 0:
-                break
+            prop = propagate(labels)
+            unsettled = prop.where(F.col("mid") != F.col("cluster"))
     finally:
         edges.unpersist()
-    return labels, rounds
+    if rounds == 0:
+        return nodes.select("doc_id", F.col("doc_id").alias("cluster")), 0
+    return (
+        nodes.join(labels, "doc_id", "left").select(
+            "doc_id", F.coalesce("cluster", "doc_id").alias("cluster")
+        ),
+        rounds,
+    )
 
 
 def ngram_jaccard_pairs(
@@ -1340,114 +1263,6 @@ def substring_delta_clean(
         .select("h")
     )
     return _substring_rewrite(delta_documents, positioned, dup_h, n)
-
-
-BLOOM_K = 4  # independent hash functions
-BLOOM_HEX_CHARS = 4  # bit position = first 4 md5 hex chars -> m = 16^4 = 65536
-
-
-def _bloom_positions(digests: DataFrame, k: int = BLOOM_K) -> DataFrame:
-    """(digest) -> one row per (digest, pos): the digest's ``k`` bit
-    coordinates in the shared m=65536-bit array.  Positions are
-    positional-hex like every sketch in the repo — the first
-    BLOOM_HEX_CHARS hex chars of md5('bloom<i>:'||digest), decoded
-    identically by the DuckDB oracle."""
-    probes = [
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"bloom{i}:"), F.col("digest"))),
-                1,
-                BLOOM_HEX_CHARS,
-            ),
-            16,
-            10,
-        )
-        .cast("int")
-        .alias(f"p{i}")
-        for i in range(k)
-    ]
-    return digests.select(
-        "digest", F.explode(F.array(*probes)).alias("pos")
-    )
-
-
-def _bloom_bits(documents: DataFrame, k: int = BLOOM_K) -> DataFrame:
-    """The set-bit table (pos) of a corpus's text-digest Bloom filter —
-    ≤ 65536 rows BY CONSTRUCTION regardless of corpus size.  Built from
-    the distinct digests; setting a bit twice is the same bit (the OR
-    idempotence the index family leans on)."""
-    digests = documents.select(F.md5("text").alias("digest")).distinct()
-    return _bloom_positions(digests, k).select("pos").distinct()
-
-
-def write_bloom_index(
-    documents: DataFrame, path: str, wave=0, k: int = BLOOM_K
-) -> None:
-    """Persist the exact-dedup membership Bloom filter — the TENTH
-    wave-keyed index family, constant-size like the CMS sketch (≤ 65536
-    bit rows per segment, ~0.5 MB) but IDEMPOTENT where CMS is linear:
-    bits combine by OR, so waves need NOT cover disjoint documents —
-    re-sending an already-indexed wave, or overlapping waves, yields the
-    identical filter (at-least-once ingest without the CMS disjointness
-    contract).  ``wave`` 0 is the build; each later wave adds its own
-    segment, with ``wave`` stable across retries of the same wave.
-    Probes union set bits across segments; compaction re-distincts to
-    one row per bit.  ``k`` is pinned to the root: a probe at a
-    different k tests bit coordinates the index never set and would
-    report seen documents as definitely-new (a false NEGATIVE — the one
-    error class a Bloom filter must never make)."""
-    from ..fsio import write_wave_segment
-
-    write_wave_segment(
-        _bloom_bits(documents, k), path, wave, "bloom_bits", params={"bloom_k": k}
-    )
-
-
-def bloom_delta_new_docs(
-    spark,
-    delta_documents: DataFrame,
-    index_path: str,
-    k: int = BLOOM_K,
-) -> DataFrame:
-    """Which delta documents are DEFINITELY NEW vs the accumulated
-    history, answered O(delta) from the constant-size persisted filter:
-    a doc is possibly_seen iff ALL ``k`` of its digest's bit coordinates
-    are set in the index (union of wave segments) — no false negatives
-    by construction, false positives bounded by the filter's load.  This
-    is the recurring-crawl admission gate that never re-reads history:
-    at 100 TB the exact digest table is itself TB-scale, the filter is
-    half an MB.
-
-    Only the delta is hashed; the bit table is ≤ 65536 rows BY
-    CONSTRUCTION, so its join is a forced broadcast (bounded control
-    plane — the anti-join rule for data-dependent hot sets doesn't
-    apply).  Returns (doc_id, digest, possibly_seen); pair it with an
-    exact check where history is still queryable to MEASURE the
-    false-positive rate (the exact-yardstick discipline — the gate
-    query does exactly that)."""
-    from ..fsio import assert_index_param, refuse_mid_compaction
-
-    refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "bloom_k", k)
-    bits = (
-        spark.read.parquet(index_path)
-        .select("pos")  # explicit: tolerate the wave partition column
-        .distinct()
-    )
-    delta = delta_documents.select(
-        "doc_id", F.md5("text").alias("digest")
-    )
-    hits = (
-        _bloom_positions(delta.select("digest").distinct(), k)
-        .join(F.broadcast(bits), "pos")
-        .groupBy("digest")
-        .agg(F.count("*").alias("n_hit"))
-    )
-    return delta.join(hits, "digest", "left").select(
-        "doc_id",
-        "digest",
-        (F.coalesce("n_hit", F.lit(0)) == k).alias("possibly_seen"),
-    )
 
 
 def shingle_novelty(

@@ -23,19 +23,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-PDF_DOCS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("payload", BinaryType()),
-    ]
 )
 
 PDF_SPAN_TYPE = StructType(

@@ -70,10 +70,10 @@ def _cosine_score(a, b):
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Shared top-k ranking block for the four ANN paths (cosine_topk,
-    ann_lsh_topk, ann_lsh_topk_indexed, ann_ivf_topk): per-query window
-    over (score desc, vec_id asc).  The shared oracles require all four
-    to stay in lockstep — single source of truth, not four copies."""
+    """Shared top-k ranking block for the three ANN paths (cosine_topk,
+    ann_lsh_topk, ann_ivf_topk): per-query window over (score desc,
+    vec_id asc).  The shared oracles require all three to stay in
+    lockstep — single source of truth, not three copies."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(
@@ -228,8 +228,7 @@ def banded_buckets(base: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
 
 def _bands_from_coded(coded: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     """(vec_id, band, bkey) from a ``code``-string frame — pure map-side
-    explode of (band, substring) structs; shared by the in-query coding
-    path and the persisted-index probe path."""
+    explode of (band, substring) structs."""
     bands = F.explode(
         F.array(
             *[
@@ -337,124 +336,6 @@ def embedding_dedup_clusters(
     nodes = embeddings.select(F.col("vec_id").alias("doc_id"))
     return connected_components(nodes, pairs).select(
         F.col("doc_id").alias("vec_id"), "cluster", "is_survivor"
-    )
-
-
-def write_embedding_lsh_index(embeddings: DataFrame, path: str, wave=0) -> None:
-    """Persist the sign-LSH embedding index: (vec_id, emb, code) — the
-    vectors WITH their precomputed codes, so an incremental probe
-    (:func:`embedding_delta_near_dup_against_index`) never re-runs the
-    coding UDF over the corpus and reads exact vectors for the cosine
-    gate from the same scan.  The index is one coding pass over the
-    corpus, amortized across every future delta wave; WAVE-KEYED
-    (``wave`` 0 is the build, each probed wave adds its own segment,
-    delete-before-overwrite) so retries replay.  Caller contract for a
-    wave: vec_ids disjoint from the index (anti-join resume) and
-    ``wave`` stable across retries of the same wave."""
-    from ..fsio import write_wave_segment
-
-    base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    write_wave_segment(
-        base.select("vec_id", "emb", lsh_code_col(F.col("emb")).alias("code")),
-        path,
-        wave,
-        "embedding_lsh",
-    )
-
-
-def embedding_delta_near_dup_against_index(
-    spark,
-    delta_embeddings: DataFrame,
-    index_path: str,
-    threshold: float = EMBED_NEAR_DUP_THRESHOLD,
-    cap: int = MAX_BUCKET,
-) -> DataFrame:
-    """Incremental semantic near-dup sweep: cosine pairs ≥ ``threshold``
-    TOUCHING THE DELTA — only the delta runs the coding UDF; the corpus
-    side's codes AND vectors come from the persisted index
-    (:func:`write_embedding_lsh_index`).  Banding, the over-cap guard
-    (counted over index ∪ delta — full-recompute semantics), the
-    exact-cosine gate, and the disjoint-ids caller contract all mirror
-    the whole-corpus operator (:func:`embedding_near_dup_pairs`) and the
-    MinHash/SimHash incremental twins."""
-    delta_base = delta_embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("emb")
-    )
-    # materialize only (vec_id, code) — never the vectors (the cosine
-    # gate re-joins emb from the inputs; the recompute being cut is the
-    # coding UDF, the one expensive map stage)
-    delta_coded = materialize(
-        delta_base.select("vec_id", lsh_code_col(F.col("emb")).alias("code"))
-    )
-    return embedding_delta_near_dup_from_coded(
-        spark, delta_base, delta_coded, index_path, threshold, cap
-    )
-
-
-def embedding_delta_near_dup_from_coded(
-    spark,
-    delta_base: DataFrame,
-    delta_coded: DataFrame,
-    index_path: str,
-    threshold: float = EMBED_NEAR_DUP_THRESHOLD,
-    cap: int | None = MAX_BUCKET,
-) -> DataFrame:
-    """The probe with PRECOMPUTED delta codes — ``delta_base`` carries
-    (vec_id, emb double[]), ``delta_coded`` (vec_id, code).  For callers
-    that also append the wave to the index and must not run the coding
-    UDF twice per vector (the streaming recurring-crawl loop codes once,
-    probes, then writes the same frame as the wave's index segment).
-
-    ``cap=None`` lifts the hot-bucket cap STRUCTURALLY (no histogram, no
-    anti-joins) — the exactness-gate shape; see the SimHash twin."""
-    from ..fsio import refuse_mid_compaction
-
-    refuse_mid_compaction(spark, index_path)
-    index_coded = spark.read.parquet(index_path)
-    delta_bands = _bands_from_coded(delta_coded)
-    index_bands = _bands_from_coded(index_coded.select("vec_id", "code"))
-    all_bands = index_bands.withColumn("from_delta", F.lit(False)).unionByName(
-        delta_bands.withColumn("from_delta", F.lit(True))
-    )
-    kept_delta, kept_all = delta_bands, all_bands
-    if cap is not None:
-        hot = (
-            all_bands.groupBy("band", "bkey")
-            .agg(F.count("*").alias("n_in_bucket"))
-            .where(F.col("n_in_bucket") > cap)
-            .select("band", "bkey")
-        )
-        hot = materialize(hot)  # feeds both anti-joins
-        kept_delta = delta_bands.join(hot, ["band", "bkey"], "left_anti")
-        kept_all = all_bands.join(hot, ["band", "bkey"], "left_anti")
-    probe = kept_delta.select(
-        F.col("vec_id").alias("probe_id"), "band", "bkey"
-    )
-    target = kept_all.select(
-        F.col("vec_id").alias("target_id"), "band", "bkey", "from_delta"
-    )
-    cand = (
-        probe.join(target, ["band", "bkey"])
-        .where(F.col("probe_id") != F.col("target_id"))
-        .where(~F.col("from_delta") | (F.col("probe_id") < F.col("target_id")))
-        .select(
-            F.least("probe_id", "target_id").alias("vec_a"),
-            F.greatest("probe_id", "target_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    emb_source = index_coded.select("vec_id", "emb").unionByName(delta_base)
-    ea = emb_source.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
-    eb = emb_source.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            _cosine_score(F.col("emb_a"), F.col("emb_b")).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
     )
 
 
@@ -690,282 +571,6 @@ def _ivf_probes_col(
         )
     )
     return F.array(*[pairs[p]["cid"].cast("int") for p in range(nprobe)])
-
-
-def write_lsh_bucket_index(embeddings: DataFrame, path: str, wave=0) -> None:
-    """Persist the banded sign-LSH bucket index for partition-pruned ANN:
-
-    * ``<path>/rows``   — (vec_id) PARTITIONED BY (wave, band, bkey): a
-      probe touching q×bands×(R+1) buckets reads exactly those buckets'
-      directories (within each wave segment) and none of the other 2^R
-      per band (same pruning story as write_ivf_index; Iceberg:
-      ``partitionedBy(col("band"), col("bkey"))``).  At production R
-      (20-24 bits) partition by band + a bkey PREFIX and let min/max
-      file stats prune within — directory-per-bucket is the
-      fixture-scale rendering of the same layout.  Read back ONLY via
-      :func:`lsh_probe_scan`, which supplies an explicit schema — without
-      it partition type inference parses the binary-string keys as
-      integers (silent key collapse past long range).
-    * ``<path>/counts`` — (band, bkey, n_vecs) per wave segment: the
-      bucket histogram, so probes enforce the over-cap skew guard
-      WITHOUT scanning the corpus-sized rows table; the guard sums the
-      per-wave segments (a few tiny files per bucket) at probe time.
-
-    Both sinks are WAVE-KEYED (``wave=<id>`` subdirectories, the same
-    layout as the streamed wave loops): ``wave`` 0 is the build and
-    every later wave owns exactly one rows + one counts segment, each
-    written delete-before-overwrite, so an at-least-once retry of the
-    same wave id replays both instead of double-appending, and
-    committed waves are never touched.  The histogram stays exact
-    because each wave's counts derive from that wave's band rows alone
-    and the probe sums segments.  Rows go first, counts second — a
-    mid-crash leaves a wave with rows the histogram doesn't count yet,
-    which only relaxes the probe-side cap guard for that wave until the
-    retry.  Caller contract for a wave: vec_ids disjoint from the index
-    (anti-join resume, as the delta twins) and ``wave`` unique per
-    wave, STABLE across retries of the same wave (a retry under a fresh
-    id would double-append)."""
-    from ..fsio import assert_index_kind, check_wave_segment, write_wave_segment
-
-    spark = embeddings.sparkSession
-    kind = "lsh_buckets"
-    rows_root, counts_root = f"{path}/rows", f"{path}/counts"
-    # one index, two tables: both sub-roots' refusals (a legacy flat
-    # bucket index, a consumed wave) and the root's kind refusal run
-    # before either segment is touched
-    check_wave_segment(spark, rows_root, wave, kind)
-    check_wave_segment(spark, counts_root, wave, kind)
-    assert_index_kind(spark, path, kind)
-    base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    # two consumers (rows write + counts agg): materialize the compact
-    # band rows so the wave's coding UDF runs once, per the repo's
-    # multi-consumer cut rule; repartition on the partition columns so
-    # every (band, bkey) directory gets ONE file instead of one per task
-    # that touched it — at production scale the unrepartitioned write is
-    # a tasks × buckets small-files explosion
-    rows = materialize(banded_buckets(base))
-    # EXPLICIT partition count: a bare repartition("band","bkey") is an
-    # AQE-optimizable shuffle that coalesces a small wave into ONE task,
-    # serializing the hundreds of per-bucket file writes (measured 4× on
-    # the sf0.01 build: 12.7 s → 3.1 s); the explicit count is respected
-    # by AQE and keeps the per-bucket writers spread across the executors
-    n_parts = spark.sparkContext.defaultParallelism * 2
-    write_wave_segment(
-        rows.repartition(n_parts, "band", "bkey"),
-        rows_root,
-        wave,
-        kind,
-        partition_by=("band", "bkey"),
-    )
-    write_wave_segment(
-        rows.groupBy("band", "bkey").agg(F.count("*").alias("n_vecs")).coalesce(1),
-        counts_root,
-        wave,
-        kind,
-    )
-
-
-def compact_lsh_bucket_index(spark, path: str) -> int:
-    """Fold the bucket index's accumulated wave segments into one —
-    the two-table rendering of :func:`paperoni_spark.fsio.compact_index`
-    (rows and counts compact independently; each sub-root commits via
-    its own manifest, so a crash between them re-runs to completion).
-    Rows are re-read under the EXPLICIT schema (the partition-inference
-    bkey trap) and rewritten with the explicit repartition count; counts
-    are re-aggregated to one row per (band, bkey) — probes sum segments
-    either way, this restores build-time geometry.  Probe results are
-    identical before and after (test-pinned); consumed wave ids are
-    refused for future appends on both sub-roots."""
-    from ..fsio import (
-        _COMPACT_MANIFEST,
-        _consumed_ids,
-        assert_index_kind,
-        compact_index,
-        path_exists,
-        wave_names,
-    )
-
-    assert_index_kind(spark, path, "lsh_buckets")
-    # Refuse a HALF-WRITTEN append before folding anything: a crash
-    # between the rows and counts writes of write_lsh_bucket_index
-    # is healed by retrying the wave — but only while the wave is still
-    # a segment.  If compaction folded the rows half first, the retry
-    # would be refused forever and the histogram would permanently
-    # under-count those vectors (over-cap buckets would pass the cap
-    # guard).  A wave id is legitimate if the OTHER sub-root has it as
-    # a segment or already consumed it, or it is itself a consumed id
-    # (the merged segment of this wrapper's earlier, crashed phase) —
-    # that last clause is what keeps the two-phase wrapper resumable.
-    # Skip when a sub-root manifest exists: that is a mid-commit resume
-    # whose pre-state was validated when the compaction started.
-    roots = {sub: f"{path}/{sub}" for sub in ("rows", "counts")}
-    if not any(
-        path_exists(spark, f"{r}/{_COMPACT_MANIFEST}") for r in roots.values()
-    ):
-        waves = {
-            sub: {w.split("=", 1)[1] for w in wave_names(spark, r)}
-            for sub, r in roots.items()
-        }
-        consumed = {sub: _consumed_ids(spark, r) for sub, r in roots.items()}
-        for sub, other in (("rows", "counts"), ("counts", "rows")):
-            orphans = (
-                waves[sub]
-                - waves[other]
-                - consumed[other]
-                - consumed[sub]
-            )
-            if orphans:
-                raise ValueError(
-                    f"{path} has wave segments only in its {sub} table "
-                    f"(waves {sorted(orphans)}): a half-written append.  "
-                    "Retry the append at the same wave id to complete it "
-                    "before compacting — folding the half now would "
-                    "foreclose the retry and permanently desynchronize "
-                    "rows and counts."
-                )
-    n_rows = compact_index(
-        spark,
-        f"{path}/rows",
-        partition_by=("band", "bkey"),
-        schema=_LSH_ROWS_SCHEMA,
-    )
-    n_counts = compact_index(
-        spark,
-        f"{path}/counts",
-        schema=_LSH_COUNTS_SCHEMA,
-        transform=lambda df: df.groupBy("band", "bkey")
-        .agg(F.sum("n_vecs").alias("n_vecs"))
-        .coalesce(1),
-    )
-    return max(n_rows, n_counts)
-
-
-# Explicit read schema for the rows table: partition-column type inference
-# parses a bkey directory value like "00000101" as the INTEGER 101 — at
-# 8 bits the numeric coercion happens to stay injective, but at production
-# widths (R=20-24, or a bkey-prefix layout) string-vs-number comparison
-# coerces both sides to double and distinct keys collapse silently.
-_LSH_ROWS_SCHEMA = "vec_id BIGINT, wave INT, band INT, bkey STRING"
-_LSH_COUNTS_SCHEMA = "band INT, bkey STRING, n_vecs BIGINT, wave INT"
-
-
-def _per_band_pred(by_band: dict):
-    """OR of per-band ``band = b AND bkey IN (...)`` literal terms."""
-    pred = None
-    for band, keys in sorted(by_band.items()):
-        term = (F.col("band") == band) & F.col("bkey").isin(keys)
-        pred = term if pred is None else pred | term
-    return pred
-
-
-def lsh_probe_scan(
-    spark, index_path: str, probe_keys: set, cap: int = MAX_BUCKET
-):
-    """Partition-pruned read of the probed under-cap buckets from a
-    :func:`write_lsh_bucket_index` layout.  ``probe_keys`` is a bounded
-    (band, bkey) control-plane set; the counts table enforces the
-    over-cap skew guard WITHOUT touching the rows table — and the probe
-    predicate is pushed INTO the counts scan (the histogram is 2^R × bands
-    rows at production R: collecting it whole would be a driver-OOM cliff,
-    so only the handful of surviving probe rows ever reach the driver).
-    Surviving keys become a literal per-band predicate on the rows
-    table's partition columns — Catalyst prunes the directory listing
-    before any IO (PartitionFilters, not PushedFilters).  Returns None
-    when no probed bucket survives (empty probe).  The cap guard sums a
-    bucket's count across the per-wave counts segments (the probe
-    predicate is still pushed into the scan — only probed buckets'
-    counts rows are read, never the 2^R × bands histogram)."""
-    probe_by_band: dict[int, list[str]] = {}
-    for band, bkey in probe_keys:
-        probe_by_band.setdefault(band, []).append(bkey)
-    if not probe_by_band:
-        return None
-    from ..fsio import refuse_mid_compaction
-
-    for sub in ("rows", "counts"):
-        refuse_mid_compaction(spark, f"{index_path}/{sub}")
-    counts = spark.read.schema(_LSH_COUNTS_SCHEMA).parquet(f"{index_path}/counts")
-    survivors = (
-        counts.where(_per_band_pred(probe_by_band))
-        .groupBy("band", "bkey")
-        .agg(F.sum("n_vecs").alias("n_vecs"))
-        .where(F.col("n_vecs") <= cap)
-        .select("band", "bkey")
-        .collect()
-    )
-    by_band: dict[int, list[str]] = {}
-    for r in survivors:
-        by_band.setdefault(r["band"], []).append(r["bkey"])
-    if not by_band:
-        return None
-    return (
-        spark.read.schema(_LSH_ROWS_SCHEMA)
-        .parquet(f"{index_path}/rows")
-        .where(_per_band_pred(by_band))
-    )
-
-
-def ann_lsh_topk_indexed(
-    spark,
-    embeddings: DataFrame,
-    index_path: str,
-    n_queries: int = 10,
-    k: int = 5,
-    cap: int = MAX_BUCKET,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """ANN top-k served from the PERSISTED bucket index — result-identical
-    to :func:`ann_lsh_topk` when the index was built from ``embeddings``,
-    but the corpus-sized rows table is read PARTITION-PRUNED: the query
-    band keys (n_queries × bands × (R+1) after multi-probe — a bounded
-    control-plane set, same rationale as IVF centroids) are collected,
-    under-cap-filtered against the tiny counts table, and turned into a
-    literal per-band predicate on the partition columns, so only the
-    probed buckets' directories are listed and read.  Scoring then joins
-    the (small) candidate set back to the vectors table."""
-    base = embeddings.select("vec_id", _to_double(F.col("embedding")).alias("emb"))
-    qbands = banded_buckets(base.where(F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("query_id"), "band", "bkey"
-    )
-    if multiprobe:
-        qbands = qbands.select(
-            "query_id", "band", F.explode(_probe_keys(F.col("bkey"))).alias("bkey")
-        )
-    # ONE execution of the query-banding pipeline: the collected rows are
-    # both the probe-key set and (as a literal frame) the broadcast join
-    # side — re-deriving the distinct for the join would run its shuffle
-    # a second time for identical rows
-    qrows = qbands.distinct().collect()
-    probe_keys = {(r["band"], r["bkey"]) for r in qrows}
-    qbands = spark.createDataFrame(
-        [(r["query_id"], r["band"], r["bkey"]) for r in qrows],
-        "query_id: long, band: int, bkey: string",
-    )
-    pruned = lsh_probe_scan(spark, index_path, probe_keys, cap)
-    if pruned is None:
-        return spark.createDataFrame(
-            [], "query_id: long, vec_id: long, score: double, rank: int"
-        )
-
-    cand = (
-        pruned.join(F.broadcast(qbands), ["band", "bkey"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    queries = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    scored = (
-        cand.join(base, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _cosine_score(F.col("qemb"), F.col("emb")).alias("score"),
-        )
-    )
-    return _rank_topk(scored, k)
 
 
 def _probe_keys(key_col, planes_per_band: int = PLANES_PER_BAND):

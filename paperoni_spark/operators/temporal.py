@@ -381,8 +381,7 @@ def write_user_state_index(
 # Explicit read schemas (wave typed as STRING): partition-value
 # inference parses a numeric-looking wave dir name into an integer and
 # NORMALIZES it (wave=007 reads back as 7), so a string-compared
-# exclusion silently misses the segment — the same inference hazard the
-# LSH rows scan pins (similarity._LSH_ROWS_SCHEMA, round 4).
+# exclusion silently misses the segment.
 _USER_STATE_SCHEMA = "user_id long, ts_us long, event_id long, wave string"
 ROLLUP_SCHEMA = (
     "b long, event_type string, n_events long, sum_value_micro long, wave string"

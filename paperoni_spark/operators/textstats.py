@@ -3,8 +3,7 @@
 These are the stages of the corpus funnel around the extraction kernel
 (compose.build_training_corpus): the rule-based quality signals and
 verdict, and the hashed-linear quality model — plus per-document TF-IDF
-keywords and the count-min-sketch heavy hitters (built in memory, or
-probed from a persisted wave-keyed sketch index).  All of them are pure Catalyst expressions (no Python UDFs):
+keywords.  All of them are pure Catalyst expressions (no Python UDFs):
 a single scan, map-side computation, and at most a partial-aggregated
 ``groupBy`` — the plan stays in whole-stage codegen and scales linearly
 with input splits at 100 TB.
@@ -185,187 +184,6 @@ def tfidf_top_terms(
         .where(F.col("rank") <= top_k)
         .select("doc_id", "term", "tfidf", "rank")
     )
-
-
-CMS_DEPTH = 4  # independent hash rows
-CMS_HEX_CHARS = 3  # bucket = first 3 md5 hex chars -> width 16^3 = 4096
-CMS_TOP_K = 20
-
-
-def _cms_hashed(counts: DataFrame, depth: int) -> DataFrame:
-    """(tok, tf) vocabulary counts -> one row per (tok, tf, d, bucket):
-    the token's counter coordinates in every sketch row.  Bucket hashing
-    is positional — the first CMS_HEX_CHARS hex chars of
-    md5('cms<d>:'||token) — decoded identically in the DuckDB oracles."""
-    probes = [
-        F.struct(
-            F.lit(d).alias("d"),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"cms{d}:"), F.col("tok"))),
-                    1,
-                    CMS_HEX_CHARS,
-                ),
-                16,
-                10,
-            )
-            .cast("int")
-            .alias("bucket"),
-        )
-        for d in range(depth)
-    ]
-    return counts.select(
-        "tok", "tf", F.explode(F.array(*probes)).alias("h")
-    ).select("tok", "tf", F.col("h.d").alias("d"), F.col("h.bucket").alias("bucket"))
-
-
-def _cms_sketch(documents: DataFrame, depth: int) -> DataFrame:
-    """The depth×4096 counter table (d, bucket, cnt) over a corpus's
-    whitespace tokens.  Built from the ALREADY-AGGREGATED vocabulary
-    counts, not the raw token stream — summing per-token totals into a
-    bucket is arithmetically identical to counting the stream into it,
-    so the counters match a streaming build exactly while the heavy
-    zipf head is absorbed by the count shuffle's map-side partial agg."""
-    counts = (
-        documents.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("tf"))
-    )
-    return _cms_hashed(counts, depth).groupBy("d", "bucket").agg(
-        F.sum("tf").alias("cnt")
-    )
-
-
-def cms_heavy_hitters(
-    documents: DataFrame, depth: int = CMS_DEPTH, top_k: int = CMS_TOP_K
-) -> DataFrame:
-    """Count-min-sketch heavy hitters (Cormode & Muthukrishnan 2005):
-    estimate every token's frequency from a depth×4096 counter array —
-    the CONSTANT-MEMORY structure a streaming ingest would maintain —
-    and report the top-k tokens by estimate alongside their true counts
-    and the sketch's overestimate (est − true ≥ 0 always; the min over
-    ``depth`` independent rows bounds collision inflation).
-
-    The sketch table is ≤ depth×4096 rows BY CONSTRUCTION
-    (:func:`_cms_sketch`), so its join back to the vocabulary is a
-    forced broadcast (bounded control plane, not a data-dependent hot
-    set — the anti-join rule doesn't apply).  The final top-k is a
-    global orderBy+limit (TakeOrdered — no single-partition window over
-    the vocabulary); only the k kept rows pass through the rank window."""
-    from pyspark.sql.window import Window
-
-    counts = (
-        documents.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("tf"))
-    )
-    counts = materialize(counts)  # feeds the sketch build + the estimate join
-    hashed = _cms_hashed(counts, depth)
-    sketch = hashed.groupBy("d", "bucket").agg(F.sum("tf").alias("cnt"))
-    est = (
-        hashed.join(F.broadcast(sketch), ["d", "bucket"])
-        .groupBy("tok", "tf")
-        .agg(F.min("cnt").alias("est"))
-    )
-    top = est.orderBy(F.col("est").desc(), F.col("tok").asc()).limit(top_k)
-    w = Window.orderBy(F.col("est").desc(), F.col("tok").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        F.col("tok").alias("token"),
-        F.col("tf").cast("long").alias("true_count"),
-        F.col("est").cast("long").alias("cms_estimate"),
-        (F.col("est") - F.col("tf")).cast("long").alias("overestimate"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-
-
-def write_cms_index(
-    documents: DataFrame, path: str, wave=0, depth: int = CMS_DEPTH
-) -> None:
-    """Persist the count-min sketch — the NINTH wave-keyed index family,
-    and the first whose total size is CONSTANT in corpus size (each
-    segment is ≤ depth×4096 counter rows, ~50 KB).  CMS counters add
-    linearly, so the sketch of an accumulated corpus is the elementwise
-    SUM of its waves' sketches: ``wave`` 0 is the build, each later
-    crawl wave adds its own segment (delete-before-overwrite → retries
-    replay), probes sum counters across segments, and compaction
-    re-aggregates to one row per (d, bucket) — the counts-family
-    geometry.  Caller contract for a wave: documents disjoint from the
-    waves already folded in (a re-counted doc double-counts — CMS has
-    no subtraction) and ``wave`` stable across retries of the same
-    wave.  ``depth`` is pinned to the root: a probe at a different
-    depth would min over rows the index never wrote and silently
-    under-estimate."""
-    from ..fsio import write_wave_segment
-
-    write_wave_segment(
-        _cms_sketch(documents, depth),
-        path,
-        wave,
-        "cms_sketch",
-        params={"cms_depth": depth},
-    )
-
-
-def cms_delta_heavy_hitters(
-    spark,
-    delta_documents: DataFrame,
-    index_path: str,
-    depth: int = CMS_DEPTH,
-    top_k: int = CMS_TOP_K,
-) -> DataFrame:
-    """Heavy hitters of the ACCUMULATED corpus, probed O(delta): only the
-    delta wave is tokenized; the history is the persisted constant-size
-    sketch.  Estimates are exactly what :func:`cms_heavy_hitters` would
-    compute over index ∪ delta (counter sums are order-independent),
-    restricted to candidates the delta carries — the recurring-crawl
-    question is "what is heavy NOW, given everything so far".
-
-    Returns (token, delta_count, cms_estimate, rank): delta_count is the
-    token's true count WITHIN the delta (the full-corpus true count is
-    exactly what the sketch exists to avoid recounting);
-    cms_estimate ≥ the full-corpus true count always."""
-    from pyspark.sql.window import Window
-
-    from ..fsio import assert_index_param, refuse_mid_compaction
-
-    refuse_mid_compaction(spark, index_path)
-    assert_index_param(spark, index_path, "cms_depth", depth)
-    counts = (
-        delta_documents.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("tf"))
-    )
-    counts = materialize(counts)  # feeds the delta sketch + the estimate join
-    hashed = _cms_hashed(counts, depth)
-    delta_sketch = hashed.groupBy("d", "bucket").agg(F.sum("tf").alias("cnt"))
-    idx = (
-        spark.read.parquet(index_path)
-        .select("d", "bucket", "cnt")  # explicit: tolerate the wave column
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").alias("idx_cnt"))
-    )
-    # every candidate coordinate exists in the delta sketch, so a LEFT
-    # join picks up history where it overlaps; both sides are ≤
-    # depth×4096 rows by construction — forced broadcast is safe
-    combined = delta_sketch.join(F.broadcast(idx), ["d", "bucket"], "left").select(
-        "d",
-        "bucket",
-        (F.col("cnt") + F.coalesce(F.col("idx_cnt"), F.lit(0))).alias("cnt"),
-    )
-    est = (
-        hashed.join(F.broadcast(combined), ["d", "bucket"])
-        .groupBy("tok", "tf")
-        .agg(F.min("cnt").alias("est"))
-    )
-    top = est.orderBy(F.col("est").desc(), F.col("tok").asc()).limit(top_k)
-    w = Window.orderBy(F.col("est").desc(), F.col("tok").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        F.col("tok").alias("token"),
-        F.col("tf").cast("long").alias("delta_count"),
-        F.col("est").cast("long").alias("cms_estimate"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-
 
 
 QC_BUCKET_HEX = 4  # 16^4 = 65536 hashed feature buckets

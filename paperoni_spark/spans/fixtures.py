@@ -9,7 +9,6 @@ from typing import Any
 
 from .codec import html_to_spans
 
-BASE_URL = "http://example.com/"
 
 # test_html/simple.html (used via mod.rs:2185), inlined verbatim
 FX_SIMPLE = """<!DOCTYPE html>

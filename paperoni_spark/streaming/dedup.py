@@ -12,7 +12,7 @@ plain batch ``groupBy(digest)`` oracle row-for-row.
 State is 8 + 8 bytes per distinct document — the minimum any exact
 ingest-dedup can carry — and emission is one row per (batch, digest seen
 in that batch), written through ``foreachBatch`` into ``batch=<id>``
-parquet segments (the same durable layout as the indexed loops' results —
+parquet segments (the same durable layout as the SimHash loop's results —
 never a driver-resident sink); the final-state read-back takes each
 digest's latest emission (n_docs is strictly monotone: a group only
 emits when it received rows), a distributed struct-max aggregation.
@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -214,152 +211,51 @@ def run_streaming_simhash_dedup(
     segments: the empty ``wave=0`` build is seeded ONLY when the root
     holds no wave segment yet, never wiping fingerprints a prior run
     committed."""
+    from ..fsio import check_wave_segment, delete_path, wave_names, write_wave_segment
     from ..materialize import materialize
     from ..operators import dedup as dedup_ops
+    from .util import state_shuffle_partitions
 
     # the 64-bit PAIR fingerprint everywhere (simhash() alone defaults to
     # the 16-bit statistics width — a silent 700× pair explosion)
     bits = dedup_ops.SIMHASH_PAIR_BITS
     kwargs = {} if cap is _DEFAULT_CAP else {"cap": cap}
 
-    def wave(batch_df: DataFrame):
+    if not wave_names(spark, index_dir):
+        empty = spark.createDataFrame([], DOCUMENTS_TABLE_SCHEMA)
+        write_wave_segment(dedup_ops.simhash(empty, bits), index_dir, 0, "simhash")
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # batch <id> owns the index segment wave=b<id>: stable across
+        # retries and never the build's 0
+        wave = f"b{batch_id}"
+        check_wave_segment(spark, index_dir, wave, "simhash")
+        # a failed prior attempt of THIS batch leaves its own segment
+        delete_path(spark, f"{index_dir}/wave={wave}")
         # hash ONCE: the same materialized (doc_id, simhash) frame feeds
         # the probe and becomes the wave's index segment
         sh = materialize(dedup_ops.simhash(batch_df, bits))
         pairs = dedup_ops.simhash_delta_pairs_from_sh(
             spark, sh, index_dir, delta_materialized=True, **kwargs
         )
-        return pairs, sh
-
-    empty = dedup_ops.simhash(spark.createDataFrame([], DOCUMENTS_TABLE_SCHEMA), bits)
-    return _run_indexed_wave_stream(
-        spark, docs_dir, index_dir, results_dir, DOCUMENTS_TABLE_SCHEMA,
-        "simhash", empty, wave, ["doc_a", "doc_b", "hamming"],
-        max_files_per_trigger, path_glob, state_partitions,
-    )
-
-
-def _run_indexed_wave_stream(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    results_dir: str,
-    input_schema: StructType,
-    kind: str,
-    empty_segment: DataFrame,
-    process_wave,
-    out_cols: list[str],
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "*.parquet",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Shared scaffolding for the streamed recurring-crawl loops — the
-    exactly-once/restart machinery lives HERE, once: the index root is
-    an ordinary ``kind`` index, so every segment goes through
-    fsio.write_wave_segment and its refusals.  ``empty_segment`` seeds
-    the ``wave=0`` build only when the root holds no wave segment
-    (never wiping a prior run's committed segments).  Batch ``<id>``
-    owns the index segment ``wave=b<id>`` — stable across retries and
-    never the build's 0 — and deletes it before the probe (at-least-once
-    retries restore the disjoint-ids contract); results are batch-keyed
-    overwrite writes, read back accumulated.  ``process_wave(batch_df)``
-    returns ``(pairs_df, index_segment_df)``; the restart-retention test
-    covers every loop built on this scaffolding.  These loops keep NO
-    operator state (the index is the state), but ``state_partitions``
-    still pins the shuffle width of the per-batch probe jobs — a
-    gate-scale wave doesn't need the session's full width."""
-    from ..fsio import check_wave_segment, delete_path, wave_names, write_wave_segment
-    from .util import state_shuffle_partitions
-
-    if not wave_names(spark, index_dir):
-        write_wave_segment(empty_segment, index_dir, 0, kind)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        wave = f"b{batch_id}"
-        check_wave_segment(spark, index_dir, wave, kind)
-        # a failed prior attempt of THIS batch leaves its own segment
-        delete_path(spark, f"{index_dir}/wave={wave}")
-        pairs, segment = process_wave(batch_df)
         pairs.write.mode("overwrite").parquet(f"{results_dir}/batch={batch_id}")
-        write_wave_segment(segment, index_dir, wave, kind)
+        write_wave_segment(sh, index_dir, wave, "simhash")
 
-    reader = spark.readStream.schema(input_schema).option(
+    reader = spark.readStream.schema(DOCUMENTS_TABLE_SCHEMA).option(
         "pathGlobFilter", path_glob
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    # the loop keeps NO operator state (the index is the state), but
+    # state_partitions still pins the shuffle width of the per-batch
+    # probe jobs — a gate-scale wave doesn't need the session's width
     with state_shuffle_partitions(spark, state_partitions):
         query = (
-            reader.parquet(input_dir)
+            reader.parquet(docs_dir)
             .writeStream.foreachBatch(process_batch)
             .trigger(availableNow=True)
             .option("checkpointLocation", f"{results_dir}_ckpt")
             .start()
         )
         query.awaitTermination()
-    return spark.read.parquet(results_dir).select(*out_cols)
-
-
-EMBEDDINGS_TABLE_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ]
-)
-
-
-def run_streaming_embedding_dedup(
-    spark: SparkSession,
-    emb_dir: str,
-    index_dir: str,
-    results_dir: str,
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "*.parquet",
-    threshold: float | None = None,
-    cap=_DEFAULT_CAP,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """The vector twin of :func:`run_streaming_simhash_dedup` — semantic
-    near-dup sweep as a stream: each wave is sign-LSH-coded ONCE (the
-    materialized (vec_id, emb, code) frame feeds the probe and becomes
-    the wave's index segment), probed against the persisted
-    ``embedding_lsh`` index, and written under the same wave-keyed
-    idempotent layout (own segment deleted before the probe; restart
-    keeps committed segments).
-    Completes the streamed recurring-crawl trilogy: text fingerprints
-    (SimHash), and vectors here — the pair surfaces exactly once, in the
-    batch where its later vector arrives."""
-    from ..materialize import materialize
-    from ..operators import similarity as sim
-
-    kwargs = {}
-    if threshold is not None:
-        kwargs["threshold"] = threshold
-    if cap is not _DEFAULT_CAP:
-        kwargs["cap"] = cap
-
-    def wave(batch_df: DataFrame):
-        base = batch_df.select(
-            "vec_id", sim._to_double(F.col("embedding")).alias("emb")
-        )
-        coded = materialize(
-            base.select(
-                "vec_id", "emb", sim.lsh_code_col(F.col("emb")).alias("code")
-            )
-        )
-        pairs = sim.embedding_delta_near_dup_from_coded(
-            spark,
-            coded.select("vec_id", "emb"),
-            coded.select("vec_id", "code"),
-            index_dir,
-            **kwargs,
-        )
-        return pairs, coded
-
-    empty = spark.createDataFrame([], "vec_id: long, emb: array<double>, code: string")
-    return _run_indexed_wave_stream(
-        spark, emb_dir, index_dir, results_dir, EMBEDDINGS_TABLE_SCHEMA,
-        "embedding_lsh", empty, wave, ["vec_a", "vec_b", "cosine"],
-        max_files_per_trigger, path_glob, state_partitions,
-    )
+    return spark.read.parquet(results_dir).select("doc_a", "doc_b", "hamming")

@@ -151,49 +151,6 @@ def test_ivf_compaction_parity(spark, embeds, tmp_path):
         similarity.write_ivf_index(assigned, path, centroids)
 
 
-def test_lsh_bucket_compaction_parity(spark, embeds, tmp_path):
-    """Two-table family: rows keep the (band, bkey) partition layout
-    (probe stays partition-pruned), counts re-aggregate to one row per
-    bucket, and the indexed ANN result is identical."""
-    path = str(tmp_path / "lsh_idx")
-    corpus = embeds.where(F.col("vec_id") % 10 < 8)
-    wave1 = embeds.where(F.col("vec_id") % 10 >= 8)
-    similarity.write_lsh_bucket_index(corpus, path)
-    similarity.write_lsh_bucket_index(wave1, path, 1)
-    before = _rows(similarity.ann_lsh_topk_indexed(spark, embeds, path))
-    assert similarity.compact_lsh_bucket_index(spark, path) == 2
-    assert fsio.wave_names(spark, f"{path}/rows") == ["wave=2"]
-    assert fsio.wave_names(spark, f"{path}/counts") == ["wave=2"]
-    after = _rows(similarity.ann_lsh_topk_indexed(spark, embeds, path))
-    assert after == before
-    # counts re-aggregated: one row per bucket
-    counts = spark.read.schema(similarity._LSH_COUNTS_SCHEMA).parquet(
-        f"{path}/counts"
-    )
-    assert counts.count() == counts.select("band", "bkey").distinct().count()
-    # appends at consumed ids are refused on the sub-roots too
-    with pytest.raises(ValueError, match="owned by a compaction"):
-        similarity.write_lsh_bucket_index(wave1, path, 1)
-
-
-def test_lsh_half_append_refused(spark, embeds, tmp_path):
-    """A crash between the rows and counts writes of an append is healed
-    by retrying the wave — compaction must refuse to fold the rows half
-    first (the retry would be refused forever and the histogram would
-    permanently under-count), and the retry must unblock it."""
-    path = str(tmp_path / "lsh_half")
-    similarity.write_lsh_bucket_index(
-        embeds.where(F.col("vec_id") % 10 < 8), path
-    )
-    wave1 = embeds.where(F.col("vec_id") % 10 >= 8)
-    similarity.write_lsh_bucket_index(wave1, path, 1)
-    fsio.delete_path(spark, f"{path}/counts/wave=1")  # the crash window
-    with pytest.raises(ValueError, match="half-written append"):
-        similarity.compact_lsh_bucket_index(spark, path)
-    similarity.write_lsh_bucket_index(wave1, path, 1)  # the retry
-    assert similarity.compact_lsh_bucket_index(spark, path) == 2
-
-
 def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
     """Crash mid-commit (after the manifest, during the consumed-segment
     deletes): appends are refused while the manifest exists, and
@@ -233,51 +190,3 @@ def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):
     assert _rows(spark.read.parquet(path).drop("wave")) == expected
 
 
-def test_cms_compaction_parity(spark, docs, tmp_path):
-    """The counts family re-aggregates on compaction: counter TOTALS are
-    preserved, one row per (d, bucket), the probe estimates identically,
-    and the geometry pin survives."""
-    from paperoni_spark.operators import textstats
-
-    path = str(tmp_path / "cms_idx")
-    textstats.write_cms_index(_split(docs, "doc_id", 0, 7), path)
-    textstats.write_cms_index(_split(docs, "doc_id", 7, 9), path, 1)
-    delta = _split(docs, "doc_id", 9, 10)
-    before = _rows(textstats.cms_delta_heavy_hitters(spark, delta, path))
-    totals_before = _rows(
-        spark.read.parquet(path).groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
-    )
-    assert fsio.compact_index_kind(spark, path, "cms_sketch") == 2
-    merged = spark.read.parquet(path)
-    assert (
-        _rows(merged.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt")))
-        == totals_before
-    )
-    assert merged.count() == merged.select("d", "bucket").distinct().count()
-    with pytest.raises(ValueError, match="cms_depth"):
-        textstats.cms_delta_heavy_hitters(spark, delta, path, depth=6).collect()
-    assert _rows(textstats.cms_delta_heavy_hitters(spark, delta, path)) == before
-
-
-def test_bloom_compaction_parity(spark, docs, tmp_path):
-    """The idempotent-OR family re-distincts on compaction: the merged
-    segment holds exactly the union bit-set (one row per bit), the probe
-    verdicts are identical, the k geometry pin survives, and appending
-    at a consumed wave id is refused forever."""
-    path = str(tmp_path / "bloom_idx")
-    dedup.write_bloom_index(_split(docs, "doc_id", 0, 7), path)
-    dedup.write_bloom_index(_split(docs, "doc_id", 7, 9), path, 1)
-    delta = _split(docs, "doc_id", 9, 10)
-    before = _rows(dedup.bloom_delta_new_docs(spark, delta, path))
-    bits_before = {
-        r["pos"] for r in spark.read.parquet(path).select("pos").collect()
-    }
-    assert fsio.compact_index_kind(spark, path, "bloom_bits") == 2
-    merged = spark.read.parquet(path)
-    assert {r["pos"] for r in merged.collect()} == bits_before
-    assert merged.count() == len(bits_before)  # one row per set bit
-    with pytest.raises(ValueError, match="bloom_k"):
-        dedup.bloom_delta_new_docs(spark, delta, path, k=2).collect()
-    assert _rows(dedup.bloom_delta_new_docs(spark, delta, path)) == before
-    with pytest.raises(ValueError, match="owned by a compaction"):
-        dedup.write_bloom_index(_split(docs, "doc_id", 7, 9), path, 1)

@@ -197,70 +197,13 @@ def test_lsh_candidate_doc_pairs(spark, docs, ddb):
     assert all(1 <= r["n_shared_bands"] <= dedup.LSH_BANDS for r in pairs)
 
 
-def test_dedup_delta_never_reshingles(spark, docs, ddb, tmp_path):
-    """Incremental delta-vs-corpus dedup: (1) the oracled query matches the
-    DuckDB full-recompute twin, (2) results equal a full
-    lsh_candidate_doc_pairs recompute restricted to delta-touching pairs,
-    and (3) the corpus side is served ENTIRELY from the persisted band
-    index — proven by deleting the corpus source files after the index
-    write: any re-shingle attempt would fail on the missing input."""
-    import shutil
-
-    assert_matches_oracle(
-        contract.q_dedup_delta_pairs(spark, SF_DIR),
-        ddb,
-        contract.oracle_dedup_delta_pairs(),
-    )
-
-    delta = docs.where(contract._delta_flag_col())
-    corpus = docs.where(~contract._delta_flag_col())
-    delta_ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
-    want = {
-        (r["doc_a"], r["doc_b"], r["n_shared_bands"])
-        for r in dedup.lsh_candidate_doc_pairs(docs).collect()
-        if r["doc_a"] in delta_ids or r["doc_b"] in delta_ids
-    }
-    corpus_path = str(tmp_path / "corpus_src")
-    corpus.write.parquet(corpus_path)
-    index_path = str(tmp_path / "band_index")
-    dedup.write_minhash_band_index(spark.read.parquet(corpus_path), index_path)
-    shutil.rmtree(corpus_path)  # corpus text gone — re-shingling impossible
-    got_df = dedup.dedup_delta_pairs_against_index(spark, delta, index_path)
-    got = {
-        (r["doc_a"], r["doc_b"], r["n_shared_bands"]) for r in got_df.collect()
-    }
-    assert got == want and len(want) > 0
-    # the corpus side is the index scan (plan toString truncates long tmp
-    # paths out of the Location field — inputFiles is exact)
-    assert any("band_index" in f for f in got_df.inputFiles())
-    # plan shape: the index is scanned at most twice (bucket histogram +
-    # target side); without the materialized over-cap set each anti-join
-    # consumer re-derives the histogram — 6 scans (round-4 plan audit)
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") <= 2, plan[:2000]
-
-    # the recurring loop's write-back: append the probed delta, then a
-    # second wave finds its duplicate against a WAVE-1 doc via the index
-    dedup.write_minhash_band_index(delta, index_path, wave=1)
-    # at-least-once retry of the SAME wave replays its segment —
-    # the index does not grow and probes stay correct
-    n_before = spark.read.parquet(index_path).count()
-    dedup.write_minhash_band_index(delta, index_path, wave=1)
-    assert spark.read.parquet(index_path).count() == n_before
-    seed = delta.orderBy("doc_id").limit(1).collect()[0]
-    wave2 = spark.createDataFrame(
-        [(10_000_001, seed["text"])], "doc_id: long, text: string"
-    )
-    pairs2 = dedup.dedup_delta_pairs_against_index(spark, wave2, index_path).collect()
-    hits = {(r["doc_a"], r["doc_b"]): r["n_shared_bands"] for r in pairs2}
-    assert hits.get((seed["doc_id"], 10_000_001)) == dedup.LSH_BANDS
-
-
 def test_simhash_delta_never_rehashes(spark, docs, ddb, tmp_path):
-    """SimHash incremental twin: oracle parity, equality with the full
-    recompute restricted to delta-touching pairs, and corpus-side
-    independence proven by deleting the corpus source after the 16 B/doc
-    fingerprint index is written."""
+    """Incremental delta-vs-corpus near-dup sweep: (1) the oracled query
+    matches the DuckDB full-recompute twin, (2) results equal the full
+    simhash_near_dup_pairs recompute restricted to delta-touching pairs,
+    and (3) the probe never re-reads the corpus: its source files are
+    deleted after the 16 B/doc fingerprint index is written, so any
+    re-hash would fail on the missing input."""
     import shutil
 
     assert_matches_oracle(
@@ -493,62 +436,6 @@ def test_embedding_near_dup_blocking(spark, embeds, ddb):
         assert 0.3 <= r["cosine"] <= 1.0
 
 
-def test_embedding_delta_never_recodes(spark, embeds, ddb, tmp_path):
-    """Embedding incremental twin: oracle parity, equality with the full
-    recompute restricted to delta-touching pairs, and corpus-side
-    independence — the corpus source is deleted after the index (vectors
-    + precomputed codes) is written, so any re-coding would fail."""
-    import shutil
-
-    from paperoni_spark.operators.similarity import (
-        embedding_delta_near_dup_against_index,
-        embedding_near_dup_pairs,
-        write_embedding_lsh_index,
-    )
-
-    assert_matches_oracle(
-        contract.q_embedding_delta_near_dup(spark, SF_DIR),
-        ddb,
-        contract.oracle_embedding_delta_near_dup(),
-    )
-
-    planted = contract.planted_embeddings(embeds)
-    flag = contract._delta_flag_col("vec_id", contract._EMB_DELTA_PREFIX_CHARS)
-    delta = planted.where(flag)
-    corpus = planted.where(~flag)
-    delta_ids = {r["vec_id"] for r in delta.select("vec_id").collect()}
-    want = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in embedding_near_dup_pairs(planted).collect()
-        if r["vec_a"] in delta_ids or r["vec_b"] in delta_ids
-    }
-    corpus_path = str(tmp_path / "corpus_src")
-    corpus.write.parquet(corpus_path)
-    index_path = str(tmp_path / "emb_index")
-    write_embedding_lsh_index(spark.read.parquet(corpus_path), index_path)
-    shutil.rmtree(corpus_path)  # corpus vectors gone from the source
-    got_df = embedding_delta_near_dup_against_index(spark, delta, index_path)
-    got = {(r["vec_a"], r["vec_b"], r["cosine"]) for r in got_df.collect()}
-    assert got == want and len(want) > 0
-    assert any("emb_index" in f for f in got_df.inputFiles())
-
-    # the recurring loop's write-back: append the probed wave, then an
-    # exact copy of a wave-1 delta vector surfaces (cosine 1.0) against
-    # the appended codes via the index — mirrors the MinHash/SimHash twins
-    write_embedding_lsh_index(delta, index_path, wave=1)
-    # at-least-once retry of the SAME wave replays its segment
-    n_before = spark.read.parquet(index_path).count()
-    write_embedding_lsh_index(delta, index_path, wave=1)
-    assert spark.read.parquet(index_path).count() == n_before
-    seed = delta.orderBy("vec_id").limit(1).collect()[0]
-    wave2 = spark.createDataFrame(
-        [(10_000_001, list(seed["embedding"]))], "vec_id: long, embedding: array<double>"
-    )
-    pairs2 = embedding_delta_near_dup_against_index(spark, wave2, index_path).collect()
-    hits = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in pairs2}
-    assert hits.get((seed["vec_id"], 10_000_001)) == 1.0
-
-
 def test_embedding_dedup_clusters(spark, embeds, ddb):
     """Semantic dedup: CC over the cosine near-dup edges; every planted
     twin lands in its seed's cluster with the seed surviving."""
@@ -773,92 +660,13 @@ def test_ivf_probe_scan_partition_pruned(spark, embeds, tmp_path_factory):
         write_wave_segment(embeds.limit(1), str(flat), 1, kind="ivf")
 
 
-def test_ann_lsh_index_partition_pruned(spark, embeds, ddb, tmp_path):
-    """The LSH-index ANN scale path: the rows table partitioned by
-    (band, bkey) is read pruned to the probed buckets only, results are
-    identical to the in-query ann_lsh_topk, and the over-cap guard comes
-    from the counts table, never a corpus scan."""
-    from paperoni_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_lsh_topk_indexed,
-        write_lsh_bucket_index,
-    )
-
-    path = str(tmp_path / "lsh_index")
-    write_lsh_bucket_index(embeds, path)
-    got_df = ann_lsh_topk_indexed(spark, embeds, path)
-    got = sorted(map(tuple, got_df.collect()))
-    want = sorted(map(tuple, ann_lsh_topk(embeds).collect()))
-    assert got == want and len(got) > 0
-    assert_matches_oracle(got_df, ddb, contract.oracle_ann_lsh_topk())
-    # the pruned scan really prunes: probe two known buckets and assert
-    # only their directories' files are read (input_file_name is single-
-    # source here) and the predicate lands in PartitionFilters
-    from paperoni_spark.operators.similarity import lsh_probe_scan
-
-    some = spark.read.parquet(f"{path}/counts").orderBy("band", "bkey").limit(2).collect()
-    probe = {(r["band"], r["bkey"]) for r in some}
-    scan = lsh_probe_scan(spark, path, probe, cap=10**9)
-    read_dirs = {
-        (int(r[0]), r[1])
-        for r in scan.select(
-            F.regexp_extract(F.input_file_name(), r"band=(\d+)", 1),
-            F.regexp_extract(F.input_file_name(), r"bkey=([01]+)", 1),
-        )
-        .distinct()
-        .collect()
-    }
-    assert read_dirs == probe
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters:" in plan, plan[:2000]
-    pf = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "band" in pf and "bkey" in pf
-
-    # the recurring loop's write-back: append a wave duplicating query
-    # vector 0 under a fresh id — the probe then surfaces it at cosine
-    # 1.0 rank 1, and the per-wave counts segments stay exact (sum to
-    # rows-table cardinality, so the over-cap guard keeps working)
-    from paperoni_spark.operators.similarity import (
-        _LSH_ROWS_SCHEMA,
-        write_lsh_bucket_index,
-    )
-
-    seed = embeds.orderBy("vec_id").limit(1).collect()[0]
-    wave = spark.createDataFrame(
-        [(10_000_001, list(seed["embedding"]))], "vec_id: long, embedding: array<double>"
-    )
-    write_lsh_bucket_index(wave, path, wave=1)
-    after = ann_lsh_topk_indexed(spark, embeds.unionByName(wave.withColumn("label", F.lit(None).cast("int"))), path)
-    top = {(r["query_id"], r["vec_id"]): (r["score"], r["rank"]) for r in after.collect()}
-    assert top[(seed["vec_id"], 10_000_001)] == (1.0, 1)
-
-    def index_state():
-        rows = spark.read.schema(_LSH_ROWS_SCHEMA).parquet(f"{path}/rows")
-        n_rows = rows.count()
-        n_counted = (
-            spark.read.parquet(f"{path}/counts").agg(F.sum("n_vecs")).collect()[0][0]
-        )
-        return n_rows, n_counted
-
-    n_rows, n_counted = index_state()
-    assert n_rows == n_counted
-    # at-least-once retry of the SAME wave id replays its own segments —
-    # rows are NOT double-appended and the histogram stays exact (the
-    # failure mode of the former global-append + counts-swap design)
-    write_lsh_bucket_index(wave, path, wave=1)
-    assert index_state() == (n_rows, n_counted)
-    # a negative wave id is refused (0 is the build)
-    with pytest.raises(ValueError):
-        write_lsh_bucket_index(wave, path, wave=-1)
-
-
 def test_index_kind_marker(spark, embeds, docs, tmp_path):
     """All wave-keyed indexes share one layout, so the layout guard alone
     can't stop one family's wave=0 build from destroying another's
     committed segment: the _index_kind marker must (a) refuse a foreign
     family BEFORE anything is deleted, (b) adopt a legacy marker-less
-    index, (c) extend to the two-table LSH bucket index, whose writer
-    checks both sub-roots before writing either."""
+    index, (c) hold for the family writers themselves, not only for a
+    bare write_wave_segment call."""
     from paperoni_spark.fsio import write_wave_segment
     from paperoni_spark.operators.dedup import (
         SIMHASH_PAIR_BITS,
@@ -866,7 +674,8 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
         write_simhash_index,
     )
     from paperoni_spark.operators.similarity import (
-        write_lsh_bucket_index,
+        ivf_assignments,
+        write_ivf_index,
     )
 
     # (a) cross-family refusal, committed build left untouched
@@ -895,22 +704,24 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     with pytest.raises(ValueError, match="simhash"):
         write_wave_segment(embeds.limit(1), str(legacy), 2, kind="ivf")
 
-    # (c) the LSH bucket index: foreign-kind refusal at its root, and the
-    # flat-legacy refusal on its rows/ sub-root (the one writer that
-    # bypassed write_wave_segment's guard until round 6)
+    # (c) through the family writers: a partitioned IVF build is refused
+    # at the simhash root, committed rows untouched, and a simhash append
+    # is refused on a flat legacy directory (bare part files)
+    assigned, centroids = ivf_assignments(embeds.orderBy("vec_id").limit(64), n_centroids=4)
     with pytest.raises(ValueError, match="simhash"):
-        write_lsh_bucket_index(embeds, sim_path)
-    lsh_path = tmp_path / "lsh_idx"
-    (lsh_path / "rows").mkdir(parents=True)
-    (lsh_path / "rows" / "part-00000.parquet").touch()
+        write_ivf_index(assigned, sim_path, centroids)
+    assert sorted(
+        r["doc_id"] for r in spark.read.parquet(sim_path).collect()
+    ) == before
+    flat = tmp_path / "flat_idx"
+    flat.mkdir()
+    (flat / "part-00000.parquet").touch()
     with pytest.raises(ValueError, match="not a wave-segmented"):
-        write_lsh_bucket_index(embeds, str(lsh_path), 1)
+        write_simhash_index(simhash(docs, SIMHASH_PAIR_BITS), str(flat), 1)
+    assert sorted(p.name for p in flat.iterdir()) == ["part-00000.parquet"]
 
 
-_WAVE_ID_FAMILIES = [
-    "minhash_bands", "simhash", "substring_hist", "bloom_bits", "cms_sketch",
-    "embedding_lsh", "lsh_buckets", "user_state", "time_rollup", "ivf",
-]
+_WAVE_ID_FAMILIES = ["simhash", "substring_hist", "user_state", "time_rollup", "ivf"]
 
 
 @pytest.mark.parametrize("family", _WAVE_ID_FAMILIES)
@@ -932,13 +743,8 @@ def test_wave_id_rule_every_family(spark, docs, embeds, tmp_path, family):
 
     # family -> (build at wave 0, write the given wave)
     writers = {
-        "minhash_bands": (None, lambda p, w: dedup.write_minhash_band_index(small_docs, p, w)),
         "simhash": (None, lambda p, w: dedup.write_simhash_index(sh, p, w)),
         "substring_hist": (None, lambda p, w: dedup.write_substring_index(small_docs, p, w, n=8)),
-        "bloom_bits": (None, lambda p, w: dedup.write_bloom_index(small_docs, p, w)),
-        "cms_sketch": (None, lambda p, w: textstats.write_cms_index(small_docs, p, w)),
-        "embedding_lsh": (None, lambda p, w: similarity.write_embedding_lsh_index(small_embeds, p, w)),
-        "lsh_buckets": (None, lambda p, w: similarity.write_lsh_bucket_index(small_embeds, p, w)),
         "user_state": (None, lambda p, w: temporal.write_user_state_index(events, p, w)),
         "time_rollup": (None, lambda p, w: temporal.write_rollup_index(events, p, w)),
         "ivf": (ivf_build, lambda p, w: similarity.append_to_ivf_index(small_embeds, p, w)),
@@ -1448,21 +1254,6 @@ def test_streaming_simhash_over_operator_index(spark, tmp_path):
     assert spark.read.parquet(index).count() == 3
 
 
-def test_streaming_embedding_pairs(spark, embeds, ddb):
-    """Vector twin of the streamed near-dup loop: oracle parity with the
-    whole-corpus banded sweep, cross-batch pairs present (planted twins
-    at vec_id+TWIN_ID_OFFSET land in different mod-2 batches — the
-    offset is odd), no duplicate emissions."""
-    result = contract.q_streaming_embedding_pairs(spark, SF_DIR)
-    rows = result.collect()
-    assert_matches_oracle(
-        result, ddb, contract.oracle_streaming_embedding_pairs()
-    )
-    assert any(r["vec_a"] % 2 != r["vec_b"] % 2 for r in rows), rows
-    assert len(rows) == len({(r["vec_a"], r["vec_b"]) for r in rows})
-    assert all(r["cosine"] >= 0.95 for r in rows) and rows
-
-
 def test_source_cap_two_phase_identity_property(spark):
     """Property: on arbitrary (doc_id, source) frames — skewed strata,
     singleton strata, NULL sources, caps above/below stratum sizes — the
@@ -1731,22 +1522,6 @@ def test_tfidf_top_terms(spark, docs, ddb):
     assert "LeftAnti" in plan  # tail routing is the anti-join on head keys
 
 
-def test_cms_heavy_hitters(spark, docs, ddb):
-    """Count-min sketch: oracle match plus the CMS guarantee — the
-    estimate NEVER undercounts (min over depth rows of sums that each
-    include the token's own mass)."""
-    out = textstats.cms_heavy_hitters(docs)
-    assert_matches_oracle(out, ddb, contract.oracle_cms_heavy_hitters())
-    rows = out.collect()
-    assert len(rows) == textstats.CMS_TOP_K
-    assert sorted(r["rank"] for r in rows) == list(
-        range(1, textstats.CMS_TOP_K + 1)
-    )
-    for r in rows:
-        assert r["cms_estimate"] >= r["true_count"]
-        assert r["overestimate"] == r["cms_estimate"] - r["true_count"]
-
-
 def test_cluster_balanced_sample(spark, embeds, ddb):
     """Diversity cap: oracle match plus per-cluster ranks dense in
     1..min(cap, cluster size) against the independent assignment."""
@@ -1767,73 +1542,6 @@ def test_cluster_balanced_sample(spark, embeds, ddb):
     assert set(got) == {c for c, n in sizes.items() if n > 0}
 
 
-def test_cms_delta_matches_oracle(spark, ddb):
-    """The persisted-sketch probe through the gate query (memoized even-id
-    index + odd-id delta) against the two-sketch SQL replay."""
-    out = contract.build_queries()["cms_delta_heavy_hitters"](spark, SF_DIR)
-    assert_matches_oracle(out, ddb, contract.oracle_cms_delta_heavy_hitters())
-
-
-def test_cms_index_waves_linearity_and_replay(spark, docs, tmp_path):
-    """CMS linearity is the index family's whole premise: a build + an
-    append must estimate EXACTLY like a single-pass index over the union
-    (counter sums are order-independent).  Plus the family invariants:
-    append retry replays (same counters, same probe), a negative wave id
-    is refused, the depth geometry pin refuses a mismatched
-    probe, and a foreign family cannot write into the root."""
-    from paperoni_spark.operators.textstats import (
-        cms_delta_heavy_hitters,
-        write_cms_index,
-    )
-
-    wave0 = docs.where(F.col("doc_id") % 3 == 0)
-    wave1 = docs.where(F.col("doc_id") % 3 == 1)
-    delta = docs.where(F.col("doc_id") % 3 == 2)
-    path = str(tmp_path / "cms_idx")
-    write_cms_index(wave0, path)
-    write_cms_index(wave1, path, 1)
-    got = sorted(map(tuple, cms_delta_heavy_hitters(spark, delta, path).collect()))
-
-    single = str(tmp_path / "cms_single")
-    write_cms_index(docs.where(F.col("doc_id") % 3 != 2), single)
-    want = sorted(
-        map(tuple, cms_delta_heavy_hitters(spark, delta, single).collect())
-    )
-    assert got == want
-
-    # retry replays: identical counters and identical probe output
-    before = sorted(
-        map(tuple, spark.read.parquet(path).select("d", "bucket", "cnt").collect())
-    )
-    write_cms_index(wave1, path, 1)
-    assert (
-        sorted(
-            map(
-                tuple,
-                spark.read.parquet(path).select("d", "bucket", "cnt").collect(),
-            )
-        )
-        == before
-    )
-    assert (
-        sorted(map(tuple, cms_delta_heavy_hitters(spark, delta, path).collect()))
-        == got
-    )
-
-    with pytest.raises(ValueError, match="wave id"):
-        write_cms_index(wave1, path, -1)
-    with pytest.raises(ValueError, match="cms_depth"):
-        cms_delta_heavy_hitters(spark, delta, path, depth=6).collect()
-    from paperoni_spark.operators.dedup import write_substring_index
-
-    with pytest.raises(ValueError, match="refusing to write"):
-        write_substring_index(docs, path, n=8)
-    # the refusal happened BEFORE any marker was adopted into the root
-    import os as _os
-
-    assert not _os.path.exists(_os.path.join(path, "_param_shingle_n_8"))
-
-
 def test_quality_classifier_scores(spark, docs, ddb):
     """Model-based quality gate: oracle match plus the integer-weight
     invariants — the logit is bounded by the weight range, and kept is
@@ -1845,83 +1553,6 @@ def test_quality_classifier_scores(spark, docs, ddb):
     for r in rows:
         assert -1.0 <= r["quality_logit"] < 1.0
         assert r["kept"] == (r["quality_logit"] >= textstats.QC_THRESHOLD)
-
-
-def test_bloom_delta_matches_oracle(spark, ddb):
-    """The persisted-Bloom probe through the gate query (memoized even-id
-    index + odd-id delta) against the bit-replay oracle, plus the two
-    filter laws: NO false negatives ever, and possibly_seen ⊇
-    actually_seen."""
-    out = contract.build_queries()["bloom_delta_new_docs"](spark, SF_DIR)
-    assert_matches_oracle(out, ddb, contract.oracle_bloom_delta_new_docs())
-    for r in out.collect():
-        if r["actually_seen"]:
-            assert r["possibly_seen"], r
-
-
-def test_bloom_index_idempotent_or_and_replay(spark, docs, tmp_path):
-    """The Bloom family's contract vs CMS: bits combine by OR, so
-    overlapping appends — including re-sending an ALREADY-INDEXED wave —
-    leave the filter identical to the single-pass build over the union
-    (CMS would double-count; this family has no disjointness clause).
-    Plus the family invariants: retry replay, negative-wave refusal, k
-    geometry pin, foreign-kind refusal before marker adoption."""
-    from paperoni_spark.operators.dedup import (
-        bloom_delta_new_docs,
-        write_bloom_index,
-    )
-
-    wave0 = docs.where(F.col("doc_id") % 3 == 0)
-    wave1 = docs.where(F.col("doc_id") % 3 == 1)
-    delta = docs.where(F.col("doc_id") % 3 == 2)
-    path = str(tmp_path / "bloom_idx")
-    write_bloom_index(wave0, path)
-    write_bloom_index(wave1, path, 1)
-    # OVERLAPPING append: wave0 ∪ wave1 re-sent under a fresh wave id —
-    # pure OR idempotence, the filter must not change
-    write_bloom_index(docs.where(F.col("doc_id") % 3 != 2), path, 2)
-    got = sorted(
-        tuple(r)
-        for r in bloom_delta_new_docs(spark, delta, path).collect()
-    )
-
-    single = str(tmp_path / "bloom_single")
-    write_bloom_index(docs.where(F.col("doc_id") % 3 != 2), single)
-    want = sorted(
-        tuple(r)
-        for r in bloom_delta_new_docs(spark, delta, single).collect()
-    )
-    assert got == want
-
-    # the union of segment bit-sets equals the single-pass bit-set
-    union_bits = {
-        r["pos"]
-        for r in spark.read.parquet(path).select("pos").distinct().collect()
-    }
-    single_bits = {
-        r["pos"] for r in spark.read.parquet(single).select("pos").collect()
-    }
-    assert union_bits == single_bits
-
-    # retry replays byte-identically
-    before = sorted(
-        r["pos"] for r in spark.read.parquet(f"{path}/wave=1").collect()
-    )
-    write_bloom_index(wave1, path, 1)
-    assert (
-        sorted(r["pos"] for r in spark.read.parquet(f"{path}/wave=1").collect())
-        == before
-    )
-
-    with pytest.raises(ValueError, match="wave id"):
-        write_bloom_index(wave1, path, -1)
-    with pytest.raises(ValueError, match="bloom_k"):
-        bloom_delta_new_docs(spark, delta, path, k=2).collect()
-    from paperoni_spark.operators.textstats import write_cms_index
-
-    with pytest.raises(ValueError, match="refusing to write"):
-        write_cms_index(docs, path)
-    assert not os.path.exists(os.path.join(path, "_param_cms_depth_4"))
 
 
 def test_shingle_novelty(spark, ddb):

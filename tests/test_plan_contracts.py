@@ -75,26 +75,10 @@ PLAN_CONTRACTS = {
     # within-cluster min-id pruning: one shuffle (the cluster-keyed
     # pair stage), no pair cartesian, no Python at query time
     "semantic_dedup": (1, []),
-    # count-min sketch: the vocab-count agg lives inside the
-    # materialization; the final plan shuffles only the (d, bucket)
-    # sketch build and the per-token min — the sketch join back is a
-    # forced broadcast (depth×4096 rows by construction) and the top-k
-    # is TakeOrdered, never a corpus-wide window
-    "cms_heavy_hitters": (2, []),
     # per-cluster diversity cap: same two-phase prefix-cut budget as
     # source_cap_sample (summary agg + offsets window + in-prefix rank)
     # over the materialized assignment frame
     "cluster_balanced_sample": (3, []),
-    # persisted-sketch probe: delta-sketch agg + index counter re-agg +
-    # the per-token min — the index scan is column-pruned to
-    # (d, bucket, cnt) (wave never read) and both sketch joins are
-    # forced broadcasts of ≤ depth×4096 rows
-    "cms_delta_heavy_hitters": (3, []),
-    # persisted-Bloom probe: delta digest distinct + per-digest hit agg
-    # + the verdict join — the bit table is a forced broadcast (≤ 65536
-    # rows by construction, pruned to pos alone), and only (doc_id,
-    # text) is read from the corpus
-    "bloom_delta_new_docs": (3, ["lang", "source", "n_chars"]),
     # novelty probe: delta digest distinct + index restriction join +
     # the per-doc fold — the index scan is pruned to the digest alone
     # and the corpus side reads (doc_id) plus the materialized shingles

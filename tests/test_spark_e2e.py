@@ -865,7 +865,7 @@ os.makedirs(foreign)
 open(os.path.join(foreign, "part-00000.parquet"), "w").close()
 other_kind = os.path.join(tmp, "other_kind")
 os.makedirs(os.path.join(other_kind, "wave=0"))
-open(os.path.join(other_kind, "_index_kind_minhash_bands"), "w").close()
+open(os.path.join(other_kind, "_index_kind_user_state"), "w").close()
 open(os.path.join(other_kind, "wave=0", "part-00000.parquet"), "w").close()
 compacted = os.path.join(tmp, "compacted")
 shutil.copytree(idx, compacted)
@@ -896,14 +896,14 @@ def refused(expect, dedup, wave, append=True, substring=None):
 
 
 refused("not a wave-segmented index", foreign, "w2")
-refused("'minhash_bands' index", other_kind, "w2")
+refused("'user_state' index", other_kind, "w2")
 refused("--append was not given", idx, "w2", append=False)
 refused("owned by a compaction", compacted, "w0")
 refused("must not be the build's 0", os.path.join(tmp, "fresh"), "0")
 # a retry of the committed wave whose SUBSTRING root is refused must not
 # first delete the dedup index's committed wave=w1 segment
 refused("not a wave-segmented index", idx, "w1", substring=foreign)
-refused("'minhash_bands' index", idx, "w1", substring=other_kind)
+refused("'user_state' index", idx, "w1", substring=other_kind)
 print("CJ_REFUSALS_OK")
 """
 
@@ -933,9 +933,13 @@ def test_corpus_job_refusals_leave_indexes_untouched(tmp_path_factory):
 
 def test_build_training_corpus_model_filter(spark):
     """The opt-in model quality gate: the map-side fold logit equals the
-    standalone operator's (a projection of the same fold), model rejects
-    are attributed as rejected:model_quality AFTER the rules (one reason
-    per doc), and the funnel still reconciles with the written corpus."""
+    model's DuckDB twin (an independent decode of the same two-md5
+    weights), model rejects are attributed as rejected:model_quality
+    AFTER the rules (one reason per doc), and the funnel still
+    reconciles with the written corpus."""
+    import duckdb
+
+    from paperoni_spark import contract
     from paperoni_spark.operators import textstats
     from paperoni_spark.pipeline.compose import build_training_corpus
     from pyspark.sql import functions as F
@@ -953,19 +957,24 @@ def test_build_training_corpus_model_filter(spark):
     assert stages.get("rejected:model_quality", 0) > 0
     assert stages.get("kept", 0) - stages.get("rejected:duplicate", 0) == len(rows)
 
-    # row-identity: the fold expression == the standalone operator
+    # row-identity: the fold expression == the DuckDB oracle over the
+    # same (doc_id, text) rows
     plain, _, _ = build_training_corpus(docs)
     flat = plain.select("doc_id", "text")
     via_expr = flat.select(
         "doc_id", textstats.quality_logit_col(F.col("text")).alias("logit")
     )
-    via_op = textstats.quality_classifier_scores(flat).select(
-        "doc_id", F.col("quality_logit").alias("logit")
-    )
     logits = {r["doc_id"]: r["logit"] for r in via_expr.collect()}
-    assert sorted(logits.items()) == sorted(
-        (r["doc_id"], r["logit"]) for r in via_op.collect()
-    )
+    con = duckdb.connect()
+    con.register("documents", flat.toPandas())
+    via_oracle = con.execute(
+        "SELECT doc_id, quality_logit FROM ("
+        + contract.oracle_quality_classifier_scores()
+        + ")"
+    ).fetchall()
+    assert logits and sorted(
+        (d, round(v, 9)) for d, v in logits.items()
+    ) == sorted((d, round(v, 9)) for d, v in via_oracle)
     # the gate changes membership, not scores: the gated corpus is
     # exactly the plain corpus minus the below-threshold docs (duplicate
     # clusters share text, hence logit — no canonical can vanish while
