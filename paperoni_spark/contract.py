@@ -181,9 +181,9 @@ def planted_near_dup_documents(spark: SparkSession, n_docs: int = 150) -> DataFr
     marker word injected into the last paragraph, so after extraction its
     text differs (exact dedup keeps it: different fingerprint) yet its
     64-bit SimHash sits within Hamming 1 of the seed (probed
-    deterministically; the generator is frozen).  Same gate-seeding
-    rationale as planted_embeddings — the near-dup funnel stage must
-    reject a known-nonzero set, not be trivially green on zero."""
+    deterministically; the generator is frozen).  The planted set seeds
+    the gate: the near-dup funnel stage must reject a known-nonzero set,
+    not be trivially green on zero."""
     from .spans.codec import html_to_spans
     from .spans.synthetic import synth_html
 
@@ -505,32 +505,6 @@ c AS ({unions})
 SELECT step, event_type, n_users::BIGINT AS n_users,
        round(n_users / (SELECT count(*) FROM s1), 6) AS conv_rate
 FROM c
-"""
-
-
-def oracle_label_centroid_similarity() -> str:
-    """DuckDB twin of similarity.label_centroid_similarity: same per-dim
-    rounded means (the IVF centroid portability rule), dim index 1-based
-    here vs 0-based in Spark — internal join key only, never output."""
-    m, c = similarity.CENTROID_MEAN_ROUND, similarity.CENTROID_COS_ROUND
-    return f"""
-WITH dims AS (
-  SELECT label, i AS d, emb[i] AS x
-  FROM (SELECT label, embedding::DOUBLE[] AS emb FROM embeddings),
-       unnest(generate_series(1, len(emb))) AS t(i)
-),
-cent AS (SELECT label, d, round(avg(x), {m}) AS c FROM dims GROUP BY 1, 2),
-norms AS (SELECT label, sum(c * c) AS nn FROM cent GROUP BY 1),
-dots AS (
-  SELECT a.label AS label_a, b.label AS label_b, sum(a.c * b.c) AS dot
-  FROM cent a JOIN cent b USING (d)
-  WHERE a.label < b.label GROUP BY 1, 2
-)
-SELECT label_a, label_b,
-       round(dot / (sqrt(na.nn) * sqrt(nb.nn)), {c}) AS cosine
-FROM dots
-JOIN norms na ON na.label = dots.label_a
-JOIN norms nb ON nb.label = dots.label_b
 """
 
 
@@ -1098,34 +1072,28 @@ def oracle_streaming_normalized_dedup() -> str:
 
 
 def _stage_micro_batches(
-    docs: DataFrame,
-    prefix: str = "stage_",
-    n_batches: int = 2,
-    root: str | None = None,
-    class_expr=None,
+    docs: DataFrame, root: str, class_expr=None
 ) -> tuple[str, str]:
-    """Stage a documents frame as ``n_batches`` mtime-ordered parquet
-    files (doc_id mod ``n_batches``, or an explicit ``class_expr`` int
-    column 0..n-1 — the time-ordered streams need a ts split, not a key
-    split) under ``root`` (or a fresh temp dir) — the shared harness for
-    the streaming gates (file sources order batches by modification
-    time).  Returns ``(tmp_root, docs_dir)``; the caller owns cleanup
-    (rmtree after the stream drains, or a _stream_tmp root when the
-    returned frame reads lazily)."""
+    """Stage a documents frame as two mtime-ordered parquet files
+    (doc_id mod 2, or an explicit ``class_expr`` int column 0..1 — the
+    time-ordered streams need a ts split, not a key split) under
+    ``root`` — the shared harness for the streaming gates (file sources
+    order batches by modification time).  Returns ``(root, docs_dir)``;
+    the caller owns cleanup (rmtree after the stream drains, or a
+    _stream_tmp root when the returned frame reads lazily)."""
     import glob
     import shutil
-    import tempfile
     import time
 
-    tmp = root if root is not None else tempfile.mkdtemp(prefix=prefix)
-    docs_dir = os.path.join(tmp, "docs")
+    n_batches = 2
+    docs_dir = os.path.join(root, "docs")
     os.makedirs(docs_dir)
     now = time.time()
     # ONE pass over the corpus (partitionBy on the batch class) instead of
     # n_batches filter+write jobs; the explicit repartition count puts each
     # class in exactly one task → exactly one file per class (and keeps AQE
     # from coalescing the write, per the round-4 partitioned-write finding)
-    sdir = os.path.join(tmp, "staged")
+    sdir = os.path.join(root, "staged")
     cls = (
         class_expr
         if class_expr is not None
@@ -1145,12 +1113,12 @@ def _stage_micro_batches(
             # (the old per-class coalesce(1) wrote an empty part file):
             # stage an explicit empty batch so class composition — not
             # data skew — decides the number of triggers
-            edir = os.path.join(tmp, f"empty{i}")
+            edir = os.path.join(root, f"empty{i}")
             docs.limit(0).coalesce(1).write.parquet(edir)
             parts = glob.glob(os.path.join(edir, "part-*.parquet"))
         shutil.move(parts[0], dst)
         os.utime(dst, (now + 10 * i, now + 10 * i))
-    return tmp, docs_dir
+    return root, docs_dir
 
 
 def oracle_streaming_exact_dedup() -> str:
@@ -1480,107 +1448,14 @@ WHERE n_shared >= 2
 """
 
 
-# ≢ 0 (mod 2) AND (mod 3): planted twins must land in a different staged
-# micro-batch than their seeds under both 2- and 3-batch doc_id%n staging
+# odd: a planted twin lands in a different staged micro-batch from its
+# seed under _stage_micro_batches' doc_id % 2 split
 PLANT_ID_OFFSET = 2_000_003
 
 
-def oracle_cosine_topk() -> str:
-    return """
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 10),
-scored AS (
-  SELECT q.query_id, b.vec_id,
-         round(list_dot_product(q.qemb, b.emb) /
-               (sqrt(list_dot_product(q.qemb, q.qemb)) * sqrt(list_dot_product(b.emb, b.emb))), 3) AS score
-  FROM base b, q WHERE b.vec_id != q.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, score, rank::INT AS rank FROM ranked WHERE rank <= 5
-"""
-
-
-def _plane_literal(plane: int) -> str:
-    coefs = similarity.hyperplane(plane)
-    return "[" + ", ".join(f"{c:.1f}" for c in coefs) + "]::DOUBLE[]"
-
-
-def _band_key_sql(emb: str, band: int) -> str:
-    ppb = similarity.PLANES_PER_BAND
-    bits = [
-        f"CASE WHEN list_dot_product({emb}, {_plane_literal(p)}) > 0 THEN '1' ELSE '0' END"
-        for p in range(band * ppb, (band + 1) * ppb)
-    ]
-    return " || ".join(bits)
-
-
-def _bands_cte() -> str:
-    """bands: one row per (vector, band) of ``base``; capped: rows in
-    under-cap buckets."""
-    per_band = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band, ({_band_key_sql('emb', b)}) AS bkey FROM base"
-        for b in range(similarity.N_BANDS)
-    )
-    return f"""bands AS ({per_band}),
-capped AS (
-  SELECT b.* FROM bands b
-  JOIN (SELECT band, bkey FROM bands GROUP BY 1, 2
-        HAVING count(*) <= {similarity.MAX_BUCKET}) ok USING (band, bkey))"""
-
-
-def oracle_lsh_sign_buckets() -> str:
-    return f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-{_bands_cte()}
-SELECT band::INT AS band, bkey AS bucket, count(*)::BIGINT AS n_vecs
-FROM bands GROUP BY 1, 2
-"""
-
-
-def oracle_ann_lsh_topk() -> str:
-    ppb = similarity.PLANES_PER_BAND
-    return f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-{_bands_cte()},
-qb AS (SELECT vec_id AS query_id, band, bkey FROM bands WHERE vec_id < 10),
-probes AS (
-  SELECT query_id, band, bkey FROM qb
-  UNION
-  SELECT query_id, band,
-         substr(bkey, 1, i - 1)
-           || (CASE substr(bkey, i, 1) WHEN '0' THEN '1' ELSE '0' END)
-           || substr(bkey, i + 1) AS bkey
-  FROM qb, unnest(generate_series(1, {ppb})) AS t(i)
-),
-cand AS (
-  SELECT DISTINCT p.query_id, c.vec_id
-  FROM capped c JOIN probes p USING (band, bkey)
-  WHERE c.vec_id != p.query_id
-),
-q AS (SELECT vec_id AS query_id, emb AS qemb FROM base WHERE vec_id < 10),
-scored AS (
-  SELECT cand.query_id, cand.vec_id,
-         round(list_dot_product(q.qemb, b.emb) /
-               (sqrt(list_dot_product(q.qemb, q.qemb)) * sqrt(list_dot_product(b.emb, b.emb))), 3) AS score
-  FROM cand JOIN base b ON b.vec_id = cand.vec_id
-  JOIN q ON q.query_id = cand.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, score, rank::INT AS rank FROM ranked WHERE rank <= 5
-"""
-
-
 def _sq_dist_sql(e: str, c: str) -> str:
-    """The rounded expanded-form squared distance every IVF oracle
-    shares (mirrors the engine's numpy form term-for-term)."""
+    """The rounded expanded-form squared distance of the IVF oracle
+    (mirrors the engine's numpy form term-for-term)."""
     r = similarity.IVF_ROUND
     return (
         f"round(list_dot_product({e}, {e}) - 2 * list_dot_product({e}, {c})"
@@ -1591,12 +1466,11 @@ def _sq_dist_sql(e: str, c: str) -> str:
 def _ivf_lloyd_ctes(
     n_centroids: int, iters: int, dim: int, n_queries: int, nprobe: int
 ) -> list[str]:
-    """Shared coarse-quantizer CTE chain: ``base`` → Lloyd iterations →
-    ``af`` (final assignment), ``q`` (query vectors), ``probes`` (the
-    nprobe nearest centroids per query, rounded-distance + cid
-    tie-break).  Single source for oracle_ann_ivf_topk,
-    oracle_semantic_dedup and oracle_cluster_balanced_sample — the
-    deterministic-k-means replay lives once."""
+    """oracle_ann_ivf_topk's coarse-quantizer CTE chain: ``base`` →
+    Lloyd iterations → ``af`` (final assignment), ``q`` (query vectors),
+    ``probes`` (the nprobe nearest centroids per query, rounded-distance
+    + cid tie-break) — the replay of similarity.ivf_assignments and
+    similarity._ivf_probes_col."""
     r = similarity.IVF_ROUND
     dist = _sq_dist_sql
     ctes = [
@@ -1649,19 +1523,16 @@ def _ivf_lloyd_ctes(
     return ctes
 
 
-def oracle_ann_ivf_topk(
-    n_centroids: int = 16,
-    iters: int = 2,
-    n_queries: int = 10,
-    k: int = 5,
-    nprobe: int = 2,
-    dim: int = similarity.EMBED_DIM,
-) -> str:
-    """DuckDB twin of similarity.ann_ivf_topk: the same deterministic
-    k-means (seed = k lowest vec_ids, rounded distances with lowest-cid
-    tie-break, rounded per-dim means, empty clusters keep their centroid)
-    unrolled as one CTE chain per Lloyd iteration."""
-    ctes = _ivf_lloyd_ctes(n_centroids, iters, dim, n_queries, nprobe)
+def oracle_ann_ivf_topk() -> str:
+    """DuckDB twin of similarity.ann_ivf_topk at its defaults (16
+    centroids, 2 Lloyd iterations, 10 queries, k=5, nprobe=2): the same
+    deterministic k-means (seed = k lowest vec_ids, rounded distances
+    with lowest-cid tie-break, rounded per-dim means, empty clusters
+    keep their centroid) unrolled as one CTE chain per Lloyd
+    iteration."""
+    ctes = _ivf_lloyd_ctes(
+        n_centroids=16, iters=2, dim=similarity.EMBED_DIM, n_queries=10, nprobe=2
+    )
     ctes.append(
         """scored AS (
   SELECT q.query_id, a.vec_id,
@@ -1679,146 +1550,8 @@ def oracle_ann_ivf_topk(
     return (
         "WITH "
         + ",\n".join(ctes)
-        + f"\nSELECT query_id, vec_id, score, rank::INT AS rank FROM ranked WHERE rank <= {k}"
+        + "\nSELECT query_id, vec_id, score, rank::INT AS rank FROM ranked WHERE rank <= 5"
     )
-
-
-def oracle_semantic_dedup(
-    n_centroids: int = 16,
-    iters: int = 2,
-    dim: int = similarity.EMBED_DIM,
-) -> str:
-    """DuckDB twin of similarity.semantic_dedup: the shared Lloyd-replay
-    chain up to the final assignment ``af`` (the q/probes tail CTEs go
-    unreferenced — DuckDB never executes them), then within-cluster
-    rounded-cosine pairs and the min-id-survivor left join.  The kept
-    sentinels (-1, -1.0) match the Spark coalesce exactly."""
-    ctes = _ivf_lloyd_ctes(n_centroids, iters, dim, 1, 1)
-    cos = (
-        "round(list_dot_product(a.emb, b.emb) / "
-        "(sqrt(list_dot_product(a.emb, a.emb)) * "
-        "sqrt(list_dot_product(b.emb, b.emb))), 3)"
-    )
-    ctes.append(
-        f"""pairs AS (
-  SELECT b.vec_id AS b_id, a.vec_id AS a_id, {cos} AS sim
-  FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE {cos} >= {similarity.SEMANTIC_DEDUP_THRESHOLD})"""
-    )
-    ctes.append(
-        """dup AS (
-  SELECT b_id, a_id, sim FROM (
-    SELECT b_id, a_id, sim,
-           row_number() OVER (PARTITION BY b_id ORDER BY a_id ASC) AS rn
-    FROM pairs) WHERE rn = 1)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + """
-SELECT af.vec_id, af.cid::INT AS centroid, (d.b_id IS NULL) AS keep,
-       coalesce(d.a_id, -1)::BIGINT AS dup_of,
-       coalesce(d.sim, -1.0) AS sim
-FROM af LEFT JOIN dup d ON af.vec_id = d.b_id"""
-    )
-
-
-def oracle_cluster_balanced_sample(
-    n_centroids: int = 16,
-    iters: int = 2,
-    dim: int = similarity.EMBED_DIM,
-    cap: int = similarity.CLUSTER_SAMPLE_CAP,
-) -> str:
-    """DuckDB twin of similarity.cluster_balanced_sample: the shared
-    Lloyd-replay chain to the final assignment ``af``, then the plain
-    per-cluster row_number over (md5 key, vec_id) — the single-window
-    plan the two-phase stratum cap must stay row-identical to."""
-    ctes = _ivf_lloyd_ctes(n_centroids, iters, dim, 1, 1)
-    ctes.append(
-        f"""ranked AS (
-  SELECT vec_id, cid,
-         row_number() OVER (PARTITION BY cid
-             ORDER BY md5('{similarity.CLUSTER_SAMPLE_SALT}' || vec_id::VARCHAR) ASC,
-                      vec_id ASC) AS rk
-  FROM af)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT vec_id, cid::INT AS centroid, rk::BIGINT AS rk
-FROM ranked WHERE rk <= {cap}"""
-    )
-
-
-N_PLANTED_TWINS = 10
-TWIN_ID_OFFSET = 1_000_001  # odd + ≢0 mod 3: crosses 2- and 3-batch staging
-
-
-def planted_embeddings(embeddings: DataFrame) -> DataFrame:
-    """Gate seeding: union the corpus with exact twins of the first
-    N_PLANTED_TWINS vectors (vec_id + TWIN_ID_OFFSET) so the near-dup
-    oracle compares non-empty sets — round 1's gate was trivially green on
-    0 rows vs 0 rows.  The operator under test is unchanged; only the gate
-    input is enriched (mirrored verbatim in the DuckDB oracle)."""
-    base = embeddings.select("vec_id", "embedding")
-    twins = base.where(F.col("vec_id") < N_PLANTED_TWINS).select(
-        (F.col("vec_id") + TWIN_ID_OFFSET).alias("vec_id"), "embedding"
-    )
-    return base.union(twins)
-
-
-def _embedding_edges_cte() -> str:
-    """CTE chain ending in ``jp(vec_a, vec_b, cosine)``: the planted
-    corpus, sign-LSH banding, capped candidate pairs, exact-cosine gate —
-    the near-dup edge derivation SHARED by the pair and cluster oracles
-    (one source of truth for the threshold/rounding, mirroring
-    similarity.EMBED_NEAR_DUP_THRESHOLD)."""
-    cos = (
-        "round(list_dot_product(ea.emb, eb.emb) / "
-        "(sqrt(list_dot_product(ea.emb, ea.emb)) * "
-        "sqrt(list_dot_product(eb.emb, eb.emb))), 3)"
-    )
-    return f"""planted AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + {TWIN_ID_OFFSET}, embedding FROM embeddings WHERE vec_id < {N_PLANTED_TWINS}
-),
-base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM planted),
-{_bands_cte()},
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM capped a JOIN capped b USING (band, bkey)
-  WHERE a.vec_id < b.vec_id
-),
-jp AS (
-  SELECT vec_a, vec_b, {cos} AS cosine
-  FROM cand JOIN base ea ON ea.vec_id = vec_a JOIN base eb ON eb.vec_id = vec_b
-  WHERE {cos} >= {similarity.EMBED_NEAR_DUP_THRESHOLD}
-)"""
-
-
-def oracle_embedding_near_dup() -> str:
-    return f"WITH {_embedding_edges_cte()} SELECT vec_a, vec_b, cosine FROM jp"
-
-
-def oracle_embedding_dedup_clusters() -> str:
-    """Recursive-CTE twin of similarity.embedding_dedup_clusters: the
-    cosine near-dup edges (shared with oracle_embedding_near_dup), true
-    connected-component fixpoint, min-vec_id cluster labels."""
-    return f"""
-WITH RECURSIVE {_embedding_edges_cte()},
-edges AS (SELECT vec_a AS a, vec_b AS b FROM jp
-          UNION ALL SELECT vec_b, vec_a FROM jp),
-walk AS (
-  SELECT vec_id AS doc, vec_id AS reach FROM planted
-  UNION
-  SELECT w.doc, e.b FROM walk w JOIN edges e ON e.a = w.reach
-)
-SELECT doc AS vec_id, min(reach) AS cluster,
-       (doc = min(reach)) AS is_survivor
-FROM walk GROUP BY doc
-"""
 
 
 def oracle_session_stats() -> str:
@@ -2345,33 +2078,15 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_classifier_scores": lambda spark, sf: textstats.quality_classifier_scores(
             load(spark, sf, "documents")
         ),
-        # similarity family
-        "cosine_topk": lambda spark, sf: similarity.cosine_topk(load(spark, sf, "embeddings")),
-        "lsh_sign_buckets": lambda spark, sf: similarity.lsh_sign_buckets(load(spark, sf, "embeddings")),
-        "ann_lsh_topk": lambda spark, sf: similarity.ann_lsh_topk(load(spark, sf, "embeddings")),
-        # k-means made engine-portable (rounded distances/means, cid
-        # tie-breaks) so the DuckDB twin replays the exact Lloyd iterations
+        # IVF ANN: k-means made engine-portable (rounded distances/means,
+        # cid tie-breaks) so the DuckDB twin replays the exact Lloyd
+        # iterations
         "ann_ivf_topk": lambda spark, sf: similarity.ann_ivf_topk(load(spark, sf, "embeddings")),
         # cross-wave ExactSubstr: delta probed against the persisted
         # shingle-histogram index
         "substring_delta": q_substring_delta,
         # per-doc novelty of the delta's shingle stream vs the same index
         "shingle_novelty": q_shingle_novelty,
-        "embedding_near_dup": lambda spark, sf: similarity.embedding_near_dup_pairs(
-            planted_embeddings(load(spark, sf, "embeddings"))
-        ),
-        # semantic dedup: connected components over the cosine-pair edges
-        "embedding_dedup_clusters": lambda spark, sf: similarity.embedding_dedup_clusters(
-            planted_embeddings(load(spark, sf, "embeddings"))
-        ),
-        # SemDeDup: k-means blocking + within-cluster cosine pruning
-        "semantic_dedup": lambda spark, sf: similarity.semantic_dedup(
-            load(spark, sf, "embeddings")
-        ),
-        # D4-style diversity selection: per-semantic-cluster hash-order cap
-        "cluster_balanced_sample": lambda spark, sf: similarity.cluster_balanced_sample(
-            load(spark, sf, "embeddings")
-        ),
         # interleaved-payload profile over extracted span sequences
         "interleave_stats": q_interleave_stats,
         # PDF/layout parse path (stub decoder, real plumbing)
@@ -2403,10 +2118,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # continuous-aggregate probe: persisted finest-grid partials
         # (additive), full-recompute oracle
         "time_rollup_delta": q_time_rollup_delta,
-        # per-label centroid geometry (rounded means, label-bounded joins)
-        "label_centroid_similarity": lambda spark, sf: similarity.label_centroid_similarity(
-            load(spark, sf, "embeddings")
-        ),
         "session_stats": lambda spark, sf: sessionize.session_stats(load(_utc(spark), sf, "events")),
         # streaming (batch shape + true Structured Streaming run + custom
         # stateful operator via applyInPandasWithState)
@@ -2468,9 +2179,6 @@ def build_oracles() -> dict[str, str]:
         "quality_scores": oracle_quality_scores(),
         "quality_filter": oracle_quality_filter(),
         "tfidf_top_terms": oracle_tfidf_top_terms(),
-        "cosine_topk": oracle_cosine_topk(),
-        "lsh_sign_buckets": oracle_lsh_sign_buckets(),
-        "ann_lsh_topk": oracle_ann_lsh_topk(),
         "ann_ivf_topk": oracle_ann_ivf_topk(),
         "quality_classifier_scores": oracle_quality_classifier_scores(),
         "shingle_novelty": oracle_shingle_novelty(),
@@ -2481,13 +2189,8 @@ def build_oracles() -> dict[str, str]:
         "asof_delta_enrich": oracle_asof_join_enrich(delta_only=True),
         "streaming_asof_enrich": oracle_asof_join_enrich(),
         "time_rollup_delta": oracle_time_rollup(),
-        "label_centroid_similarity": oracle_label_centroid_similarity(),
         "substring_delta": oracle_substring_delta(),
         "pdf_page_stats": oracle_pdf_page_stats(),
-        "embedding_near_dup": oracle_embedding_near_dup(),
-        "semantic_dedup": oracle_semantic_dedup(),
-        "cluster_balanced_sample": oracle_cluster_balanced_sample(),
-        "embedding_dedup_clusters": oracle_embedding_dedup_clusters(),
         "docs_joined_labels": oracle_docs_joined_labels(),
         "session_stats": oracle_session_stats(),
         "windowed_events": oracle_windowed_events(),

@@ -2,16 +2,16 @@
 (tests/test_contract.py::test_hadoop_fs_only_in_fsio) — jobs and operators
 probe, list and delete paths only through these functions.
 
-Every persisted index in this repo (the five index families —
+Every persisted index in this repo (the four index families —
 ``simhash`` and ``substring_hist`` written by corpus_job, ``user_state``
-and ``time_rollup`` by events_job, and the quantizer-bearing ``ivf`` —
-and the streamed SimHash loop) follows ONE durability rule: a writer
-owns exactly one ``wave=<id>`` segment and replays it with
-delete-before-overwrite, so an at-least-once retry is idempotent and
-committed segments are never touched.  :func:`write_wave_segment` is
-the only code that writes a segment.  These helpers go through the
-Hadoop FileSystem API so any scheme the cluster mounts (file://,
-hdfs://, s3a://) behaves identically.
+and ``time_rollup`` by events_job — and the streamed SimHash loop)
+follows ONE durability rule: a writer owns exactly one ``wave=<id>``
+segment and replays it with delete-before-overwrite, so an
+at-least-once retry is idempotent and committed segments are never
+touched.  :func:`write_wave_segment` is the only code that writes a
+segment.  These helpers go through the Hadoop FileSystem API so any
+scheme the cluster mounts (file://, hdfs://, s3a://) behaves
+identically.
 """
 
 from __future__ import annotations
@@ -128,10 +128,10 @@ def assert_index_kind(spark: SparkSession, path: str, kind: str) -> None:
     """Refuse to touch an index root claimed by a DIFFERENT index kind.
 
     All round-5+ indexes share the ``wave=<id>`` layout, so the layout
-    guard alone cannot stop e.g. ``write_ivf_index`` pointed at a simhash
-    index: the wave=0 delete-before-overwrite would silently destroy the
-    other family's committed build segment and the damage only surfaces
-    as missing columns at the next probe.  Each index root therefore
+    guard alone cannot stop e.g. ``write_user_state_index`` pointed at a
+    simhash index: the wave=0 delete-before-overwrite would silently
+    destroy the other family's committed build segment and the damage
+    only surfaces as missing columns at the next probe.  Each index root therefore
     carries an empty ``_index_kind_<kind>`` marker file (underscore
     prefix, NO "=": Spark's file index keeps underscore names containing
     "=" as partition-style paths and would read the marker as data);
@@ -163,24 +163,6 @@ def assert_index_param(spark: SparkSession, path: str, name: str, value) -> None
             f"use it with {name}={value} (digests/geometry would "
             "silently mismatch).  Rebuild the index or pass the "
             "matching value."
-        )
-
-
-def refuse_stale_appends(spark: SparkSession, path: str) -> None:
-    """Refuse to REBUILD a quantizer-bearing index (IVF) over existing
-    append segments: a rebuild retrains the coarse quantizer and
-    replaces wave=0 + the ``_centroids`` side table, but wave≥1 rows
-    were assigned against the OLD centroids — probes would pick
-    clusters by the new centroids and miss appended vectors with no
-    error.  A rebuild must start from a clean path (or the caller
-    deletes the appends first)."""
-    stale = [nm for nm in wave_names(spark, path) if nm != "wave=0"]
-    if stale:
-        raise ValueError(
-            f"{path} carries appended segments ({stale[:3]}) assigned "
-            "against the CURRENT centroids — rebuilding would retrain "
-            "them and silently mis-probe every appended vector.  Delete "
-            "the index to rebuild from scratch."
         )
 
 
@@ -279,7 +261,6 @@ def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
 def compact_index(
     spark: SparkSession,
     path: str,
-    partition_by: tuple[str, ...] = (),
     kind: str | None = None,
     transform=None,
 ) -> int:
@@ -288,10 +269,8 @@ def compact_index(
     Recurring waves accumulate a segment (and its file listing, its
     per-segment histogram row, its small files) each; probe cost grows
     with segment COUNT even when row count is flat.  Compaction restores
-    build-time read geometry without touching any trained state: rows
-    are unioned (and optionally re-aggregated via ``transform``), never
-    re-assigned, so the quantizer-bearing ivf family stays valid by
-    construction.
+    build-time read geometry: rows are unioned (and optionally
+    re-aggregated via ``transform``) into one segment.
 
     Caller contract: an OFFLINE maintenance op — no concurrent appends.
     Crash-safe in-place commit:
@@ -308,9 +287,9 @@ def compact_index(
     a manifest-bearing root RESUMES step 3 exactly (the manifest is the
     source of truth for what was consumed), never re-reads partially
     deleted segments.  ``transform`` runs on the merged frame before the
-    write (explicit repartition for partitioned rewrites, count
-    re-aggregation for histogram families).  Returns the number of segments folded (0 =
-    nothing to do)."""
+    write (re-aggregation for the histogram, counts and user-state
+    families).  Returns the number of segments folded (0 = nothing to
+    do)."""
     fs, _ = _fs_for(spark, path)
     tmp = f"{path}/_compact_tmp"
     manifest = _read_manifest(spark, path)
@@ -330,19 +309,8 @@ def compact_index(
         merged = spark.read.parquet(path).drop("wave")
         if transform is not None:
             merged = transform(merged)
-        elif partition_by:
-            # EXPLICIT partition count before a partitioned rewrite: a
-            # bare repartition(cols) is AQE-coalesced to one task and the
-            # per-directory file writes serialize (the round-4 finding —
-            # measured 4× on a partitioned index build)
-            merged = merged.repartition(
-                spark.sparkContext.defaultParallelism * 2, *partition_by
-            )
         delete_path(spark, tmp)
-        writer = merged.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        merged.write.mode("overwrite").parquet(tmp)
         manifest = {"new_id": new_id, "consumed": sorted(waves)}
         _write_manifest(spark, path, manifest)
     # commit (or resume a crashed commit): manifest is the ground truth
@@ -372,7 +340,7 @@ def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
     """:func:`compact_index` with the right geometry for each index
     family.  The kind is VERIFIED against the root's ``_index_kind``
     marker before anything is read — compacting with the wrong family's
-    geometry would silently drop the partition layout probes prune on."""
+    geometry would re-aggregate (or fail to) on the wrong key."""
     from pyspark.sql import functions as F
 
     def _merge_user_state(df):
@@ -403,7 +371,6 @@ def compact_index_kind(spark: SparkSession, path: str, kind: str) -> int:
                 F.sum("sum_value_micro").alias("sum_value_micro"),
             )
         },
-        "ivf": {"partition_by": ("centroid",)},
     }
     if kind not in geometries:
         raise ValueError(
@@ -433,9 +400,9 @@ def _assert_wave_id(wave, first: int, what: str) -> None:
 
 def assert_append_wave(wave) -> None:
     """Validate an APPEND wave id: never the build's 0, never negative,
-    never empty.  ``append_to_ivf_index`` (the one quantizer family,
-    whose append assigns against the frozen centroids) and the jobs'
-    ``--wave-id`` run it; every other writer takes wave 0 as its build."""
+    never empty.  ``corpus_job`` (whenever it keeps an index) and
+    ``events_job --append`` run it on their wave id before anything is
+    written; the index writers themselves take wave 0 as their build."""
     _assert_wave_id(wave, 1, "append wave id")
 
 
@@ -467,7 +434,6 @@ def write_wave_segment(
     wave,
     kind: str,
     params: dict | None = None,
-    partition_by: tuple[str, ...] = (),
 ) -> None:
     """Write ``df`` as ``path/wave=<wave>`` — THE writer of every index
     segment in the repo.  ``wave`` 0 is the build; any other id (an int
@@ -496,7 +462,4 @@ def write_wave_segment(
         _touch(spark, f"{path}/_param_{name}_{value}")
     seg = f"{path}/wave={wave}"
     delete_path(spark, seg)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(seg)
+    df.write.mode("overwrite").parquet(seg)

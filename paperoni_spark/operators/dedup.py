@@ -276,7 +276,7 @@ def lsh_candidate_doc_pairs(
     is 10^12 rows from a single bucket.  Buckets larger than ``cap`` are
     excluded via an anti-join on the over-cap set — same guard (and same
     no-broadcast-hint rationale: the hot set scales with corpus diversity,
-    AQE decides) as similarity.capped_bands.  Oversize clusters are not
+    AQE decides) as :func:`capped_bands`.  Oversize clusters are not
     lost: they are exactly-equal families the cheap exact/fingerprint dedup
     already collapses, and the bucket histogram (:func:`lsh_candidate_pairs`)
     still reports them.  The self-join is per (band, bucket) equi-key, never
@@ -425,6 +425,26 @@ def simhash_near_dup_pairs(
     )
 
 
+def capped_bands(bands: DataFrame, cap: int) -> DataFrame:
+    """Drop ``(band, bkey)`` rows in over-cap buckets via anti-join on the
+    over-cap set (extra columns pass through) — the SimHash pair sweep's
+    hot-band guard.
+
+    The over-cap set is usually a handful of degenerate buckets, but its
+    size scales with corpus diversity, not with the cap — a forced
+    broadcast would be a driver-OOM cliff on exactly the boilerplate-heavy
+    corpora the cap exists for.  No hint: AQE broadcasts it at runtime
+    when it is actually small and falls back to a shuffled anti-join when
+    it is not."""
+    hot = (
+        bands.groupBy("band", "bkey")
+        .agg(F.count("*").alias("n_in_bucket"))
+        .where(F.col("n_in_bucket") > cap)
+        .select("band", "bkey")
+    )
+    return bands.join(hot, ["band", "bkey"], "left_anti")
+
+
 def simhash_near_dup_pairs_from_sh(
     sh: DataFrame,
     bits: int = SIMHASH_PAIR_BITS,
@@ -439,10 +459,6 @@ def simhash_near_dup_pairs_from_sh(
     _simhash_pair_guard(bits, bands, max_hamming)
     rows = _simhash_band_rows_from(sh, bits, bands)
     rows = materialize(rows)  # 4 consumers, tiny rows
-    # the hot-band guard is similarity.capped_bands — ONE implementation of
-    # the load-bearing unhinted anti-join (extra columns pass through)
-    from .similarity import capped_bands
-
     capped = capped_bands(rows, cap)
     a = capped.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "bkey"
@@ -625,8 +641,8 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     every node (``doc_id``) with its component's minimum doc_id and mark
     that minimum as the survivor (the row a dedup pass would keep).
     ``pairs`` carries (doc_a, doc_b) edges between members of ``nodes``
-    — any edge source: n-gram Jaccard, SimHash Hamming, winnowing
-    overlap, embedding cosine.
+    — any edge source (callers pass n-gram Jaccard or SimHash Hamming
+    pairs).
 
     Only edge endpoints are labelled: a node without an edge is its own
     cluster.  Each round is min-label propagation over the edges (one

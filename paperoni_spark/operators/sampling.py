@@ -156,90 +156,69 @@ def stratified_hash_sample(
 SOURCE_CAP_SALT = "srccap:"
 
 
-def capped_stratum_sample(
-    rows: DataFrame,
-    stratum_col: str,
-    id_col: str,
-    cap: int,
-    salt: str,
-    prefix_len: int = BUDGET_PREFIX_LEN,
-) -> DataFrame:
-    """Keep at most ``cap`` rows per stratum, chosen deterministically by
-    hash order (md5(salt||id), id tie-break) so the kept set is
-    shuffle-independent and salt-rotatable.  Returns
-    (id_col, stratum_col, rk) with 1 <= rk <= cap.
+def source_cap_sample(documents: DataFrame, cap_per_source: int = 10) -> DataFrame:
+    """Per-domain document cap (the C4/RefinedWeb "no domain dominates the
+    mix" guard): keep at most ``cap_per_source`` documents per source,
+    chosen deterministically by hash order (md5(SOURCE_CAP_SALT||doc_id),
+    doc_id tie-break) so the kept set is shuffle-independent.  Returns
+    (doc_id, source, rk) with 1 <= rk <= cap_per_source.
 
     Same two-phase key-prefix cut as token_budget_sample, with unit
-    weights: a naive row_number-per-stratum window puts a monster stratum
+    weights: a naive row_number-per-source window puts a monster source
     through ONE task (at 10^12 docs a crawl's top domain is a meaningful
-    fraction of the corpus); instead (1) count rows per (stratum, prefix)
-    — a 16^prefix_len-row summary per stratum — and window THAT into
-    running offsets, (2) drop past-cap prefixes map-side and rank only
-    within a prefix, so each window task sees 1/256th of a stratum.  Kept
-    rows and ranks are identical to the single-window plan because prefix
-    order == key order.  Unlike token_budget_sample the scored frame is
-    NOT materialized: its recompute is one md5 expression (no
+    fraction of the corpus); instead (1) count rows per (source, prefix)
+    — a 16^BUDGET_PREFIX_LEN-row summary per source — and window THAT
+    into running offsets, (2) drop past-cap prefixes map-side and rank
+    only within a prefix, so each window task sees 1/256th of a source.
+    Kept rows and ranks are identical to the single-window plan because
+    prefix order == key order.  Unlike token_budget_sample the scored
+    frame is NOT materialized: its recompute is one md5 expression (no
     tokenization UDF), cheaper at scale than writing the cut.  The
-    offsets join is UNHINTED for the same reason as there — stratum
+    offsets join is UNHINTED for the same reason as there — source
     cardinality is unbounded on dirty data (AQE broadcasts the
     runtime-small case)."""
     from pyspark.sql.window import Window
 
-    key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    scored = rows.select(
-        id_col,
-        stratum_col,
+    key = F.md5(F.concat(F.lit(SOURCE_CAP_SALT), F.col("doc_id").cast("string")))
+    scored = documents.select(
+        "doc_id",
+        "source",
         key.alias("key"),
-        F.substring(key, 1, prefix_len).alias("pfx"),
+        F.substring(key, 1, BUDGET_PREFIX_LEN).alias("pfx"),
     )
     pfx_w = (
-        Window.partitionBy(stratum_col)
+        Window.partitionBy("source")
         .orderBy("pfx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = (
-        scored.groupBy(stratum_col, "pfx")
+        scored.groupBy("source", "pfx")
         .agg(F.count("*").alias("cnt"))
         .select(
-            stratum_col,
+            "source",
             "pfx",
             F.coalesce(F.sum("cnt").over(pfx_w), F.lit(0)).alias("offset"),
         )
     )
-    w = Window.partitionBy(stratum_col, "pfx").orderBy(
-        F.col("key").asc(), F.col(id_col).asc()
+    w = Window.partitionBy("source", "pfx").orderBy(
+        F.col("key").asc(), F.col("doc_id").asc()
     )
     # null-SAFE offsets join: a plain column-list join uses EqualTo and
-    # silently DROPS every NULL-stratum row (exactly the dirty-data
-    # case the cap targets), while the window's partitionBy — and
-    # the single-window plan this must stay row-identical to — groups
-    # NULLs as one stratum.  eqNullSafe keeps them capped, not lost.
+    # silently DROPS every NULL-source row (exactly the dirty-data case
+    # the cap targets), while the window's partitionBy — and the
+    # single-window plan this must stay row-identical to — groups NULLs
+    # as one source.  eqNullSafe keeps them capped, not lost.
     o = offsets.select(
-        F.col(stratum_col).alias("o_stratum"), F.col("pfx").alias("o_pfx"), "offset"
+        F.col("source").alias("o_source"), F.col("pfx").alias("o_pfx"), "offset"
     )
     return (
         scored.join(
             o,
-            scored[stratum_col].eqNullSafe(o["o_stratum"])
+            scored["source"].eqNullSafe(o["o_source"])
             & (scored["pfx"] == o["o_pfx"]),
         )
-        .where(F.col("offset") < cap)
+        .where(F.col("offset") < cap_per_source)
         .withColumn("rk", F.col("offset") + F.row_number().over(w))
-        .where(F.col("rk") <= cap)
-        .select(id_col, stratum_col, F.col("rk").cast("long").alias("rk"))
-    )
-
-
-def source_cap_sample(
-    documents: DataFrame,
-    cap_per_source: int = 10,
-    salt: str = SOURCE_CAP_SALT,
-    prefix_len: int = BUDGET_PREFIX_LEN,
-) -> DataFrame:
-    """Per-domain document cap (the C4/RefinedWeb "no domain dominates the
-    mix" guard): keep at most ``cap_per_source`` documents per source —
-    :func:`capped_stratum_sample` with (source, doc_id) as the
-    (stratum, id) pair; see there for the two-phase scale plan."""
-    return capped_stratum_sample(
-        documents, "source", "doc_id", cap_per_source, salt, prefix_len
+        .where(F.col("rk") <= cap_per_source)
+        .select("doc_id", "source", F.col("rk").cast("long").alias("rk"))
     )

@@ -43,16 +43,15 @@ RUNTIME_ENGINE_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Partition-discovery strategy for the wave-segmented index roots
-    # (one wave=<id> directory per appended wave, more under the
-    # centroid-partitioned ivf root): past Spark's default threshold of
-    # 32 paths every read of the root launches a LISTING JOB, which costs
-    # ~0.4 s of scheduling for a listing the driver does in ms on a
-    # local/low-latency filesystem (measured on a simhash index root of
-    # 48 wave segments, 4 vCPUs, local disk: the delta probe ran 10 jobs
-    # in a median 1.86 s at 32 and 9 jobs in 1.46 s at 4096, 7 warm
-    # alternating runs each).  On a high-latency object store with >>4k
-    # directories per table, parallel listing earns its keep — lower
-    # this value there
+    # (one wave=<id> directory per appended wave): past Spark's default
+    # threshold of 32 paths every read of the root launches a LISTING
+    # JOB, which costs ~0.4 s of scheduling for a listing the driver does
+    # in ms on a local/low-latency filesystem (measured on a simhash
+    # index root of 48 wave segments, 4 vCPUs, local disk: the delta
+    # probe ran 10 jobs in a median 1.86 s at 32 and 9 jobs in 1.46 s at
+    # 4096, 7 warm alternating runs each).  On a high-latency object
+    # store with >>4k directories per table, parallel listing earns its
+    # keep — lower this value there
     # (apply_engine_confs overwrites a submitter's --conf; manifest-based
     # table formats avoid the listing entirely; guide §6).
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 import paperoni_spark.contract as contract
 import paperoni_spark.fsio as fsio
-from paperoni_spark.operators import dedup, similarity
+from paperoni_spark.operators import dedup
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,11 +24,6 @@ pytestmark = pytest.mark.skipif(
 @pytest.fixture(scope="module")
 def docs(spark):
     return contract.load(spark, SF_DIR, "documents")
-
-
-@pytest.fixture(scope="module")
-def embeds(spark):
-    return contract.load(spark, SF_DIR, "embeddings")
 
 
 def _rows(df):
@@ -75,7 +70,7 @@ def test_simhash_compaction_parity(spark, docs, tmp_path):
 
     # compacting with the wrong family's geometry is refused up front
     with pytest.raises(ValueError, match="is a 'simhash' index"):
-        fsio.compact_index_kind(spark, path, "ivf")
+        fsio.compact_index_kind(spark, path, "user_state")
     with pytest.raises(ValueError, match="no compaction geometry"):
         fsio.compact_index_kind(spark, path, "nonsense")
 
@@ -125,30 +120,6 @@ def test_substring_compaction_parity(spark, docs, tmp_path):
         )
     )
     assert after == before
-
-
-def test_ivf_compaction_parity(spark, embeds, tmp_path):
-    """Quantizer-bearing family: assigned rows are merged untouched
-    (never re-assigned) under the centroid partition layout, the probe
-    scan returns identical rows, and the post-compaction rebuild refusal
-    still holds (the merged segment is not wave=0)."""
-    path = str(tmp_path / "ivf_idx")
-    corpus = embeds.where(F.col("vec_id") % 10 < 8)
-    wave1 = embeds.where(F.col("vec_id") % 10 >= 8)
-    assigned, centroids = similarity.ivf_assignments(corpus)
-    similarity.write_ivf_index(assigned, path, centroids)
-    similarity.append_to_ivf_index(wave1, path, 1)
-    probes = [0, 3, 7]
-
-    def probe_rows():
-        scan = similarity.ivf_probe_scan(spark, path, probes)
-        return _rows(scan.select("vec_id", "centroid", "emb"))
-
-    before = probe_rows()
-    assert fsio.compact_index_kind(spark, path, "ivf") == 2
-    assert probe_rows() == before
-    with pytest.raises(ValueError, match="appended segments"):
-        similarity.write_ivf_index(assigned, path, centroids)
 
 
 def test_compaction_crash_recovery(spark, docs, tmp_path, monkeypatch):

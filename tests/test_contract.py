@@ -10,7 +10,7 @@ import __spark_entry__ as entry
 def test_every_query_has_an_oracle():
     names = set(entry.queries())
     assert names == set(entry.oracle_sql())
-    assert len(names) == 63
+    assert len(names) == 55
 
 
 def test_hadoop_fs_only_in_fsio():

@@ -13,7 +13,7 @@ import pytest
 
 import paperoni_spark.contract as contract
 from pyspark.sql import functions as F
-from paperoni_spark.operators import dedup, similarity, textstats
+from paperoni_spark.operators import dedup, textstats
 from paperoni_spark.streaming import run_streaming_window_counts
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -291,47 +291,18 @@ def test_quality_scores_matches_oracle(spark, docs, ddb):
     )
 
 
-def test_cosine_topk_matches_oracle(spark, embeds, ddb):
-    assert_matches_oracle(
-        similarity.cosine_topk(embeds), ddb, contract.oracle_cosine_topk()
-    )
-
-
-def test_ann_recall_against_exact(spark, embeds):
-    """ANN is approximate: its hits must be a subset of each query's bucket
-    and every returned pair must carry the exact cosine score."""
-    exact = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in similarity.cosine_topk(embeds, n_queries=10, k=50).collect()
-    }
-    ann = similarity.ann_lsh_topk(embeds, n_queries=10, k=5).collect()
-    assert len(ann) > 0
-    for r in ann:
-        key = (r["query_id"], r["vec_id"])
-        if key in exact:
-            assert exact[key] == r["score"]
-
-
-def test_lsh_bucket_histogram_total(spark, embeds):
-    rows = similarity.lsh_sign_buckets(embeds).collect()
-    # banded: every vector appears once per band
-    assert sum(r["n_vecs"] for r in rows) == embeds.count() * similarity.N_BANDS
-    assert {r["band"] for r in rows} == set(range(similarity.N_BANDS))
-
-
-def test_bucket_cap_excludes_degenerate_cluster(spark):
-    """The MAX_BUCKET guard: a degenerate cluster (every vector identical →
-    one over-cap bucket per band) generates NO candidate pairs, while the
-    same corpus passes with the cap lifted — the O(B²) skew bound."""
-    from paperoni_spark.operators.similarity import embedding_near_dup_pairs
-
-    vec = [1.0] * similarity.EMBED_DIM
-    rows = [(i, vec) for i in range(similarity.MAX_BUCKET + 5)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    assert embedding_near_dup_pairs(df).count() == 0
-    capped_off = embedding_near_dup_pairs(df, cap=10_000)
-    n = similarity.MAX_BUCKET + 5
-    assert capped_off.count() == n * (n - 1) // 2
+def test_simhash_band_cap_excludes_degenerate_bucket(spark):
+    """The SIMHASH_BAND_CAP guard: a degenerate cluster (every document
+    identical → one over-cap bucket per band) generates NO candidate
+    pairs, while the same corpus pairs up with the cap lifted — the
+    O(B²) skew bound of the unhinted over-cap anti-join."""
+    n = dedup.SIMHASH_BAND_CAP + 5
+    rows = [(i, "the same boilerplate page body " * 4) for i in range(n)]
+    df = spark.createDataFrame(rows, "doc_id: long, text: string")
+    assert dedup.simhash_near_dup_pairs(df).count() == 0
+    uncapped = dedup.simhash_near_dup_pairs(df, cap=10**9).collect()
+    assert len(uncapped) == n * (n - 1) // 2
+    assert all(r["hamming"] == 0 for r in uncapped)
 
 
 def test_streaming_equals_batch(spark, ddb):
@@ -388,8 +359,30 @@ def test_pdf_extract_plumbing(spark, docs, ddb):
     )
 
 
+def _rounded_cosines(qvecs, vecs):
+    """Brute-force cosine of every (query, vector) pair in the engine's
+    exact arithmetic: doubles, products summed left to right (Spark's
+    ``aggregate`` over ``zip_with``; ``np.add.accumulate`` is sequential,
+    unlike the pairwise ``np.sum``), then rounded to 3 decimals the way
+    Spark's ``round`` does."""
+    import numpy as np
+
+    from paperoni_spark.streaming.stateful import spark_round
+
+    def seq_sum(m):
+        return np.add.accumulate(m, axis=-1)[..., -1]
+
+    dots = seq_sum(qvecs[:, None, :] * vecs[None, :, :])
+    qn = np.sqrt(seq_sum(qvecs * qvecs))
+    vn = np.sqrt(seq_sum(vecs * vecs))
+    cos = dots / (qn[:, None] * vn[None, :])
+    return [[spark_round(float(x), 3) for x in row] for row in cos]
+
+
 def test_ivf_ann(spark, embeds):
-    from paperoni_spark.operators.similarity import ann_ivf_topk, cosine_topk, ivf_assignments
+    import numpy as np
+
+    from paperoni_spark.operators.similarity import ann_ivf_topk, ivf_assignments
 
     assigned, centroids = ivf_assignments(embeds, n_centroids=8, iters=2)
     counts = {r["centroid"]: r["n"] for r in assigned.groupBy("centroid").agg(F.count("*").alias("n")).collect()}
@@ -398,15 +391,22 @@ def test_ivf_ann(spark, embeds):
 
     ann = ann_ivf_topk(embeds, n_queries=5, k=5, n_centroids=8, nprobe=2).collect()
     assert len(ann) > 0
+    # exact reference: numpy brute force over every other vector, the
+    # same rounded cosine the operator ranks by
+    rows = embeds.select("vec_id", "embedding").collect()
+    ids = [r["vec_id"] for r in rows]
+    vecs = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    qidx = [i for i, v in enumerate(ids) if v < 5]
+    scores = _rounded_cosines(vecs[qidx], vecs)
     exact = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in cosine_topk(embeds, n_queries=5, k=100).collect()
+        (ids[qi], v): scores[n][j]
+        for n, qi in enumerate(qidx)
+        for j, v in enumerate(ids)
+        if v != ids[qi]
     }
     # every IVF hit carries the exact cosine score for that pair
     for r in ann:
-        key = (r["query_id"], r["vec_id"])
-        if key in exact:
-            assert exact[key] == r["score"]
+        assert exact[(r["query_id"], r["vec_id"])] == r["score"]
     # IVF with nprobe=2 of 8 clusters should recover a decent share of the
     # true top-5 (deterministic corpus → deterministic recall)
     true_top = {}
@@ -418,37 +418,6 @@ def test_ivf_ann(spark, embeds):
         got = {r["vec_id"] for r in ann if r["query_id"] == q}
         hits += len(top5 & got)
     assert hits >= 5  # ≥20% recall across 5 queries at this tiny scale
-
-
-def test_embedding_near_dup_blocking(spark, embeds, ddb):
-    from paperoni_spark.operators.similarity import embedding_near_dup_pairs
-
-    # planted twins make the 0.95 gate non-trivial (>0 rows both engines)
-    planted = contract.planted_embeddings(embeds)
-    result = embedding_near_dup_pairs(planted)
-    assert result.count() >= contract.N_PLANTED_TWINS
-    assert_matches_oracle(result, ddb, contract.oracle_embedding_near_dup())
-    # at a permissive threshold the blocked comparison yields real pairs
-    pairs = embedding_near_dup_pairs(embeds, threshold=0.3).collect()
-    assert len(pairs) > 0
-    for r in pairs:
-        assert r["vec_a"] < r["vec_b"]
-        assert 0.3 <= r["cosine"] <= 1.0
-
-
-def test_embedding_dedup_clusters(spark, embeds, ddb):
-    """Semantic dedup: CC over the cosine near-dup edges; every planted
-    twin lands in its seed's cluster with the seed surviving."""
-    from paperoni_spark.operators.similarity import embedding_dedup_clusters
-
-    planted = contract.planted_embeddings(embeds)
-    result = embedding_dedup_clusters(planted)
-    assert_matches_oracle(result, ddb, contract.oracle_embedding_dedup_clusters())
-    got = {r["vec_id"]: (r["cluster"], r["is_survivor"]) for r in result.collect()}
-    for seed in range(contract.N_PLANTED_TWINS):
-        twin = seed + contract.TWIN_ID_OFFSET
-        assert got[twin][0] == got[seed][0] == seed
-        assert got[seed][1] and not got[twin][1]
 
 
 def test_shingle_df_cap_blocks_boilerplate(spark):
@@ -602,65 +571,7 @@ def test_token_budget_sample(spark, docs, ddb):
     )
 
 
-def test_ivf_probe_scan_partition_pruned(spark, embeds, tmp_path_factory):
-    """The IVF scale path, demonstrated: the assigned table written
-    partitioned by centroid yields probe scans that prune to exactly the
-    nprobe probed partitions — a partition filter, not a row filter over
-    the full corpus."""
-    path = str(tmp_path_factory.mktemp("ivf") / "index")
-    assigned, centroids = similarity.ivf_assignments(embeds, n_centroids=16)
-    similarity.write_ivf_index(assigned, path, centroids)
-    probes = [3, 7]
-    scan = similarity.ivf_probe_scan(spark, path, probes)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    # the IN-filter must land in PartitionFilters (listing-time pruning);
-    # a PushedFilter would still open every partition's files
-    pf = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "centroid" in pf and "IN" in pf.upper()
-    # only the probed directories are actually read
-    files = {
-        r[0]
-        for r in scan.select(
-            F.regexp_extract(F.input_file_name(), r"centroid=(\d+)", 1)
-        ).distinct().collect()
-    }
-    assert files == {"3", "7"}
-    # and the pruned scan returns exactly the probed clusters' rows
-    expected = assigned.where(F.col("centroid").isin(probes)).count()
-    assert scan.count() == expected > 0
-
-    # recurring-wave write-back: the persisted coarse quantizer makes the
-    # index self-contained — a wave assigns against the FROZEN centroids
-    # map-side and appends into its partition; the side table is
-    # underscore-prefixed, invisible to partition discovery
-    assert similarity.read_ivf_centroids(spark, path) == centroids
-    seed = assigned.orderBy("vec_id").limit(1).collect()[0]
-    wave = spark.createDataFrame(
-        [(10_000_001, list(seed["emb"]))], "vec_id: long, embedding: array<double>"
-    )
-    similarity.append_to_ivf_index(wave, path, 1)
-    # at-least-once retry of the SAME wave replays its segment
-    n_before = spark.read.parquet(path).count()
-    similarity.append_to_ivf_index(wave, path, 1)
-    assert spark.read.parquet(path).count() == n_before
-    got = similarity.ivf_probe_scan(spark, path, [seed["centroid"]]).where(
-        F.col("vec_id") == 10_000_001
-    ).collect()
-    assert len(got) == 1 and got[0]["centroid"] == seed["centroid"]
-    # an index without its quantizer side table fails loudly
-    with pytest.raises(ValueError, match="_centroids"):
-        similarity.read_ivf_centroids(spark, str(tmp_path_factory.mktemp("none")))
-    # a legacy flat directory (bare part files) is refused at the WRITE,
-    # not discovered as a broken mixed layout at the next probe
-    from paperoni_spark.fsio import write_wave_segment
-
-    flat = tmp_path_factory.mktemp("flatdir")
-    (flat / "part-00000.parquet").touch()
-    with pytest.raises(ValueError):
-        write_wave_segment(embeds.limit(1), str(flat), 1, kind="ivf")
-
-
-def test_index_kind_marker(spark, embeds, docs, tmp_path):
+def test_index_kind_marker(spark, docs, tmp_path):
     """All wave-keyed indexes share one layout, so the layout guard alone
     can't stop one family's wave=0 build from destroying another's
     committed segment: the _index_kind marker must (a) refuse a foreign
@@ -673,17 +584,14 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
         simhash,
         write_simhash_index,
     )
-    from paperoni_spark.operators.similarity import (
-        ivf_assignments,
-        write_ivf_index,
-    )
+    from paperoni_spark.operators.temporal import write_user_state_index
 
     # (a) cross-family refusal, committed build left untouched
     sim_path = str(tmp_path / "simhash_idx")
     write_simhash_index(simhash(docs, SIMHASH_PAIR_BITS), sim_path)
     before = sorted(r["doc_id"] for r in spark.read.parquet(sim_path).collect())
     with pytest.raises(ValueError, match="simhash"):
-        write_wave_segment(embeds.limit(1), sim_path, 0, kind="ivf")
+        write_wave_segment(docs.limit(1), sim_path, 0, kind="user_state")
     assert sorted(
         r["doc_id"] for r in spark.read.parquet(sim_path).collect()
     ) == before
@@ -702,14 +610,14 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     )
     assert (legacy / "_index_kind_simhash").exists()
     with pytest.raises(ValueError, match="simhash"):
-        write_wave_segment(embeds.limit(1), str(legacy), 2, kind="ivf")
+        write_wave_segment(docs.limit(1), str(legacy), 2, kind="user_state")
 
-    # (c) through the family writers: a partitioned IVF build is refused
-    # at the simhash root, committed rows untouched, and a simhash append
+    # (c) through the family writers: a user_state build is refused at
+    # the simhash root, committed rows untouched, and a simhash append
     # is refused on a flat legacy directory (bare part files)
-    assigned, centroids = ivf_assignments(embeds.orderBy("vec_id").limit(64), n_centroids=4)
+    events = contract.load(spark, SF_DIR, "events").orderBy("event_id").limit(50)
     with pytest.raises(ValueError, match="simhash"):
-        write_ivf_index(assigned, sim_path, centroids)
+        write_user_state_index(events, sim_path)
     assert sorted(
         r["doc_id"] for r in spark.read.parquet(sim_path).collect()
     ) == before
@@ -721,40 +629,30 @@ def test_index_kind_marker(spark, embeds, docs, tmp_path):
     assert sorted(p.name for p in flat.iterdir()) == ["part-00000.parquet"]
 
 
-_WAVE_ID_FAMILIES = ["simhash", "substring_hist", "user_state", "time_rollup", "ivf"]
+_WAVE_ID_FAMILIES = ["simhash", "substring_hist", "user_state", "time_rollup"]
 
 
 @pytest.mark.parametrize("family", _WAVE_ID_FAMILIES)
-def test_wave_id_rule_every_family(spark, docs, embeds, tmp_path, family):
-    """One wave-id rule for every index family's segment writer (the
-    ivf family's append): a non-numeric string id is a wave like
-    any other, an empty or negative id is refused with ValueError before
-    the root is touched."""
+def test_wave_id_rule_every_family(spark, docs, tmp_path, family):
+    """One wave-id rule for every index family's segment writer: a
+    non-numeric string id is a wave like any other, an empty or negative
+    id is refused with ValueError before the root is touched."""
     from paperoni_spark.operators import temporal
 
     small_docs = docs.orderBy("doc_id").limit(40)
-    small_embeds = embeds.orderBy("vec_id").limit(64)
     events = contract.load(spark, SF_DIR, "events").orderBy("event_id").limit(200)
     sh = dedup.simhash(small_docs, dedup.SIMHASH_PAIR_BITS)
 
-    def ivf_build(p):
-        assigned, centroids = similarity.ivf_assignments(small_embeds, n_centroids=4)
-        similarity.write_ivf_index(assigned, p, centroids)
-
-    # family -> (build at wave 0, write the given wave)
+    # family -> write the given wave (0 is the build)
     writers = {
-        "simhash": (None, lambda p, w: dedup.write_simhash_index(sh, p, w)),
-        "substring_hist": (None, lambda p, w: dedup.write_substring_index(small_docs, p, w, n=8)),
-        "user_state": (None, lambda p, w: temporal.write_user_state_index(events, p, w)),
-        "time_rollup": (None, lambda p, w: temporal.write_rollup_index(events, p, w)),
-        "ivf": (ivf_build, lambda p, w: similarity.append_to_ivf_index(small_embeds, p, w)),
+        "simhash": lambda p, w: dedup.write_simhash_index(sh, p, w),
+        "substring_hist": lambda p, w: dedup.write_substring_index(small_docs, p, w, n=8),
+        "user_state": lambda p, w: temporal.write_user_state_index(events, p, w),
+        "time_rollup": lambda p, w: temporal.write_rollup_index(events, p, w),
     }
-    build, write = writers[family]
+    write = writers[family]
     path = str(tmp_path / family)
-    if build is None:
-        write(path, 0)
-    else:
-        build(path)
+    write(path, 0)
 
     def listing():
         return sorted(
@@ -1414,22 +1312,14 @@ def test_connected_components_chain_converges_fast(spark):
         _cc_fixpoint(nodes, chain, max_rounds=2)
 
 
-def test_index_geometry_guards(spark, docs, embeds, tmp_path):
-    """Round-6 geometry guards: (a) the substring index pins its shingle
+def test_index_geometry_guards(spark, docs, tmp_path):
+    """Round-6 geometry guard: the substring index pins its shingle
     size — probing or appending at a different n would hash disjoint
     digests and silently match nothing, and a write into another family's
-    root is refused before that pin is adopted; (b) the quantizer-bearing IVF
-    index refuses a REBUILD over existing append segments — retrained
-    centroids would silently mis-probe every appended vector's old
-    assignment."""
+    root is refused before that pin is adopted."""
     from paperoni_spark.operators.dedup import (
         substring_delta_clean,
         write_substring_index,
-    )
-    from paperoni_spark.operators.similarity import (
-        append_to_ivf_index,
-        ivf_assignments,
-        write_ivf_index,
     )
 
     sub = str(tmp_path / "sub_idx")
@@ -1458,41 +1348,6 @@ def test_index_geometry_guards(spark, docs, embeds, tmp_path):
         write_substring_index(docs, ust, n=8)
     assert not os.path.exists(os.path.join(ust, "_param_shingle_n_8"))
 
-    assigned, centroids = ivf_assignments(embeds)
-    ivf = str(tmp_path / "ivf_idx")
-    write_ivf_index(assigned, ivf, centroids)
-    seed = embeds.orderBy("vec_id").limit(1).collect()[0]
-    wave_df = spark.createDataFrame(
-        [(30_000_001, list(seed["embedding"]))],
-        "vec_id: long, embedding: array<double>",
-    )
-    append_to_ivf_index(wave_df, ivf, 1)
-    with pytest.raises(ValueError, match="appended segments"):
-        write_ivf_index(assigned, ivf, centroids)
-    # a pure wave=0 rebuild (no appends) stays allowed
-    ivf2 = str(tmp_path / "ivf_idx2")
-    write_ivf_index(assigned, ivf2, centroids)
-    write_ivf_index(assigned, ivf2, centroids)
-
-
-def test_semantic_dedup(spark, embeds, ddb):
-    """SemDeDup: oracle match plus the structural invariants — every
-    removed row points at a LOWER-id survivor in the SAME cluster, kept
-    rows carry the exact sentinels, and the lowest vec_id always
-    survives (nothing below it can remove it)."""
-    out = similarity.semantic_dedup(embeds)
-    assert_matches_oracle(out, ddb, contract.oracle_semantic_dedup())
-    rows = out.collect()
-    by_id = {r["vec_id"]: r for r in rows}
-    assert by_id[min(by_id)]["keep"]
-    for r in rows:
-        if r["keep"]:
-            assert r["dup_of"] == -1 and r["sim"] == -1.0
-        else:
-            assert r["dup_of"] < r["vec_id"]
-            assert by_id[r["dup_of"]]["centroid"] == r["centroid"]
-            assert r["sim"] >= similarity.SEMANTIC_DEDUP_THRESHOLD
-
 
 def test_tfidf_top_terms(spark, docs, ddb):
     """Top-k TF-IDF keywords: oracle match plus shape — exactly top_k
@@ -1520,26 +1375,6 @@ def test_tfidf_top_terms(spark, docs, ddb):
     plan = split._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # head matches map-side
     assert "LeftAnti" in plan  # tail routing is the anti-join on head keys
-
-
-def test_cluster_balanced_sample(spark, embeds, ddb):
-    """Diversity cap: oracle match plus per-cluster ranks dense in
-    1..min(cap, cluster size) against the independent assignment."""
-    out = similarity.cluster_balanced_sample(embeds)
-    assert_matches_oracle(out, ddb, contract.oracle_cluster_balanced_sample())
-    assigned, _ = similarity.ivf_assignments(embeds)
-    sizes = {
-        r["centroid"]: r["n"]
-        for r in assigned.groupBy("centroid").agg(F.count("*").alias("n")).collect()
-    }
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["centroid"], []).append(r["rk"])
-    for cid, rks in got.items():
-        expect = min(similarity.CLUSTER_SAMPLE_CAP, sizes[cid])
-        assert sorted(rks) == list(range(1, expect + 1))
-    # every non-empty cluster is represented
-    assert set(got) == {c for c, n in sizes.items() if n > 0}
 
 
 def test_quality_classifier_scores(spark, docs, ddb):
@@ -1816,40 +1651,3 @@ def test_time_rollup_index(spark, ddb, tmp_path):
     # geometry pin: a probe at a different finest grid is refused
     with _pytest.raises(ValueError, match="finest_s"):
         temporal.time_rollup_from_index(spark, idx, resolutions_s=(120, 600, 3600))
-
-
-def test_label_centroid_similarity(spark, ddb):
-    """Centroid cosine matrix vs the SQL replay, a numpy brute force
-    with the same rounding ladder, and the geometry laws (full upper
-    triangle, cosine within [-1, 1])."""
-    import numpy as np
-
-    from paperoni_spark.operators import similarity
-
-    embeds = contract.load(spark, SF_DIR, "embeddings")
-    out_df = similarity.label_centroid_similarity(embeds)
-    assert_matches_oracle(
-        out_df, ddb, contract.oracle_label_centroid_similarity()
-    )
-    rows = out_df.collect()
-
-    data = embeds.select("label", "embedding").collect()
-    by_label = {}
-    for r in data:
-        by_label.setdefault(r.label, []).append(np.array(r.embedding, dtype=np.float64))
-    cents = {
-        lb: np.round(np.mean(np.stack(v), axis=0), similarity.CENTROID_MEAN_ROUND)
-        for lb, v in by_label.items()
-    }
-    labels = sorted(cents)
-    assert {(r.label_a, r.label_b) for r in rows} == {
-        (a, b) for a in labels for b in labels if a < b
-    }
-    for r in rows:
-        ca, cb = cents[r.label_a], cents[r.label_b]
-        want = round(
-            float(ca @ cb) / (float(np.sqrt(ca @ ca)) * float(np.sqrt(cb @ cb))),
-            similarity.CENTROID_COS_ROUND,
-        )
-        assert abs(r.cosine - want) < 1e-9
-        assert -1.0 <= r.cosine <= 1.0

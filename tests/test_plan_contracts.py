@@ -11,8 +11,7 @@ properties the operators were designed around:
 * parquet column pruning (``ReadSchema`` must exclude the columns the
   query doesn't touch — reading ``text`` for a length histogram is how
   100-TB scans go 50× over budget),
-* no ``CartesianProduct`` anywhere (the brute-force cosine baseline is
-  whitelisted by absence — it's not in this table),
+* no ``CartesianProduct`` anywhere,
 * no ``ArrowEvalPython`` in pure-expression pipelines.
 
 Counts are taken from the FINAL AQE plan only (the toString includes the
@@ -47,10 +46,6 @@ PLAN_CONTRACTS = {
     "quality_classifier_scores": (0, ["lang", "source", "n_chars"]),
     # single-shuffle partial-aggregated rollups with pruned scans
     "minhash_signatures": (1, ["lang", "source", "n_chars"]),
-    # lsh_sign_buckets reads its materialized coded frame (no parquet
-    # scan in the final plan) — only the shuffle/cartesian/arrow
-    # contracts apply; a column-exclusion list here would be vacuous
-    "lsh_sign_buckets": (1, []),
     "windowed_events": (1, ["user_id", "props"]),
     "session_stats": (1, ["props", "event_type"]),
     # small multi-stage shapes (digest agg / two-phase prefix cut)
@@ -71,14 +66,6 @@ PLAN_CONTRACTS = {
     # (the corpus tokenize+agg shuffles live inside the materialization);
     # the n_docs count scan reads ZERO columns (struct<>)
     "tfidf_top_terms": (1, []),
-    # frozen-centroid assignment over the materialized coded frame +
-    # within-cluster min-id pruning: one shuffle (the cluster-keyed
-    # pair stage), no pair cartesian, no Python at query time
-    "semantic_dedup": (1, []),
-    # per-cluster diversity cap: same two-phase prefix-cut budget as
-    # source_cap_sample (summary agg + offsets window + in-prefix rank)
-    # over the materialized assignment frame
-    "cluster_balanced_sample": (3, []),
     # novelty probe: delta digest distinct + index restriction join +
     # the per-doc fold — the index scan is pruned to the digest alone
     # and the corpus side reads (doc_id) plus the materialized shingles
@@ -100,11 +87,6 @@ PLAN_CONTRACTS = {
     # the points ∪ queries union (a band-keyed join would be quadratic
     # within a skewed band) — no session-pair set is ever formed
     "session_concurrency": (8, []),
-    # centroid geometry: one (label, dim) partial-agg shuffle over the
-    # exploded dims; everything after is label-cardinality-bounded
-    # (norms broadcast, dim join multiplicity = |labels|), vec_id never
-    # read
-    "label_centroid_similarity": (6, ["vec_id"]),
 }
 
 
