@@ -58,11 +58,9 @@ def _prepare_index_roots(spark, args, wave: str) -> dict[str, list[str]]:
     The guards: a root holding bare files (e.g. a flat operator-built
     simhash index) would silently skip the probe and mix layouts; a root
     of another index family passes the layout check but would die (or
-    mis-probe) on missing columns; a wave id that compact_index folded
-    into the merged segment no-ops the own-segment delete, and the probe
-    then meets the wave's own fingerprints (shingles) in the merged
-    history.  The index writes repeat these guards, but only after the
-    sinks are written."""
+    mis-probe) on missing columns; an empty or build (0) wave id would
+    replace the committed build.  The index writes repeat these guards,
+    but only after the sinks are written."""
     from paperoni_spark import fsio
 
     roots = [(args.dedup_index, "simhash")]

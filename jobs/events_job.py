@@ -165,8 +165,6 @@ def main(argv: list[str] | None = None) -> None:
         # caller's responsibility.  THIS wave's own segments (a crashed
         # earlier attempt) are excluded everywhere — the retry must see
         # exactly the pre-wave history.
-        fsio.refuse_mid_compaction(spark, args.user_state_index)
-        fsio.refuse_mid_compaction(spark, args.rollup_index)
         hist_max = (
             temporal.user_state_rows(spark, args.user_state_index, exclude_wave=wave)
             .agg(F.max("ts_us"))

@@ -331,48 +331,16 @@ def golden_img_urls_values_sql() -> str:
 _TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 _STOP_LIST = ", ".join(f"'{w}'" for w in textstats.STOPWORDS)
 
-def _shingle_cte_sql(src: str = "documents") -> str:
-    """``toks`` + ``sh`` (distinct 3-gram shingles) over a (doc_id,
-    text) source — the single shingle definition every shingle-space
-    oracle composes on."""
-    return f"""
-toks AS (SELECT doc_id, {_TOKENS} AS arr FROM {src}),
+# ``toks`` + ``sh`` (distinct 3-gram shingles): the one shingle
+# definition the Jaccard and dedup-cluster oracles compose on
+_SHINGLE_CTE = f"""
+toks AS (SELECT doc_id, {_TOKENS} AS arr FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS shingle
   FROM toks, unnest(generate_series(1, len(arr) - 2)) AS t(i)
   WHERE len(arr) >= 3
 )
 """
-
-
-_SHINGLE_CTE = _shingle_cte_sql()
-
-
-def _blocked_pairs_sql(src: str = "documents") -> str:
-    """CTE chain through ``blocked``/``sizes``/``pairs`` — the DuckDB
-    twin of dedup._blocked_pair_counts, shared by the jaccard and
-    containment oracles (cap/blocking semantics live once)."""
-    return f"""{_shingle_cte_sql(src)},
-blocked AS (
-  SELECT s.* FROM sh s
-  JOIN (SELECT shingle FROM sh GROUP BY shingle
-        HAVING count(*) <= {dedup.SHINGLE_DF_CAP}) ok USING (shingle)
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM blocked GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-  FROM blocked a JOIN blocked b USING (shingle)
-  WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-)"""
-
-_SIG_CTE = (
-    _SHINGLE_CTE
-    + ", sig AS (SELECT doc_id, "
-    + ", ".join(
-        f"min(md5('{i}:' || shingle)) AS mh{i}" for i in range(dedup.MINHASH_K)
-    )
-    + " FROM sh GROUP BY doc_id)"
-)
 
 
 def oracle_exact_dedup() -> str:
@@ -599,128 +567,6 @@ GROUP BY a.user_id, a.session_idx
 """
 
 
-def oracle_minhash_signatures() -> str:
-    mh_cols = ", ".join(f"mh{i}" for i in range(dedup.MINHASH_K))
-    concat = " || '|' || ".join(f"mh{i}" for i in range(dedup.MINHASH_K))
-    return f"WITH {_SIG_CTE} SELECT doc_id, md5({concat}) AS signature, {mh_cols} FROM sig"
-
-
-def oracle_lsh_candidate_pairs() -> str:
-    return (
-        f"WITH {_SIG_CTE}, bands AS ({_minhash_bands_sql()}) "
-        "SELECT band::INT AS band, bucket, count(*)::BIGINT AS n_docs "
-        "FROM bands GROUP BY band, bucket HAVING count(*) > 1"
-    )
-
-
-def _minhash_bands_sql() -> str:
-    rows_per_band = dedup.MINHASH_K // dedup.LSH_BANDS
-    band_selects = []
-    for b in range(dedup.LSH_BANDS):
-        cols = " || '|' || ".join(
-            f"mh{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, md5({cols}) AS bucket FROM sig"
-        )
-    return " UNION ALL ".join(band_selects)
-
-
-def _capped_cand_ctes() -> str:
-    """Shared WITH-chain body ending in ``capped`` (under-cap MinHash
-    band rows) — the single source for every oracle that consumes the
-    banded candidate set (lsh_candidate_doc_pairs, edit_verified_pairs);
-    a candidate-shape change edits ONE place."""
-    return f"""{_SIG_CTE}, bands AS ({_minhash_bands_sql()}),
-capped AS (
-  SELECT b.* FROM bands b
-  JOIN (SELECT band, bucket FROM bands GROUP BY 1, 2
-        HAVING count(*) <= {dedup.MINHASH_BUCKET_CAP}) ok USING (band, bucket)
-)"""
-
-
-_CAND_SELECT = """
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_shared_bands
-  FROM capped a JOIN capped b USING (band, bucket)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2"""
-
-
-def oracle_lsh_candidate_doc_pairs() -> str:
-    return f"WITH {_capped_cand_ctes()}\n{_CAND_SELECT}"
-
-
-_NORM_PLANT_N = 20
-
-
-def q_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalization-aware exact dedup.  The corpus has no natural
-    case/punctuation mirror copies, so they are PLANTED: doc_id <
-    _NORM_PLANT_N re-enters uppercased with trailing punctuation and
-    doubled spaces — byte-distinct (raw exact dedup sees nothing) but
-    normalization-identical, so each planted digest group has n_docs=2
-    with the seed as survivor."""
-    docs = load(spark, sf_dir, "documents")
-    planted = docs.where(F.col("doc_id") < _NORM_PLANT_N).select(
-        (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"),
-        F.concat(
-            F.regexp_replace(F.upper("text"), " ", "  "), F.lit("!!!")
-        ).alias("text"),
-    )
-    return dedup.normalized_dedup(
-        docs.select("doc_id", "text").unionByName(planted)
-    )
-
-
-def oracle_normalized_dedup() -> str:
-    return f"""
-WITH probed AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {PLANT_ID_OFFSET},
-         regexp_replace(upper(text), ' ', '  ', 'g') || '!!!'
-  FROM documents WHERE doc_id < {_NORM_PLANT_N}
-)
-SELECT md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]+', ' ', 'g'),
-                               '\\s+', ' ', 'g'))) AS digest,
-       min(doc_id) AS first_doc_id, count(*)::BIGINT AS n_docs
-FROM probed GROUP BY 1
-"""
-
-
-def oracle_edit_verified_pairs(max_norm: float = dedup.EDIT_VERIFY_MAX_NORM) -> str:
-    """DuckDB twin of dedup.edit_verified_pairs: the shared capped
-    candidate CTEs + levenshtein verification over the same ASCII
-    projection the engine uses (DuckDB's levenshtein counts BYTES where
-    Spark's counts code points — on the projection they agree).  The
-    engine's length prefilter is OMITTED here on purpose —
-    |len_a−len_b| is a lower bound on edit distance and both filters
-    compare the same rounded form, so the prefilter never changes the
-    result set, only when the DP table is computed."""
-    proj = "regexp_replace({}, '[^\\x00-\\x7F]', '?', 'g')"
-    ta, tb = proj.format("da.text"), proj.format("db.text")
-    # levenshtein is evaluated ONCE per candidate in a wrapping subquery
-    # (it is the dominant cost of this gate query — inlining it into the
-    # projection AND the WHERE roughly tripled the DP work)
-    return f"""
-WITH {_capped_cand_ctes()},
-cand AS ({_CAND_SELECT}
-),
-measured AS (
-  SELECT doc_a, doc_b, n_shared_bands,
-         levenshtein({ta}, {tb})::BIGINT AS edit_dist,
-         greatest(length({ta}), length({tb})) AS max_len
-  FROM cand
-  JOIN documents da ON da.doc_id = doc_a
-  JOIN documents db ON db.doc_id = doc_b
-)
-SELECT doc_a, doc_b, n_shared_bands, edit_dist,
-       round(edit_dist / max_len, 6) AS norm_dist
-FROM measured
-WHERE round(edit_dist / max_len, 6) <= {max_norm}
-"""
-
-
 def _simhash_cte(bits: int) -> str:
     """CTE chain ending in ``sh(doc_id, simhash)`` for a given bit width."""
     sums = []
@@ -779,7 +625,18 @@ WHERE a.doc_id < b.doc_id
 
 def oracle_ngram_jaccard() -> str:
     return f"""
-WITH {_blocked_pairs_sql()},
+WITH {_SHINGLE_CTE},
+blocked AS (
+  SELECT s.* FROM sh s
+  JOIN (SELECT shingle FROM sh GROUP BY shingle
+        HAVING count(*) <= {dedup.SHINGLE_DF_CAP}) ok USING (shingle)
+),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM blocked GROUP BY doc_id),
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
+  FROM blocked a JOIN blocked b USING (shingle)
+  WHERE a.doc_id < b.doc_id GROUP BY 1, 2
+),
 scored AS (
   SELECT doc_a, doc_b,
          round(common::DOUBLE / (na.n_sh + nb.n_sh - common), 6) AS jaccard
@@ -788,55 +645,6 @@ scored AS (
   JOIN sizes nb ON nb.doc_id = doc_b
 )
 SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.1
-"""
-
-
-_CONTAIN_PLANT_N = 15
-_CONTAIN_PREFIX_TOKENS = 40
-
-
-def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment over a corpus with PLANTED sub-document
-    duplication: the first _CONTAIN_PLANT_N docs re-enter under new ids
-    as their own 40-token PREFIX — a 'quote' whose shingles are a strict
-    subset of the seed's, so containment ≈ 1 while Jaccard is small (the
-    exact case symmetric similarity misses)."""
-    docs = load(spark, sf_dir, "documents")
-    quote = F.concat_ws(
-        " ",
-        F.slice(
-            F.split(F.trim("text"), r"\s+"), 1, _CONTAIN_PREFIX_TOKENS
-        ),
-    )
-    planted = docs.where(F.col("doc_id") < _CONTAIN_PLANT_N).select(
-        (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"),
-        quote.alias("text"),
-    )
-    return dedup.ngram_containment_pairs(
-        docs.select("doc_id", "text").unionByName(planted)
-    )
-
-
-def oracle_ngram_containment() -> str:
-    return f"""
-WITH probed AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {PLANT_ID_OFFSET},
-         array_to_string(({_TOKENS})[1:{_CONTAIN_PREFIX_TOKENS}], ' ')
-  FROM documents WHERE doc_id < {_CONTAIN_PLANT_N}
-),
-{_blocked_pairs_sql("probed")},
-scored AS (
-  SELECT doc_a, doc_b,
-         round(common::DOUBLE / least(na.n_sh, nb.n_sh), 6) AS containment,
-         round(common::DOUBLE / (na.n_sh + nb.n_sh - common), 6) AS jaccard
-  FROM pairs
-  JOIN sizes na ON na.doc_id = doc_a
-  JOIN sizes nb ON nb.doc_id = doc_b
-)
-SELECT doc_a, doc_b, containment, jaccard FROM scored
-WHERE containment >= {dedup.CONTAINMENT_THRESHOLD}
 """
 
 
@@ -1032,43 +840,6 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_files_per_trigger=1,
         state_partitions=_STREAM_STATE_PARTITIONS,
     )
-
-
-def q_streaming_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time NORMALIZED dedup as a stateful stream: the planted
-    case/punct mirror corpus (same plants as normalized_dedup) staged as
-    two mtime-ordered micro-batches; the odd offset puts every mirror in
-    a different batch than its seed, so each collapse is a real
-    cross-batch state update keyed on the normalized digest."""
-    from .streaming.dedup import run_streaming_exact_dedup
-
-    docs = load(spark, sf_dir, "documents")
-    planted = docs.where(F.col("doc_id") < _NORM_PLANT_N).select(
-        (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"),
-        F.concat(
-            F.regexp_replace(F.upper("text"), " ", "  "), F.lit("!!!")
-        ).alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    )
-    probed = docs.unionByName(planted)
-    tmp, docs_dir = _stage_micro_batches(probed, root=_stream_tmp("sndedup"))
-    return run_streaming_exact_dedup(
-        spark,
-        docs_dir,
-        os.path.join(tmp, "out"),
-        max_files_per_trigger=1,
-        normalized=True,
-        state_partitions=_STREAM_STATE_PARTITIONS,
-    )
-
-
-def oracle_streaming_normalized_dedup() -> str:
-    """Same planted corpus, same normalized-key groupBy as the batch
-    operator — the stream must equal it row-for-row, so the oracle IS
-    oracle_normalized_dedup (one copy of the normalization SQL)."""
-    return oracle_normalized_dedup()
 
 
 def _stage_micro_batches(
@@ -1385,66 +1156,6 @@ SELECT lang, count(*)::BIGINT AS n_sampled FROM documents
 WHERE {_sample_pred_sql()} <
       (CASE lang {cases} ELSE '{sampling._cutoff_hex(_STRATA_DEFAULT)}' END)
 GROUP BY lang
-"""
-
-
-def oracle_winnow_fingerprints() -> str:
-    w = dedup.WINNOW_WINDOW - 1
-    return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS arr FROM documents),
-sh AS (
-  SELECT doc_id, i AS pos, md5(arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2]) AS h
-  FROM toks, unnest(generate_series(1, len(arr) - 2)) AS t(i)
-  WHERE len(arr) >= 3
-),
-minima AS (
-  SELECT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND {w} FOLLOWING) AS win_min
-  FROM sh
-),
-agg AS (
-  SELECT doc_id, list_sort(list_distinct(list(win_min))) AS fps
-  FROM minima GROUP BY doc_id
-)
-SELECT doc_id, len(fps)::INT AS n_fingerprints,
-       md5(array_to_string(fps, '|')) AS fp_digest
-FROM agg
-"""
-
-
-def oracle_winnow_overlap_pairs() -> str:
-    w = dedup.WINNOW_WINDOW - 1
-    return f"""
-WITH toks AS (SELECT doc_id, {_TOKENS} AS arr FROM documents),
-sh AS (
-  SELECT doc_id, i AS pos, md5(arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2]) AS h
-  FROM toks, unnest(generate_series(1, len(arr) - 2)) AS t(i)
-  WHERE len(arr) >= 3
-),
-sel AS (
-  SELECT DISTINCT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND {w} FOLLOWING) AS fp
-  FROM sh
-),
-blocked AS (
-  SELECT s.* FROM sel s
-  JOIN (SELECT fp FROM sel GROUP BY fp
-        HAVING count(*) <= {dedup.WINNOW_FP_DF_CAP}) ok USING (fp)
-),
-sizes AS (SELECT doc_id, count(*) AS n_fp FROM blocked GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-  FROM blocked a JOIN blocked b USING (fp)
-  WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, n_shared::BIGINT AS n_shared,
-       round(n_shared::DOUBLE / least(na.n_fp, nb.n_fp), 6) AS overlap
-FROM pairs
-JOIN sizes na ON na.doc_id = doc_a
-JOIN sizes nb ON nb.doc_id = doc_b
-WHERE n_shared >= 2
 """
 
 
@@ -1971,7 +1682,7 @@ def oracle_substring_delta() -> str:
 
 def oracle_dup_ngram_stats(n: int = 3) -> str:
     """DuckDB twin of dedup.dup_ngram_stats — same distinct-shingle space
-    as the Jaccard/MinHash oracles (joined on the raw shingle where the
+    as the Jaccard oracles (joined on the raw shingle where the
     engine joins on its md5; injective, so identical rows).  The shingle
     concat is generated from ``n`` (it used to hardcode the 3-token form,
     silently wrong for any other n — round-5 advisory fix)."""
@@ -2024,23 +1735,9 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_funnel": q_corpus_funnel,
         # dedup family
         "exact_dedup": lambda spark, sf: dedup.exact_dedup_stats(load(spark, sf, "documents")),
-        "minhash_signatures": lambda spark, sf: dedup.minhash_signatures(load(spark, sf, "documents")),
-        "lsh_candidate_pairs": lambda spark, sf: dedup.lsh_candidate_pairs(load(spark, sf, "documents")),
-        "lsh_candidate_doc_pairs": lambda spark, sf: dedup.lsh_candidate_doc_pairs(load(spark, sf, "documents")),
-        # two-stage near-dup: exact Levenshtein verification over the
-        # banded candidate set (never all-pairs)
-        "edit_verified_pairs": lambda spark, sf: dedup.edit_verified_pairs(
-            load(spark, sf, "documents")
-        ),
-        # normalization-aware exact dedup (planted case/punct mirrors)
-        "normalized_dedup": q_normalized_dedup,
         "simhash": lambda spark, sf: dedup.simhash(load(spark, sf, "documents")),
         "simhash_near_dup_pairs": lambda spark, sf: dedup.simhash_near_dup_pairs(load(spark, sf, "documents")),
         "ngram_jaccard": lambda spark, sf: dedup.ngram_jaccard_pairs(load(spark, sf, "documents")),
-        # asymmetric containment (sub-document duplication; planted quotes)
-        "ngram_containment": q_ngram_containment,
-        "winnow_fingerprints": lambda spark, sf: dedup.winnow_fingerprints(load(spark, sf, "documents")),
-        "winnow_overlap_pairs": lambda spark, sf: dedup.winnow_overlap_pairs(load(spark, sf, "documents")),
         "simhash_delta_pairs": q_simhash_delta_pairs,
         "dedup_clusters": lambda spark, sf: dedup.dedup_clusters(load(spark, sf, "documents")),
         "simhash_dedup_clusters": lambda spark, sf: dedup.simhash_dedup_clusters(load(spark, sf, "documents")),
@@ -2137,8 +1834,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_session_stats_evicting": q_streaming_session_stats_evicting,
         # ingest-time exact dedup: per-digest stateful stream vs batch groupBy
         "streaming_exact_dedup": q_streaming_exact_dedup,
-        # the normalized-key twin (mirror copies collapse at ingest)
-        "streaming_normalized_dedup": q_streaming_normalized_dedup,
         # recurring-crawl near-dup: per-wave index probe + append as a stream
         "streaming_simhash_pairs": q_streaming_simhash_pairs,
     }
@@ -2153,17 +1848,9 @@ def build_oracles() -> dict[str, str]:
         "corpus_build": synthetic_golden_values_sql("corpus_build"),
         "corpus_funnel": synthetic_golden_values_sql("corpus_funnel"),
         "exact_dedup": oracle_exact_dedup(),
-        "minhash_signatures": oracle_minhash_signatures(),
-        "lsh_candidate_pairs": oracle_lsh_candidate_pairs(),
-        "lsh_candidate_doc_pairs": oracle_lsh_candidate_doc_pairs(),
-        "edit_verified_pairs": oracle_edit_verified_pairs(),
-        "normalized_dedup": oracle_normalized_dedup(),
         "simhash": oracle_simhash(),
         "simhash_near_dup_pairs": oracle_simhash_near_dup_pairs(),
         "ngram_jaccard": oracle_ngram_jaccard(),
-        "ngram_containment": oracle_ngram_containment(),
-        "winnow_fingerprints": oracle_winnow_fingerprints(),
-        "winnow_overlap_pairs": oracle_winnow_overlap_pairs(),
         "simhash_delta_pairs": oracle_simhash_delta_pairs(),
         "dedup_clusters": oracle_dedup_clusters(),
         "simhash_dedup_clusters": oracle_simhash_dedup_clusters(),
@@ -2199,6 +1886,5 @@ def build_oracles() -> dict[str, str]:
         "streaming_session_stats": oracle_session_stats(),
         "streaming_session_stats_evicting": oracle_session_stats(),
         "streaming_exact_dedup": oracle_streaming_exact_dedup(),
-        "streaming_normalized_dedup": oracle_streaming_normalized_dedup(),
         "streaming_simhash_pairs": oracle_streaming_simhash_pairs(),
     }

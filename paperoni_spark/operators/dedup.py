@@ -1,23 +1,21 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, SimHash, n-gram Jaccard, line-level
+and exact-substring.
 
 Scale notes (designed for ~10^12-row corpora, verified at sf on DuckDB
 oracles):
 
 * Exact dedup hashes once map-side and aggregates on the 128-bit digest —
   a single shuffle keyed by digest, partial-aggregated (no text moves).
-* MinHash signatures are computed per-document with **no shuffle at all**
-  (explode → groupBy doc_id happens within the same hash partitioning as the
-  scan when bucketed; here a single agg shuffle keyed by doc_id).  The LSH
-  band join then shuffles only (doc_id, band_key) pairs — bytes per row, not
-  documents.
-* SimHash is one explode + one 16-way conditional aggregation — again one
-  doc_id-keyed shuffle of small rows.
+* SimHash is one explode + one 16-way conditional aggregation — one
+  doc_id-keyed shuffle of small rows.  Near-dup pairs come from a
+  pigeonhole-exact band equi-join over the fingerprints, then connected
+  components: the one near-dup path the corpus funnel runs.
 * Pairwise Jaccard is block-gated: candidate pairs come from an equi-join
   on shared shingles, never a cross join.
 
 Hashing is engine-portable by construction: md5 hex (identical in Spark and
-DuckDB) ordered lexicographically stands in for integer min-hashing, and hex
-chars are decoded positionally for SimHash bits.
+DuckDB) stands in for integer hashing, and hex chars are decoded
+positionally for SimHash bits.
 """
 
 from __future__ import annotations
@@ -27,8 +25,6 @@ from pyspark.sql import functions as F
 
 from ..materialize import materialize
 
-MINHASH_K = 8
-LSH_BANDS = 4  # rows-per-band = MINHASH_K / LSH_BANDS
 SIMHASH_BITS = 16
 
 
@@ -66,238 +62,6 @@ def _shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     return toks_df.select(
         "doc_id", F.explode(F.array_distinct(shingle_expr)).alias("shingle")
     ).distinct()
-
-
-WINNOW_WINDOW = 4
-
-
-def _winnow_selected(
-    documents: DataFrame, n: int = 3, window: int = WINNOW_WINDOW
-) -> DataFrame:
-    """(doc_id, fp): each document's DISTINCT winnowing selections — hash
-    every word n-gram in document order, slide a window of ``window``
-    hashes, keep each window's minimum.  Hashes are md5 (lexicographic min
-    ≙ integer min, engine-portable); one doc_id-keyed window shuffle."""
-    from pyspark.sql.window import Window
-
-    toks_df = documents.select(
-        "doc_id",
-        F.explode(F.array(F.split(F.trim("text"), r"\s+"))).alias("toks"),
-    )
-    shingle_arr = F.expr(
-        f"CASE WHEN size(toks) >= {n} THEN "
-        f"transform(sequence(0, size(toks) - {n}), "
-        f"i -> concat_ws(' ', slice(toks, i + 1, {n}))) "
-        "ELSE array() END"
-    )
-    positioned = toks_df.select(
-        "doc_id", F.posexplode(shingle_arr).alias("pos", "shingle")
-    ).withColumn("h", F.md5("shingle"))
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.currentRow, window - 1)
-    )
-    return (
-        positioned.withColumn("fp", F.min("h").over(w))
-        .select("doc_id", "fp")
-        .distinct()
-    )
-
-
-def winnow_fingerprints(
-    documents: DataFrame, n: int = 3, window: int = WINNOW_WINDOW
-) -> DataFrame:
-    """Rolling-hash document fingerprinting (winnowing): the per-document
-    selection-set summary — the classic local-fingerprint scheme whose
-    selections are stable under edits outside the window."""
-    sel = _winnow_selected(documents, n, window)
-    return (
-        sel.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("fp")).alias("fps"))
-        .select(
-            "doc_id",
-            F.size("fps").alias("n_fingerprints"),
-            F.md5(F.concat_ws("|", "fps")).alias("fp_digest"),
-        )
-    )
-
-
-WINNOW_FP_DF_CAP = 100
-
-
-def winnow_overlap_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    window: int = WINNOW_WINDOW,
-    min_shared: int = 2,
-    df_cap: int = WINNOW_FP_DF_CAP,
-) -> DataFrame:
-    """Near-dup candidate pairs from SHARED WINNOWING FINGERPRINTS — the
-    scale path for pairwise overlap: winnowing keeps ~1/window of each
-    document's shingles, so the fingerprint equi-join moves ~window× fewer
-    rows than the full shingle self-join (ngram_jaccard_pairs) while the
-    window-minimum guarantee still catches any match ≥ window+n−1 tokens.
-
-    Same skew armor as the shingle join: fingerprints with document
-    frequency > ``df_cap`` (boilerplate) are excluded from the overlap
-    space via an UNHINTED anti-join (AQE decides — a forced broadcast is a
-    driver-OOM cliff on exactly the corpora the cap exists for).  Per-doc
-    sizes are a direct aggregation over the capped selection — NOT the
-    self-join diagonal, whose pairs/diagonal filter split destroys
-    exchange reuse (see ngram_jaccard_pairs).  ``overlap`` is containment:
-    shared / min(|A|, |B|), rounded for engine portability."""
-    sel = _winnow_selected(documents, n, window)
-    hot = (
-        sel.groupBy("fp")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > df_cap)
-        .select("fp")
-    )
-    blocked = sel.join(hot, "fp", "left_anti")
-    pairs = (
-        blocked.alias("a")
-        .join(blocked.alias("b"), on="fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sizes = blocked.groupBy("doc_id").agg(F.count("*").alias("n_fp"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_fp").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_fp").alias("nb"))
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(F.col("n_shared") >= min_shared)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n_shared").cast("long").alias("n_shared"),
-            F.round(
-                F.col("n_shared") / F.least(F.col("na"), F.col("nb")), 6
-            ).alias("overlap"),
-        )
-    )
-
-
-def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """K-permutation MinHash over word 3-gram shingles.
-
-    Each permutation is the lexicographic minimum of ``md5(salt || shingle)``
-    — order-isomorphic to integer min-hashing and bit-identical across
-    engines.  Output: one row per doc with the signature digest (md5 of the
-    concatenated mins) for cheap equality checks downstream.
-    """
-    sh = _shingles(documents)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}")
-        for i in range(k)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    return sig.select(
-        "doc_id",
-        F.md5(F.concat_ws("|", *[F.col(f"mh{i}") for i in range(k)])).alias(
-            "signature"
-        ),
-        *[F.col(f"mh{i}") for i in range(k)],
-    )
-
-
-def _minhash_band_rows(
-    documents: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
-) -> DataFrame:
-    """(doc_id, band, bucket): one row per (document, band), where bucket is
-    the md5 of that band's signature slice — the LSH banding key.  Derived
-    map-side from the signature table; each doc contributes exactly
-    ``bands`` rows of a few bytes each."""
-    rows_per_band = k // bands
-    sig = minhash_signatures(documents, k)
-    # one EXPLODE of per-band structs, not a 4-way union: the union form
-    # re-derives the (expensive) signature aggregation once per band in
-    # every consumer (measured 20 scans in lsh_candidate_doc_pairs); the
-    # single-subtree explode keeps consumers canonical so the signature
-    # exchange is planned once and reused
-    bands_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{i}")
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    rows = sig.select("doc_id", F.explode(bands_arr).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    # band rows are tiny (ids + 2 hashes, no text) and feed up to four
-    # consumers (histogram, anti-join, both self-join sides): materialize
-    # once so the shingle+minhash pipeline never re-derives per consumer
-    return materialize(rows)
-
-
-def lsh_candidate_pairs(
-    documents: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
-) -> DataFrame:
-    """MinHash-LSH banding: docs sharing a band key are near-dup candidates.
-    Returns (band, bucket, n_docs) for buckets with >1 member — the shuffle
-    moves only band-key rows, never documents.  This histogram is also the
-    skew probe for :func:`lsh_candidate_doc_pairs`: bucket sizes here tell
-    you whether MINHASH_BUCKET_CAP will bite."""
-    return (
-        _minhash_band_rows(documents, k, bands)
-        .groupBy("band", "bucket")
-        .agg(F.count("*").alias("n_docs"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
-MINHASH_BUCKET_CAP = 64
-
-
-def lsh_candidate_doc_pairs(
-    documents: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    cap: int = MINHASH_BUCKET_CAP,
-) -> DataFrame:
-    """Enumerate MinHash-LSH candidate pairs: (doc_a, doc_b, n_shared_bands)
-    for every pair colliding in >=1 under-cap bucket (doc_a < doc_b).
-
-    Pair enumeration is where banding goes quadratic: a bucket of B docs
-    yields B² pairs, and one boilerplate cluster of 10^6 identical pages
-    is 10^12 rows from a single bucket.  Buckets larger than ``cap`` are
-    excluded via an anti-join on the over-cap set — same guard (and same
-    no-broadcast-hint rationale: the hot set scales with corpus diversity,
-    AQE decides) as :func:`capped_bands`.  Oversize clusters are not
-    lost: they are exactly-equal families the cheap exact/fingerprint dedup
-    already collapses, and the bucket histogram (:func:`lsh_candidate_pairs`)
-    still reports them.  The self-join is per (band, bucket) equi-key, never
-    a cross join; n_shared_bands is a free collision-strength signal (a doc
-    has one bucket per band, so count(*) == count(distinct band))."""
-    rows = _minhash_band_rows(documents, k, bands)
-    hot = (
-        rows.groupBy("band", "bucket")
-        .agg(F.count("*").alias("n_in_bucket"))
-        .where(F.col("n_in_bucket") > cap)
-        .select("band", "bucket")
-    )
-    capped = rows.join(hot, ["band", "bucket"], "left_anti")
-    a = capped.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-    b = capped.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").cast("long").alias("n_shared_bands"))
-    )
 
 
 def _simhash_bit_sql(j: int) -> str:
@@ -425,10 +189,21 @@ def simhash_near_dup_pairs(
     )
 
 
-def capped_bands(bands: DataFrame, cap: int) -> DataFrame:
-    """Drop ``(band, bkey)`` rows in over-cap buckets via anti-join on the
-    over-cap set (extra columns pass through) — the SimHash pair sweep's
-    hot-band guard.
+def _over_cap_bands(bands: DataFrame, cap: int) -> DataFrame:
+    """The ``(band, bkey)`` keys of buckets holding more than ``cap``
+    rows — the hot set :func:`capped_bands` drops."""
+    return (
+        bands.groupBy("band", "bkey")
+        .agg(F.count("*").alias("n_in_bucket"))
+        .where(F.col("n_in_bucket") > cap)
+        .select("band", "bkey")
+    )
+
+
+def capped_bands(bands: DataFrame, hot: DataFrame) -> DataFrame:
+    """Drop ``(band, bkey)`` rows in the ``hot`` buckets
+    (:func:`_over_cap_bands`) via anti-join (extra columns pass through)
+    — the SimHash hot-band guard of the pair sweep and the index probe.
 
     The over-cap set is usually a handful of degenerate buckets, but its
     size scales with corpus diversity, not with the cap — a forced
@@ -436,12 +211,6 @@ def capped_bands(bands: DataFrame, cap: int) -> DataFrame:
     corpora the cap exists for.  No hint: AQE broadcasts it at runtime
     when it is actually small and falls back to a shuffled anti-join when
     it is not."""
-    hot = (
-        bands.groupBy("band", "bkey")
-        .agg(F.count("*").alias("n_in_bucket"))
-        .where(F.col("n_in_bucket") > cap)
-        .select("band", "bkey")
-    )
     return bands.join(hot, ["band", "bkey"], "left_anti")
 
 
@@ -459,7 +228,7 @@ def simhash_near_dup_pairs_from_sh(
     _simhash_pair_guard(bits, bands, max_hamming)
     rows = _simhash_band_rows_from(sh, bits, bands)
     rows = materialize(rows)  # 4 consumers, tiny rows
-    capped = capped_bands(rows, cap)
+    capped = capped_bands(rows, _over_cap_bands(rows, cap))
     a = capped.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "band", "bkey"
     )
@@ -557,9 +326,6 @@ def simhash_delta_pairs_from_sh(
     consumer from those blocks instead of paying a second checkpoint —
     one less materialization per wave.  Leave False when ``delta_sh`` is
     a live pipeline (the tokenize+hash aggregation must run once)."""
-    from ..fsio import refuse_mid_compaction
-
-    refuse_mid_compaction(spark, index_path)
     _simhash_pair_guard(bits, bands, max_hamming)
     if not delta_materialized:
         delta_sh = materialize(delta_sh)
@@ -572,20 +338,14 @@ def simhash_delta_pairs_from_sh(
     )
     kept_delta, kept_all = delta_rows, all_rows
     if cap is not None:
-        hot = (
-            all_rows.groupBy("band", "bkey")
-            .agg(F.count("*").alias("n_in_bucket"))
-            .where(F.col("n_in_bucket") > cap)
-            .select("band", "bkey")
-        )
         # hot feeds BOTH anti-joins (probe + target) with different
         # downstream column sets, so nothing below it canonicalizes for
         # ReusedExchange — without this cut each consumer re-scans the
         # whole index for the bucket histogram.  The over-cap key set is
         # tiny by construction.
-        hot = materialize(hot)
-        kept_delta = delta_rows.join(hot, ["band", "bkey"], "left_anti")
-        kept_all = all_rows.join(hot, ["band", "bkey"], "left_anti")
+        hot = materialize(_over_cap_bands(all_rows, cap))
+        kept_delta = capped_bands(delta_rows, hot)
+        kept_all = capped_bands(all_rows, hot)
     probe = kept_delta.select(
         F.col("doc_id").alias("probe_id"), F.col("simhash").alias("sh_p"), "band", "bkey"
     )
@@ -785,26 +545,7 @@ def ngram_jaccard_pairs(
     and stops boilerplate from inflating similarity between unrelated
     documents (the behavior a dedup pass wants).  A true near-dup pair
     shares rare shingles, so it always survives the cap.
-    """
-    return (
-        _blocked_pair_counts(documents, n, df_cap)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
-
-def _blocked_pair_counts(
-    documents: DataFrame, n: int, df_cap: int
-) -> DataFrame:
-    """(doc_a, doc_b, common, na, nb) over the DF-capped blocked shingle
-    space — the shared scaffolding of ngram_jaccard_pairs and
-    ngram_containment_pairs (a cap/blocking change edits ONE place).
     Per-doc sizes are a DIRECT aggregation over blocked — round 2
     derived them from the a<=b self-join's diagonal "for free", but
     physically the pairs/diagonal filter split pushes a.doc_id<b.doc_id
@@ -812,7 +553,8 @@ def _blocked_pair_counts(
     ReusedExchange and re-deriving the whole shingle pipeline per branch
     (13 scans → 9 and 0 → 3 reused exchanges with the direct agg; rows
     identical, measured equal-or-faster at sf0.1).  The direct agg
-    shares blocked's exchange with the join sides instead."""
+    shares blocked's exchange with the join sides instead.
+    """
     sh = _shingles(documents, n)
     hot = (
         sh.groupBy("shingle")
@@ -831,47 +573,17 @@ def _blocked_pair_counts(
     sizes = blocked.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    return pairs.join(sa, "doc_a").join(sb, "doc_b")
-
-
-CONTAINMENT_THRESHOLD = 0.5
-
-
-def ngram_containment_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    threshold: float = CONTAINMENT_THRESHOLD,
-    df_cap: int = SHINGLE_DF_CAP,
-) -> DataFrame:
-    """ASYMMETRIC n-gram containment over the same DF-capped blocked
-    shingle space as :func:`ngram_jaccard_pairs`: for each candidate
-    pair, ``containment = |A∩B| / min(|A|, |B|)`` — the sub-document
-    duplication detector.  A short document wholly quoted inside a long
-    one has tiny Jaccard (the union is dominated by the long doc) but
-    containment ≈ 1; production pipelines use it to catch quote farms,
-    wrapper pages, and partial mirrors that symmetric similarity misses.
-
-    Emits (doc_a, doc_b, containment, jaccard) for pairs with
-    containment ≥ ``threshold`` — the Jaccard rides along from the same
-    aggregation so a consumer can separate "near-identical" from
-    "one-contains-the-other" without a second pass.  Identical plan
-    shape (and scale story) as ngram_jaccard_pairs: the shared
-    :func:`_blocked_pair_counts` scaffolding (capped blocking, direct
-    per-doc size aggregation, one pair-count aggregation)."""
     return (
-        _blocked_pair_counts(documents, n, df_cap)
-        .withColumn(
-            "containment",
-            F.round(F.col("common") / F.least("na", "nb"), 6),
-        )
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .withColumn(
             "jaccard",
             F.round(
                 F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6
             ),
         )
-        .where(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", "containment", "jaccard")
+        .where(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -976,103 +688,6 @@ def dup_ngram_stats(documents: DataFrame, n: int = 3) -> DataFrame:
             .otherwise(F.round(F.col("n_dup_shingles") / F.col("n_shingles"), 6))
             .alias("dup_frac"),
         )
-    )
-
-
-def normalize_for_dedup(col):
-    """CCNet-style text normalization for dedup keys: lowercase, strip
-    punctuation/symbols to spaces, collapse whitespace, trim.  Catches
-    the trivially-mutated mirror copies (case changes, added punctuation,
-    reflowed whitespace) that byte-exact hashing misses — applied to the
-    KEY only; the stored text is never rewritten.  Pure codegen
-    expression chain; the DuckDB oracle mirrors it verbatim (with the
-    'g' flag — DuckDB's regexp_replace is first-match by default where
-    Spark's is global)."""
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(col), "[^a-z0-9\\s]+", " "), "\\s+", " "
-        )
-    )
-
-
-def normalized_dedup(documents: DataFrame) -> DataFrame:
-    """Exact dedup on the NORMALIZED text digest: per normalized-digest
-    group, the min-id survivor and member count (the repo-wide
-    canonical-survivor convention).  Same single digest-keyed shuffle as
-    exact dedup — normalization adds zero data movement."""
-    return (
-        documents.select(
-            F.md5(normalize_for_dedup(F.col("text"))).alias("digest"), "doc_id"
-        )
-        .groupBy("digest")
-        .agg(
-            F.min("doc_id").alias("first_doc_id"),
-            F.count("*").alias("n_docs"),
-        )
-    )
-
-
-EDIT_VERIFY_MAX_NORM = 0.3
-
-
-def edit_verified_pairs(
-    documents: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    cap: int = MINHASH_BUCKET_CAP,
-    max_norm_dist: float = EDIT_VERIFY_MAX_NORM,
-) -> DataFrame:
-    """Two-stage near-dup detection, verification stage: exact
-    (Levenshtein) edit distance over the BANDED CANDIDATE SET — the
-    standard production shape (cheap hash-based recall, expensive exact
-    precision only on the bounded candidates; never all-pairs).  Emits
-    pairs whose normalized distance (edit_dist / max(len_a, len_b)) is
-    within ``max_norm_dist``.
-
-    Scale shape: the candidate set is DF-capped by
-    :func:`lsh_candidate_doc_pairs`; the two text joins are doc_id
-    equi-joins that move text only for candidate rows.  A length
-    prefilter runs before the O(len_a × len_b) Levenshtein:
-    ``|len_a − len_b|`` is a lower bound on edit distance, so pairs
-    whose length gap alone exceeds the threshold are rejected by two
-    ``length()`` calls instead of a DP table — at production doc sizes
-    this is the difference between verifying a candidate and burning a
-    core on it.  The prefilter compares the ROUNDED ratio, the same
-    form as the final filter and the oracle, so it is provably
-    result-neutral even at the rounding boundary.
-
-    Portability: the distance runs over an ASCII PROJECTION of the text
-    (every non-ASCII code point → '?'): Spark's levenshtein counts code
-    points but DuckDB's counts BYTES, so multi-byte characters would
-    silently desynchronize the oracle (the same byte-vs-char trap as
-    the kernel's blen rule); on the projection byte == char and both
-    engines agree.  A '?'-substitution costs exactly one edit either
-    way, so distances over the projection differ from true code-point
-    distances only where distinct non-ASCII chars map to the same '?'
-    — acceptable for a near-dup verdict, and documented."""
-    cands = lsh_candidate_doc_pairs(documents, k, bands, cap)
-    ascii_proj = F.regexp_replace(F.col("text"), "[^\\x00-\\x7F]", "?")
-    ta = documents.select(
-        F.col("doc_id").alias("doc_a"), ascii_proj.alias("text_a")
-    )
-    tb = documents.select(
-        F.col("doc_id").alias("doc_b"), ascii_proj.alias("text_b")
-    )
-    la, lb = F.length("text_a"), F.length("text_b")
-    mx = F.greatest(la, lb)
-    d = F.levenshtein("text_a", "text_b")
-    return (
-        cands.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .where(F.round(F.abs(la - lb) / mx, 6) <= max_norm_dist)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_shared_bands",
-            d.cast("long").alias("edit_dist"),
-            F.round(d / mx, 6).alias("norm_dist"),
-        )
-        .where(F.col("norm_dist") <= max_norm_dist)
     )
 
 
@@ -1213,8 +828,8 @@ def _substring_hist(documents: DataFrame, n: int) -> DataFrame:
 def write_substring_index(
     documents: DataFrame, path: str, wave=0, n: int = SUBSTR_DEDUP_N
 ) -> None:
-    """Persist the ExactSubstr shingle histogram — the SEVENTH wave-keyed
-    index family: cross-wave duplicated passages survive wave-local
+    """Persist the ExactSubstr shingle histogram — a wave-keyed index
+    family: cross-wave duplicated passages survive wave-local
     substring cleaning (compose.py documents the gap), so a recurring
     crawl probes each wave against this index instead.  ``wave`` 0 is
     the build; each later wave adds its own segment
@@ -1256,9 +871,8 @@ def substring_delta_clean(
     of a driver-OOM cliff) and then summed across wave segments.
     Refuses an index whose pinned shingle size differs from ``n``
     (read-only check — a probe never writes markers)."""
-    from ..fsio import assert_index_param, refuse_mid_compaction
+    from ..fsio import assert_index_param
 
-    refuse_mid_compaction(spark, index_path)
     assert_index_param(spark, index_path, "shingle_n", n)
     positioned = materialize(_positioned_shingles(delta_documents, n))
     delta_hist = positioned.groupBy("h").agg(
@@ -1303,9 +917,8 @@ def shingle_novelty(
     tokens carry no shingles and are reported with novel_frac NULL.
 
     Returns (doc_id, n_shingles, n_seen, novel_frac)."""
-    from ..fsio import assert_index_param, refuse_mid_compaction
+    from ..fsio import assert_index_param
 
-    refuse_mid_compaction(spark, index_path)
     assert_index_param(spark, index_path, "shingle_n", n)
     positioned = materialize(_positioned_shingles(delta_documents, n))
     seen_h = (

@@ -326,11 +326,9 @@ def merge_user_state(rows: DataFrame) -> DataFrame:
     """THE user_state winner rule — struct-max over (ts_us, event_id)
     per user (ties at equal µs resolve to the highest event_id, the same
     winner the as-of window order picks).  Single-sourced on purpose:
-    build/append (:func:`_user_ref_state`), probe
-    (:func:`_read_user_state`) and compaction (fsio.compact_index_kind's
-    user_state geometry) must all merge with the SAME rule, or a
-    compacted index keeps a different winner than a fresh probe
-    computes."""
+    build/append (:func:`_user_ref_state`) and probe
+    (:func:`_read_user_state`) must merge with the SAME rule, or a
+    segment keeps a different winner than the probe computes."""
     return (
         rows.groupBy("user_id")
         .agg(F.max(F.struct("ts_us", "event_id")).alias("m"))
@@ -434,9 +432,8 @@ def asof_enrich_delta(
     is what the oracle checks.
 
     Same -1 sentinel convention as :func:`asof_enrich`."""
-    from ..fsio import assert_index_param, refuse_mid_compaction
+    from ..fsio import assert_index_param
 
-    refuse_mid_compaction(spark, index_path)
     assert_index_param(spark, index_path, "ref_type", ref_type)
     carried = _carried_targets(delta_events, target_type, ref_type)
     state = _read_user_state(spark, index_path, exclude_wave=exclude_wave)
@@ -488,7 +485,7 @@ def write_rollup_index(
     ADDITIVE like the shingle histogram: waves must cover DISJOINT event
     sets (a re-counted event double-counts — there is no subtraction)
     and ``wave`` must stay stable across retries of the same wave;
-    probes sum partials across segments, compaction re-aggregates.
+    probes sum partials across segments.
     ``finest`` is param-pinned: a probe at a different grid would merge
     buckets that never align."""
     from ..fsio import write_wave_segment
@@ -513,9 +510,8 @@ def time_rollup_from_index(
     integer micro-unit quantization), then re-aggregates the coarse
     levels exactly like :func:`time_rollup` — the oracle equality
     'index probe == full recompute' is what the gate hash-checks."""
-    from ..fsio import assert_index_param, refuse_mid_compaction
+    from ..fsio import assert_index_param
 
-    refuse_mid_compaction(spark, index_path)
     assert_index_param(spark, index_path, "finest_s", resolutions_s[0])
     level = (
         spark.read.schema(ROLLUP_SCHEMA)

@@ -89,7 +89,6 @@ def run_streaming_exact_dedup(
     out_dir: str,
     max_files_per_trigger: int | None = None,
     path_glob: str = "*.parquet",
-    normalized: bool = False,
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Run the ingest-dedup stream (availableNow) over a documents
@@ -106,23 +105,12 @@ def run_streaming_exact_dedup(
     per-digest state (n_docs keeps counting across runs), so the
     read-back's last-write-wins is stable across restarts too.
 
-    ``normalized=True`` keys the state on the CCNet-normalized digest
-    (operators.dedup.normalize_for_dedup) instead of the raw text hash —
-    ingest-time mirror-copy collapse; the state/emission machinery is
-    byte-identical, only the key expression changes.
-
     ``state_partitions`` sizes the state-store width for this stream
     (see streaming.util.state_shuffle_partitions): size it to peak
     distinct-digest cardinality — it is frozen into the checkpoint by
     the first batch."""
-    from ..operators.dedup import normalize_for_dedup
     from .util import state_shuffle_partitions
 
-    key = (
-        F.md5(normalize_for_dedup(F.col("text")))
-        if normalized
-        else F.md5("text")
-    )
     reader = spark.readStream.schema(DOCUMENTS_TABLE_SCHEMA).option(
         "pathGlobFilter", path_glob
     )
@@ -130,7 +118,7 @@ def run_streaming_exact_dedup(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = (
         reader.parquet(docs_dir)
-        .select(key.alias("digest"), "doc_id")
+        .select(F.md5("text").alias("digest"), "doc_id")
         .groupBy("digest")
         .applyInPandasWithState(
             _update_digest_group,

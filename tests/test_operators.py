@@ -106,22 +106,16 @@ def test_simhash_plan_size(spark, docs):
         assert 0 < sent[0] < SIMHASH_PLAN_GATEWAY_CEILING, (bits, sent[0])
 
 
-def test_minhash_matches_oracle(spark, docs, ddb):
-    assert_matches_oracle(
-        dedup.minhash_signatures(docs), ddb, contract.oracle_minhash_signatures()
-    )
-
-
 def test_selfjoin_pipelines_reuse_exchanges(spark, docs):
     """The blocked self-join family must physically SHARE its expensive
     upstream pipeline: direct per-doc sizes keep the subtrees canonical so
     Spark plans ReusedExchange (round 2's diagonal trick split the filters
     and re-derived the whole shingle pipeline per branch — 13 scans, zero
     reuse)."""
-    for df in (dedup.ngram_jaccard_pairs(docs), dedup.winnow_overlap_pairs(docs)):
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ReusedExchange") >= 2, plan[:2000]
+    df = dedup.ngram_jaccard_pairs(docs)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ReusedExchange") >= 2, plan[:2000]
 
 
 def test_connected_components_generic(spark, docs, ddb):
@@ -183,20 +177,6 @@ def test_simhash_near_dup_pairs(spark, docs, ddb):
         dedup.simhash_near_dup_pairs(docs, max_hamming=dedup.SIMHASH_BANDS)
 
 
-def test_lsh_candidate_doc_pairs(spark, docs, ddb):
-    assert_matches_oracle(
-        dedup.lsh_candidate_doc_pairs(docs),
-        ddb,
-        contract.oracle_lsh_candidate_doc_pairs(),
-    )
-    # pairs must be consistent with the bucket histogram: every pair shares
-    # at least one band-bucket, and exact-duplicate docs collide in ALL bands
-    pairs = dedup.lsh_candidate_doc_pairs(docs).collect()
-    assert len(pairs) > 0
-    assert all(r["doc_a"] < r["doc_b"] for r in pairs)
-    assert all(1 <= r["n_shared_bands"] <= dedup.LSH_BANDS for r in pairs)
-
-
 def test_simhash_delta_never_rehashes(spark, docs, ddb, tmp_path):
     """Incremental delta-vs-corpus near-dup sweep: (1) the oracled query
     matches the DuckDB full-recompute twin, (2) results equal the full
@@ -247,42 +227,6 @@ def test_simhash_delta_never_rehashes(spark, docs, ddb, tmp_path):
     pairs2 = dedup.simhash_delta_pairs_against_index(spark, wave2, index_path).collect()
     hits = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs2}
     assert hits.get((seed["doc_id"], 10_000_001)) == 0
-
-
-def test_lsh_candidate_doc_pairs_degenerate_bucket_capped(spark):
-    """An identical-signature cluster larger than the cap must yield ZERO
-    pairs — the guard against the one-bucket O(B²) blowup — while a small
-    cluster still enumerates."""
-    n_big = dedup.MINHASH_BUCKET_CAP + 8
-    rows = [(i, "boiler plate page " * 10) for i in range(n_big)]
-    rows += [(1000 + i, "a rare unique document body here " * 5) for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    got = dedup.lsh_candidate_doc_pairs(df).collect()
-    small = {(r["doc_a"], r["doc_b"]) for r in got}
-    assert small == {(1000, 1001), (1000, 1002), (1001, 1002)}
-    assert all(r["n_shared_bands"] == dedup.LSH_BANDS for r in got)
-    # with the cap lifted the degenerate cluster explodes into B(B-1)/2 pairs
-    uncapped = dedup.lsh_candidate_doc_pairs(df, cap=10_000).count()
-    assert uncapped == n_big * (n_big - 1) // 2 + 3
-
-
-def test_winnow_overlap_pairs(spark, docs, ddb):
-    assert_matches_oracle(
-        dedup.winnow_overlap_pairs(docs),
-        ddb,
-        contract.oracle_winnow_overlap_pairs(),
-    )
-    # overlap is containment in (0, 1]; exact duplicates hit 1.0
-    text = "a perfectly ordinary duplicated document body with plenty of words " * 4
-    df = spark.createDataFrame(
-        [(1, text), (2, text), (3, "utterly unrelated content entirely " * 5)],
-        "doc_id: long, text: string",
-    )
-    got = {(r["doc_a"], r["doc_b"]): r["overlap"] for r in dedup.winnow_overlap_pairs(df).collect()}
-    assert got == {(1, 2): 1.0}
-    # the hot-fingerprint cap must be an UNHINTED anti-join (AQE decides)
-    plan = dedup.winnow_overlap_pairs(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
 
 
 def test_quality_scores_matches_oracle(spark, docs, ddb):
@@ -432,18 +376,10 @@ def test_shingle_df_cap_blocks_boilerplate(spark):
     assert ngram_jaccard_pairs(df).count() == 0
     uncapped = ngram_jaccard_pairs(df, df_cap=10_000)
     assert uncapped.count() == n * (n - 1) // 2
-
-
-def test_winnow_fingerprints(spark, docs, ddb):
-    from paperoni_spark.operators.dedup import winnow_fingerprints
-
-    result = winnow_fingerprints(docs)
-    assert_matches_oracle(result, ddb, contract.oracle_winnow_fingerprints())
-    rows = result.collect()
-    # winnowing selects far fewer fingerprints than there are shingles
-    for r in rows[:20]:
-        assert r["n_fingerprints"] >= 1
-        assert len(r["fp_digest"]) == 32
+    # the hot-shingle cap must be an UNHINTED anti-join (AQE decides), not
+    # a filter on a per-shingle window count
+    plan = ngram_jaccard_pairs(df)._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
 
 
 def test_dedup_clusters_chain(spark):
@@ -670,79 +606,6 @@ def test_wave_id_rule_every_family(spark, docs, tmp_path, family):
         assert listing() == after_w1, bad
 
 
-def test_normalized_dedup(spark, docs, ddb):
-    """Normalization-aware dedup: oracle parity on the planted mirror
-    corpus (every planted case/punct variant collapses onto its seed),
-    plus a fixture pinning the normalization rules one by one."""
-    from paperoni_spark.operators.dedup import normalized_dedup
-
-    result = contract.q_normalized_dedup(spark, SF_DIR)
-    rows = result.collect()
-    assert_matches_oracle(result, ddb, contract.oracle_normalized_dedup())
-    merged = {r["first_doc_id"]: r["n_docs"] for r in rows if r["n_docs"] > 1}
-    assert {i: 2 for i in range(contract._NORM_PLANT_N)}.items() <= merged.items()
-
-    adv = spark.createDataFrame(
-        [
-            (1, "Hello, World!"),
-            (2, "hello   world"),       # case + punct + whitespace variant
-            (3, "  HELLO — world.  "),  # unicode punct + padding
-            (4, "hello worlds"),        # genuinely different
-        ],
-        "doc_id: long, text: string",
-    )
-    got = {r["first_doc_id"]: r["n_docs"] for r in normalized_dedup(adv).collect()}
-    assert got == {1: 3, 4: 1}
-
-
-def test_edit_verified_pairs(spark, docs, ddb):
-    """Two-stage near-dup verification: oracle parity (the length
-    prefilter is proven result-neutral by the oracle omitting it), plus
-    an exact-twin fixture pinning the all-bands candidate and the zero
-    distance."""
-    from paperoni_spark.operators.dedup import LSH_BANDS, edit_verified_pairs
-
-    result = edit_verified_pairs(docs)
-    assert_matches_oracle(result, ddb, contract.oracle_edit_verified_pairs())
-
-    t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    adv = spark.createDataFrame(
-        [(1, t), (2, t), (3, "completely unrelated words nothing shared here at all")],
-        "doc_id: long, text: string",
-    )
-    got = edit_verified_pairs(adv).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["doc_a"], r["doc_b"]) == (1, 2)
-    assert r["n_shared_bands"] == LSH_BANDS
-    assert r["edit_dist"] == 0 and r["norm_dist"] == 0.0
-
-    # non-ASCII portability: Spark levenshtein counts code points,
-    # DuckDB's counts BYTES — both sides measure over the ASCII
-    # projection, so a multibyte edit ('café'→'cafe': 2 bytes, 1 char)
-    # cannot desynchronize the gate.  Candidacy here is deterministic
-    # (md5 minhash), pinned by the candidate assertion.
-    base_t = "café rösti naïve " + " ".join(f"tok{i}" for i in range(40))
-    nadv = spark.createDataFrame(
-        [
-            (1, base_t),
-            (2, base_t.replace("café", "cafe")),
-            (3, "all totally different words here nothing common"),
-        ],
-        "doc_id: long, text: string",
-    )
-    nres = edit_verified_pairs(nadv)
-    nrows = nres.collect()
-    assert [(r["doc_a"], r["doc_b"]) for r in nrows] == [(1, 2)], nrows
-    assert nrows[0]["edit_dist"] == 1  # café→caf?, cafe: one substitution
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    for i, t in [(1, base_t), (2, base_t.replace("café", "cafe")),
-                 (3, "all totally different words here nothing common")]:
-        con.execute("INSERT INTO documents VALUES (?, ?)", [i, t])
-    assert_matches_oracle(nres, con, contract.oracle_edit_verified_pairs())
-
-
 def test_interleave_stats(spark, ddb):
     """Interleaved-payload profile: oracle parity against the frozen
     golden span sequences, plus a hand-checked micro-fixture (runs,
@@ -933,60 +796,6 @@ def test_streaming_exact_dedup(spark, docs, ddb):
     assert {i: 2 for i in range(contract.LINE_PLANT_N)}.items() <= dups.items()
 
 
-def test_ngram_containment(spark, docs, ddb):
-    """Asymmetric containment: oracle parity on the planted-quote
-    corpus, every planted prefix-quote fully contained in its seed
-    (containment exactly 1.0 — the quote's blocked shingle set is a
-    subset, and the DF cap removes hot shingles from both sides), and a
-    hand-checked prefix fixture where Jaccard is small."""
-    from paperoni_spark.operators.dedup import ngram_containment_pairs
-
-    result = contract.q_ngram_containment(spark, SF_DIR)
-    rows = {(r["doc_a"], r["doc_b"]): r for r in result.collect()}
-    assert_matches_oracle(result, ddb, contract.oracle_ngram_containment())
-    planted = []
-    for i in range(contract._CONTAIN_PLANT_N):
-        r = rows.get((i, i + contract.PLANT_ID_OFFSET))
-        assert r is not None, i
-        assert r["containment"] == 1.0
-        planted.append(r)
-    # the asymmetry is real: some seed is longer than its 40-token quote,
-    # so containment 1.0 coexists with jaccard < 1.0 (a seed shorter than
-    # the prefix makes its quote a full twin — jaccard 1.0 — also fine)
-    assert any(r["jaccard"] < 1.0 for r in planted)
-
-    adv = spark.createDataFrame(
-        [
-            (1, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
-            (2, "w1 w2 w3 w4 w5"),
-            (3, "x1 x2 x3 x4 x5 x6"),
-        ],
-        "doc_id: long, text: string",
-    )
-    got = {
-        (r["doc_a"], r["doc_b"]): r
-        for r in ngram_containment_pairs(adv).collect()
-    }
-    assert set(got) == {(1, 2)}
-    r = got[(1, 2)]
-    assert r["containment"] == 1.0
-    assert r["jaccard"] == 0.375  # 3 common / (8 + 3 − 3)
-
-
-def test_streaming_normalized_dedup(spark, docs, ddb):
-    """Normalized-key ingest dedup stream: oracle parity, and every
-    planted case/punct mirror collapses onto its seed via a real
-    cross-batch state update (the odd offset splits seed and mirror
-    across the two staged micro-batches)."""
-    result = contract.q_streaming_normalized_dedup(spark, SF_DIR)
-    rows = result.collect()
-    assert_matches_oracle(
-        result, ddb, contract.oracle_streaming_normalized_dedup()
-    )
-    merged = {r["first_doc_id"]: r["n_docs"] for r in rows if r["n_docs"] > 1}
-    assert {i: 2 for i in range(contract._NORM_PLANT_N)}.items() <= merged.items()
-
-
 def test_streaming_exact_dedup_restart(spark, tmp_path):
     """Survivor state and committed batch segments survive a stream
     restart: run 1 ingests two batches; run 2 reuses the same dirs and
@@ -1111,13 +920,11 @@ def test_streaming_simhash_over_operator_index(spark, tmp_path):
     """The streamed loop writes through the same segment writer as the
     operators: run over an index built by write_simhash_index, it adds a
     kind-marked ``wave=`` segment beside the build (no second layout),
-    the root still reads as one table, the batch doc duplicating a build
-    doc pairs with it, and compaction folds the stream's segment like
-    any other."""
+    the root still reads as one table, and the batch doc duplicating a
+    build doc pairs with it."""
     import glob as g
     import shutil
 
-    from paperoni_spark import fsio
     from paperoni_spark.streaming.dedup import run_streaming_simhash_dedup
 
     t1 = "alpha beta gamma delta epsilon zeta eta theta"
@@ -1147,9 +954,6 @@ def test_streaming_simhash_over_operator_index(spark, tmp_path):
     assert spark.read.parquet(index).count() == 3
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     assert pairs.get((1, 3)) == 0, pairs
-    assert fsio.compact_index_kind(spark, index, "simhash") == 2
-    assert len(fsio.wave_names(spark, index)) == 1
-    assert spark.read.parquet(index).count() == 3
 
 
 def test_source_cap_two_phase_identity_property(spark):
@@ -1544,9 +1348,7 @@ def test_asof_delta_enrich(spark, ddb, tmp_path):
     identity — incremental == full-history as-of restricted to delta
     targets (both via the oracle and via the engine's own full join);
     (2) idempotent appends — re-sending an OVERLAPPING wave leaves the
-    probe bit-identical (max-merge, the Bloom-OR property); (3)
-    compaction parity — folding segments changes nothing."""
-    from paperoni_spark import fsio
+    probe bit-identical (max-merge, the Bloom-OR property)."""
     from paperoni_spark.operators import temporal
 
     assert_matches_oracle(
@@ -1581,10 +1383,6 @@ def test_asof_delta_enrich(spark, ddb, tmp_path):
     assert probe() == base
     # and a genuinely overlapping partial wave
     temporal.write_user_state_index(hist.limit(200), idx, wave=2)
-    assert probe() == base
-
-    folded = fsio.compact_index_kind(spark, idx, "user_state")
-    assert folded == 3
     assert probe() == base
 
     # geometry pin: probing for a different ref stream is refused
@@ -1622,11 +1420,10 @@ def test_streaming_asof_enrich(spark, ddb):
 
 def test_time_rollup_index(spark, ddb, tmp_path):
     """Continuous-aggregate index: the additive identity (probe over
-    build+append segments == full recompute), compaction parity, and
-    the finest-grid param pin."""
+    build+append segments == full recompute) and the finest-grid param
+    pin."""
     import pytest as _pytest
 
-    from paperoni_spark import fsio
     from paperoni_spark.operators import temporal
 
     events = contract.load(spark, SF_DIR, "events")
@@ -1644,9 +1441,6 @@ def test_time_rollup_index(spark, ddb, tmp_path):
     base = probe()
     full = sorted(tuple(r) for r in temporal.time_rollup(events).collect())
     assert base == full
-
-    assert fsio.compact_index_kind(spark, idx, "time_rollup") == 2
-    assert probe() == base
 
     # geometry pin: a probe at a different finest grid is refused
     with _pytest.raises(ValueError, match="finest_s"):

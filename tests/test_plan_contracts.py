@@ -45,7 +45,6 @@ PLAN_CONTRACTS = {
     # leave their row, and the scan reads only (doc_id, text)
     "quality_classifier_scores": (0, ["lang", "source", "n_chars"]),
     # single-shuffle partial-aggregated rollups with pruned scans
-    "minhash_signatures": (1, ["lang", "source", "n_chars"]),
     "windowed_events": (1, ["user_id", "props"]),
     "session_stats": (1, ["props", "event_type"]),
     # small multi-stage shapes (digest agg / two-phase prefix cut)

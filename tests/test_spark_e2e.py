@@ -826,7 +826,7 @@ def test_corpus_job_near_dup_waves(tmp_path_factory, extra):
 
 
 _REFUSALS_SCRIPT = r"""
-import os, shutil, sys
+import os, sys
 
 root, tmp = sys.argv[1], sys.argv[2]
 sys.path.insert(0, root)
@@ -867,9 +867,6 @@ other_kind = os.path.join(tmp, "other_kind")
 os.makedirs(os.path.join(other_kind, "wave=0"))
 open(os.path.join(other_kind, "_index_kind_user_state"), "w").close()
 open(os.path.join(other_kind, "wave=0", "part-00000.parquet"), "w").close()
-compacted = os.path.join(tmp, "compacted")
-shutil.copytree(idx, compacted)
-open(os.path.join(compacted, "_compacted_wave_w0"), "w").close()
 
 
 def listing(path):
@@ -898,7 +895,6 @@ def refused(expect, dedup, wave, append=True, substring=None):
 refused("not a wave-segmented index", foreign, "w2")
 refused("'user_state' index", other_kind, "w2")
 refused("--append was not given", idx, "w2", append=False)
-refused("owned by a compaction", compacted, "w0")
 refused("must not be the build's 0", os.path.join(tmp, "fresh"), "0")
 # a retry of the committed wave whose SUBSTRING root is refused must not
 # first delete the dedup index's committed wave=w1 segment
@@ -912,8 +908,7 @@ def test_corpus_job_refusals_leave_indexes_untouched(tmp_path_factory):
     """Every corpus_job refusal for either index root (--dedup-index,
     --substring-index) exits before anything is created or deleted: a
     foreign root, another index family's root, an existing index without
-    --append, a compacted wave id, wave id 0 on a fresh path, and a
-    refused substring root on a retry of a committed wave all leave both
+    --append, wave id 0 on a fresh path, and a refused substring root on a retry of a committed wave all leave both
     roots' (and the sinks') recursive listings unchanged.
     Subprocess: corpus_job.main owns (and stops) its session."""
     import os
