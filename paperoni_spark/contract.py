@@ -41,12 +41,7 @@ from .operators import (
 from .operators.extract import interleave_stats, run_extract
 from .pipeline.job import extract_pipeline
 from .spans import fixture_corpus, synth_corpus
-from .streaming import run_streaming_window_counts, windowed_event_counts
-from .streaming.sessions import (
-    run_streaming_sessionization,
-    run_streaming_sessionization_evicting,
-)
-from .streaming.stateful import running_user_totals
+from .streaming.sessions import run_streaming_sessionization
 
 _GOLDEN_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "golden"
@@ -623,9 +618,10 @@ WHERE a.doc_id < b.doc_id
 """
 
 
-def oracle_ngram_jaccard() -> str:
-    return f"""
-WITH {_SHINGLE_CTE},
+# the DF-capped blocked-Jaccard chain both n-gram oracles build on:
+# ``scored`` holds every blocked pair's rounded Jaccard; the pairs at or
+# above _JACCARD_MIN are the near-dup edges
+_JACCARD_CTES = f"""{_SHINGLE_CTE},
 blocked AS (
   SELECT s.* FROM sh s
   JOIN (SELECT shingle FROM sh GROUP BY shingle
@@ -643,8 +639,14 @@ scored AS (
   FROM pairs
   JOIN sizes na ON na.doc_id = doc_a
   JOIN sizes nb ON nb.doc_id = doc_b
-)
-SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.1
+)"""
+_JACCARD_MIN = 0.1
+
+
+def oracle_ngram_jaccard() -> str:
+    return f"""
+WITH {_JACCARD_CTES}
+SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= {_JACCARD_MIN}
 """
 
 
@@ -701,157 +703,11 @@ def _stream_tmp(name: str) -> str:
     return tmp
 
 
-def q_streaming_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True Structured Streaming extraction (file source, 2 files → 2
-    availableNow triggers through foreachBatch — the minimum multi-batch
-    shape; extraction is stateless so extra batches only cost gate wall)
-    over the fixture corpus, verified against the same golden-spans
-    VALUES oracle as the batch path — streaming and batch must be
-    span-identical."""
-    import shutil
-
-    from .streaming.extract_stream import run_streaming_extraction
-
-    # out_dir must outlive this call (the caller collects lazily):
-    # _stream_tmp keeps ONE live generation per query and reaps the
-    # previous one on re-entry; inputs/checkpoint are dropped as soon
-    # as the stream has drained
-    base = _stream_tmp("stream_extract")
-    docs_dir = os.path.join(base, "docs")
-    out_dir = os.path.join(base, "out")
-    ck_dir = os.path.join(base, "ck")
-    fixture_documents_df(spark).repartition(2).write.parquet(docs_dir)
-    run_streaming_extraction(
-        spark, docs_dir, out_dir, ck_dir, max_files_per_trigger=1
-    )
-    extracted = spark.read.parquet(out_dir)
-    shutil.rmtree(docs_dir, ignore_errors=True)
-    shutil.rmtree(ck_dir, ignore_errors=True)
-    return extracted.select(
-        "doc_id", F.posexplode_outer("extracted").alias("pos", "span")
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("span_kind"),
-        F.col("span.text").alias("span_text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.order").alias("span_order"),
-    ).where(F.col("span_kind").isNotNull())
-
-
-def q_streaming_session_stats_evicting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION streaming-sessionization shape under the batch oracle:
-    per-session event-time eviction (state holds only open sessions), with
-    the corpus staged as three mtime-ordered micro-batches — the real
-    events, then two far-future sentinel events whose only job is to march
-    the watermark past every real session's end + gap so all of them drain
-    as exactly-once FINALS before the stream stops.  Sentinel users are
-    negative ids, filtered from the result; the oracle is the same batch
-    session_stats fixpoint as the full-history twin — proving the bounded-
-    state path is row-identical to batch, not just "close"."""
-    import datetime as dt
-    import shutil
-    import tempfile
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    spark = _utc(spark)
-    tmp = tempfile.mkdtemp(prefix="sessev_")
-    events_dir = os.path.join(tmp, "ev")
-    os.makedirs(events_dir)
-    src = os.path.join(sf_dir, "events.parquet")
-    shutil.copyfile(src, os.path.join(events_dir, "b0.parquet"))
-    max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
-    # the sentinels' ONLY job is to march the watermark 10/20 days past
-    # every real session's end + gap — write the two 1-row files driver-
-    # side with pyarrow (ms) instead of two Spark write jobs (measured
-    # seconds each: a Python-pickled local relation never reuses its
-    # worker).  Field names/types mirror streaming.windowed.EVENTS_SCHEMA;
-    # the +days margin dwarfs any tz-convention drift in the collected
-    # max_ts, and sentinel users are negative ids filtered from the result
-    sentinel_schema = pa.schema(
-        [
-            ("event_id", pa.int64()),
-            ("ts", pa.timestamp("us", tz="UTC")),
-            ("user_id", pa.int64()),
-            ("event_type", pa.string()),
-            ("value", pa.float64()),
-            ("props", pa.string()),
-        ]
-    )
-    for i, days in ((1, 10), (2, 20)):
-        tbl = pa.table(
-            {
-                "event_id": [-i],
-                "ts": [max_ts + dt.timedelta(days=days)],
-                "user_id": [-i],
-                "event_type": ["sentinel"],
-                "value": [0.0],
-                "props": ["{}"],
-            },
-            schema=sentinel_schema,
-        )
-        pq.write_table(tbl, os.path.join(events_dir, f"b{i}.parquet"))
-    now = time.time()
-    for i in range(3):  # file source orders batches by modification time
-        path = os.path.join(events_dir, f"b{i}.parquet")
-        os.utime(path, (now + 10 * i, now + 10 * i))
-    finals = run_streaming_sessionization_evicting(
-        spark,
-        events_dir,
-        max_files_per_trigger=1,
-        path_glob="*.parquet",
-        state_partitions=_STREAM_STATE_PARTITIONS,
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return finals.where(F.col("user_id") >= 0)
-
-
-def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time exact dedup as a stateful stream: the corpus staged as
-    two mtime-ordered micro-batches (doc_id mod 2 — composition is
-    irrelevant: the survivor is the min doc_id, batch-order independent;
-    two batches are the minimum that exercises cross-batch state, and
-    the gate pays one stream trigger less than the former three),
-    one tiny (survivor, count) state row per distinct digest, gated
-    row-for-row against the plain batch groupBy oracle.  The gate-SF
-    corpora (sf0.001/sf0.01) have no natural exact text duplicates —
-    sf0.1 has 8 — so twins are PLANTED: doc_id <
-    LINE_PLANT_N re-enters under PLANT_ID_OFFSET + doc_id, and because
-    the offset is odd every twin lands in a DIFFERENT micro-batch than
-    its seed — each duplicate digest exercises a real cross-batch state
-    update, not a within-batch shortcut."""
-    from .streaming.dedup import run_streaming_exact_dedup
-
-    base = load(spark, sf_dir, "documents")
-    docs = base.unionByName(
-        base.where(F.col("doc_id") < LINE_PLANT_N).withColumn(
-            "doc_id", F.col("doc_id") + PLANT_ID_OFFSET
-        )
-    )
-    # survivors are read lazily from the batch-segmented sink — the root
-    # stays live until the next invocation (_stream_tmp) or exit
-    tmp, docs_dir = _stage_micro_batches(docs, root=_stream_tmp("sdedup"))
-    return run_streaming_exact_dedup(
-        spark,
-        docs_dir,
-        os.path.join(tmp, "out"),
-        max_files_per_trigger=1,
-        state_partitions=_STREAM_STATE_PARTITIONS,
-    )
-
-
-def _stage_micro_batches(
-    docs: DataFrame, root: str, class_expr=None
-) -> tuple[str, str]:
+def _stage_micro_batches(docs: DataFrame, root: str) -> tuple[str, str]:
     """Stage a documents frame as two mtime-ordered parquet files
-    (doc_id mod 2, or an explicit ``class_expr`` int column 0..1 — the
-    time-ordered streams need a ts split, not a key split) under
-    ``root`` — the shared harness for the streaming gates (file sources
-    order batches by modification time).  Returns ``(root, docs_dir)``;
-    the caller owns cleanup (rmtree after the stream drains, or a
-    _stream_tmp root when the returned frame reads lazily)."""
+    (doc_id mod 2) under ``root`` (file sources order batches by
+    modification time).  Returns ``(root, docs_dir)``; the caller owns
+    cleanup (a _stream_tmp root when the returned frame reads lazily)."""
     import glob
     import shutil
     import time
@@ -865,13 +721,8 @@ def _stage_micro_batches(
     # class in exactly one task → exactly one file per class (and keeps AQE
     # from coalescing the write, per the round-4 partitioned-write finding)
     sdir = os.path.join(root, "staged")
-    cls = (
-        class_expr
-        if class_expr is not None
-        else (F.col("doc_id") % n_batches).cast("int")
-    )
     (
-        docs.withColumn("_b", cls)
+        docs.withColumn("_b", (F.col("doc_id") % n_batches).cast("int"))
         .repartition(n_batches, "_b")
         .write.partitionBy("_b")
         .parquet(sdir)
@@ -890,20 +741,6 @@ def _stage_micro_batches(
         shutil.move(parts[0], dst)
         os.utime(dst, (now + 10 * i, now + 10 * i))
     return root, docs_dir
-
-
-def oracle_streaming_exact_dedup() -> str:
-    return f"""
-WITH probed AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {PLANT_ID_OFFSET}, text FROM documents
-  WHERE doc_id < {LINE_PLANT_N}
-)
-SELECT md5(text) AS digest, min(doc_id) AS first_doc_id,
-       count(*)::BIGINT AS n_docs
-FROM probed GROUP BY 1
-"""
 
 
 def q_streaming_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -968,27 +805,12 @@ WHERE cum_tokens <= (CASE lang {cases} ELSE {_TOKEN_BUDGET_DEFAULT} END)
 
 
 def oracle_dedup_clusters() -> str:
-    """Recursive-CTE twin of dedup.dedup_clusters: same jaccard edge set
-    (shared with oracle_ngram_jaccard), true connected-component fixpoint,
+    """Recursive-CTE twin of dedup.dedup_clusters: the jaccard edge set
+    of oracle_ngram_jaccard, true connected-component fixpoint,
     min-doc_id cluster labels."""
     return f"""
-WITH RECURSIVE {_SHINGLE_CTE},
-blocked AS (
-  SELECT s.* FROM sh s
-  JOIN (SELECT shingle FROM sh GROUP BY shingle
-        HAVING count(*) <= {dedup.SHINGLE_DF_CAP}) ok USING (shingle)
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM blocked GROUP BY doc_id),
-jp AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-    FROM blocked a JOIN blocked b USING (shingle)
-    WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-  ) pairs
-  JOIN sizes na ON na.doc_id = doc_a
-  JOIN sizes nb ON nb.doc_id = doc_b
-  WHERE round(common::DOUBLE / (na.n_sh + nb.n_sh - common), 6) >= 0.1
-),
+WITH RECURSIVE {_JACCARD_CTES},
+jp AS (SELECT doc_a, doc_b FROM scored WHERE jaccard >= {_JACCARD_MIN}),
 edges AS (SELECT doc_a AS a, doc_b AS b FROM jp
           UNION ALL SELECT doc_b, doc_a FROM jp),
 walk AS (
@@ -1159,11 +981,6 @@ GROUP BY lang
 """
 
 
-# odd: a planted twin lands in a different staged micro-batch from its
-# seed under _stage_micro_batches' doc_id % 2 split
-PLANT_ID_OFFSET = 2_000_003
-
-
 def _sq_dist_sql(e: str, c: str) -> str:
     """The rounded expanded-form squared distance of the IVF oracle
     (mirrors the engine's numpy form term-for-term)."""
@@ -1290,14 +1107,6 @@ FROM sess GROUP BY user_id, session_idx
 """
 
 
-def oracle_user_totals() -> str:
-    return """
-SELECT user_id, count(*)::BIGINT AS n_events,
-       round(sum(value), 6) AS total_value
-FROM events GROUP BY user_id
-"""
-
-
 def q_docs_joined_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join family: documents ⋈ embeddings on doc_id==vec_id, aggregating
     text-quality signals per (lang, label).  Equi-join on the shared key —
@@ -1358,15 +1167,6 @@ FROM paged
 """
 
 
-def oracle_windowed_events() -> str:
-    return """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, count(*)::BIGINT AS n_events,
-       round(sum(value), 6) AS total_value
-FROM events GROUP BY 1, 2
-"""
-
-
 # ------------------------------------------------------------- the contract
 
 
@@ -1374,6 +1174,8 @@ FROM events GROUP BY 1, 2
 # staples: CCNet boilerplate removal, RefinedWeb domain caps)
 
 LINE_PLANT_N = 40
+# planted documents' ids start past every corpus doc_id
+PLANT_ID_OFFSET = 2_000_003
 _LINE_HEADER = "shared header boilerplate"
 _LINE_FOOTER = "shared footer boilerplate"
 
@@ -1601,39 +1403,6 @@ LEFT JOIN agg a USING (doc_id)
 """
 
 
-_ASOF_STREAM_SPLIT = "2024-01-16 00:00:00"
-
-
-def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time as-of enrichment as a stateful stream: the events
-    TIME-SPLIT into two mtime-ordered micro-batches (the event-log
-    tailing contract the operator documents — a key split would put
-    later refs in an earlier batch and break as-of semantics), one
-    (ts_us, event_id) state row per user, gated row-for-row against the
-    SAME full-history union-window oracle as the batch asof_join_enrich
-    — the streaming, incremental-index, and batch shapes all hash-check
-    to one answer."""
-    from .streaming.asof import run_streaming_asof_enrich
-
-    spark = _utc(spark)
-    events = load(spark, sf_dir, "events")
-    split = (
-        (F.col("ts") >= F.expr(f"TIMESTAMP_NTZ '{_ASOF_STREAM_SPLIT}'"))
-        .cast("int")
-    )
-    tmp, events_dir = _stage_micro_batches(
-        events, root=_stream_tmp("sasof"), class_expr=split
-    )
-    return run_streaming_asof_enrich(
-        spark,
-        events_dir,
-        temporal.ASOF_TARGET_TYPE,
-        temporal.ASOF_REF_TYPE,
-        max_files_per_trigger=1,
-        state_partitions=_STREAM_STATE_PARTITIONS,
-    )
-
-
 def q_time_rollup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-aggregate probe: history (events before _ASOF_CUTOFF)
     builds the finest-grid partials index ONCE (bench-amortized), the
@@ -1763,9 +1532,6 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_cap_sample": lambda spark, sf: sampling.source_cap_sample(
             load(spark, sf, "documents")
         ),
-        # streaming extraction (foreachBatch over a multi-trigger file
-        # source) against the same golden oracle as the batch path
-        "streaming_extract_spans": q_streaming_extract_spans,
         # text analysis family: the funnel's quality stages and keywords
         "quality_scores": lambda spark, sf: textstats.quality_scores(load(spark, sf, "documents")),
         "quality_filter": lambda spark, sf: textstats.quality_filter(load(spark, sf, "documents")),
@@ -1809,31 +1575,15 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # incremental as-of join against the persisted user-state index
         # (idempotent max-merge appends)
         "asof_delta_enrich": q_asof_delta_enrich,
-        # the streaming twin: per-user (ts, id) group state, append-mode
-        # emission, same oracle as the batch as-of join
-        "streaming_asof_enrich": q_streaming_asof_enrich,
         # continuous-aggregate probe: persisted finest-grid partials
         # (additive), full-recompute oracle
         "time_rollup_delta": q_time_rollup_delta,
         "session_stats": lambda spark, sf: sessionize.session_stats(load(_utc(spark), sf, "events")),
-        # streaming (batch shape + true Structured Streaming run + custom
-        # stateful operator via applyInPandasWithState)
-        "windowed_events": lambda spark, sf: windowed_event_counts(load(_utc(spark), sf, "events")),
-        "streaming_windowed_events": lambda spark, sf: run_streaming_window_counts(
-            _utc(spark), sf, state_partitions=_STREAM_STATE_PARTITIONS
-        ),
-        "stateful_user_totals": lambda spark, sf: running_user_totals(
-            spark, sf, state_partitions=_STREAM_STATE_PARTITIONS
-        ),
         # streaming gap-sessionization: applyInPandasWithState, verified
         # against the SAME oracle as the batch session_stats window plan
         "streaming_session_stats": lambda spark, sf: run_streaming_sessionization(
             _utc(spark), sf, state_partitions=_STREAM_STATE_PARTITIONS
         ),
-        # the production eviction path (bounded state) under the SAME oracle
-        "streaming_session_stats_evicting": q_streaming_session_stats_evicting,
-        # ingest-time exact dedup: per-digest stateful stream vs batch groupBy
-        "streaming_exact_dedup": q_streaming_exact_dedup,
         # recurring-crawl near-dup: per-wave index probe + append as a stream
         "streaming_simhash_pairs": q_streaming_simhash_pairs,
     }
@@ -1861,7 +1611,6 @@ def build_oracles() -> dict[str, str]:
         "stratified_sample": oracle_stratified_sample(),
         "token_budget_sample": oracle_token_budget_sample(),
         "source_cap_sample": oracle_source_cap_sample(),
-        "streaming_extract_spans": golden_spans_values_sql(),
         "interleave_stats": oracle_interleave_stats(),
         "quality_scores": oracle_quality_scores(),
         "quality_filter": oracle_quality_filter(),
@@ -1874,17 +1623,11 @@ def build_oracles() -> dict[str, str]:
         "time_rollup": oracle_time_rollup(),
         "session_concurrency": oracle_session_concurrency(),
         "asof_delta_enrich": oracle_asof_join_enrich(delta_only=True),
-        "streaming_asof_enrich": oracle_asof_join_enrich(),
         "time_rollup_delta": oracle_time_rollup(),
         "substring_delta": oracle_substring_delta(),
         "pdf_page_stats": oracle_pdf_page_stats(),
         "docs_joined_labels": oracle_docs_joined_labels(),
         "session_stats": oracle_session_stats(),
-        "windowed_events": oracle_windowed_events(),
-        "streaming_windowed_events": oracle_windowed_events(),
-        "stateful_user_totals": oracle_user_totals(),
         "streaming_session_stats": oracle_session_stats(),
-        "streaming_session_stats_evicting": oracle_session_stats(),
-        "streaming_exact_dedup": oracle_streaming_exact_dedup(),
         "streaming_simhash_pairs": oracle_streaming_simhash_pairs(),
     }

@@ -93,9 +93,9 @@ def write_output(
     output_path: str,
     metrics_path: str | None = None,
     run_id: str | None = None,
-    mode: str = "append",
 ) -> None:
-    """Sink stage.  On a production cluster this is an Iceberg
+    """Sink stage: appends this run's rows (and its lineage) to the
+    outputs.  On a production cluster this is an Iceberg
     ``df.writeTo(table).append()`` pair (extracted + lineage tables) so that
     partition-level retries are idempotent; this environment has no Iceberg
     catalog, so parquet paths stand in with identical semantics for the
@@ -116,9 +116,11 @@ def write_output(
     run_id = run_id or uuid.uuid4().hex
     refuse_flat_layout(extracted.sparkSession, output_path)
     stamped = extracted.withColumn("run_id", F.lit(run_id))
-    stamped.write.mode(mode).partitionBy("run_id").parquet(output_path)
+    stamped.write.mode("append").partitionBy("run_id").parquet(output_path)
     if metrics_path is not None:
         written = extracted.sparkSession.read.parquet(output_path).where(
             F.col("run_id") == run_id
         )
-        lineage_metrics(written, run_id, started_at).write.mode(mode).parquet(metrics_path)
+        lineage_metrics(written, run_id, started_at).write.mode("append").parquet(
+            metrics_path
+        )

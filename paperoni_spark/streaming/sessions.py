@@ -6,17 +6,12 @@ and re-derives that user's sessions on every update.  Sessions are NOT
 append-only under late/out-of-order arrivals — a bridging event can merge
 two previously-separate sessions — so each update emits the user's full
 current session list tagged with a monotone update counter, and the reader
-takes each user's latest emission (same last-write-wins readback as
-stateful.running_user_totals).  With an ``availableNow`` trigger over a
+takes each user's latest emission.  With an ``availableNow`` trigger over a
 static directory the final state must equal the batch ``session_stats``
 row-for-row — which is exactly what the driver's oracle asserts.
 
-At production scale the state should not hold a user's full history: set an
-event-time timeout (GroupStateTimeout.EventTimeTimeout + watermark) and
-evict sessions older than the watermark minus the gap — they can never
-merge with future events, so they are emitted once as final and dropped
-from state.  The availableNow test path keeps full state because the static
-corpus is finite and the contract is exact batch parity.
+The state holds each user's full event history: the inputs are finite and
+the contract is exact batch parity, so nothing is ever evicted.
 """
 
 from __future__ import annotations
@@ -36,11 +31,21 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from ..operators.sessionize import DEFAULT_GAP_MINUTES
-from .stateful import spark_round
-from .windowed import EVENTS_SCHEMA
+
+EVENTS_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]
+)
 
 SESSION_STATE_SCHEMA = StructType(
     [
@@ -63,6 +68,18 @@ SESSION_OUTPUT_SCHEMA = StructType(
         StructField("n_updates", LongType()),
     ]
 )
+
+
+def spark_round(x: float, scale: int) -> float:
+    """Spark's ROUND(double, n): BigDecimal.valueOf(x) (shortest decimal
+    repr, like Python repr) then setScale(n, HALF_UP).  Python's round() is
+    banker's (HALF_EVEN) — on an exact x.xxxxx5 boundary the two differ and
+    the stream would mismatch the batch/oracle gate by one ulp."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP)
+    )
 
 
 def _fmt_ts_us(us_list: list) -> list:
@@ -140,161 +157,6 @@ def _make_update_fn(gap_minutes: int):
         )
 
     return update
-
-
-SESSION_FINAL_SCHEMA = StructType(SESSION_OUTPUT_SCHEMA.fields[:-1])  # no n_updates
-
-# zero-row template for groups with nothing closed this batch (most
-# groups, most batches): building a fresh empty DataFrame from the schema
-# per group is a measurable slice of the per-batch Python time at 10^3
-# groups.  Each group yields its own (cheap) copy, so nothing downstream
-# of the yield can mutate or retype the template for later groups
-_EMPTY_FINAL = pd.DataFrame(
-    {f.name: [] for f in SESSION_FINAL_SCHEMA.fields}
-)
-
-EVICT_STATE_SCHEMA = StructType(
-    [
-        StructField("base_idx", LongType()),  # sessions already emitted
-        StructField("ts_us", ArrayType(LongType())),
-        StructField("event_ids", ArrayType(LongType())),
-        StructField("values", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _sweep_closed(
-    user_id, base_idx, ts_us, event_ids, values, gap_us, wm_us
-):
-    """Derive sessions (sorted (ts, event_id) order), split at the
-    watermark: a session is CLOSED iff end < wm − gap (no on-time event,
-    ts ≥ wm, can still merge).  Sessions are time-disjoint, so the closed
-    set is a prefix of the sorted event arrays.  Returns (rows for the
-    closed sessions with batch-identical session_idx = base_idx + i + 1,
-    events of the still-open suffix)."""
-    order = sorted(range(len(ts_us)), key=lambda i: (ts_us[i], event_ids[i]))
-    ts_s = [ts_us[i] for i in order]
-    eid_s = [event_ids[i] for i in order]
-    val_s = [values[i] for i in order]
-    sessions = []  # [start_us, end_us, n, total, first_event_pos]
-    for pos, t in enumerate(ts_s):
-        if not sessions or t - sessions[-1][1] > gap_us:
-            sessions.append([t, t, 1, val_s[pos], pos])
-        else:
-            cur = sessions[-1]
-            cur[1] = t
-            cur[2] += 1
-            cur[3] += val_s[pos]
-    n_closed = 0
-    while n_closed < len(sessions) and sessions[n_closed][1] < wm_us - gap_us:
-        n_closed += 1
-    closed = sessions[:n_closed]
-    rows = {
-        "user_id": [user_id] * n_closed,
-        "session_idx": [base_idx + i + 1 for i in range(n_closed)],
-        "n_events": [s[2] for s in closed],
-        "session_start": _fmt_ts_us([s[0] for s in closed]),
-        "session_end": _fmt_ts_us([s[1] for s in closed]),
-        "duration_us": [s[1] - s[0] for s in closed],
-        "total_value": [spark_round(s[3], 6) for s in closed],
-    }
-    cut = sessions[n_closed][4] if n_closed < len(sessions) else len(ts_s)
-    return rows, ts_s[cut:], eid_s[cut:], val_s[cut:]
-
-
-def _make_evicting_update_fn(gap_minutes: int):
-    """Production-path update: PER-SESSION eviction — on every invocation
-    (new data or timeout) the sessions whose end has passed watermark−gap
-    are emitted exactly once as final and their events leave the state, so
-    a continuously-active user's closed history drains instead of
-    accumulating.  A tiny residual counter (base_idx) survives eviction to
-    keep session_idx batch-identical across eviction waves."""
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            base_idx, ts_us, event_ids, values = state.get
-            ts_us, event_ids, values = list(ts_us), list(event_ids), list(values)
-        else:
-            base_idx, ts_us, event_ids, values = 0, [], [], []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                ts_us.extend((pdf["ts"].astype("int64") // 1000).tolist())
-                event_ids.extend(pdf["event_id"].astype("int64").tolist())
-                values.extend(pdf["value"].astype("float64").tolist())
-        wm_ms = state.getCurrentWatermarkMs()
-        rows, ts_us, event_ids, values = _sweep_closed(
-            user_id, base_idx, ts_us, event_ids, values, gap_us, wm_ms * 1000
-        )
-        n_closed = len(rows["user_id"])
-        state.update((base_idx + n_closed, ts_us, event_ids, values))
-        if ts_us:
-            # fire once the watermark passes the last possible merge point;
-            # CEIL to ms (+1: floor evicts up to 1 ms early, splitting an
-            # exactly-on-the-gap-boundary on-time event from its session)
-            # and strictly beyond the current watermark or Spark rejects it
-            state.setTimeoutTimestamp(
-                max((max(ts_us) + gap_us) // 1000 + 1, wm_ms + 1)
-            )
-        yield (
-            pd.DataFrame(rows) if n_closed else _EMPTY_FINAL.copy()
-        )
-
-    return update
-
-
-def run_streaming_sessionization_evicting(
-    spark: SparkSession,
-    events_dir: str,
-    gap_minutes: int = DEFAULT_GAP_MINUTES,
-    watermark: str = "0 seconds",
-    max_files_per_trigger: int | None = None,
-    path_glob: str = "events.parquet",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """The SCALE deployment shape: gap-sessionization with PER-SESSION
-    event-time eviction.  A session leaves the state (and is emitted,
-    exactly once, as final) the moment the watermark passes its end + gap
-    — on data arrival OR on the group's timeout — so state holds only the
-    OPEN sessions of active users plus an 8-byte per-user counter that
-    keeps session_idx batch-identical across eviction waves (deployments
-    keyed on session UUIDs instead of per-user ordinals can drop it).
-    The availableNow twin, :func:`run_streaming_sessionization`, keeps
-    full history for exact batch parity.  Emissions are final-only:
-    sessions still open when the stream ends are never emitted (they are
-    not final), and batch parity assumes no beyond-watermark stragglers —
-    standard watermark semantics."""
-    table = f"stream_sessions_ev_{uuid.uuid4().hex[:8]}"
-    reader = spark.readStream.schema(EVENTS_SCHEMA).option(
-        "pathGlobFilter", path_glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(events_dir).withWatermark("ts", watermark)
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _make_evicting_update_fn(gap_minutes),
-        outputStructType=SESSION_FINAL_SCHEMA,
-        stateStructType=EVICT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    from .util import state_shuffle_partitions
-
-    with state_shuffle_partitions(spark, state_partitions):
-        query = (
-            sessions.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(table)
 
 
 def run_streaming_sessionization(

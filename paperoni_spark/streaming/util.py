@@ -5,8 +5,8 @@ stream: Structured Streaming's state store allocates, loads, and commits
 ``spark.sql.shuffle.partitions`` state partitions EVERY micro-batch, and
 — unlike stateless exchanges — AQE never coalesces them, so a stream
 whose key cardinality is far below the session default pays the full
-width in per-batch fixed cost (measured on the sf0.01 gate: the exact-
-dedup stream drops 4-7 s → ~2 s going 32 → 4 partitions).  At production
+width in per-batch fixed cost (measured on the sf0.01 gate: a stateful
+stream drops 4-7 s → ~2 s going 32 → 4 partitions).  At production
 scale the same knob matters in the other direction: the width is FROZEN
 into the checkpoint by the first batch, so it must be sized to peak key
 cardinality up front — a restart cannot change it without a new

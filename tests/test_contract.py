@@ -10,12 +10,13 @@ import __spark_entry__ as entry
 def test_every_query_has_an_oracle():
     names = set(entry.queries())
     assert names == set(entry.oracle_sql())
-    assert len(names) == 46
+    assert len(names) == 39
 
 
 def test_coverage_reachability_table_lists_every_query():
     """COVERAGE.md's reachability table has one row per ``queries()``
-    entry — no row for a retired query, none missing for a live one."""
+    entry — no row for a retired query, none missing for a live one —
+    and its "Tally:" sentence counts the table's rows by what runs them."""
     import pathlib
     import re
 
@@ -27,6 +28,18 @@ def test_coverage_reachability_table_lists_every_query():
     listed = [m.group(1) for r in rows if (m := re.match(r"\| `(\w+)` \|", r))]
     assert len(listed) == len(set(listed))
     assert set(listed) == set(entry.queries())
+
+    runs = [r.split(" | ")[2] for r in rows if re.match(r"\| `\w+` \|", r)]
+    kinds = ("job:", "`query_mix` only", "`contract.py` + tests only")
+    counts = [sum(c.startswith(k) for c in runs) for k in kinds]
+    assert sum(counts) == len(runs)
+    tally = re.search(
+        r"Tally: (\d+) queries are job-run .*?(\d+)\s+only by `query_mix`, "
+        r"(\d+) only by `contract.py` and tests",
+        text,
+        re.S,
+    )
+    assert tally and [int(n) for n in tally.groups()] == counts
 
 
 def test_hadoop_fs_only_in_fsio():

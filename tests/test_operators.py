@@ -5,8 +5,10 @@ representative subset."""
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 import os
+import time
 
 import duckdb
 import pytest
@@ -14,7 +16,7 @@ import pytest
 import paperoni_spark.contract as contract
 from pyspark.sql import functions as F
 from paperoni_spark.operators import dedup, textstats
-from paperoni_spark.streaming import run_streaming_window_counts
+from paperoni_spark.streaming.sessions import EVENTS_SCHEMA
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -249,16 +251,6 @@ def test_simhash_band_cap_excludes_degenerate_bucket(spark):
     assert all(r["hamming"] == 0 for r in uncapped)
 
 
-def test_streaming_equals_batch(spark, ddb):
-    from paperoni_spark.streaming import windowed_event_counts
-
-    events = contract.load(spark, SF_DIR, "events")
-    batch = windowed_event_counts(events)
-    stream = run_streaming_window_counts(spark, SF_DIR)
-    assert_matches_oracle(stream, ddb, contract.oracle_windowed_events())
-    assert sorted(map(tuple, batch.collect())) == sorted(map(tuple, stream.collect()))
-
-
 def test_ngram_jaccard_sane(spark, docs):
     pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.05).collect()
     for r in pairs:
@@ -271,13 +263,6 @@ def test_session_stats_matches_oracle(spark, ddb):
     assert_matches_oracle(
         contract.sessionize.session_stats(events), ddb, contract.oracle_session_stats()
     )
-
-
-def test_stateful_streaming_equals_batch(spark, ddb):
-    from paperoni_spark.streaming.stateful import running_user_totals
-
-    totals = running_user_totals(spark, SF_DIR)
-    assert_matches_oracle(totals, ddb, contract.oracle_user_totals())
 
 
 def test_pdf_extract_plumbing(spark, docs, ddb):
@@ -311,7 +296,7 @@ def _rounded_cosines(qvecs, vecs):
     Spark's ``round`` does."""
     import numpy as np
 
-    from paperoni_spark.streaming.stateful import spark_round
+    from paperoni_spark.streaming.sessions import spark_round
 
     def seq_sum(m):
         return np.add.accumulate(m, axis=-1)[..., -1]
@@ -782,76 +767,6 @@ def test_dup_ngram_stats(spark, docs, ddb):
     assert final.count("Generate") <= 2, final[:3000]
 
 
-def test_streaming_exact_dedup(spark, docs, ddb):
-    """Ingest-dedup stream: oracle parity (planted twins land in different
-    micro-batches than their seeds), min-id survivor, and state actually
-    merged across batches (every planted digest shows n_docs == 2 with
-    the seed as survivor)."""
-    result = contract.q_streaming_exact_dedup(spark, SF_DIR)
-    rows = result.collect()
-    assert_matches_oracle(result, ddb, contract.oracle_streaming_exact_dedup())
-    # every planted digest merged across batches; subset assertion (not
-    # equality) so a corpus WITH natural twins — sf0.1 has 8 — still passes
-    dups = {r["first_doc_id"]: r["n_docs"] for r in rows if r["n_docs"] > 1}
-    assert {i: 2 for i in range(contract.LINE_PLANT_N)}.items() <= dups.items()
-
-
-def test_streaming_exact_dedup_restart(spark, tmp_path):
-    """Survivor state and committed batch segments survive a stream
-    restart: run 1 ingests two batches; run 2 reuses the same dirs and
-    checkpoint with a NEW batch file duplicating a run-1 document — the
-    committed batches are skipped (their segments retained, not
-    rewritten), the resumed state merges the cross-restart duplicate
-    (n_docs=2, min-id survivor), and no driver-side sink is involved."""
-    import glob as g
-    import shutil
-    import time
-
-    from paperoni_spark.streaming.dedup import run_streaming_exact_dedup
-
-    def write_batch(rows, name, mtime):
-        df = spark.createDataFrame(
-            [(i, t, "en", "s", len(t)) for i, t in rows],
-            "doc_id: long, text: string, lang: string, source: string, n_chars: long",
-        )
-        sdir = str(tmp_path / ("stage_" + name))
-        df.coalesce(1).write.parquet(sdir)
-        dst = str(tmp_path / "docs" / name)
-        shutil.move(g.glob(sdir + "/part-*.parquet")[0], dst)
-        os.utime(dst, (mtime, mtime))
-
-    (tmp_path / "docs").mkdir()
-    now = time.time()
-    write_batch([(5, "alpha bravo"), (7, "charlie delta")], "b0.parquet", now)
-    write_batch([(6, "echo foxtrot")], "b1.parquet", now + 10)
-    out = str(tmp_path / "out")
-    r1 = {
-        r["first_doc_id"]: r["n_docs"]
-        for r in run_streaming_exact_dedup(
-            spark, str(tmp_path / "docs"), out, max_files_per_trigger=1
-        ).collect()
-    }
-    assert r1 == {5: 1, 6: 1, 7: 1}
-    segs1 = {os.path.basename(p) for p in g.glob(out + "/batch=*")}
-    assert segs1 == {"batch=0", "batch=1"}
-    mtimes1 = {p: os.path.getmtime(p) for p in g.glob(out + "/batch=*/part-*")}
-
-    # restart: new batch duplicates run-1's doc 5 text under a smaller id
-    write_batch([(3, "alpha bravo")], "b2.parquet", now + 20)
-    r2 = {
-        r["first_doc_id"]: r["n_docs"]
-        for r in run_streaming_exact_dedup(
-            spark, str(tmp_path / "docs"), out, max_files_per_trigger=1
-        ).collect()
-    }
-    # cross-restart merge: resumed state counted run-1's doc 5, survivor
-    # re-elected to the new minimum id
-    assert r2 == {3: 2, 6: 1, 7: 1}
-    # committed segments were skipped, not rewritten
-    for p, m in mtimes1.items():
-        assert os.path.getmtime(p) == m, p
-
-
 def test_streaming_simhash_pairs(spark, docs, ddb):
     """Streamed per-wave index probe+append accumulates exactly the
     whole-corpus pair sweep: oracle parity, and every pair surfaces in
@@ -954,6 +869,58 @@ def test_streaming_simhash_over_operator_index(spark, tmp_path):
     assert spark.read.parquet(index).count() == 3
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     assert pairs.get((1, 3)) == 0, pairs
+
+
+def test_streaming_sessionization_matches_batch(spark, tmp_path_factory):
+    """Gap-sessionization via applyInPandasWithState: fed the same events
+    split across THREE micro-batches in a session-hostile order (a later
+    batch delivers the bridging event that MERGES two sessions already
+    emitted as separate), the final read-back must equal the batch
+    session_stats rows exactly."""
+    from paperoni_spark.operators.sessionize import session_stats
+    from paperoni_spark.streaming.sessions import run_streaming_sessionization
+
+    base_dir = tmp_path_factory.mktemp("sess")
+    events_dir = str(base_dir / "events")
+    os.makedirs(events_dir)
+    # user 1: events at 0min and 50min (gap 50 > 30 → two sessions) plus a
+    # 25min bridge arriving LAST (merges them into one); user 2: one session
+    batches = [
+        [(0, 1), (50, 1), (100, 2)],
+        [(105, 2), (120, 2)],
+        [(25, 1)],  # the bridge — arrives after both sessions were emitted
+    ]
+    eid = 0
+    batch_dt = dt.datetime(2024, 3, 1)
+    all_rows = []
+    for bi, batch in enumerate(batches):
+        rows = [
+            (
+                (eid := eid + 1),
+                batch_dt + dt.timedelta(minutes=m),
+                uid,
+                "click",
+                float(eid),
+                "{}",
+            )
+            for m, uid in batch
+        ]
+        all_rows.extend(rows)
+        spark.createDataFrame(rows, schema=EVENTS_SCHEMA).coalesce(1).write.parquet(
+            os.path.join(events_dir, f"b{bi}")
+        )
+        time.sleep(2.1)  # file source orders batches by modification time
+
+    streamed = run_streaming_sessionization(
+        spark, events_dir + "/*", max_files_per_trigger=1, path_glob="*.parquet"
+    )
+    batch = session_stats(spark.createDataFrame(all_rows, schema=EVENTS_SCHEMA))
+    got = sorted(map(tuple, streamed.collect()))
+    want = sorted(map(tuple, batch.collect()))
+    assert got == want
+    # the merge actually happened: user 1 ends with ONE session of 3 events
+    u1 = [r for r in streamed.collect() if r["user_id"] == 1]
+    assert len(u1) == 1 and u1[0]["n_events"] == 3
 
 
 def test_source_cap_two_phase_identity_property(spark):
@@ -1390,32 +1357,6 @@ def test_asof_delta_enrich(spark, ddb, tmp_path):
 
     with _pytest.raises(ValueError, match="ref_type"):
         temporal.asof_enrich_delta(spark, delta, idx, ref_type="signup")
-
-
-def test_streaming_asof_enrich(spark, ddb):
-    """Streaming shape == the batch oracle, and at least one enrichment
-    CROSSES the micro-batch boundary (ref in batch 0, target in batch 1)
-    — the group state must be doing real cross-batch work, not a
-    within-batch shortcut."""
-    import datetime
-
-    out = contract.q_streaming_asof_enrich(spark, SF_DIR)
-    assert_matches_oracle(out, ddb, contract.oracle_asof_join_enrich())
-    rows = out.collect()
-    split_us = int(
-        datetime.datetime.strptime(
-            contract._ASOF_STREAM_SPLIT, "%Y-%m-%d %H:%M:%S"
-        )
-        .replace(tzinfo=datetime.timezone.utc)
-        .timestamp()
-        * 1_000_000
-    )
-    cross = [
-        r
-        for r in rows
-        if r.ts_us >= split_us and r.ref_event_id != -1 and r.ref_ts_us < split_us
-    ]
-    assert cross, "no enrichment crossed the micro-batch boundary"
 
 
 def test_time_rollup_index(spark, ddb, tmp_path):

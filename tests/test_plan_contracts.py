@@ -44,8 +44,7 @@ PLAN_CONTRACTS = {
     # doc's tokens (the funnel's own logit expression) — tokens never
     # leave their row, and the scan reads only (doc_id, text)
     "quality_classifier_scores": (0, ["lang", "source", "n_chars"]),
-    # single-shuffle partial-aggregated rollups with pruned scans
-    "windowed_events": (1, ["user_id", "props"]),
+    # single-shuffle partial-aggregated rollup with pruned scans
     "session_stats": (1, ["props", "event_type"]),
     # small multi-stage shapes (digest agg / two-phase prefix cut)
     "exact_dedup": (2, ["doc_id", "lang", "n_chars"]),

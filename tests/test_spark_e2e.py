@@ -127,41 +127,63 @@ def test_resume_anti_join(spark, fixture_df):
     assert ids == ["fx-brs", "fx-grab-empty", "fx-simple"]
 
 
+def test_extract_job_resume_reruns_only_unfinished_docs(tmp_path_factory):
+    """``extract_job --resume-from`` over the fixture corpus: run 1's glob
+    matches nothing yet, so it extracts every doc; run 2's same glob now
+    matches run 1's output, so only the non-``ok`` docs re-run and no
+    ``ok`` doc is written twice.  Subprocess: extract_job.main owns (and
+    stops) its session."""
+    import subprocess
+    import sys
+
+    tmp = str(tmp_path_factory.mktemp("xj_resume"))
+    script = f"""
+import os, sys
+sys.path.insert(0, {repr(str(__import__('os').path.dirname(__import__('os').path.dirname(__import__('os').path.abspath(__file__)))))})
+from collections import Counter
+from pyspark.sql import SparkSession
+from paperoni_spark.contract import DOCUMENTS_SPANS_SCHEMA
+from paperoni_spark.spans import fixture_corpus
+from jobs.extract_job import main as extract_main
+
+tmp = {repr(tmp)}
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+docs = os.path.join(tmp, "docs")
+spark.createDataFrame(fixture_corpus(), schema=DOCUMENTS_SPANS_SCHEMA).write.parquet(docs)
+spark.stop()
+
+out, met = os.path.join(tmp, "out"), os.path.join(tmp, "met")
+base = ["--input", docs, "--output", out, "--metrics", met,
+        "--resume-from", os.path.join(out, "run_id=*")]
+extract_main(base + ["--run-id", "r1"])
+extract_main(base + ["--run-id", "r2"])
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+rows = spark.read.parquet(out).select("doc_id", "status", "run_id").collect()
+ok = Counter(r["doc_id"] for r in rows if r["status"] == "ok")
+assert ok and set(ok.values()) == {{1}}, ok
+rerun = sorted(r["doc_id"] for r in rows if r["run_id"] == "r2")
+assert rerun == ["fx-brs", "fx-grab-empty", "fx-simple"], rerun
+lineage = spark.read.parquet(met).where("run_id = 'r2'").collect()
+assert sum(r["doc_count"] for r in lineage) == 3, lineage
+spark.stop()
+print("XJ_RESUME_OK")
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
+    )
+    assert "XJ_RESUME_OK" in proc.stdout, proc.stdout[-2000:] + proc.stderr[-4000:]
+
+
 def test_synth_corpus_on_spark(spark):
     docs = make_documents_df(spark, synth_corpus(60))
     result = run_extract(docs)
     agg = result.groupBy("status").count().collect()
     counts = {r["status"]: r["count"] for r in agg}
     assert counts.get("ok", 0) == 60
-
-
-def test_streaming_extraction_matches_batch(spark, fixture_df, tmp_path_factory):
-    """The streaming ingestion mode (readStream + foreachBatch) produces the
-    same extraction results as the batch path, and its checkpoint makes a
-    re-run a no-op."""
-    import pyspark.sql.functions as F
-
-    from paperoni_spark.streaming.extract_stream import run_streaming_extraction
-
-    base = tmp_path_factory.mktemp("stream_extract")
-    docs_dir = str(base / "docs")
-    out = str(base / "out")
-    ckpt = str(base / "ckpt")
-    fixture_df.write.parquet(docs_dir)
-
-    run_streaming_extraction(spark, docs_dir, out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.count() == len(fixture_corpus())
-    batch = extract_pipeline(spark.read.parquet(docs_dir))
-    b = {r["doc_id"]: r for r in batch.collect()}
-    for r in got.collect():
-        exp = b[r["doc_id"]]
-        assert r["status"] == exp["status"]
-        assert r["extracted"] == exp["extracted"]
-
-    # checkpointed re-run ingests nothing new
-    run_streaming_extraction(spark, docs_dir, out, ckpt)
-    assert spark.read.parquet(out).count() == len(fixture_corpus())
 
 
 def test_stats_only_extraction(spark, fixture_df):
@@ -478,33 +500,6 @@ def test_malformed_span_inputs_through_corpus_funnel(spark):
     assert ids.isdisjoint(d["doc_id"] for d in MALFORMED_SPAN_DOCS)
     assert ids == {d["doc_id"] for d in good}
     assert sorted(funnel.collect()) == sorted(clean_funnel.collect())
-
-
-def test_streaming_extraction_matches_golden(spark, tmp_path_factory):
-    """Structured Streaming extraction (3 files -> 3 availableNow triggers
-    through foreachBatch) is span-identical to the batch path / goldens."""
-    import json
-
-    from paperoni_spark.streaming.extract_stream import run_streaming_extraction
-
-    base = tmp_path_factory.mktemp("stream_extract")
-    docs_dir, out_dir, ck_dir = (str(base / d) for d in ("docs", "out", "ck"))
-    make_documents_df(spark, fixture_corpus()).repartition(3).write.parquet(docs_dir)
-    run_streaming_extraction(spark, docs_dir, out_dir, ck_dir, max_files_per_trigger=1)
-    got = spark.read.parquet(out_dir)
-    with open("tests/golden/fixture_spans.json") as f:
-        golden = json.load(f)
-    rows = {r["doc_id"]: r for r in got.collect()}
-    assert set(rows) == set(golden)
-    for doc_id, g in golden.items():
-        spans = [
-            {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"], "order": s["order"]}
-            for s in (rows[doc_id]["extracted"] or [])
-        ]
-        assert spans == g["extracted"], doc_id
-    # three triggers -> three run_ids in the lineage-stamped output
-    run_ids = {r["run_id"] for r in got.select("run_id").distinct().collect()}
-    assert len(run_ids) == 3
 
 
 def test_jsonl_input_surface(spark, fixture_df, tmp_path_factory):
