@@ -32,7 +32,6 @@ from pyspark.sql.types import (
 from .operators import (
     dedup,
     pdf,
-    sampling,
     sessionize,
     similarity,
     temporal,
@@ -156,17 +155,6 @@ def q_extract_img_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full training-data pipeline composition (extract → flatten →
-    normalize-fingerprint → quality signals) over the frozen synthetic
-    corpus, one row per surviving document.  Oracle: frozen golden VALUES
-    (tests/golden/synthetic_agg.json) — the corpus generator is frozen,
-    so per-doc outputs are a stable contract."""
-    from .pipeline.compose import corpus_build
-
-    return corpus_build(synth_documents_df(spark, 150))
-
-
 N_PLANTED_NEAR_DUPS = 3
 
 
@@ -213,12 +201,13 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reject count reconciling to the written corpus rows (kept −
     rejected:duplicate − rejected:near_duplicate == corpus).  Runs over
     the frozen synthetic corpus + planted near-dup variants; oracle:
-    frozen golden VALUES — see q_corpus_build.  max_hamming=1 (not the
-    production default 3): the synthetic corpus draws from a ~60-word
-    lorem vocabulary, so at Hamming 3 the 64-bit fingerprint honestly
-    collapses half the homogeneous corpus — the tight threshold keeps the
-    stage's reject set meaningful (all planted variants + a handful of
-    organic collisions) for the accounting contract."""
+    frozen golden VALUES — see synthetic_golden_values_sql.
+    max_hamming=1 (not the production default 3): the synthetic corpus
+    draws from a ~60-word lorem vocabulary, so at Hamming 3 the 64-bit
+    fingerprint honestly collapses half the homogeneous corpus — the
+    tight threshold keeps the stage's reject set meaningful (all planted
+    variants + a handful of organic collisions) for the accounting
+    contract."""
     from .pipeline.compose import build_training_corpus
 
     _, funnel, _ = build_training_corpus(
@@ -230,7 +219,8 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_synthetic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extraction pipeline (default scan mode) over the synthetic
     heavy-tail corpus, one row per document (status + span/node
-    counters).  Oracle: frozen golden VALUES — see q_corpus_build."""
+    counters).  Oracle: frozen golden VALUES — see
+    synthetic_golden_values_sql."""
     extracted = extract_pipeline(synth_documents_df(spark))
     return extracted.select(
         "doc_id",
@@ -338,15 +328,6 @@ sh AS (
 """
 
 
-def oracle_exact_dedup() -> str:
-    return """
-SELECT source, count(*)::BIGINT AS n_docs,
-       count(DISTINCT md5(text))::BIGINT AS n_unique,
-       (count(*) - count(DISTINCT md5(text)))::BIGINT AS n_dupes
-FROM documents GROUP BY source
-"""
-
-
 def oracle_quality_scores() -> str:
     return f"""
 SELECT doc_id, lang,
@@ -441,36 +422,6 @@ FROM agg
 """
 
 
-def oracle_funnel_conversion() -> str:
-    """DuckDB twin of sessionize.funnel_conversion: per-step first-touch
-    completion times via the same monotone user-keyed min-joins, exact
-    timestamp comparisons, integer counts (the only FP step is the
-    rounded final rate)."""
-    steps = sessionize.FUNNEL_STEPS
-    ctes = [
-        f"s1 AS (SELECT user_id, min(ts) AS t FROM events "
-        f"WHERE event_type = '{steps[0]}' GROUP BY user_id)"
-    ]
-    for i, st in enumerate(steps[1:], start=2):
-        ctes.append(
-            f"s{i} AS (SELECT e.user_id, min(e.ts) AS t FROM events e "
-            f"JOIN s{i-1} p ON e.user_id = p.user_id AND e.ts > p.t "
-            f"WHERE e.event_type = '{st}' GROUP BY e.user_id)"
-        )
-    unions = " UNION ALL ".join(
-        f"SELECT {i+1} AS step, '{st}' AS event_type, "
-        f"(SELECT count(*) FROM s{i+1}) AS n_users"
-        for i, st in enumerate(steps)
-    )
-    return f"""
-WITH {', '.join(ctes)},
-c AS ({unions})
-SELECT step, event_type, n_users::BIGINT AS n_users,
-       round(n_users / (SELECT count(*) FROM s1), 6) AS conv_rate
-FROM c
-"""
-
-
 _ASOF_CUTOFF = "2024-01-24 00:00:00"
 
 
@@ -527,39 +478,6 @@ def oracle_time_rollup() -> str:
             f"FROM events GROUP BY 1, 2, 3"
         )
     return " UNION ALL ".join(levels)
-
-
-def oracle_session_concurrency() -> str:
-    """DuckDB twin of temporal.session_concurrency: the same gap sessions
-    (session_stats CTE), then the DIRECT interval-overlap join — at oracle
-    scale the pair set is materializable, and DuckDB plans the two
-    inequalities as an IEJoin.  The engine's sweep formulation must count
-    exactly what the naive join counts."""
-    gap_us = sessionize.DEFAULT_GAP_MINUTES * 60 * 1_000_000
-    return f"""
-WITH ordered AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > {gap_us}
-              THEN 1 ELSE 0 END AS is_new
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM ordered
-),
-iv AS (
-  SELECT user_id, session_idx::BIGINT AS session_idx,
-         epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us
-  FROM sess GROUP BY user_id, session_idx
-)
-SELECT a.user_id, a.session_idx,
-       (count(*) - 1)::BIGINT AS n_concurrent
-FROM iv a JOIN iv b ON b.s_us <= a.e_us AND b.e_us >= a.s_us
-GROUP BY a.user_id, a.session_idx
-"""
 
 
 def _simhash_cte(bits: int) -> str:
@@ -648,14 +566,6 @@ def oracle_ngram_jaccard() -> str:
 WITH {_JACCARD_CTES}
 SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= {_JACCARD_MIN}
 """
-
-
-_STRATA_FRACTIONS = {"en": 0.5, "zh": 0.25, "de": 0.1}
-_STRATA_DEFAULT = 0.05
-
-
-_TOKEN_BUDGETS = {"en": 20_000, "es": 8_000}
-_TOKEN_BUDGET_DEFAULT = 2_000
 
 
 # State-store / probe-shuffle width for the gate's streamed queries:
@@ -782,28 +692,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {dedup.SIMHASH_HAMMING_MAX}
 """
 
 
-def oracle_token_budget_sample() -> str:
-    cases = " ".join(
-        f"WHEN '{lang}' THEN {b}" for lang, b in sorted(_TOKEN_BUDGETS.items())
-    )
-    return f"""
-WITH scored AS (
-  SELECT doc_id, lang, len({_TOKENS})::INT AS n_tokens,
-         md5('{sampling.SAMPLE_SALT}' || doc_id::VARCHAR) AS key
-  FROM documents
-),
-cum AS (
-  SELECT doc_id, lang, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY lang ORDER BY key, doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum_tokens
-  FROM scored
-)
-SELECT doc_id, lang, n_tokens, cum_tokens::BIGINT AS cum_tokens
-FROM cum
-WHERE cum_tokens <= (CASE lang {cases} ELSE {_TOKEN_BUDGET_DEFAULT} END)
-"""
-
-
 def oracle_dedup_clusters() -> str:
     """Recursive-CTE twin of dedup.dedup_clusters: the jaccard edge set
     of oracle_ngram_jaccard, true connected-component fixpoint,
@@ -825,18 +713,16 @@ FROM walk GROUP BY doc
 
 
 # incremental dedup's deterministic corpus/delta split: ~3/16 of docs are
-# the "newly crawled" delta, the rest are the indexed corpus.  Same
-# md5-prefix idiom as sampling.sample_key so both engines agree.
+# the "newly crawled" delta, the rest are the indexed corpus.  The first
+# hex char of md5(salt || doc_id) decides membership, the same expression
+# oracle_simhash_delta_pairs spells in SQL, so both engines agree.
 _DELTA_SALT = "delta:"
 _DELTA_PREFIX_CHARS = ("0", "1", "2")
 
 
 def _delta_flag_col():
-    # sampling.sample_key is the single source of truth for the
-    # md5(salt || key) membership-key idiom the oracles mirror verbatim
-    return F.substring(sampling.sample_key(_DELTA_SALT, "doc_id"), 1, 1).isin(
-        *_DELTA_PREFIX_CHARS
-    )
+    key = F.md5(F.concat(F.lit(_DELTA_SALT), F.col("doc_id").cast("string")))
+    return F.substring(key, 1, 1).isin(*_DELTA_PREFIX_CHARS)
 
 
 _INDEX_MEMO: dict[tuple, str] = {}
@@ -953,31 +839,6 @@ walk AS (
 SELECT doc AS doc_id, min(reach) AS cluster,
        (doc = min(reach)) AS is_survivor
 FROM walk GROUP BY doc
-"""
-
-
-def _sample_pred_sql(salt: str = sampling.SAMPLE_SALT) -> str:
-    return f"substr(md5('{salt}' || doc_id::VARCHAR), 1, 8)"
-
-
-def oracle_hash_sample() -> str:
-    cutoff = sampling._cutoff_hex(0.2)
-    return f"""
-SELECT doc_id, lang FROM documents
-WHERE {_sample_pred_sql()} < '{cutoff}'
-"""
-
-
-def oracle_stratified_sample() -> str:
-    cases = " ".join(
-        f"WHEN '{s}' THEN '{sampling._cutoff_hex(f)}'"
-        for s, f in sorted(_STRATA_FRACTIONS.items())
-    )
-    return f"""
-SELECT lang, count(*)::BIGINT AS n_sampled FROM documents
-WHERE {_sample_pred_sql()} <
-      (CASE lang {cases} ELSE '{sampling._cutoff_hex(_STRATA_DEFAULT)}' END)
-GROUP BY lang
 """
 
 
@@ -1107,41 +968,6 @@ FROM sess GROUP BY user_id, session_idx
 """
 
 
-def q_docs_joined_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join family: documents ⋈ embeddings on doc_id==vec_id, aggregating
-    text-quality signals per (lang, label).  Equi-join on the shared key —
-    SMJ/shuffled-hash at scale, AQE-broadcast at sf — then one partial
-    aggregation."""
-    docs = textstats.quality_scores(load(spark, sf_dir, "documents"))
-    labels = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"), "label"
-    )
-    return (
-        docs.join(labels, "doc_id")
-        .groupBy("lang", "label")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.avg("stopword_ratio"), 6).alias("avg_stopword_ratio"),
-            F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
-        )
-    )
-
-
-def oracle_docs_joined_labels() -> str:
-    return f"""
-WITH q AS (
-  SELECT doc_id, lang, len({_TOKENS})::INT AS n_tokens,
-         len(list_filter({_TOKENS}, t -> t IN ({_STOP_LIST})))::DOUBLE / len({_TOKENS}) AS sw
-  FROM documents
-)
-SELECT lang, label, count(*)::BIGINT AS n_docs,
-       round(avg(round(sw, 6)), 6) AS avg_stopword_ratio,
-       round(avg(n_tokens), 4) AS avg_tokens
-FROM q JOIN embeddings e ON q.doc_id = e.vec_id
-GROUP BY lang, label
-"""
-
-
 def oracle_pdf_page_stats() -> str:
     # replicates the deterministic stub decoder (operators/pdf.py): page
     # count and per-page image presence derive from md5 of the payload
@@ -1164,71 +990,6 @@ paged AS (
 SELECT doc_id, n_pages, 'ok' AS status,
        (n_pages + {img})::BIGINT AS spans_emitted
 FROM paged
-"""
-
-
-# ------------------------------------------------------------- the contract
-
-
-# ---- line-level dedup / per-source cap (the remaining web-pipeline
-# staples: CCNet boilerplate removal, RefinedWeb domain caps)
-
-LINE_PLANT_N = 40
-# planted documents' ids start past every corpus doc_id
-PLANT_ID_OFFSET = 2_000_003
-_LINE_HEADER = "shared header boilerplate"
-_LINE_FOOTER = "shared footer boilerplate"
-
-
-def planted_multiline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver corpus has no newlines (flat token streams), so the
-    line-dedup gate unions PLANTED multi-line docs: each wraps an
-    existing document's text between a header and a footer line shared
-    by all LINE_PLANT_N plants — boilerplate by construction (df = 40 >>
-    cap) — while the middle lines inherit the corpus's natural
-    exact-duplicate structure (df straddles the cap both ways)."""
-    docs = load(spark, sf_dir, "documents")
-    planted = docs.where(F.col("doc_id") < LINE_PLANT_N).select(
-        (F.col("doc_id") + PLANT_ID_OFFSET).alias("doc_id"),
-        F.concat(
-            F.lit(_LINE_HEADER + "\n"), F.col("text"), F.lit("\n" + _LINE_FOOTER)
-        ).alias("text"),
-    )
-    return docs.select("doc_id", "text").union(planted)
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.line_dedup(planted_multiline_documents(spark, sf_dir))
-
-
-def oracle_line_dedup() -> str:
-    cap = dedup.LINE_DF_CAP
-    return f"""
-WITH probed AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {PLANT_ID_OFFSET},
-         '{_LINE_HEADER}' || chr(10) || text || chr(10) || '{_LINE_FOOTER}'
-  FROM documents WHERE doc_id < {LINE_PLANT_N}
-),
-lines0 AS (
-  SELECT doc_id, i AS pos, trim(arr[i]) AS line
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS arr FROM probed),
-       unnest(generate_series(1, len(arr))) AS t(i)
-),
-lines AS (SELECT doc_id, pos, line, md5(line) AS lh FROM lines0 WHERE line != ''),
-hot AS (SELECT lh FROM lines GROUP BY lh HAVING count(DISTINCT doc_id) > {cap}),
-kept AS (SELECT * FROM lines WHERE lh NOT IN (SELECT lh FROM hot)),
-clean AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(line, chr(10) ORDER BY pos) AS text_clean
-  FROM kept GROUP BY doc_id),
-totals AS (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id)
-SELECT p.doc_id,
-       coalesce(t.n_lines, 0)::BIGINT AS n_lines,
-       coalesce(c.n_kept, 0)::BIGINT AS n_kept,
-       coalesce(c.text_clean, '') AS text_clean
-FROM probed p LEFT JOIN totals t USING (doc_id) LEFT JOIN clean c USING (doc_id)
 """
 
 
@@ -1449,48 +1210,7 @@ def oracle_substring_delta() -> str:
     return oracle_substring_dedup() + "WHERE doc_id % 2 = 1\n"
 
 
-def oracle_dup_ngram_stats(n: int = 3) -> str:
-    """DuckDB twin of dedup.dup_ngram_stats — same distinct-shingle space
-    as the Jaccard oracles (joined on the raw shingle where the
-    engine joins on its md5; injective, so identical rows).  The shingle
-    concat is generated from ``n`` (it used to hardcode the 3-token form,
-    silently wrong for any other n — round-5 advisory fix)."""
-    concat = " || ' ' || ".join(f"arr[i+{k}]" for k in range(n))
-    return f"""
-WITH tok AS (SELECT doc_id, {_TOKENS} AS arr FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, {concat} AS shingle
-  FROM tok, unnest(generate_series(1, len(arr) - {n - 1})) AS t(i)
-  WHERE len(arr) >= {n}
-),
-counts AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
-per_doc AS (
-  SELECT doc_id, count(*) AS n_shingles,
-         count(*) FILTER (df >= 2) AS n_dup_shingles
-  FROM sh JOIN counts USING (shingle) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(n_shingles, 0)::BIGINT AS n_shingles,
-       coalesce(n_dup_shingles, 0)::BIGINT AS n_dup_shingles,
-       CASE WHEN coalesce(n_shingles, 0) = 0 THEN 0.0
-            ELSE round(n_dup_shingles / n_shingles, 6) END AS dup_frac
-FROM documents d LEFT JOIN per_doc USING (doc_id)
-"""
-
-
-def oracle_source_cap_sample(cap: int = 10) -> str:
-    """Single-window twin of sampling.source_cap_sample — the two-phase
-    prefix cut keeps rows and ranks identical to this plan because prefix
-    order == key order (the prefix IS the key's first chars)."""
-    return f"""
-SELECT doc_id, source, rk FROM (
-  SELECT doc_id, source,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5('{sampling.SOURCE_CAP_SALT}' || doc_id::VARCHAR), doc_id
-         ) AS rk
-  FROM documents) WHERE rk <= {cap}
-"""
+# ------------------------------------------------------------- the contract
 
 
 def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1500,38 +1220,16 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extract_fixture_status": q_extract_fixture_status,
         "extract_img_urls": q_extract_img_urls,
         "extract_synthetic_stats": q_extract_synthetic_stats,
-        "corpus_build": q_corpus_build,
         "corpus_funnel": q_corpus_funnel,
         # dedup family
-        "exact_dedup": lambda spark, sf: dedup.exact_dedup_stats(load(spark, sf, "documents")),
         "simhash": lambda spark, sf: dedup.simhash(load(spark, sf, "documents")),
         "simhash_near_dup_pairs": lambda spark, sf: dedup.simhash_near_dup_pairs(load(spark, sf, "documents")),
         "ngram_jaccard": lambda spark, sf: dedup.ngram_jaccard_pairs(load(spark, sf, "documents")),
         "simhash_delta_pairs": q_simhash_delta_pairs,
         "dedup_clusters": lambda spark, sf: dedup.dedup_clusters(load(spark, sf, "documents")),
         "simhash_dedup_clusters": lambda spark, sf: dedup.simhash_dedup_clusters(load(spark, sf, "documents")),
-        # CCNet-style line-level boilerplate removal (planted multi-line docs)
-        "line_dedup": q_line_dedup,
-        # per-doc duplicated-ngram fraction (no pair enumeration)
-        "dup_ngram_stats": lambda spark, sf: dedup.dup_ngram_stats(load(spark, sf, "documents")),
         # Lee-et-al. exact-substring dedup (planted shared passage + within-doc repeat)
         "substring_dedup": q_substring_dedup,
-        # deterministic corpus sampling (training-mix construction)
-        "hash_sample": lambda spark, sf: sampling.hash_sample(
-            load(spark, sf, "documents"), fraction=0.2
-        ).select("doc_id", "lang"),
-        "stratified_sample": lambda spark, sf: sampling.stratified_hash_sample(
-            load(spark, sf, "documents"), _STRATA_FRACTIONS, _STRATA_DEFAULT
-        )
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_sampled")),
-        "token_budget_sample": lambda spark, sf: sampling.token_budget_sample(
-            load(spark, sf, "documents"), _TOKEN_BUDGETS, _TOKEN_BUDGET_DEFAULT
-        ),
-        # RefinedWeb-style per-domain cap (two-phase prefix cut, unit weights)
-        "source_cap_sample": lambda spark, sf: sampling.source_cap_sample(
-            load(spark, sf, "documents")
-        ),
         # text analysis family: the funnel's quality stages and keywords
         "quality_scores": lambda spark, sf: textstats.quality_scores(load(spark, sf, "documents")),
         "quality_filter": lambda spark, sf: textstats.quality_filter(load(spark, sf, "documents")),
@@ -1556,20 +1254,11 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pdf_page_stats": lambda spark, sf: pdf.extract_pdf(
             pdf.pdf_table_from_documents(load(spark, sf, "documents"))
         ).select("doc_id", "n_pages", "status", "spans_emitted"),
-        # join family: documents ⋈ embeddings + aggregate
-        "docs_joined_labels": q_docs_joined_labels,
-        # sessionization (window functions, one shared shuffle)
-        "funnel_conversion": lambda spark, sf: sessionize.funnel_conversion(
-            load(spark, sf, "events")
-        ),
         # temporal operators Spark lacks as built-ins (µs-exact contracts)
         "asof_join_enrich": lambda spark, sf: temporal.asof_enrich(
             load(_utc(spark), sf, "events")
         ),
         "time_rollup": lambda spark, sf: temporal.time_rollup(
-            load(_utc(spark), sf, "events")
-        ),
-        "session_concurrency": lambda spark, sf: temporal.session_concurrency(
             load(_utc(spark), sf, "events")
         ),
         # incremental as-of join against the persisted user-state index
@@ -1578,6 +1267,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # continuous-aggregate probe: persisted finest-grid partials
         # (additive), full-recompute oracle
         "time_rollup_delta": q_time_rollup_delta,
+        # gap sessionization (lag + running-sum windows, one user_id shuffle)
         "session_stats": lambda spark, sf: sessionize.session_stats(load(_utc(spark), sf, "events")),
         # streaming gap-sessionization: applyInPandasWithState, verified
         # against the SAME oracle as the batch session_stats window plan
@@ -1595,22 +1285,14 @@ def build_oracles() -> dict[str, str]:
         "extract_fixture_status": golden_status_values_sql(),
         "extract_img_urls": golden_img_urls_values_sql(),
         "extract_synthetic_stats": synthetic_golden_values_sql("extract_synthetic_stats"),
-        "corpus_build": synthetic_golden_values_sql("corpus_build"),
         "corpus_funnel": synthetic_golden_values_sql("corpus_funnel"),
-        "exact_dedup": oracle_exact_dedup(),
         "simhash": oracle_simhash(),
         "simhash_near_dup_pairs": oracle_simhash_near_dup_pairs(),
         "ngram_jaccard": oracle_ngram_jaccard(),
         "simhash_delta_pairs": oracle_simhash_delta_pairs(),
         "dedup_clusters": oracle_dedup_clusters(),
         "simhash_dedup_clusters": oracle_simhash_dedup_clusters(),
-        "line_dedup": oracle_line_dedup(),
-        "dup_ngram_stats": oracle_dup_ngram_stats(),
         "substring_dedup": oracle_substring_dedup(),
-        "hash_sample": oracle_hash_sample(),
-        "stratified_sample": oracle_stratified_sample(),
-        "token_budget_sample": oracle_token_budget_sample(),
-        "source_cap_sample": oracle_source_cap_sample(),
         "interleave_stats": oracle_interleave_stats(),
         "quality_scores": oracle_quality_scores(),
         "quality_filter": oracle_quality_filter(),
@@ -1618,15 +1300,12 @@ def build_oracles() -> dict[str, str]:
         "ann_ivf_topk": oracle_ann_ivf_topk(),
         "quality_classifier_scores": oracle_quality_classifier_scores(),
         "shingle_novelty": oracle_shingle_novelty(),
-        "funnel_conversion": oracle_funnel_conversion(),
         "asof_join_enrich": oracle_asof_join_enrich(),
         "time_rollup": oracle_time_rollup(),
-        "session_concurrency": oracle_session_concurrency(),
         "asof_delta_enrich": oracle_asof_join_enrich(delta_only=True),
         "time_rollup_delta": oracle_time_rollup(),
         "substring_delta": oracle_substring_delta(),
         "pdf_page_stats": oracle_pdf_page_stats(),
-        "docs_joined_labels": oracle_docs_joined_labels(),
         "session_stats": oracle_session_stats(),
         "streaming_session_stats": oracle_session_stats(),
         "streaming_simhash_pairs": oracle_streaming_simhash_pairs(),

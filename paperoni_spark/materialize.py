@@ -2,9 +2,9 @@
 
 Every operator that derives an expensive frame consumed by 2+ plan
 branches (SimHash band rows, IVF assignments, TF-IDF doc_tf/df counts,
-token-budget scores, connected-component labels) materializes it once
-instead of re-deriving the whole subtree per consumer — without this the
-IVF assignment UDF ran 4× in ann_ivf_topk's final plan.
+connected-component labels) materializes it once instead of re-deriving
+the whole subtree per consumer — without this the IVF assignment UDF ran
+4× in ann_ivf_topk's final plan.
 
 The cut is ``localCheckpoint``: executor-local, non-replicated blocks.
 That is the right trade for idempotent analytics queries and for the

@@ -1,11 +1,10 @@
-"""Deduplication operators: exact, SimHash, n-gram Jaccard, line-level
-and exact-substring.
+"""Deduplication operators: SimHash, n-gram Jaccard and exact-substring.
+Exact dedup is the corpus funnel's fingerprint window
+(pipeline/compose.py:build_training_corpus).
 
 Scale notes (designed for ~10^12-row corpora, verified at sf on DuckDB
 oracles):
 
-* Exact dedup hashes once map-side and aggregates on the 128-bit digest —
-  a single shuffle keyed by digest, partial-aggregated (no text moves).
 * SimHash is one explode + one 16-way conditional aggregation — one
   doc_id-keyed shuffle of small rows.  Near-dup pairs come from a
   pigeonhole-exact band equi-join over the fingerprints, then connected
@@ -26,19 +25,6 @@ from pyspark.sql import functions as F
 from ..materialize import materialize
 
 SIMHASH_BITS = 16
-
-
-def exact_dedup_stats(documents: DataFrame) -> DataFrame:
-    """Per-source exact duplicate statistics on the text digest."""
-    return (
-        documents.select("source", F.md5("text").alias("digest"))
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("digest").alias("n_unique"),
-        )
-        .withColumn("n_dupes", F.col("n_docs") - F.col("n_unique"))
-    )
 
 
 def _shingles(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -177,7 +163,7 @@ def simhash_near_dup_pairs(
     max_hamming the band equi-join finds every qualifying pair.  Over-cap
     bands (a degenerate fingerprint shared by a boilerplate cluster) are
     excluded via the standard unhinted anti-join — the same completeness
-    caveat as exact_dedup already covering identical text; the DuckDB
+    caveat as the funnel's exact dedup covering identical text; the DuckDB
     oracle mirrors banding + cap.  The verify step is one xor+bit_count
     per candidate; only (doc_id, band-key) pairs shuffle."""
     return simhash_near_dup_pairs_from_sh(
@@ -587,110 +573,6 @@ def ngram_jaccard_pairs(
     )
 
 
-LINE_DF_CAP = 3  # lines appearing in more distinct docs than this are boilerplate
-
-
-def line_dedup(documents: DataFrame, df_cap: int = LINE_DF_CAP) -> DataFrame:
-    """Line-level boilerplate removal (the CCNet/C4 paragraph-dedup stage:
-    headers, footers, nav chrome repeat across a site; body text does not).
-    Split each document on newlines, drop every trimmed non-empty line
-    whose DISTINCT-document frequency exceeds ``df_cap``, and reassemble
-    the survivors in original order.
-
-    Shape: two full-text passes — the theoretical minimum (the hot set
-    must exist before any line can be judged) — plus a doc_id-only third
-    scan that keeps zero-line documents in the output.  Pass 1 shuffles
-    only compact (digest, doc_id) rows into the DF histogram; pass 2
-    left-joins the UNHINTED hot-line set (tiny by definition —
-    boilerplate repeats; AQE broadcasts it at runtime, same
-    no-forced-broadcast rule as the shingle DF cap) and regroups per doc
-    ONCE, computing total, kept, and the reassembled text from the same
-    flagged rows — folding the kept-filter into the aggregation instead
-    of anti-joining first avoids a third scan of the text column.
-    """
-    lines = (
-        documents.select(
-            "doc_id", F.posexplode(F.split("text", "\n")).alias("pos", "line")
-        )
-        .withColumn("line", F.trim("line"))
-        .where(F.col("line") != "")
-        .withColumn("lh", F.md5("line"))
-    )
-    hot = (
-        lines.groupBy("lh")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .where(F.col("df") > df_cap)
-        .select("lh", F.lit(True).alias("hot"))
-    )
-    flagged = lines.join(hot, "lh", "left")
-    sorted_lines = F.array_sort(F.collect_list(F.struct("pos", "hot", "line")))
-    clean = flagged.groupBy("doc_id").agg(
-        F.count("*").alias("n_lines"),
-        F.count(F.when(F.col("hot").isNull(), 1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.filter(sorted_lines, lambda s: s["hot"].isNull()),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("text_clean"),
-    )
-    return (
-        documents.select("doc_id")
-        .join(clean, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        )
-    )
-
-
-def dup_ngram_stats(documents: DataFrame, n: int = 3) -> DataFrame:
-    """Cross-document duplication profile — for each document, what
-    fraction of its distinct word n-grams appears in at least one OTHER
-    document (the corpus-internal measure behind exact-substring dedup
-    decisions, à la "Deduplicating Training Data Makes Language Models
-    Better": a doc with dup_frac 0.9 is mostly boilerplate/mirror
-    content even if no single whole-doc duplicate exists).
-
-    Shape: the (doc_id, digest) shingle frame feeds two consumers — the
-    DF histogram and the rollup's join side — and the histogram's
-    map-side partial agg de-canonicalizes the subtrees (no ReusedExchange
-    possible), so the frame is materialized once (compact ids + 32-char
-    digests, never text — the standard cut, see materialize.py); the
-    plan-shape test pins the shingle derivation to a single execution.
-    A window-count alternative (count over partition by digest) would
-    also single-derive but serializes every hot boilerplate shingle
-    through one task; groupBy+join keeps AQE's skew handling.  NO pair
-    enumeration happens anywhere, which is why this scales where the
-    pairwise Jaccard joins need DF-cap blocking."""
-    sh = _shingles(documents, n).select("doc_id", F.md5("shingle").alias("sh_h"))
-    sh = materialize(sh)
-    df_counts = sh.groupBy("sh_h").agg(F.count("*").alias("df"))
-    per_doc = (
-        sh.join(df_counts, "sh_h")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_shingles"),
-            F.count(F.when(F.col("df") >= 2, 1)).alias("n_dup_shingles"),
-        )
-    )
-    return (
-        documents.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_shingles", F.lit(0)).alias("n_shingles"),
-            F.coalesce("n_dup_shingles", F.lit(0)).alias("n_dup_shingles"),
-            F.when(F.coalesce("n_shingles", F.lit(0)) == 0, F.lit(0.0))
-            .otherwise(F.round(F.col("n_dup_shingles") / F.col("n_shingles"), 6))
-            .alias("dup_frac"),
-        )
-    )
-
-
 SUBSTR_DEDUP_N = 50  # Lee et al.'s 50-token duplicated-span threshold
 
 
@@ -717,7 +599,7 @@ def substring_dedup(documents: DataFrame, n: int = SUBSTR_DEDUP_N) -> DataFrame:
        the token n-gram, materialized ONCE (compact ids + digests —
        the frame feeds the histogram AND the duplicated-starts join,
        and the histogram's partial agg de-canonicalizes subtrees, so
-       ReusedExchange can't carry it — same cut as dup_ngram_stats);
+       ReusedExchange can't carry it);
     2. occurrence histogram on h (one digest-keyed shuffle, partial
        agg) → duplicated digests;
     3. duplicated start positions: equi-join positioned × duplicated

@@ -60,57 +60,3 @@ def session_stats(
     )
 
 
-FUNNEL_STEPS = ("view", "click", "purchase")
-
-
-def funnel_conversion(
-    events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS
-) -> DataFrame:
-    """Ordered funnel conversion over the event stream: how many users
-    completed step i STRICTLY AFTER completing step i-1 (first-touch
-    semantics — each step's completion time is the user's earliest
-    qualifying event, so the funnel is deterministic and
-    order-of-ingestion independent).  The product-analytics twin of the
-    corpus queries: same engine, the events table instead of documents.
-
-    Plan: one user-keyed aggregate per step over the PREVIOUS step's
-    per-user completion times — the joined side shrinks monotonically
-    (funnels only narrow), every join is user-keyed (no windows, no
-    cross products), and each step's event scan pushes the event_type
-    filter into parquet.  Timestamp comparisons are exact (µs integers
-    on both engines).
-
-    Returns (step, event_type, n_users, conv_rate) with conv_rate
-    relative to step 1."""
-    counts = []
-    prev = None
-    for i, s in enumerate(steps):
-        ev = events.where(F.col("event_type") == s).select("user_id", "ts")
-        if prev is None:
-            cur = ev.groupBy("user_id").agg(F.min("ts").alias("t"))
-        else:
-            p = prev.select("user_id", F.col("t").alias("t_prev"))
-            cur = (
-                ev.join(p, "user_id")
-                .where(F.col("ts") > F.col("t_prev"))
-                .groupBy("user_id")
-                .agg(F.min("ts").alias("t"))
-            )
-        prev = cur
-        counts.append(
-            cur.agg(F.count("*").alias("n_users")).select(
-                F.lit(i + 1).alias("step"),
-                F.lit(s).alias("event_type"),
-                F.col("n_users").cast("long").alias("n_users"),
-            )
-        )
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    first = counts[0].select(F.col("n_users").alias("n_first"))
-    return out.crossJoin(F.broadcast(first)).select(
-        "step",
-        "event_type",
-        "n_users",
-        F.round(F.col("n_users") / F.col("n_first"), 6).alias("conv_rate"),
-    )

@@ -1,15 +1,14 @@
 """Temporal operators Spark lacks as built-ins, re-expressed Spark-first:
-as-of join, hypertable-style multi-resolution rollup, and interval-overlap
-concurrency.
+as-of join and hypertable-style multi-resolution rollup.
 
 These are the classic time-series shapes a training-data/event pipeline
 needs beyond plain windows (reference scope: the events surface mirrored
 from paperoni's fetch/summary timing metrics, generalized the way
 TimescaleDB/QuestDB expose them).  None is implemented as a pairwise
 range join — every shape here is a composition of pushed filters, ONE
-union-window pass, or a two-phase band count, so no plan materializes a
-candidate cross product and every shuffle key is either the natural
-entity key (user_id) or a bounded summary.
+union-window pass, or a re-aggregation of bucket partials, so no plan
+materializes a candidate cross product and every shuffle key is either
+the natural entity key (user_id) or a bucket of the rollup grid.
 
 Portability contract (shared with every oracled query): timestamps are
 compared as epoch-µs integers (exact on both engines), value sums are
@@ -29,11 +28,6 @@ ROLLUP_RESOLUTIONS_S = (60, 600, 3600)
 
 ASOF_TARGET_TYPE = "purchase"
 ASOF_REF_TYPE = "click"
-
-# Hour bands for the two-phase concurrency counts (µs per band).  Bands
-# sub-range a VALUE-ordered key, so the band must be a monotone integer
-# function of the value itself (integer division of epoch-µs).
-CONCURRENCY_BAND_US = 3600 * 1_000_000
 
 
 def _us(col):
@@ -195,128 +189,6 @@ def _rollup_levels(
         prev_res = res
         out = out.unionByName(_shape(prev, res))
     return out
-
-
-def _session_intervals(events: DataFrame, gap_minutes: int) -> DataFrame:
-    """(user_id, session_idx, s_us, e_us) via the shared sessionizer —
-    the window and the closing agg share the user_id shuffle."""
-    from . import sessionize
-
-    s = sessionize.sessionize(events, gap_minutes)
-    return s.groupBy("user_id", "session_idx").agg(
-        F.min(_us(F.col("ts"))).alias("s_us"),
-        F.max(_us(F.col("ts"))).alias("e_us"),
-    )
-
-
-def session_concurrency(
-    events: DataFrame, gap_minutes: int | None = None
-) -> DataFrame:
-    """Per-session concurrency: for each gap-based session, how many OTHER
-    sessions (any user) overlap it in time — the load-profile signal a
-    crawl scheduler reads.  Overlap is inclusive: [s1,e1] and [s2,e2]
-    overlap iff s2 <= e1 AND e2 >= s1 (µs integers).
-
-    A pairwise interval join materializes every concurrent pair — k²
-    rows under heavy concurrency.  This is the sweep formulation
-    instead: overlap(i) = |{j : s_j <= e_i}| − |{j : e_j < s_i}| − 1,
-    two prefix-counts over POINT sets, each computed with the repo's
-    two-phase exact-rank idiom (hour-band histogram — a driver-bounded
-    summary — plus an in-band count join), so the plan never forms a
-    pair and every shuffle moves sessions or band summaries, never
-    pairs.  Band = integer division of the µs value itself, valid for
-    any value-ordered key.
-
-    Returns (user_id, session_idx, n_concurrent).
-    """
-    from . import sessionize
-
-    gap = sessionize.DEFAULT_GAP_MINUTES if gap_minutes is None else gap_minutes
-    from ..materialize import materialize
-
-    # Five consumers (2 point sets, 2 query sets, the band union) — cut
-    # once so the sessionizer window runs once, not five times.
-    sess = materialize(_session_intervals(events, gap))
-
-    def _prefix_count(points: DataFrame, queries: DataFrame, strict: bool) -> DataFrame:
-        """#points with val <= q (strict=False) / val < q (strict=True)
-        per query row, via band histogram + an IN-BAND RUNNING COUNT.
-
-        The in-band step is a per-band window over the points ∪ queries
-        union, never a (query × point) join: a join is quadratic within
-        a band — under the exact condition this operator exists for
-        (10^6 sessions starting inside one hour) a single band would
-        materialize ~10^12 pairs.  The window sorts the band once
-        (O(rows log rows), one task per band) and reads each query's
-        count off the running sum; band skew degrades parallelism, not
-        complexity."""
-        pts = points.select(
-            F.col("val").alias("v"),
-            F.lit(1).alias("w_pt"),
-            F.lit(None).cast("long").alias("user_id"),
-            F.lit(None).cast("long").alias("session_idx"),
-        ).withColumn("band", _idiv(F.col("v"), CONCURRENCY_BAND_US))
-        qs = queries.select(
-            F.col("q").alias("v"),
-            F.lit(0).alias("w_pt"),
-            F.col("user_id").cast("long").alias("user_id"),
-            F.col("session_idx").cast("long").alias("session_idx"),
-        ).withColumn("band", _idiv(F.col("v"), CONCURRENCY_BAND_US))
-        # tie order at equal val: non-strict counts equal points (points
-        # first), strict excludes them (queries first).  Rows of the SAME
-        # kind at equal (v, tie) are interchangeable for the count, so
-        # the ROWS frame is deterministic without a further key.
-        tie = F.col("w_pt") if strict else (1 - F.col("w_pt"))
-        both = pts.unionByName(qs).withColumn("tie", tie)
-        w_run = (
-            Window.partitionBy("band")
-            .orderBy("v", "tie")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        in_band = (
-            both.withColumn("n_in", F.sum("w_pt").over(w_run))
-            .where(F.col("w_pt") == 0)
-            .select("band", "user_id", "session_idx", "n_in")
-        )
-        hist = pts.groupBy("band").agg(F.count("*").alias("n"))
-        # Offsets must cover every band a QUERY lands in, not only bands
-        # that contain points (a point-free query band still owes the
-        # count of all earlier bands) — key the prefix sum on the union.
-        bands = pts.select("band").union(qs.select("band")).distinct()
-        w_off = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-        # The histogram is bands-sized (hours of corpus span) — the
-        # single-partition offsets window moves a driver-bounded summary,
-        # same as every other two-phase rank in the repo.
-        offsets = (
-            bands.join(hist, on="band", how="left")
-            .select("band", F.coalesce(F.col("n"), F.lit(0)).alias("n"))
-            .select(
-                "band", F.coalesce(F.sum("n").over(w_off), F.lit(0)).alias("n_before")
-            )
-        )
-        return (
-            in_band.join(F.broadcast(offsets), on="band", how="left")
-            .select(
-                "user_id",
-                "session_idx",
-                (F.coalesce(F.col("n_before"), F.lit(0)) + F.col("n_in")).alias("n"),
-            )
-        )
-
-    starts = sess.select(F.col("s_us").alias("val"))
-    ends = sess.select(F.col("e_us").alias("val"))
-    q_le = sess.select("user_id", "session_idx", F.col("e_us").alias("q"))
-    q_lt = sess.select("user_id", "session_idx", F.col("s_us").alias("q"))
-    c1 = _prefix_count(starts, q_le, strict=False).withColumnRenamed("n", "c1")
-    c2 = _prefix_count(ends, q_lt, strict=True).withColumnRenamed("n", "c2")
-    return (
-        c1.join(c2, on=["user_id", "session_idx"])
-        .select(
-            "user_id",
-            F.col("session_idx").cast("long").alias("session_idx"),
-            (F.col("c1") - F.col("c2") - F.lit(1)).cast("long").alias("n_concurrent"),
-        )
-    )
 
 
 USER_STATE_KIND = "user_state"

@@ -1,9 +1,12 @@
-"""End-to-end training-data pipeline composition.
+"""The training-corpus funnel: ``build_training_corpus``.
 
-The full corpus-build shape: extraction → plain-text flattening →
-fingerprint/exact-dedup → quality scoring, all as one lazy DataFrame
-program (single mapInPandas stage + Catalyst expressions; the only
-shuffle after extraction is the dedup digest aggregation).
+Extraction → plain-text flattening → language guess → quality verdict →
+exact dedup [→ near-dup clusters, substring cleaning, index probe], as one
+lazy DataFrame program: the kernel runs in a single mapInPandas stage,
+every later stage is Catalyst expressions and joins that mark a document
+with one ``reject_reason`` instead of filtering it, and the funnel counts
+come from one aggregation over the marked frame.  ``jobs/corpus_job.py``
+runs it per wave.
 """
 
 from __future__ import annotations
@@ -38,28 +41,10 @@ def extracted_text(extracted: DataFrame) -> DataFrame:
     )
 
 
-def _normalized_text() -> Column:
-    return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-
-
 def _text_fingerprint() -> Column:
     """The exact-dedup key of ``text``: md5 of the case-folded, trimmed,
     whitespace-collapsed text."""
-    return F.md5(_normalized_text())
-
-
-def corpus_build(documents: DataFrame, base_url: str = "http://example.com/") -> DataFrame:
-    """extract → flatten → normalize-fingerprint → quality signals."""
-    flat = extracted_text(run_extract(documents, base_url))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return flat.select(
-        "doc_id",
-        "title",
-        "n_images",
-        _text_fingerprint().alias("fingerprint"),
-        F.length(_normalized_text()).alias("n_chars"),
-        F.size(toks).alias("n_tokens"),
-    )
+    return F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
 
 
 def build_training_corpus(

@@ -196,11 +196,15 @@ def run_streaming_sessionization(
         query.awaitTermination()
     # last-write-wins readback: a user's latest emission (max n_updates) is
     # its complete session list — earlier emissions may contain sessions
-    # that later MERGED (update mode appends in the memory sink)
+    # that later MERGED (update mode appends in the memory sink).  The
+    # readback is cut so the sink's view can be dropped: a registered
+    # view holds every emitted row in driver memory, one more per call.
     from pyspark.sql.window import Window
 
+    from ..materialize import materialize
+
     sink = spark.table(table)
-    return (
+    final = materialize(
         sink.withColumn(
             "max_upd", F.max("n_updates").over(Window.partitionBy("user_id"))
         )
@@ -215,3 +219,5 @@ def run_streaming_sessionization(
             "total_value",
         )
     )
+    spark.catalog.dropTempView(table)
+    return final

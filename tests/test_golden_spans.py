@@ -33,7 +33,7 @@ def test_golden_span_sequences():
 
 def test_golden_synthetic_corpus():
     """Synthetic-corpus extraction is frozen (digest per doc): the
-    synthetic documents feed the extract_synthetic_stats / corpus_build
+    synthetic documents feed the extract_synthetic_stats / corpus_funnel
     goldens and perfbench's cached inputs, so their extraction must stay
     identical; a kernel change that alters these is caught here
     deliberately."""

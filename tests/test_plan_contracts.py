@@ -38,7 +38,6 @@ pytestmark = pytest.mark.skipif(
 PLAN_CONTRACTS = {
     # pure map-side: zero shuffles end-to-end, scan-speed at any scale
     "quality_filter": (0, ["source", "n_chars"]),
-    "hash_sample": (0, ["text", "source", "n_chars"]),
     "quality_scores": (0, ["source", "n_chars"]),
     # hashed-linear quality model: a map-side integer fold over each
     # doc's tokens (the funnel's own logit expression) — tokens never
@@ -46,9 +45,6 @@ PLAN_CONTRACTS = {
     "quality_classifier_scores": (0, ["lang", "source", "n_chars"]),
     # single-shuffle partial-aggregated rollup with pruned scans
     "session_stats": (1, ["props", "event_type"]),
-    # small multi-stage shapes (digest agg / two-phase prefix cut)
-    "exact_dedup": (2, ["doc_id", "lang", "n_chars"]),
-    "source_cap_sample": (3, ["text", "lang", "n_chars"]),
     # exact-substring dedup: histogram + starts join + covered-union +
     # rewrite join — 4 shuffles, NO pair enumeration (the cartesian/
     # shuffle ceilings pin that no occurrence×occurrence join appears)
@@ -68,10 +64,6 @@ PLAN_CONTRACTS = {
     # the per-doc fold — the index scan is pruned to the digest alone
     # and the corpus side reads (doc_id) plus the materialized shingles
     "shingle_novelty": (3, ["lang", "source", "n_chars"]),
-    # ordered funnel: one user-keyed min-agg per step over a
-    # monotonically narrowing side; each step's event_type filter is
-    # pushed into the parquet scan, and the payload columns never load
-    "funnel_conversion": (4, ["props", "value", "event_id"]),
     # as-of join via the union-window trick: ONE user-keyed shuffle for
     # the carry-forward window (never the join-then-rank cross product);
     # both event_type filters push into the scans, payload never loads
@@ -80,11 +72,6 @@ PLAN_CONTRACTS = {
     # (1 exchange); the coarse levels re-aggregate bucket partials and
     # the union branches reuse the finest exchange
     "time_rollup": (5, ["props", "user_id", "event_id"]),
-    # interval concurrency sweep: the sessionizer runs once behind the
-    # materialize cut; in-band counts are per-band RUNNING WINDOWS over
-    # the points ∪ queries union (a band-keyed join would be quadratic
-    # within a skewed band) — no session-pair set is ever formed
-    "session_concurrency": (8, []),
 }
 
 

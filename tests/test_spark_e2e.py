@@ -251,20 +251,6 @@ def test_bucketed_resume_antijoin_is_shuffle_free(spark, tmp_path_factory):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_corpus_build_composition(spark):
-    from paperoni_spark.pipeline.compose import corpus_build
-
-    docs = make_documents_df(spark, synth_corpus(40))
-    built = corpus_build(docs).collect()
-    assert len(built) == 40
-    for r in built:
-        assert r["n_tokens"] > 0 and r["n_chars"] > 0
-        assert len(r["fingerprint"]) == 32
-    # synthetic docs are all distinct, and some carry images
-    assert len({r["fingerprint"] for r in built}) == 40
-    assert sum(r["n_images"] for r in built) > 0
-
-
 def test_mega_document_through_pipeline(spark):
     """A single ~40k-span document flows through the Arrow-batched UDF
     without memory trouble and emits a consistent span sequence."""
@@ -367,6 +353,21 @@ def test_build_training_corpus_funnel(spark):
     # survivors are unique by fingerprint
     fps = [r["fingerprint"] for r in rows]
     assert len(fps) == len(set(fps))
+    # each corpus column matches a Python twin of the in-process kernel
+    # output: md5 of the lower-cased text, trimmed of spaces (Spark trim),
+    # ASCII-whitespace runs collapsed; the metadata title; the image count
+    import hashlib
+    import re
+
+    by_id = {d["doc_id"]: d for d in base + [dup, short]}
+    for r in rows:
+        got = extract_document(r["doc_id"], by_id[r["doc_id"]]["spans"])
+        spans = got["extracted"]
+        text = " ".join(s["text"] for s in spans if s["kind"] == "text")
+        norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower().strip(" "))
+        assert r["fingerprint"] == hashlib.md5(norm.encode()).hexdigest()
+        assert r["title"] == got["metadata"]["title"]
+        assert r["n_images"] == sum(s["kind"] == "image" for s in spans)
     # the row set per configuration: a stage without docs has no row,
     # except a configured stage after exact dedup, which reports its 0
     assert stages == {"kept": 5, "rejected:too_short": 1, "rejected:duplicate": 1}
