@@ -13,12 +13,20 @@ This is the engine's core stage — the whole Readability kernel
   half of the skew story (the other half is the byte-ranged scan splits
   ``pipeline.job`` runs the UDF on).
 * Each output row carries the executor partition id plus kernel metrics
-  (nodes_scored, candidates, spans_emitted) so the driver can build the
-  per-partition lineage/metrics checkpoint required by the north rule.
+  (nodes_scored, candidates, spans_emitted), and the partition's last row
+  carries its totals in the ``lineage`` column, so the sink builds the
+  per-partition lineage/metrics checkpoint required by the north rule
+  from the write pass itself (``pipeline.job.write_output``).
+* Importing this module on a worker installs ``install_zip_guard``, which
+  stops the per-task zip directory re-reads of CPython < 3.13.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import sys
+import zipimport
 from typing import Any, Iterator
 
 import pandas as pd
@@ -54,6 +62,21 @@ METADATA_TYPE = StructType(
     ]
 )
 
+LINEAGE_COUNTS = (
+    "doc_count",
+    "nodes_scored",
+    "candidates",
+    "spans_emitted",
+    "ok_count",
+    "err_count",
+)
+
+# one partition's totals: set on its last output row, null on the others
+LINEAGE_TYPE = StructType(
+    [StructField("partition_id", IntegerType())]
+    + [StructField(name, LongType()) for name in LINEAGE_COUNTS]
+)
+
 EXTRACT_RESULT_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -67,6 +90,7 @@ EXTRACT_RESULT_SCHEMA = StructType(
         StructField("candidates", LongType()),
         StructField("spans_emitted", LongType()),
         StructField("partition_id", IntegerType()),
+        StructField("lineage", LINEAGE_TYPE),
     ]
 )
 
@@ -91,6 +115,50 @@ def _span_bytes(spans: list[dict[str, Any]]) -> int:
     return total
 
 
+def _zip_stamp(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def install_zip_guard() -> None:
+    """Skip a zipimporter's directory re-read while its archive is unchanged.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task, and on CPython < 3.13 each ``zipimporter`` then re-reads its
+    whole archive directory at once: pyspark.zip, py4j, the Spark jars
+    and every ``--py-files`` package, ~0.2 CPU-s per task.  The guard
+    keeps the stdlib re-read for an archive whose ``(st_mtime_ns,
+    st_size)`` changed since that importer last read it, and skips it
+    otherwise.  An importer that exists at install counts as read then:
+    in a worker, every importer re-read its archive at the start of the
+    task that imports this module.  CPython 3.13 makes the re-read lazy,
+    so there the guard installs nothing.  Installing twice is a no-op.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    stdlib = zipimport.zipimporter.invalidate_caches
+    if hasattr(stdlib, "__wrapped__"):
+        return
+
+    @functools.wraps(stdlib)
+    def invalidate_caches(self) -> None:
+        stamp = _zip_stamp(self.archive)
+        if stamp is None or getattr(self, "_read_stamp", None) != stamp:
+            stdlib(self)
+            self._read_stamp = stamp
+
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder._read_stamp = _zip_stamp(finder.archive)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+install_zip_guard()
+
+
 def make_extract_batch(base_url: str = "http://example.com/"):
     """Build the mapInPandas iterator function (base_url is captured in the
     closure and shipped to executors once)."""
@@ -105,9 +173,13 @@ def make_extract_batch(base_url: str = "http://example.com/"):
 
         rows: list[dict[str, Any]] = []
         acc_bytes = 0
+        totals: dict[str, int] = dict.fromkeys(LINEAGE_COUNTS, 0)
 
-        def flush() -> pd.DataFrame:
+        def flush(last: bool = False) -> pd.DataFrame:
             nonlocal rows, acc_bytes
+            lineage: list[dict[str, int] | None] = [None] * len(rows)
+            if last:
+                lineage[-1] = {"partition_id": partition_id, **totals}
             out = pd.DataFrame(
                 {
                     "doc_id": [r["doc_id"] for r in rows],
@@ -121,6 +193,7 @@ def make_extract_batch(base_url: str = "http://example.com/"):
                     "candidates": [r["candidates"] for r in rows],
                     "spans_emitted": [r["spans_emitted"] for r in rows],
                     "partition_id": [partition_id] * len(rows),
+                    "lineage": lineage,
                 }
             )
             rows = []
@@ -135,6 +208,11 @@ def make_extract_batch(base_url: str = "http://example.com/"):
             for idx, (doc_id, spans) in enumerate(
                 zip(batch["doc_id"], batch["spans"])
             ):
+                # a full chunk goes out when the NEXT document arrives, so
+                # the partition's last chunk is never empty and can carry
+                # the totals
+                if acc_bytes >= _MAX_BATCH_BYTES:
+                    yield flush()
                 span_list = list(spans) if spans is not None else []
                 doc_url = base_url
                 if urls is not None:
@@ -144,42 +222,25 @@ def make_extract_batch(base_url: str = "http://example.com/"):
                 result = extract_document(str(doc_id), span_list, doc_url)
                 rows.append(result)
                 acc_bytes += _span_bytes(span_list)
-                if acc_bytes >= _MAX_BATCH_BYTES:
-                    yield flush()
+                totals["doc_count"] += 1
+                totals["nodes_scored"] += result["nodes_scored"]
+                totals["candidates"] += result["candidates"]
+                totals["spans_emitted"] += result["spans_emitted"]
+                totals["ok_count" if result["status"] == "ok" else "err_count"] += 1
         if rows:
-            yield flush()
+            yield flush(last=True)
 
     return extract_batch
-
-
-STATS_RESULT_SCHEMA = StructType(
-    [f for f in EXTRACT_RESULT_SCHEMA.fields if f.name not in ("extracted",)]
-)
 
 
 def run_extract(
     documents: DataFrame,
     base_url: str = "http://example.com/",
-    emit_spans: bool = True,
 ) -> DataFrame:
-    """Apply the extraction kernel over a ``documents`` DataFrame.
-
-    ``emit_spans=False`` drops the ``extracted`` array from the output —
-    Catalyst cannot column-prune through an opaque ``MapInPandas``, so
-    stats/validation jobs that only need metadata + metrics opt out of
-    materializing (and Arrow-shipping) the span payload explicitly.
-    """
-    if emit_spans:
-        return documents.mapInPandas(
-            make_extract_batch(base_url), schema=EXTRACT_RESULT_SCHEMA
-        )
-    inner = make_extract_batch(base_url)
-
-    def stats_batch(batches):
-        for out in inner(batches):
-            yield out.drop(columns=["extracted"])
-
-    return documents.mapInPandas(stats_batch, schema=STATS_RESULT_SCHEMA)
+    """Apply the extraction kernel over a ``documents`` DataFrame."""
+    return documents.mapInPandas(
+        make_extract_batch(base_url), schema=EXTRACT_RESULT_SCHEMA
+    )
 
 
 def interleave_stats(extracted: DataFrame) -> DataFrame:

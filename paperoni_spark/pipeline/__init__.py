@@ -1,6 +1,5 @@
 from .job import (
     extract_pipeline,
-    lineage_metrics,
     resume_against,
     write_output,
 )
@@ -9,7 +8,6 @@ from .session import build_spark
 __all__ = [
     "build_spark",
     "extract_pipeline",
-    "lineage_metrics",
     "resume_against",
     "write_output",
 ]

@@ -15,9 +15,14 @@ resumable from checkpoint with per-partition lineage + metrics"):
   the anti-join — including the distinct — completely shuffle-free
   (verified: zero Exchange nodes in the bucketed plan,
   tests/test_spark_e2e.py::test_bucketed_resume_antijoin_is_shuffle_free).
-* **Lineage/metrics.**  Per-partition aggregates of the kernel metric
-  columns, written alongside the output (Iceberg ``writeTo(...).append()`` on
-  a real cluster; parquet in this sandbox — see ``write_output``).
+* **Lineage/metrics.**  Per-partition totals of the kernel metric
+  columns, taken from the output write itself (the UDF reports each
+  partition's totals on its last row, observed during the write) and
+  appended alongside the output (Iceberg ``writeTo(...).append()`` on a
+  real cluster; parquet in this sandbox — see ``write_output``).  Spark
+  merges observed metrics once per partition, from the successful task
+  attempt of a committed write, so the totals describe exactly the rows
+  on disk.
 """
 
 from __future__ import annotations
@@ -25,11 +30,40 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..fsio import refuse_flat_layout
 from ..operators.extract import run_extract
+
+# FIXTURES.md §1.3: the UDF's per-partition totals, then the run's
+# constants; nullability as earlier appends to the table wrote it, so
+# every file of the table keeps one parquet schema
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("partition_id", IntegerType()),
+        StructField("doc_count", LongType(), False),
+        StructField("nodes_scored", LongType()),
+        StructField("candidates", LongType()),
+        StructField("spans_emitted", LongType()),
+        StructField("ok_count", LongType()),
+        StructField("err_count", LongType()),
+        StructField("run_id", StringType(), False),
+        StructField("started_at", DoubleType(), False),
+        StructField("finished_at", DoubleType(), False),
+    ]
+)
+
 
 def resume_against(documents: DataFrame, done: DataFrame | None) -> DataFrame:
     """Anti-join on the checkpoint table: only un-extracted docs remain."""
@@ -61,31 +95,21 @@ def extract_pipeline(
     return run_extract(resume_against(documents, done), base_url)
 
 
-def lineage_metrics(
-    extracted: DataFrame,
-    run_id: str | None = None,
-    started_at: float | None = None,
+def lineage_frame(
+    spark: SparkSession,
+    totals: list,
+    run_id: str,
+    started_at: float,
 ) -> DataFrame:
-    """Per-partition lineage + metrics rows (FIXTURES.md §1.3).
-    ``started_at`` defaults to now; ``write_output`` passes the time its
-    call began."""
-    run_id = run_id or uuid.uuid4().hex
-    finished_at = time.time()
-    started_at = finished_at if started_at is None else started_at
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("nodes_scored").alias("nodes_scored"),
-            F.sum("candidates").alias("candidates"),
-            F.sum("spans_emitted").alias("spans_emitted"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok_count"),
-            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("err_count"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("started_at", F.lit(started_at))
-        .withColumn("finished_at", F.lit(finished_at))
-    )
+    """Lineage rows (FIXTURES.md §1.3): one per partition's totals (the
+    UDF's ``lineage`` structs) plus the run's constants; ``finished_at``
+    is now.  The frame is Arrow-backed, so writing it starts no Python
+    worker, and the run's times are data, not literals that would compile
+    new classes on every run.  One partition: a run appends one file."""
+    run = {"run_id": run_id, "started_at": started_at, "finished_at": time.time()}
+    rows = [{**t.asDict(), **run} for t in totals]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
+    return spark.createDataFrame(table, schema=LINEAGE_SCHEMA).coalesce(1)
 
 
 def write_output(
@@ -99,28 +123,34 @@ def write_output(
     ``df.writeTo(table).append()`` pair (extracted + lineage tables) so that
     partition-level retries are idempotent; this environment has no Iceberg
     catalog, so parquet paths stand in with identical semantics for the
-    doc-level resume contract (anti-join on doc_id).
+    doc-level resume contract (anti-join on doc_id).  The output is
+    PARTITIONED BY run_id.
 
-    Lineage derives from READING BACK the just-written output (filtered to
-    this run's id), never from re-evaluating ``extracted`` — re-running the
-    kernel would double job cost and describe a different physical run than
-    the data on disk.  On Iceberg this is the snapshot read of the append
-    that just committed.
-
-    The output is PARTITIONED BY run_id, so the read-back is a
-    partition-pruned scan of exactly this run's directory — O(this run),
-    not O(all appends ever) — and the run_id filter never opens historical
-    files (previously a mergeSchema read of the full history; on Iceberg
-    the equivalent is the snapshot read, which prunes the same way)."""
+    Lineage comes from the output write itself, never from re-evaluating
+    ``extracted`` (that would re-run the kernel and describe a different
+    physical run than the data on disk) nor from reading the output back
+    (a schema job, an aggregation and per-run generated code).  The UDF
+    reports each partition's totals on its last row in the ``lineage``
+    column; the write observes ``collect_list(lineage)`` and drops the
+    column.  Observed metrics merge once per partition, from the attempt
+    that succeeded, of an action that committed, so the totals describe
+    exactly the rows written.  The lineage rows are appended only after
+    that write returns."""
     started_at = time.time()
     run_id = run_id or uuid.uuid4().hex
-    refuse_flat_layout(extracted.sparkSession, output_path)
-    stamped = extracted.withColumn("run_id", F.lit(run_id))
-    stamped.write.mode("append").partitionBy("run_id").parquet(output_path)
+    spark = extracted.sparkSession
+    refuse_flat_layout(spark, output_path)
+    observation = Observation()
+    (
+        extracted.observe(observation, F.collect_list("lineage").alias("lineage"))
+        .drop("lineage")
+        .withColumn("run_id", F.lit(run_id))
+        .write.mode("append")
+        .partitionBy("run_id")
+        .parquet(output_path)
+    )
     if metrics_path is not None:
-        written = extracted.sparkSession.read.parquet(output_path).where(
-            F.col("run_id") == run_id
-        )
-        lineage_metrics(written, run_id, started_at).write.mode("append").parquet(
-            metrics_path
-        )
+        totals = observation.get["lineage"]
+        lineage_frame(spark, totals, run_id, started_at).write.mode(
+            "append"
+        ).parquet(metrics_path)

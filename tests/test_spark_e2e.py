@@ -17,8 +17,8 @@ from pyspark.sql.types import (
 from paperoni_spark.operators.extract import run_extract
 from paperoni_spark.pipeline import (
     extract_pipeline,
-    lineage_metrics,
     resume_against,
+    write_output,
 )
 from paperoni_spark.spans import extract_document, fixture_corpus, synth_corpus
 
@@ -89,15 +89,96 @@ def test_extract_pipeline_end_to_end(spark, fixture_df):
     assert mega["spans_emitted"] > 100
 
 
-def test_lineage_metrics(spark, fixture_df):
-    extracted = extract_pipeline(fixture_df)
-    metrics = lineage_metrics(extracted, run_id="test-run").collect()
-    assert len(metrics) >= 1
-    total_docs = sum(m["doc_count"] for m in metrics)
-    assert total_docs == len(fixture_corpus())
-    assert all(m["run_id"] == "test-run" for m in metrics)
-    assert sum(m["spans_emitted"] for m in metrics) > 0
-    assert sum(m["err_count"] for m in metrics) == 3
+def _read_back_lineage(spark, out, run_id):
+    """The lineage definition before it came from the write pass: a
+    groupBy over the written output, per partition_id."""
+    written = spark.read.parquet(out).where(F.col("run_id") == run_id)
+    rows = written.groupBy("partition_id").agg(
+        F.count("*").alias("doc_count"),
+        F.sum("nodes_scored").alias("nodes_scored"),
+        F.sum("candidates").alias("candidates"),
+        F.sum("spans_emitted").alias("spans_emitted"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok_count"),
+        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("err_count"),
+    )
+    return {r["partition_id"]: r.asDict() for r in rows.collect()}
+
+
+def test_lineage_metrics(spark, fixture_df, tmp_path):
+    """The lineage rows ``write_output`` takes from its write pass equal a
+    read-back groupBy of what it wrote, partition by partition: on the
+    scan partitions, and with ``done=`` on the shuffle partitions of the
+    resume anti-join."""
+    out, met = str(tmp_path / "out"), str(tmp_path / "met")
+    cols = ["partition_id", "doc_count", "nodes_scored", "candidates",
+            "spans_emitted", "ok_count", "err_count"]
+
+    def lineage(run_id):
+        rows = spark.read.parquet(met).where(F.col("run_id") == run_id).collect()
+        assert all(r["started_at"] <= r["finished_at"] for r in rows)
+        return {r["partition_id"]: {c: r[c] for c in cols} for r in rows}
+
+    write_output(extract_pipeline(fixture_df), out, metrics_path=met, run_id="full")
+    full = lineage("full")
+    assert full == _read_back_lineage(spark, out, "full")
+    assert sum(m["doc_count"] for m in full.values()) == len(fixture_corpus())
+    assert sum(m["spans_emitted"] for m in full.values()) > 0
+    assert sum(m["err_count"] for m in full.values()) == 3
+
+    done = spark.read.parquet(out).where(F.col("doc_id") < "fx-m")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # a shuffle anti-join, not a broadcast one
+    try:
+        resumed = extract_pipeline(fixture_df, done=done)
+        assert "SortMergeJoin" in resumed._jdf.queryExecution().executedPlan().toString()
+        write_output(resumed, out, metrics_path=met, run_id="resumed")
+    finally:
+        spark.conf.set(key, previous)
+    again = lineage("resumed")
+    assert again == _read_back_lineage(spark, out, "resumed")
+    assert 0 < sum(m["doc_count"] for m in again.values()) < len(fixture_corpus())
+    assert sum(m["err_count"] for m in again.values()) == 3
+
+    assert "lineage" not in spark.read.parquet(out).columns
+
+
+def test_udf_reports_totals_on_the_last_row_only(monkeypatch):
+    """With every document flushed as its own chunk, the iterator still
+    puts the partition's totals on its last row, and only there."""
+    import pandas as pd
+
+    from paperoni_spark.operators import extract
+
+    monkeypatch.setattr(extract, "_MAX_BATCH_BYTES", 1)
+    docs = pd.DataFrame(fixture_corpus()[:6])
+    chunks = list(extract.make_extract_batch()(iter([docs[:4], docs[4:]])))
+    assert [len(c) for c in chunks] == [1] * 6
+    out = pd.concat(chunks, ignore_index=True)
+    assert (out["status"] != "ok").sum() == 2  # fx-simple, fx-brs
+    assert out["lineage"][:-1].isna().all()
+    assert out["lineage"].iloc[-1] == {
+        "partition_id": -1,
+        "doc_count": 6,
+        "nodes_scored": out["nodes_scored"].sum(),
+        "candidates": out["candidates"].sum(),
+        "spans_emitted": out["spans_emitted"].sum(),
+        "ok_count": (out["status"] == "ok").sum(),
+        "err_count": (out["status"] != "ok").sum(),
+    }
+
+
+def test_write_output_compiles_no_class_per_run(spark, fixture_df, tmp_path):
+    """A second ``write_output`` of the same input in one session compiles
+    no generated class: nothing run-specific (run id, start and finish
+    times) is inlined into generated code."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    out, met = str(tmp_path / "out"), str(tmp_path / "met")
+    # no limit(): a limit compiles fresh classes on every action
+    write_output(extract_pipeline(fixture_df), out, metrics_path=met, run_id="c1")
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    write_output(extract_pipeline(fixture_df), out, metrics_path=met, run_id="c2")
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
 
 
 def test_lineage_started_at_is_per_call(spark, fixture_df, tmp_path):
@@ -105,8 +186,6 @@ def test_lineage_started_at_is_per_call(spark, fixture_df, tmp_path):
     long-lived session a later call must not inherit an earlier start
     (e.g. the time the module was imported)."""
     import time
-
-    from paperoni_spark.pipeline import write_output
 
     docs = fixture_df.limit(2)
     out, met = str(tmp_path / "out"), str(tmp_path / "met")
@@ -184,18 +263,6 @@ def test_synth_corpus_on_spark(spark):
     agg = result.groupBy("status").count().collect()
     counts = {r["status"]: r["count"] for r in agg}
     assert counts.get("ok", 0) == 60
-
-
-def test_stats_only_extraction(spark, fixture_df):
-    from paperoni_spark.operators.extract import run_extract
-
-    stats = run_extract(fixture_df, emit_spans=False)
-    assert "extracted" not in stats.columns
-    rows = {r["doc_id"]: r for r in stats.collect()}
-    full = {r["doc_id"]: r for r in run_extract(fixture_df).collect()}
-    for doc_id, r in rows.items():
-        assert r["status"] == full[doc_id]["status"]
-        assert r["spans_emitted"] == full[doc_id]["spans_emitted"]
 
 
 def test_per_document_url_column(spark):
